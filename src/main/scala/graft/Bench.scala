@@ -1,16 +1,21 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: times every SparkEntry query at SPARK_GRAFT_SF_DIR
-  * and prints one JSON line. Optional env knobs for local iteration:
-  *   SPARK_GRAFT_ONLY   comma-separated query names to run
-  *   SPARK_GRAFT_REPEAT run each query N times, report the min
+  * and prints one JSON line. Env knobs:
+  *   SPARK_GRAFT_SF_DIR  testdata directory (default sf0.1)
+  *   SPARK_GRAFT_CPUS    local[N] cores and shuffle partitions
+  *     (default: the cores this JVM sees)
+  *   SPARK_GRAFT_ISOLATE 1 = release all caches after every query
+  *     (default: family-scoped shared caches)
+  *   SPARK_GRAFT_ONLY    comma-separated query names to run
+  *   SPARK_GRAFT_REPEAT  run each query N times, report the min
   *     (steady-state, excludes first-run file-listing/JIT noise)
+  * A query that throws is left out of the total and listed under
+  * `failed` in BENCH_FULL_<mode>.json.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     val repeat = sys.env.getOrElse("SPARK_GRAFT_REPEAT", "1").toInt
     val isolate = sys.env.get("SPARK_GRAFT_ISOLATE").contains("1")
@@ -28,25 +33,7 @@ object Bench {
       String.format(java.util.Locale.ROOT, "%.2f", Double.box(l))
     }
     val loadStart = loadAvg()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // AQE pre-coalesce ceiling, env-tunable for experiments. The r17
-      // residual hypothesized that raising it to 8×cores would fix
-      // q_ancestor_closure's fixed-width bind at sf10 — MEASURED and
-      // REJECTED this round: at a matched ambient-load window the
-      // closure ran 105–171 s at ceiling 32 vs 203–469 s at 256
-      // (sf10, REPEAT=2 + retry), and the winnowing family regressed
-      // ~2× at sf1 under 256 (more, smaller sort-merge runs over the
-      // shared 150M-row cache). Default stays = cores; the closure
-      // width fix belongs INSIDE the iterative operator, not in a
-      // global knob (r18 note in SURVEY).
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_CEIL", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkEntry.localSession(SparkEntry.cpus)
     spark.sparkContext.setLogLevel("WARN")
     val selected = SparkEntry.queries.filter { case (n, _) => only.forall(_.contains(n)) }
     // Cache FAMILY of a query: queries that read the same shared
@@ -97,7 +84,10 @@ object Bench {
     // diffs are stable regardless of Map iteration order.
     val ordered = selected.toSeq.sortBy { case (n, _) => (family(n), n) }
     var prevFamily: String = null
-    val firstPass = ordered.map { case (name, fn) =>
+    // a query that throws in any repeat is FAILED: its time-to-failure
+    // must not enter the total (the retry below refuses it the same way)
+    val failed = scala.collection.mutable.ArrayBuffer.empty[String]
+    val firstPass = ordered.flatMap { case (name, fn) =>
       if (prevFamily != null && family(name) != prevFamily && !isolate) {
         Caches.clearAll(); spark.catalog.clearCache()
         logStorage(s"family $prevFamily")
@@ -105,19 +95,21 @@ object Bench {
       prevFamily = family(name)
       val times = (1 to repeat).map { _ =>
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() }
-        catch { case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[bench] $name failed: $e")
-        }
+        val ok =
+          try { fn(spark, sfDir).count(); true }
+          catch { case scala.util.control.NonFatal(e) =>
+            System.err.println(s"[bench] $name failed: $e"); false
+          }
         val dt = (System.nanoTime() - t0) / 1e9
         // SPARK_GRAFT_ISOLATE=1: per-query cold-cache timing — release
         // all persisted state after every run. Default: family-scoped
         // shared caches (cleared between families above).
         if (isolate) { Caches.clearAll(); spark.catalog.clearCache() }
         System.err.println(f"[bench] $name%-28s $dt%8.2f s")
-        dt
+        if (ok) Some(dt) else None
       }
-      name -> times.min
+      if (times.contains(None)) { failed += name; None }
+      else Some(name -> times.flatten.min)
     }.toMap
     // One-shot retry for extreme outliers: this host shows rare
     // minute-scale co-tenant stalls that land on one arbitrary query
@@ -227,10 +219,13 @@ object Bench {
       if (retried.isEmpty) ""
       else retried.toSeq.map { case (k, v) => s"\"$k\":${fmt(v)}" }
         .mkString(""","retried":{""", ",", "}")
+    val failedJson =
+      if (failed.isEmpty) ""
+      else failed.map(k => s"\"$k\"").mkString(""","failed":[""", ",", "]")
     val loadEnd = loadAvg()
     val fullJson = results.toSeq.sortBy(_._1)
       .map { case (k, v) => s"\"$k\":${fmt(v)}" }
-      .mkString(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","sf":"$sfDir","rev":"$rev","bench_schema":3,"cache_mode":"$mode","load_start":"$loadStart","load_end":"$loadEnd"$retriedJson,"queries":{""", ",", "}}")
+      .mkString(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","sf":"$sfDir","rev":"$rev","bench_schema":3,"cache_mode":"$mode","load_start":"$loadStart","load_end":"$loadEnd"$retriedJson$failedJson,"queries":{""", ",", "}}")
     // Per-mode snapshot file, then a combined BENCH_FULL.json holding
     // BOTH cache modes so round-over-round diffs can adjudicate
     // shared-session noise vs real operator regressions without
@@ -276,7 +271,7 @@ object Bench {
     }
     val byTime = results.toSeq.sortBy { case (k, v) => (-v, k) }
     val budget = 1700
-    val head = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","sf":"$sfDir","cache_mode":"${if (isolate) "isolate" else "shared"}","n_total":${results.size},"full":"BENCH_FULL.json","queries":{"""
+    val head = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","sf":"$sfDir","cache_mode":"${if (isolate) "isolate" else "shared"}","n_total":${results.size},"n_failed":${failed.size},"full":"BENCH_FULL.json","queries":{"""
     val entries = scala.collection.mutable.ArrayBuffer.empty[String]
     var len = head.length + 60 // reserve room for the closing elision fields
     var keptSec = 0.0

@@ -3,9 +3,8 @@ package graft
 import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.storage.StorageLevel
 
-/** Session-scoped registry for shared persisted intermediates (minhash
+/** Session-scoped registry for shared checkpointed intermediates (minhash
   * signatures, shingle sets, the flat gram index, IVF cell maps).
   *
   * Why not bare `df.persist()` inside each operator: the operator
@@ -17,8 +16,8 @@ import org.apache.spark.storage.StorageLevel
   * cluster scale they squeeze the executor storage pool.
   *
   * Instead every shared intermediate registers here under a stable
-  * (session, key) pair: the FIRST caller builds and persists, later
-  * callers in the same session reuse the same cached plan (exactly the
+  * (session, key) pair: the FIRST caller builds and checkpoints it,
+  * later callers in the same session reuse the same block set (exactly the
   * "one checkpointed sketch table feeding many consumers" shape a
   * 100 TB pipeline runs), and the session driver ([[Bench]]/[[Verify]],
   * or any long-lived service) calls [[clearAll]] between queries so no
@@ -36,46 +35,16 @@ object Caches {
   // (TrieMap.getOrElseUpdate is atomic, so one monitor per key).
   private val buildLocks = TrieMap.empty[(AnyRef, String), AnyRef]
 
-  /** Get-or-build the persisted DataFrame for `key` in this session's
-    * cache scope. Keyed by the shared CacheManager, not the session
-    * object: `newSession()` forks share one CacheManager, and keying
-    * per fork would re-persist a plan the shared cache already holds
-    * (the exact "already cached" churn this registry removes).
-    * `build` runs at most once per (cache scope, key) until
-    * [[clearAll]]; under a concurrent race the losing build is
-    * unpersisted immediately so no orphaned cache survives. */
-  def shared(spark: SparkSession, key: String)(build: => DataFrame): DataFrame = {
-    // Drop entries whose owning session has stopped so the registry
-    // never pins a dead session's DataFrames across session restarts.
-    reg.filterInPlace { case (_, df) => !df.sparkSession.sparkContext.isStopped }
-    val k = (spark.sharedState.cacheManager: AnyRef, key)
-    reg.get(k) match {
-      case Some(df) => df
-      case None =>
-        val df = build.persist(StorageLevel.MEMORY_AND_DISK)
-        // On a concurrent race, return the winner. If the loser's plan
-        // is the SAME as the winner's (the usual case), leave it
-        // alone: the CacheManager keys cached data by plan, so the
-        // losing persist() was a no-op against the same entry and
-        // unpersisting would evict the winner's cache. If the plans
-        // DIFFER (a checkpoint-backed build embeds its own RDD, so two
-        // concurrent builds are distinct plans), the loser is a true
-        // orphan — release it.
-        reg.putIfAbsent(k, df) match {
-          case Some(winner) =>
-            if (!df.queryExecution.analyzed.sameResult(winner.queryExecution.analyzed))
-              df.unpersist(blocking = false)
-            winner
-          case None => df
-        }
-    }
-  }
-
-  /** Get-or-build like [[shared]], but materialize via an EAGER
-    * `localCheckpoint` instead of `persist`: the registered DataFrame
-    * scans a lineage-TRUNCATED block set, so every consumer's task
-    * binary serializes a one-node LogicalRDD instead of the build's
-    * full plan tree. Measured motivation (r17 optimization round): a
+  /** Get-or-build the DataFrame for `key` in this session's cache
+    * scope. Keyed by the shared CacheManager, not the session object:
+    * `newSession()` forks share one CacheManager, and keying per fork
+    * would rebuild what the shared scope already holds. `build` runs
+    * at most once per (cache scope, key) until [[clearAll]].
+    *
+    * The build is materialized via an EAGER `localCheckpoint`, not
+    * `persist`: the registered DataFrame scans a lineage-TRUNCATED
+    * block set, so every consumer's task binary serializes a one-node
+    * LogicalRDD instead of the build's full plan tree. Measured motivation (r17 optimization round): a
     * consumer stage over a PERSISTED customer-sized cache shipped
     * ~1 MB task binaries (the InMemoryRelation keeps the whole
     * recompute plan in the RDD closure) and spent more wall time in

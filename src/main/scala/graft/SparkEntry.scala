@@ -8,10 +8,13 @@ import graft.sim.Ann
 import graft.streaming.Streams
 import graft.multimodal.Multimodal
 
-/** Driver contract — see /root/repo/SURVEY.md §2 for the inventory.
-  * Every implemented operator has a `queries` entry; every
-  * SQL-expressible one has a matching DuckDB `oracleSql` entry with
-  * identical column names/types (SURVEY.md §6 parity rules).
+/** Driver contract — see SURVEY.md §2 for the inventory.
+  * `operators` is the registry: one `Op(name, run, oracle)` record per
+  * operator, pairing its DataFrame builder with the DuckDB SQL that
+  * must reproduce it (identical column names/types, SURVEY.md §6
+  * parity rules). `queries` and `oracleSql` are views of it, so adding
+  * an operator is adding one record. `localSession` is the one
+  * session factory the mains and the tests share.
   */
 object SparkEntry {
 
@@ -19,596 +22,21 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Analytics.q1PricingSummary(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // §2.D core analytics
-    "q1_pricing_summary" -> Analytics.q1PricingSummary _,
-    "q3_shipping_priority" -> Analytics.q3ShippingPriority _,
-    "q5_local_supplier" -> Analytics.q5LocalSupplier _,
-    "q6_forecast_revenue" -> Analytics.q6ForecastRevenue _,
-    "q_window_running" -> Analytics.qWindowRunning _,
-    "q_topk_per_group" -> Analytics.qTopkPerGroup _,
-    "q_topk_native" -> Analytics.qTopkNative _,
-    "q_rollup" -> Analytics.qRollup _,
-    "q_semi_anti" -> Analytics.qSemiAnti _,
-    "q_approx_distinct" -> Analytics.qApproxDistinct _,
-    "q_approx_quantile" -> Analytics.qApproxQuantile _,
-    "q_correlated_subquery" -> Analytics.qCorrelatedSubquery _,
-    "q_set_ops" -> Analytics.qSetOps _,
-    "q_asof_join" -> AsOf.purchaseLastClick _,
-    "q_pivot" -> Analytics.qPivot _,
-    "q_salted_join" -> Analytics.qSaltedJoin _,
-    "q_join_types" -> Analytics.qJoinTypes _,
-    "q_window_range" -> Analytics.qWindowRange _,
-    "q_cube" -> Analytics.qCube _,
-    "q_unpivot" -> Analytics.qUnpivot _,
-    "q_string_agg" -> Analytics.qStringAgg _,
-    "q_percentile" -> Analytics.qPercentile _,
-    // §2.A ingest / schema
-    "ingest_catalog" -> DlpQueries.ingestCatalog _,
-    "ingest_offset_splits" -> DlpQueries.ingestOffsetSplits _,
-    "ingest_excluded_tables" -> DlpQueries.ingestExcludedTables _,
-    "ingest_row_count" -> DlpQueries.ingestRowCount _,
-    // §2.B DLP transforms
-    "dlp_mask_chars" -> DlpQueries.dlpMaskChars _,
-    "dlp_redact" -> DlpQueries.dlpRedact _,
-    "dlp_replace_infotype" -> DlpQueries.dlpReplaceInfotype _,
-    "dlp_inspect" -> DlpQueries.dlpInspect _,
-    "dlp_inspect_dictionary" -> DlpQueries.dlpInspectDictionary _,
-    "dlp_crypto_hash" -> DlpQueries.dlpCryptoHash _,
-    "dlp_deterministic_token" -> DlpQueries.dlpDeterministicToken _,
-    "dlp_reidentify" -> DlpQueries.dlpReidentify _,
-    "dlp_date_shift" -> DlpQueries.dlpDateShift _,
-    "dlp_bucketing" -> DlpQueries.dlpBucketing _,
-    "dlp_row_batches" -> DlpQueries.dlpRowBatches _,
-    "dlp_config_apply" -> DlpQueries.dlpConfigApply _,
-    "dlp_k_anonymity" -> DlpQueries.dlpKAnonymity _,
-    "dlp_l_diversity" -> DlpQueries.dlpLDiversity _,
-    // §2.C conversion / load
-    "bq_row_convert" -> DlpQueries.bqRowConvert _,
-    "bq_schema_map" -> DlpQueries.bqSchemaMap _,
-    "dead_letter_split" -> DlpQueries.deadLetterSplit _,
-    "reid_publish_format" -> DlpQueries.reidPublishFormat _,
-    "migration_manifest" -> graft.etl.Migration.manifest _,
-    // §2.G text analysis
-    "text_token_count" -> TextOps.tokenCount _,
-    "text_lang_id" -> TextOps.langId _,
-    "text_quality_score" -> TextOps.qualityScore _,
-    "text_fingerprint" -> TextOps.fingerprint _,
-    // §2.E deduplication
-    "dedup_exact" -> Dedup.exact _,
-    "dedup_minhash_sig" -> Dedup.minhashSig _,
-    "dedup_minhash_pairs" ->
-      ((s: SparkSession, d: String) => Dedup.minhashPairs(s, d).orderBy("doc_a", "doc_b")),
-    "dedup_simhash" -> Dedup.simhash _,
-    "dedup_ngram_jaccard" -> ((s: SparkSession, d: String) => Dedup.ngramJaccard(s, d)),
-    "dedup_containment" -> Dedup.containment _,
-    "dedup_minhash_est" -> Dedup.minhashEstimate _,
-    "ingest_schema_drift" -> SourceQueries.schemaDrift _,
-    "dedup_embedding_cos" -> Dedup.embeddingCosine _,
-    "dedup_corpus_sig" -> Dedup.corpusSig _,
-    "pipeline_dedup_survivors" -> Dedup.pipelineSurvivors _,
-    // §2.E/G (round 6): incremental batch-vs-corpus dedup, train/eval
-    // decontamination, composite quality gate
-    "dedup_incremental" -> Dedup.incremental _,
-    "split_decontaminate" -> Dedup.decontaminate _,
-    "pipeline_quality_gate" -> TextOps.qualityGate _,
-    // §2.F similarity search
-    "ann_topk_bruteforce" -> Ann.topkBruteforce _,
-    "ann_ivf_topk" -> Ann.ivfTopk _,
-    "ann_ivf_probe2" -> Ann.ivfTopkProbe2 _,
-    "ann_pq_topk" -> Ann.pqTopk _,
-    "ann_pq_rerank" -> Ann.pqRerank _,
-    "ann_ivfpq_topk" -> Ann.ivfPqTopk _,
-    "embed_centroid_update" -> Ann.centroidUpdate _,
-    "embed_kmeans_train" -> ((s: SparkSession, d: String) => Ann.kmeansTrain(s, d)),
-    // §2.I streaming (batch-equivalent forms; streaming forms in specs)
-    "stream_window_agg" -> Streams.windowAggBatch _,
-    "stream_sessionize" -> Streams.sessionizeBatch _,
-    "stream_dedup" -> Streams.dedupBatch _,
-    "stream_session_window" -> Streams.sessionWindowBatch _,
-    "stream_funnel" -> Streams.funnel _,
-    "stream_retention" -> Streams.retention _,
-    "stream_event_join" -> Streams.eventJoinBatch _,
-    "stream_latest_state" -> Streams.latestState _,
-    "stream_windowed_topk" -> Streams.windowedTopkBatch _,
-    "q_histogram" -> Analytics.qHistogram _,
-    // §2.D/C (round 8): skew-staged distinct, z-order layout audit,
-    // bucketed co-located join
-    "q_distinct_skew" -> Analytics.qDistinctSkew _,
-    "layout_zorder" -> Analytics.layoutZorder _,
-    "source_bucketed_join" -> SourceQueries.bucketedJoin _,
-    "load_agg_upsert" -> SourceQueries.aggUpsert _,
-    "sample_weighted" -> TextOps.sampleWeighted _,
-    "ingest_gap_audit" -> SourceQueries.gapAudit _,
-    "dedup_paragraph" -> Dedup.paragraphDedup _,
-    "dedup_substring" -> Dedup.substringDedup _,
-    "stream_deid_pipeline" -> Streams.deidPipelineBatch _,
-    "ann_cell_balance" -> Ann.cellBalance _,
-    "text_lm_score" -> TextOps.lmScore _,
-    "ingest_checksum_reconcile" -> SourceQueries.checksumReconcile _,
-    "load_cdc_apply" -> SourceQueries.cdcApply _,
-    "embed_random_projection" -> Ann.randomProjection _,
-    "stream_rate_anomaly" -> Streams.rateAnomalyBatch _,
-    "dedup_fuzzy_link" -> Dedup.fuzzyLink _,
-    "q_interval_union" -> Analytics.qIntervalUnion _,
-    "pipeline_training_mix" -> Dedup.trainingMix _,
-    "mm_binary_ingest" -> Multimodal.binaryIngest _,
-    "ingest_incremental" -> ((s: SparkSession, d: String) => graft.etl.Ingest.incrementalPlan(s, d)),
-    // §2.H multimodal
-    "mm_binary_meta" -> Multimodal.binaryMeta _,
-    "mm_frame_sample" -> Multimodal.frameSample _,
-    "mm_modality_route" -> Multimodal.modalityRoute _,
-    "mm_decode_batch_plan" -> Multimodal.decodeBatchPlan _,
-    "mm_feature_extract" -> Multimodal.featureExtract _,
-    // §2.G (cont.)
-    "text_normalize" -> TextOps.normalize _,
-    "text_ngram_freq" -> TextOps.ngramFreq _,
-    "text_vocab" -> TextOps.vocab _,
-    // §2.A/§2.C (round 4): live JDBC path, reid shaping, load retry,
-    // CSV/JSON source round-trips
-    "jdbc_live_extract" -> SourceQueries.jdbcLiveExtract _,
-    "jdbc_live_extract_nopk" -> SourceQueries.jdbcLiveExtractNoPk _,
-    "jdbc_type_map" -> SourceQueries.jdbcTypeMap _,
-    // §2.D/E/G (round 4): interval join, dedup components, repetition
-    "q_range_join" -> Analytics.qRangeJoin _,
-    "q_grouping_sets" -> Analytics.qGroupingSets _,
-    "q_lateral" -> Analytics.qLateral _,
-    "q_window_lead_lag" -> Analytics.qWindowLeadLag _,
-    "q_ntile" -> Analytics.qNtile _,
-    "q_bloom_join" -> BloomJoin.qBloomJoin _,
-    "dlp_format_preserving" -> DlpQueries.dlpFormatPreserving _,
-    "ingest_partition_pruning" -> SourceQueries.partitionPruning _,
-    "dedup_components" -> ((s: SparkSession, d: String) => Dedup.components(s, d)),
-    "dedup_keep_best" -> Dedup.keepBest _,
-    "text_repetition" -> TextOps.repetition _,
-    "sample_stratified" -> TextOps.sampleStratified _,
-    "split_train_eval" -> TextOps.splitTrainEval _,
-    "jdbc_pk_catalog" -> SourceQueries.jdbcPkCatalog _,
-    "reid_header_map" -> SourceQueries.reidHeaderMap _,
-    "reid_group_signature" -> SourceQueries.reidGroupSignature _,
-    "load_retry_deadletter" -> SourceQueries.loadRetryDispositions _,
-    "source_csv_roundtrip" -> SourceQueries.csvRoundtrip _,
-    "load_scd2_merge" -> SourceQueries.scd2Merge _,
-    "migration_jdbc_manifest" -> SourceQueries.jdbcImportManifest _,
-    "dlp_k_map" -> DlpQueries.dlpKMap _,
-    "source_json_roundtrip" -> SourceQueries.jsonRoundtrip _,
-    "source_orc_roundtrip" -> SourceQueries.orcRoundtrip _,
-    // §2.E/F/G (round 7): chunking, corpus-fluency scoring, tf-idf
-    // keywords, training-free LSH ANN, int8 quantization, semantic
-    // dedup clusters
-    "text_chunking" -> ((s: SparkSession, d: String) => TextOps.chunk(s, d)),
-    "text_ngram_coverage" -> ((s: SparkSession, d: String) => TextOps.ngramCoverage(s, d)),
-    "text_tfidf" -> TextOps.tfidfTopTerms _,
-    "ann_lsh_topk" -> Ann.lshTopk _,
-    "embed_quantize_int8" -> Ann.quantizeInt8 _,
-    "dedup_semantic_cluster" -> Dedup.semanticClusters _,
-    "dlp_time_extract" -> DlpQueries.dlpTimeExtract _,
-    "ann_recall_eval" -> Ann.recallEval _,
-    "stream_late_audit" -> ((s: SparkSession, d: String) => Streams.lateAuditBatch(s, d)),
-    "text_search_rank" -> ((s: SparkSession, d: String) => TextOps.searchRank(s, d)),
-    "mm_shard_skew" -> Multimodal.shardSkew _,
-    // §2.I (round 9): the streaming STATE MACHINES themselves run in
-    // batch execution and land in the gate — stream/batch equivalence
-    // as oracle-checked rows, not just spec assertions
-    "stream_sessionize_replay" -> Streams.sessionizeReplay _,
-    "stream_latest_state_replay" -> Streams.latestStateReplay _,
-    "stream_rate_anomaly_replay" -> Streams.rateAnomalyReplay _,
-    // round 9: funnel-sequence match, lakehouse maintenance (column
-    // stats + compaction planning), tokenizer/corpus statistics,
-    // training-mix allocation, truncated-embedding eval, dup-mass curve
-    "q_sequence_match" -> Analytics.qSequenceMatch _,
-    "layout_column_stats" -> Analytics.layoutColumnStats _,
-    "layout_compaction_plan" -> ((s: SparkSession, d: String) => Analytics.layoutCompactionPlan(s, d)),
-    "text_bpe_pairs" -> TextOps.bpePairs _,
-    "text_length_outliers" -> TextOps.lengthOutliers _,
-    "pipeline_mix_weights" -> TextOps.mixWeights _,
-    "embed_matryoshka_eval" -> ((s: SparkSession, d: String) => Ann.matryoshkaEval(s, d)),
-    "dedup_component_stats" -> Dedup.componentStats _,
-    "q_skyline" -> Analytics.qSkyline _,
-    "ingest_snapshot_diff" -> SourceQueries.snapshotDiff _,
-    "embed_dim_stats" -> Ann.dimStats _,
-    "sample_group_topk" -> ((s: SparkSession, d: String) => TextOps.sampleGroupTopk(s, d)),
-    "text_bm25" -> ((s: SparkSession, d: String) => TextOps.bm25(s, d)),
-    "dedup_lsh_tuning" -> Dedup.lshTuning _,
-    "dedup_source_dup_rate" -> Dedup.sourceDupRate _,
-    "mm_payload_dedup" -> Multimodal.payloadDedup _,
-    "ann_probe_curve" -> Ann.probeCurve _,
-    "ann_reassign_drift" -> Ann.reassignDrift _,
-    "q_funnel_conversion" -> Analytics.qFunnelConversion _,
-    "stream_funnel_match_replay" -> Streams.funnelStagesReplay _,
-    "pipeline_mm_curation" -> Multimodal.mmCuration _,
-    "dedup_corpus_matrix" -> Dedup.corpusMatrix _,
-    "dedup_lsh_recall" -> Dedup.lshRecall _,
-    "text_cooccurrence" -> ((s: SparkSession, d: String) => TextOps.cooccurrence(s, d)),
-    "dlp_quantile_bucketing" -> DlpQueries.dlpQuantileBucketing _,
-    "stream_reorder_depth" -> Streams.reorderDepthBatch _,
-    "embed_pair_hist" -> Ann.pairHist _,
-    // round 11: coverage widening — sketch-gated dedup, 13-gram
-    // benchmark contamination, int8-recall + threshold tuning tables,
-    // risk-delta / token-FK DLP audits, sweep-line overlap, zone-map
-    // skipping eval, write planning, heartbeat liveness, cross-modal
-    // alignment, Zipf corpus health
-    "dedup_bloom_prefilter" -> Dedup.bloomPrefilter _,
-    "dedup_ngram13_contain" -> Dedup.ngram13Contamination _,
-    "ann_int8_recall" -> Ann.int8Recall _,
-    "embed_threshold_curve" -> Ann.thresholdCurve _,
-    "text_zipf_fit" -> TextOps.zipfFit _,
-    "dlp_risk_delta" -> DlpQueries.dlpRiskDelta _,
-    "dlp_token_consistency" -> DlpQueries.dlpTokenConsistency _,
-    "q_session_overlap" -> Analytics.qSessionOverlap _,
-    "layout_skipping_eval" -> Analytics.layoutSkippingEval _,
-    "load_partition_plan" -> ((s: SparkSession, d: String) => SourceQueries.loadPartitionPlan(s, d)),
-    "stream_heartbeat_gap" -> ((s: SparkSession, d: String) => Streams.heartbeatGap(s, d)),
-    "mm_embedding_align" -> Multimodal.embeddingAlign _,
-    // round 11 batch 2: FK inference, surrogate/shift DLP audits,
-    // schema-evolution merge, staged cumulative uniques, norm-outlier
-    // index health, language confusion, at-least-once replay audit
-    "ingest_fk_discovery" -> SourceQueries.fkDiscovery _,
-    "dlp_surrogate_annotate" -> DlpQueries.dlpSurrogateAnnotate _,
-    "dlp_shift_consistency" -> DlpQueries.dlpShiftConsistency _,
-    "load_schema_evolve" -> SourceQueries.loadSchemaEvolve _,
-    "q_running_distinct" -> Analytics.qRunningDistinct _,
-    "embed_norm_outliers" -> Ann.normOutliers _,
-    "text_lang_confusion" -> TextOps.langConfusion _,
-    "stream_replay_dedup" -> Streams.replayDedup _,
-    "q_heavy_hitters" -> ((s: SparkSession, d: String) => Analytics.qHeavyHitters(s, d)),
-    // round 11 batch 3: time-series gap fill, distributed argmax,
-    // pointer-doubling recursive closure, last-touch attribution,
-    // exact fixed-point decay, FK orphan audit, suppression-cost
-    // curve, sequence packing
-    "q_topk_rewrite" -> Analytics.qTopkRewrite _,
-    "q_gap_fill" -> Analytics.qGapFill _,
-    "q_mode_per_group" -> Analytics.qModePerGroup _,
-    "q_ancestor_closure" -> Analytics.qAncestorClosure _,
-    "q_attribution" -> Analytics.qAttribution _,
-    "q_decayed_sum" -> Analytics.qDecayedSum _,
-    "ingest_orphan_audit" -> SourceQueries.ingestOrphanAudit _,
-    "dlp_suppression_curve" -> DlpQueries.dlpSuppressionCurve _,
-    "pipeline_pack_sequences" -> TextOps.packSequences _,
-    // round 11 batch 4: corpus novelty, CUSUM changepoint, payload
-    // byte profile, encoder batch drift, stream-static enrichment
-    "dedup_source_novelty" -> Dedup.sourceNovelty _,
-    "q_changepoint" -> Analytics.qChangepoint _,
-    "mm_bytes_profile" -> Multimodal.bytesProfile _,
-    "embed_batch_drift" -> Ann.batchDrift _,
-    "stream_static_enrich" -> Streams.staticEnrichBatch _,
-    // round 11 batch 5: filtered ANN, YoY growth, cohort triangle,
-    // content-defined chunk-store dedup
-    "ann_filtered_topk" -> Ann.filteredTopk _,
-    "q_yoy_growth" -> Analytics.qYoyGrowth _,
-    "q_retention_matrix" -> Analytics.qRetentionMatrix _,
-    "mm_chunk_dedup" -> Multimodal.chunkDedup _,
-    // round 11 batch 6: DLP hotword context boosting, extract-split
-    // balance audit
-    "dlp_hotword_boost" -> DlpQueries.dlpHotwordBoost _,
-    "ingest_split_balance" -> SourceQueries.ingestSplitBalance _,
-    "source_custom_dsv2" -> SourceQueries.customDsv2 _,
-    // round 11 batch 7: bitmap set algebra, blocked edit-distance dedup
-    "q_bitmap_setops" -> Analytics.qBitmapSetops _,
-    "dedup_edit_distance" -> Dedup.editDistancePairs _,
-    // round 11 batch 8: Markov transition matrix, time-bounded funnel,
-    // RFM quartile segmentation, embedding-graph hubness, k-fold CV
-    // split with leakage audit, DLP column profiler, feed freshness
-    "q_transition_matrix" -> Analytics.qTransitionMatrix _,
-    "q_funnel_windowed" -> Analytics.qFunnelWindowed _,
-    "q_rfm_segments" -> Analytics.qRfmSegments _,
-    "embed_degree_hubs" -> Dedup.degreeHubs _,
-    "split_kfold" -> TextOps.splitKfold _,
-    "dlp_column_profile" -> DlpQueries.dlpColumnProfile _,
-    "ingest_freshness_lag" -> SourceQueries.ingestFreshnessLag _,
-    // round 11 batch 9: winnowing fingerprints, centroid silhouette,
-    // triangle census, top session paths, hourly backfill plan
-    "text_winnowing" -> TextOps.winnowingPairs _,
-    "embed_silhouette" -> Ann.silhouette _,
-    "dedup_triangle_count" -> Dedup.triangleCount _,
-    "q_top_paths" -> Analytics.qTopPaths _,
-    "ingest_backfill_plan" -> SourceQueries.ingestBackfillPlan _,
-    // round 11 batch 10: b-bit minhash storage audit, hash-arm A/B
-    // lift, cohort funnel, transition state machine as a gate row
-    "dedup_bbit_minhash" -> Dedup.bbitMinhash _,
-    "q_ab_lift" -> Analytics.qAbLift _,
-    "q_cohort_funnel" -> Analytics.qCohortFunnel _,
-    "stream_transition_replay" -> Streams.transitionReplay _,
-    // round 11 batch 11: trade-graph pagerank, spend inequality,
-    // Benford audit, market concentration, sorted-neighborhood dedup,
-    // mutual-kNN census, temporal split with leakage audit
-    "q_pagerank" -> Analytics.qPagerank _,
-    "q_gini" -> Analytics.qGini _,
-    "q_benford" -> Analytics.qBenford _,
-    "q_hhi" -> Analytics.qHhi _,
-    "dedup_sorted_neighborhood" -> Dedup.sortedNeighborhood _,
-    "embed_mutual_knn" -> Dedup.mutualKnn _,
-    "split_temporal" -> TextOps.splitTemporal _,
-    // round 11 batch 12: market-basket lift, graph-ANN beam search,
-    // class-balanced downsampling, p95 top-coding audit
-    "q_basket_pairs" -> Analytics.qBasketPairs _,
-    "ann_graph_search" -> Ann.graphSearch _,
-    "sample_class_balance" -> Ann.classBalance _,
-    "dlp_top_coding" -> DlpQueries.dlpTopCoding _,
-    // round 11 batch 13: growth accounting, count-min bias audit,
-    // leading principal direction by integer power iteration
-    "q_growth_accounting" -> Analytics.qGrowthAccounting _,
-    "q_countmin_audit" -> Analytics.qCountminAudit _,
-    "embed_pca_power" -> Ann.pcaPower _,
-    // round 11 batch 14: t-closeness risk, ship-latency percentiles
-    "dlp_t_closeness" -> DlpQueries.dlpTCloseness _,
-    "q_ship_latency" -> Analytics.qShipLatency _,
-    // round 11 batch 15: DAU/MAU stickiness, cosine-band label
-    // precision, day-of-week seasonality
-    "q_dau_mau" -> Analytics.qDauMau _,
-    "embed_label_precision" -> Ann.labelPrecision _,
-    "q_dow_profile" -> Analytics.qDowProfile _,
-    // round 11 batch 16: fixed-window rate limiting, RAKE keywords
-    "stream_rate_limit" -> ((s: SparkSession, d: String) => Streams.rateLimit(s, d)),
-    "text_keywords" -> TextOps.keywords _,
-    // round 11 batch 17: rolling-origin forecast backtest, 7-day
-    // return rate
-    "q_forecast_backtest" -> Analytics.qForecastBacktest _,
-    "q_return_rate" -> Analytics.qReturnRate _,
-    // round 11 batch 18: cross-shopping spread, row-width split plan
-    "q_supplier_spread" -> Analytics.qSupplierSpread _,
-    "ingest_row_width" -> SourceQueries.rowWidth _,
-    // round 12 batch 1: concentration/cadence/cohort analytics
-    "q_lorenz_topshare" -> Analytics.qLorenzTopshare _,
-    "q_autocorr" -> Analytics.qAutocorr _,
-    "q_cohort_ltv" -> Analytics.qCohortLtv _,
-    "q_interorder_gap" -> Analytics.qInterorderGap _,
-    // round 12 batch 2: dedup calibration + token ledger, sample
-    // coverage, daily new users
-    "dedup_method_agreement" -> Dedup.methodAgreement _,
-    "pipeline_dedup_token_audit" -> Dedup.dedupTokenAudit _,
-    "sample_cell_coverage" -> Ann.sampleCellCoverage _,
-    "stream_new_users" -> Streams.newUsersBatch _,
-    // round 12 batch 3: ABC class, duplicate-payment screen,
-    // generalization ladder, charset QA, assignment margin, dup ratio
-    "q_abc_class" -> Analytics.qAbcClass _,
-    "q_duplicate_orders" -> Analytics.qDuplicateOrders _,
-    "dlp_generalization_ladder" -> DlpQueries.dlpGeneralizationLadder _,
-    "text_charset_profile" -> TextOps.charsetProfile _,
-    "embed_assign_margin" -> Ann.assignMargin _,
-    "stream_dup_ratio" -> Streams.dupRatioBatch _,
-    // round 12 batch 4: lifespan survival, sampling risk, shingle
-    // sweep, phash near-dup, outage audit, LSH bucket profile
-    "q_customer_lifespan" -> Analytics.qCustomerLifespan _,
-    "dlp_sampling_risk" -> DlpQueries.dlpSamplingRisk _,
-    "dedup_shingle_sweep" -> Dedup.shingleSweep _,
-    "mm_phash_neardup" -> Multimodal.phashNearDup _,
-    "stream_outage_minutes" -> Streams.outageMinutesBatch _,
-    "ann_lsh_bucket_profile" -> Ann.lshBucketProfile _,
-    // round 12 batch 5: backlog aging, quality-rule matrix
-    "q_backlog_aging" -> Analytics.qBacklogAging _,
-    "pipeline_quality_matrix" -> TextOps.qualityMatrix _,
-    // round 12 batch 6: trade balance, weekly volatility, key-candidate
-    // profile, mix drift
-    "q_trade_balance" -> Analytics.qTradeBalance _,
-    "q_weekly_volatility" -> Analytics.qWeeklyVolatility _,
-    "ingest_distinctness_profile" -> SourceQueries.ingestDistinctnessProfile _,
-    "stream_mix_drift" -> Streams.mixDriftBatch _,
-    // round 12 batch 7: staging type inference, composite-key
-    // discovery, bucket-pruned lookup, partition-evolution plan,
-    // OLS trend, aspect-ratio resolution bucketing
-    "ingest_type_infer" -> SourceQueries.ingestTypeInfer _,
-    "ingest_composite_key" -> SourceQueries.ingestCompositeKey _,
-    "load_bucket_pruning" -> SourceQueries.loadBucketPruning _,
-    "load_partition_evolution" -> SourceQueries.loadPartitionEvolution _,
-    "q_ols_trend" -> Analytics.qOlsTrend _,
-    "mm_resolution_bucket" -> Multimodal.resolutionBucket _,
-    // round 12 batch 8: outer attribution join, boilerplate screen,
-    // clustering-depth audit, vault key rotation, hard negatives
-    "stream_event_join_outer" -> Streams.eventJoinOuterBatch _,
-    "text_boilerplate" -> TextOps.boilerplate _,
-    "layout_cluster_depth" -> Analytics.layoutClusterDepth _,
-    "dlp_vault_rotation" -> DlpQueries.dlpVaultRotation _,
-    "sample_hard_negatives" -> Ann.hardNegatives _,
-    // round 12 batch 9: drawdown risk, lexical richness, residual
-    // scan, cluster medoid election, state-store sizing
-    "q_max_drawdown" -> Analytics.qMaxDrawdown _,
-    "text_hapax_ratio" -> TextOps.hapaxRatio _,
-    "dlp_residual_scan" -> DlpQueries.dlpResidualScan _,
-    "dedup_cluster_medoid" -> Dedup.clusterMedoid _,
-    "stream_state_size" -> Streams.stateSizeBatch _,
-    // round 12 batch 10: runs test, discount elasticity, audio
-    // framing plan, watermark sweep, key-space completeness
-    "q_runs_test" -> Analytics.qRunsTest _,
-    "q_discount_elasticity" -> Analytics.qDiscountElasticity _,
-    "mm_audio_window_plan" -> Multimodal.audioWindowPlan _,
-    "stream_late_sweep" -> Streams.lateSweepBatch _,
-    "ingest_pk_completeness" -> SourceQueries.ingestPkCompleteness _,
-    // round 12 batch 11: dynamic partition overwrite, constraint
-    // gate, order fan-out, pair-sim histogram, PQ distortion
-    "load_dynamic_overwrite" -> SourceQueries.loadDynamicOverwrite _,
-    "load_constraint_check" -> SourceQueries.loadConstraintCheck _,
-    "q_order_linecount_dist" -> Analytics.qOrderLinecountDist _,
-    "dedup_pair_sim_histogram" -> Dedup.pairSimHistogram _,
-    "ann_pq_distortion" -> Ann.pqDistortion _,
-    // round 12 batch 12: rank-ratio windows, activity streaks,
-    // weighted median, chi-square audit, rolling median, readability
-    "q_percent_rank" -> Analytics.qPercentRank _,
-    "q_streaks" -> Analytics.qStreaks _,
-    "q_weighted_median" -> Analytics.qWeightedMedian _,
-    "q_chi_square" -> Analytics.qChiSquare _,
-    "q_moving_median" -> Analytics.qMovingMedian _,
-    "text_readability" -> TextOps.readability _,
-    // round 12 batch 13: seasonal index, MAD outliers, degree
-    // distribution, noise-injected release, label concentration
-    "q_seasonal_index" -> Analytics.qSeasonalIndex _,
-    "q_mad_outliers" -> Analytics.qMadOutliers _,
-    "q_degree_dist" -> Analytics.qDegreeDist _,
-    "dlp_noise_counts" -> DlpQueries.dlpNoiseCounts _,
-    "embed_spherical_variance" -> Ann.sphericalVariance _,
-    // round 12 batch 14: rank correlation, quartile skewness, mix
-    // drift, infotype co-occurrence, dup-bigram screen, session
-    // concurrency curve
-    "q_spearman_rho" -> Analytics.qSpearmanRho _,
-    "q_bowley_skew" -> Analytics.qBowleySkew _,
-    "q_mix_shift" -> Analytics.qMixShift _,
-    "dlp_infotype_cooccurrence" -> DlpQueries.dlpInfotypeCooccurrence _,
-    "text_dup_ngrams" -> TextOps.dupNgrams _,
-    "stream_concurrency_curve" -> Streams.concurrencyCurveBatch _,
-    // round 12 batch 15: Simpson assortment diversity, price-volume-
-    // mix bridge, new-vs-repeat revenue, 1-bit Hamming top-k,
-    // absence/abandonment timeout, surrogate collision audit
-    "q_simpson_diversity" -> Analytics.qSimpsonDiversity _,
-    "q_price_volume_mix" -> ((s: SparkSession, d: String) => Analytics.qPriceVolumeMix(s, d)),
-    "q_new_vs_repeat" -> Analytics.qNewVsRepeat _,
-    "embed_hamming_topk" -> Ann.hammingTopk _,
-    "stream_absence_timeout" -> ((s: SparkSession, d: String) => Streams.absenceTimeout(s, d)),
-    "dlp_hash_collision_audit" -> DlpQueries.dlpHashCollisionAudit _,
-    // round 12 batch 16: binned two-sample KS, Markov steady state,
-    // 1-bit recall bill, Heaps vocabulary curve, retention sweep
-    "q_ks_binned" -> ((s: SparkSession, d: String) => Analytics.qKsBinned(s, d)),
-    "q_markov_steady" -> ((s: SparkSession, d: String) => Analytics.qMarkovSteady(s, d)),
-    "ann_hamming_recall" -> Ann.hammingRecall _,
-    "text_heaps_curve" -> ((s: SparkSession, d: String) => TextOps.heapsCurve(s, d)),
-    "dlp_retention_sweep" -> ((s: SparkSession, d: String) => DlpQueries.dlpRetentionSweep(s, d)),
-    // round 12 batch 17: winsorized mean (two-level rank bounds),
-    // recursive (c,l)-diversity, kNN-distance density outliers
-    "q_winsorized_mean" -> Analytics.qWinsorizedMean _,
-    "dlp_cl_diversity" -> ((s: SparkSession, d: String) => DlpQueries.dlpClDiversity(s, d)),
-    "embed_knn_dist" -> ((s: SparkSession, d: String) => Ann.knnDist(s, d)),
-    // round 12 batch 18: watermark skew, session value, shipment
-    // spread, LSH blocking recall
-    "stream_watermark_skew" -> ((s: SparkSession, d: String) => Streams.watermarkSkew(s, d)),
-    "stream_session_value" -> Streams.sessionValue _,
-    "q_ship_spread" -> Analytics.qShipSpread _,
-    "ann_bucket_recall" -> Ann.bucketRecall _,
-    // round 12 batch 19: DSv2 staged-commit write path, media
-    // metadata strip audit
-    "source_dsv2_write" -> SourceQueries.dsv2WriteRoundtrip _,
-    "mm_metadata_strip" -> Multimodal.metadataStrip _,
-    // round 12 batch 20: shadow-deployment diff, experiment sizing
-    "stream_shadow_diff" -> ((s: SparkSession, d: String) => Streams.shadowDiff(s, d)),
-    "q_ab_power_plan" -> Analytics.qAbPowerPlan _,
-    // round 12 batch 21: sample-based stats accuracy audit
-    "ingest_sample_stats" -> SourceQueries.sampleStatsAccuracy _,
-    // round 12 batch 22: IDF-weighted Jaccard rerank
-    "dedup_idf_jaccard" -> Dedup.idfJaccard _,
-    // round 13 batch 1: version-chained commit log (time travel +
-    // streaming exactly-once replay absorption)
-    "load_time_travel" -> SourceQueries.timeTravelRead _,
-    "stream_exactly_once_sink" -> Streams.exactlyOnceSink _,
-    // round 13 batch 2: BPE apply (tokenizer-denominated token bill)
-    "text_bpe_apply" -> ((s: SparkSession, d: String) => TextOps.bpeApply(s, d)),
-    // round 13 batch 3: sketch-based ANALYZE (the 100 TB shape),
-    // video scene segmentation
-    "layout_column_stats_approx" -> Analytics.layoutColumnStatsApprox _,
-    "mm_scene_cut" -> Multimodal.sceneCut _,
-    // round 14 batch 1: commit-log checkpoint + retention lifecycle
-    "load_manifest_compaction" -> SourceQueries.manifestCompaction _,
-    // round 14 batch 2: catalog-wide ANALYZE sweep, incremental IVF
-    // index maintenance
-    "layout_stats_sweep" -> Analytics.layoutStatsSweep _,
-    "ann_incremental_assign" -> Ann.incrementalAssign _,
-    // round 14 batch 3: iterated BPE (merges that compose)
-    "text_bpe_train_iter" -> ((s: SparkSession, d: String) => TextOps.bpeTrainIter(s, d)),
-    // round 14 batch 4: deletion-vector read path, FK-derived load
-    // order, CUSUM drift alarms, farthest-point codebook seeding
-    "load_deletion_vectors" -> SourceQueries.deletionVectors _,
-    "ingest_load_order" -> SourceQueries.loadOrderPlan _,
-    "q_cusum_alarm" -> Analytics.qCusumAlarm _,
-    "embed_kmeanspp_seed" -> ((s: SparkSession, d: String) => Ann.kmeansppSeed(s, d)),
-    // round 14 batch 5: the sketch half of the catalog-wide ANALYZE,
-    // the DLP transformation-summary audit record
-    "layout_stats_sweep_approx" -> Analytics.layoutStatsSweepApprox _,
-    "dlp_transformation_summary" -> DlpQueries.dlpTransformationSummary _,
-    // round 14 batch 7: OPTIMIZE — atomic small-file compaction on
-    // the commit log (add + remove in one version)
-    "load_optimize_compact" -> SourceQueries.optimizeCompactOp _,
-    // round 14 batch 8: streaming SOURCE over the commit log (live
-    // readStream tail, rewrite versions skipped)
-    "stream_source_tail" -> Streams.streamSourceTail _,
-    // round 15 batch 1: the remaining lakehouse verbs — RESTORE
-    // (rollback as a new version), DELETE on the real read path
-    // (merge-on-read deletion vectors through the scan), and the
-    // vacuumed-chain initial snapshot for a fresh streaming consumer
-    "load_restore" -> SourceQueries.restoreOp _,
-    "load_delete_verb" -> SourceQueries.deleteVerbOp _,
-    "stream_source_snapshot" -> Streams.streamSourceSnapshot _,
-    // round 15 batch 3: the ANN index persisted as a cell-bucketed
-    // table, probes served from the bucket-pruned layout; the
-    // ANALYZE → prune loop closed from the stats sweep's own catalog
-    "ann_bucketed_serve" -> Ann.bucketedServe _,
-    "layout_prune_from_stats" -> Analytics.layoutPruneFromStats _,
-    // round 15 batch 4: CHANGE DATA FEED (the table_changes verb) and
-    // streaming admission control (maxVersionsPerTrigger)
-    "load_change_feed" -> SourceQueries.changeFeedOp _,
-    "stream_source_ratelimit" -> Streams.streamSourceRateLimit _,
-    // round 15 batch 5: MERGE (copy-on-write upsert with CDF sidecars)
-    "load_merge_verb" -> SourceQueries.mergeVerbOp _,
-    // round 15 batch 6: filter pushdown + per-file key-stats skipping
-    // on the DSv2 commit log
-    "load_file_skipping" -> SourceQueries.fileSkipping _,
-    // round 15 batch 7: UPDATE with touched-file pruning (the merge
-    // entry's noted next step, closed), SHALLOW CLONE, and the
-    // CDF-sync theorem (feed deltas ≡ snapshot diff)
-    "load_update_verb" -> SourceQueries.updateVerbOp _,
-    "load_clone_shallow" -> SourceQueries.cloneShallowOp _,
-    "load_cdf_sync" -> SourceQueries.cdfSyncOp _,
-    // round 15 batch 8: protocol versioning, the streaming CDF
-    // surface (readChangeFeed), and z-order clustering quality
-    "load_protocol_gate" -> SourceQueries.protocolGateOp _,
-    "stream_cdf_consume" -> Streams.streamCdfConsume _,
-    "layout_zorder_cluster" -> Analytics.layoutZorderCluster _,
-    // round 15 batch 9: the admin/audit verbs — DESCRIBE HISTORY
-    // (#op: commit info), DESCRIBE DETAIL, VACUUM DRY RUN
-    "load_describe_history" -> SourceQueries.describeHistoryOp _,
-    "load_describe_detail" -> SourceQueries.describeDetailOp _,
-    "load_vacuum_dryrun" -> SourceQueries.vacuumDryRunOp _,
-    // round 15 batch 11: merge-on-read MERGE — the write-cheap upsert
-    // version-scoped DVs unlock (zero data-file rewrite)
-    "load_merge_mor" -> SourceQueries.mergeMorOp _,
-    // round 16 batch 1: OCC auto-retry — a pinned verb that loses its
-    // snapshot race rebases over provably-compatible interleaves
-    // (disjoint-zone merges both succeed with no caller retry)
-    "load_occ_retry" -> SourceQueries.occRetryOp _,
-    // round 16 batch 2: val-column zone maps (`#vstats:`) — file
-    // skipping on equality/range/prefix val predicates
-    "load_file_skipping_val" -> SourceQueries.fileSkippingValOp _,
-    // round 16 batch 3: OPTIMIZE ZORDER BY (key, val) — the clustered
-    // rewrite that tightens BOTH zone maps in one atomic version
-    "load_optimize_zorder" -> SourceQueries.optimizeZorderOp _,
-    // round 16 batch 4: ALTER TABLE ADD COLUMN — zero-rewrite schema
-    // evolution with per-snapshot schema time travel, protocol-gated
-    "load_schema_evolution" -> SourceQueries.schemaEvolutionOp _,
-    // round 16 batch 5: the auto-maintenance planner — metadata-only
-    // trigger scan emitting the OPTIMIZE/VACUUM/ZORDER job list
-    "load_maintenance_plan" -> SourceQueries.maintenancePlanOp _,
-    // round 16 batch 6: rate-limited initial snapshot (idx-cursor
-    // paced) + streaming CDF startingVersion=latest tail mode
-    "stream_source_snapshot_paced" -> Streams.streamSourceSnapshotPaced _,
-    "stream_cdf_tail" -> Streams.streamCdfTail _,
-    // round 16 batch 7: the maintenance cycle closed — plan, execute
-    // ONE bin-packing rewrite, re-plan returns zero jobs
-    "load_maintenance_cycle" -> SourceQueries.maintenanceCycleOp _,
-    // round 17 batch 1: the six evolved-table guards are GONE — every
-    // rewrite verb and the change feed work after ALTER ADD COLUMN
-    "load_merge_evolved" -> SourceQueries.mergeEvolvedOp _,
-    "load_optimize_evolved" -> SourceQueries.optimizeEvolvedOp _,
-    "load_cdf_evolved" -> SourceQueries.cdfEvolvedOp _,
-    // round 17 batch 2: per-column zone maps (`#cstats:`, position-
-    // keyed) — file skipping on evolved-column predicates
-    "load_file_skipping_cols" -> SourceQueries.fileSkippingColsOp _,
-    // round 17 batch 3: ALTER TABLE RENAME COLUMN — metadata-only
-    // name-mapping (#colmap, position-keyed), protocol-gated to 4:4
-    "load_rename_column" -> SourceQueries.renameColumnOp _,
-    // round 17 batch 4: concurrency proofs — the CAS + rebase across
-    // two real JVMs, and streaming epochs racing a live OPTIMIZE
-    "load_occ_crossproc" -> SourceQueries.occCrossProcOp _,
-    "stream_sink_occ_race" -> Streams.streamSinkOccRace _,
-    // round 17 batch 5: ALTER TABLE DROP COLUMN — metadata-only
-    // (#coldrop, position-keyed), protocol-gated to 5:5; completes
-    // the ADD + RENAME + DROP schema-evolution verb surface
-    "load_drop_column" -> SourceQueries.dropColumnOp _,
-    // round 17 batch 6: LLM-pipeline additions — soft dedup weights
-    // (keep-everything 1/cluster reweighting), epsilon-ball range
-    // search with LSH-bucket recall, tokenizer fertility by language,
-    // TTL-windowed streaming dedup (bounded-state dropDuplicates)
-    "dedup_soft_weights" -> Dedup.softDedupWeights _,
-    "ann_epsilon_ball" -> Ann.epsilonBall _,
-    "text_tokenizer_fertility" -> TextOps.tokenizerFertility _,
-    "stream_dedup_window" -> Streams.dedupWindowBatch _,
-  )
+  /** A `local[cpus]` session with `cpus` shuffle partitions, UTC
+    * session time and no UI; everything else stays at the Spark
+    * default (AQE on, coalescing from the shuffle partition count). */
+  def localSession(cpus: Int): SparkSession =
+    SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+
+  /** The mains' core count: `SPARK_GRAFT_CPUS` if set, else
+    * the cores this JVM sees. */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
 
   /** The tokenizer's merge count — mirrors TextOps.BpeMerges. */
   private val BpeK = 10
@@ -876,9 +304,16 @@ object SparkEntry {
     }
   }.mkString(",\n")
 
-  /** DuckDB-equivalent SQL per query key (same column names + types). */
-  def oracleSql: Map[String, String] = Map(
-    "q1_pricing_summary" ->
+  /** One operator: `run` builds its lazy DataFrame over a testdata
+    * directory, `oracle` is the DuckDB SQL that must reproduce the
+    * result (same column names + types, SURVEY.md §6 parity rules). */
+  final case class Op(name: String, run: (SparkSession, String) => DataFrame, oracle: String)
+
+  /** The operator registry: every operator is declared here exactly
+    * once. Lazy because the oracle SQL reads the private fragments
+    * above. */
+  lazy val operators: Seq[Op] = distinctNames(Seq(
+    Op("q1_pricing_summary", Analytics.q1PricingSummary,
       """SELECT l_returnflag, l_linestatus,
         |  CAST(SUM(CAST(CAST(l_quantity AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT) AS sum_qty,
         |  CAST(SUM(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT) AS sum_base_price,
@@ -886,8 +321,8 @@ object SparkEntry {
         |  CAST(SUM(CAST(CAST(l_extendedprice*(1-l_discount)*(1+l_tax) AS DECIMAL(18,6)) * 1000000 AS BIGINT)) AS BIGINT) AS sum_charge,
         |  COUNT(*) AS count_order
         |FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-        |GROUP BY l_returnflag, l_linestatus ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    "q3_shipping_priority" ->
+        |GROUP BY l_returnflag, l_linestatus ORDER BY l_returnflag, l_linestatus""".stripMargin),
+    Op("q3_shipping_priority", Analytics.q3ShippingPriority,
       """SELECT l_orderkey, o_orderdate, o_orderpriority,
         |  CAST(SUM(CAST(CAST(l_extendedprice*(1-l_discount) AS DECIMAL(18,4)) * 10000 AS BIGINT)) AS BIGINT) AS revenue
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
@@ -896,8 +331,8 @@ object SparkEntry {
         |  AND o_orderdate < TIMESTAMP '1998-03-15'
         |  AND l_shipdate > TIMESTAMP '1996-03-15'
         |GROUP BY l_orderkey, o_orderdate, o_orderpriority
-        |ORDER BY revenue DESC, o_orderdate, l_orderkey LIMIT 10""".stripMargin,
-    "q5_local_supplier" ->
+        |ORDER BY revenue DESC, o_orderdate, l_orderkey LIMIT 10""".stripMargin),
+    Op("q5_local_supplier", Analytics.q5LocalSupplier,
       """SELECT n_name,
         |  CAST(SUM(CAST(CAST(l_extendedprice*(1-l_discount) AS DECIMAL(18,4)) * 10000 AS BIGINT)) AS BIGINT) AS revenue
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
@@ -907,46 +342,46 @@ object SparkEntry {
         |JOIN region ON n_regionkey = r_regionkey
         |WHERE r_name = 'ASIA'
         |  AND o_orderdate >= TIMESTAMP '1996-01-01' AND o_orderdate < TIMESTAMP '1997-01-01'
-        |GROUP BY n_name ORDER BY revenue DESC, n_name""".stripMargin,
-    "q6_forecast_revenue" ->
+        |GROUP BY n_name ORDER BY revenue DESC, n_name""".stripMargin),
+    Op("q6_forecast_revenue", Analytics.q6ForecastRevenue,
       """SELECT CAST(SUM(CAST(CAST(l_extendedprice*l_discount AS DECIMAL(18,4)) * 10000 AS BIGINT)) AS BIGINT) AS revenue
         |FROM lineitem
         |WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1997-01-01'
-        |  AND l_discount BETWEEN 0.03 AND 0.07 AND l_quantity < 24""".stripMargin,
-    "q_window_running" ->
+        |  AND l_discount BETWEEN 0.03 AND 0.07 AND l_quantity < 24""".stripMargin),
+    Op("q_window_running", Analytics.qWindowRunning,
       """SELECT l_suppkey, l_orderkey, l_linenumber,
         |  CAST(ROW_NUMBER() OVER w AS BIGINT) AS rn,
         |  CAST(SUM(CAST(CAST(l_quantity AS DECIMAL(18,2)) * 100 AS BIGINT)) OVER (w ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS running_qty
         |FROM lineitem
         |WINDOW w AS (PARTITION BY l_suppkey ORDER BY l_shipdate, l_orderkey, l_linenumber, l_quantity)
-        |ORDER BY l_suppkey, rn""".stripMargin,
-    "q_topk_per_group" ->
+        |ORDER BY l_suppkey, rn""".stripMargin),
+    Op("q_topk_per_group", Analytics.qTopkPerGroup,
       """SELECT * FROM (
         |  SELECT o_custkey, o_orderkey,
         |    CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS price,
         |    CAST(ROW_NUMBER() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey) AS BIGINT) AS rk
         |  FROM orders) t
-        |WHERE rk <= 3 ORDER BY o_custkey, rk""".stripMargin,
-    "q_topk_native" ->
+        |WHERE rk <= 3 ORDER BY o_custkey, rk""".stripMargin),
+    Op("q_topk_native", Analytics.qTopkNative,
       """SELECT * FROM (
         |  SELECT o_custkey, o_orderkey,
         |    CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS price,
         |    CAST(ROW_NUMBER() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey) AS BIGINT) AS rk
         |  FROM orders) t
-        |WHERE rk <= 3 ORDER BY o_custkey, rk""".stripMargin,
-    "q_rollup" ->
+        |WHERE rk <= 3 ORDER BY o_custkey, rk""".stripMargin),
+    Op("q_rollup", Analytics.qRollup,
       """SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n,
         |  CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT) AS total
         |FROM orders GROUP BY ROLLUP (o_orderstatus, o_orderpriority)
-        |ORDER BY o_orderstatus ASC NULLS FIRST, o_orderpriority ASC NULLS FIRST""".stripMargin,
-    "q_semi_anti" ->
+        |ORDER BY o_orderstatus ASC NULLS FIRST, o_orderpriority ASC NULLS FIRST""".stripMargin),
+    Op("q_semi_anti", Analytics.qSemiAnti,
       """SELECT c_custkey AS key, 'has_big_order' AS tag FROM customer
         |WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey AND o_totalprice > 400000)
         |UNION ALL
         |SELECT s_suppkey AS key, 'idle_supplier' AS tag FROM supplier
         |WHERE NOT EXISTS (SELECT 1 FROM lineitem WHERE l_suppkey = s_suppkey AND l_shipdate >= TIMESTAMP '2001-01-01')
-        |ORDER BY tag, key""".stripMargin,
-    "q_correlated_subquery" ->
+        |ORDER BY tag, key""".stripMargin),
+    Op("q_correlated_subquery", Analytics.qCorrelatedSubquery,
       """SELECT o_orderkey, o_custkey,
         |  CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS price
         |FROM orders o
@@ -954,86 +389,86 @@ object SparkEntry {
         |      (SELECT COUNT(*) FROM orders o2 WHERE o2.o_custkey = o.o_custkey)
         |    > 3 * (SELECT CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DECIMAL(18,2))
         |           FROM orders o2 WHERE o2.o_custkey = o.o_custkey)
-        |ORDER BY o_orderkey""".stripMargin,
-    "q_set_ops" ->
+        |ORDER BY o_orderkey""".stripMargin),
+    Op("q_set_ops", Analytics.qSetOps,
       """SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING'
         |INTERSECT
         |SELECT o_custkey FROM orders WHERE o_totalprice > 300000
         |EXCEPT
         |SELECT c_custkey FROM customer WHERE c_acctbal < 0
-        |ORDER BY c_custkey""".stripMargin,
-    "q_asof_join" ->
+        |ORDER BY c_custkey""".stripMargin),
+    Op("q_asof_join", AsOf.purchaseLastClick,
       """WITH e AS (SELECT event_id, user_id, event_type, epoch_us(CAST(ts AS TIMESTAMP)) AS us FROM events),
         |p AS (SELECT event_id, user_id, us FROM e WHERE event_type = 'purchase'),
         |c AS (SELECT user_id, us, max(event_id) AS click_id FROM e WHERE event_type = 'click' GROUP BY user_id, us)
         |SELECT p.event_id AS purchase_id, p.user_id, c.click_id AS last_click_id,
         |  CAST(p.us - c.us AS BIGINT) AS gap_us
         |FROM p ASOF JOIN c ON p.user_id = c.user_id AND p.us >= c.us
-        |ORDER BY purchase_id""".stripMargin,
-    "q_pivot" ->
+        |ORDER BY purchase_id""".stripMargin),
+    Op("q_pivot", Analytics.qPivot,
       """SELECT o_orderstatus,
         |  COUNT(CASE WHEN o_orderpriority = '1-URGENT' THEN 1 END) AS p1,
         |  COUNT(CASE WHEN o_orderpriority = '2-HIGH' THEN 1 END) AS p2,
         |  COUNT(CASE WHEN o_orderpriority = '3-MEDIUM' THEN 1 END) AS p3,
         |  COUNT(CASE WHEN o_orderpriority = '4-NOT SPECIFIED' THEN 1 END) AS p4,
         |  COUNT(CASE WHEN o_orderpriority = '5-LOW' THEN 1 END) AS p5
-        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-    "q_string_agg" ->
+        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin),
+    Op("q_string_agg", Analytics.qStringAgg,
       """SELECT s_nationkey, string_agg(s_name, ',' ORDER BY s_name) AS names, COUNT(*) AS n
-        |FROM supplier GROUP BY s_nationkey ORDER BY s_nationkey""".stripMargin,
-    "q_cube" ->
+        |FROM supplier GROUP BY s_nationkey ORDER BY s_nationkey""".stripMargin),
+    Op("q_cube", Analytics.qCube,
       """SELECT o_orderstatus, o_orderpriority,
         |  CAST(grouping(o_orderstatus) AS BIGINT) AS g_status,
         |  CAST(grouping(o_orderpriority) AS BIGINT) AS g_priority,
         |  COUNT(*) AS n
         |FROM orders GROUP BY CUBE (o_orderstatus, o_orderpriority)
-        |ORDER BY o_orderstatus ASC NULLS FIRST, o_orderpriority ASC NULLS FIRST""".stripMargin,
-    "q_unpivot" ->
+        |ORDER BY o_orderstatus ASC NULLS FIRST, o_orderpriority ASC NULLS FIRST""".stripMargin),
+    Op("q_unpivot", Analytics.qUnpivot,
       """SELECT p_partkey, attr, CAST(CAST(val AS DECIMAL(18,2)) * 100 AS BIGINT) AS val
         |FROM (UNPIVOT (SELECT p_partkey, CAST(p_size AS DOUBLE) AS size_v, p_retailprice AS price_v FROM part)
         |      ON size_v, price_v INTO NAME attr VALUE val)
-        |ORDER BY p_partkey, attr""".stripMargin,
-    "q_percentile" ->
+        |ORDER BY p_partkey, attr""".stripMargin),
+    Op("q_percentile", Analytics.qPercentile,
       """SELECT l_returnflag,
         |  quantile_cont(l_quantity, 0.5) AS p50,
         |  quantile_cont(l_quantity, 0.9) AS p90
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
     // HLL estimates are engine-specific; the deterministic contract
     // (estimate within 6% = 3 sigma of exact at rsd 0.02) is what
     // crosses the oracle boundary.
-    "q_approx_distinct" ->
+    Op("q_approx_distinct", Analytics.qApproxDistinct,
       """SELECT l_returnflag, COUNT(DISTINCT l_partkey) AS exact_parts,
         |  CAST(1 AS BIGINT) AS within_band
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
     // approx sketch value is engine-specific; the rank-error contract
     // is not (see qApproxQuantile)
-    "q_approx_quantile" ->
+    Op("q_approx_quantile", Analytics.qApproxQuantile,
       """SELECT l_returnflag,
         |  quantile_cont(l_quantity, 0.49) AS p49,
         |  quantile_cont(l_quantity, 0.51) AS p51,
         |  CAST(1 AS BIGINT) AS within_bound
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
     // §2.A
-    "ingest_catalog" ->
+    Op("ingest_catalog", DlpQueries.ingestCatalog,
       (s"""SELECT table_name, column_name, CAST(ordinal AS BIGINT) AS ordinal,
          |  spark_type, bq_type, bq_name FROM (VALUES
          |$CatalogValues
          |) t(table_name, column_name, ordinal, spark_type, bq_type, bq_name)
-         |ORDER BY table_name, ordinal""".stripMargin),
-    "bq_schema_map" ->
+         |ORDER BY table_name, ordinal""".stripMargin)),
+    Op("bq_schema_map", DlpQueries.bqSchemaMap,
       (s"""SELECT table_name, column_name, bq_type FROM (VALUES
          |$CatalogValues
          |) t(table_name, column_name, ordinal, spark_type, bq_type, bq_name)
-         |ORDER BY table_name, column_name""".stripMargin),
-    "ingest_offset_splits" ->
+         |ORDER BY table_name, column_name""".stripMargin)),
+    Op("ingest_offset_splits", DlpQueries.ingestOffsetSplits,
       """WITH c AS (SELECT COUNT(*) AS cnt FROM lineitem)
         |SELECT split_id, CAST(LEAST(5000, cnt - split_id*5000) AS BIGINT) AS planned_rows
         |FROM (SELECT unnest(range(0, CAST(ceil(cnt/5000.0) AS BIGINT))) AS split_id, cnt FROM c)
-        |ORDER BY split_id""".stripMargin,
-    "ingest_excluded_tables" ->
+        |ORDER BY split_id""".stripMargin),
+    Op("ingest_excluded_tables", DlpQueries.ingestExcludedTables,
       """SELECT * FROM (VALUES ('customer'),('documents'),('lineitem'),('nation'),
-        |('orders'),('part'),('region'),('supplier')) t(table_name) ORDER BY table_name""".stripMargin,
-    "ingest_row_count" ->
+        |('orders'),('part'),('region'),('supplier')) t(table_name) ORDER BY table_name""".stripMargin),
+    Op("ingest_row_count", DlpQueries.ingestRowCount,
       """SELECT 'customer' AS table_name, COUNT(*) AS n_rows FROM customer
         |UNION ALL SELECT 'documents', COUNT(*) FROM documents
         |UNION ALL SELECT 'embeddings', COUNT(*) FROM embeddings
@@ -1044,28 +479,28 @@ object SparkEntry {
         |UNION ALL SELECT 'part', COUNT(*) FROM part
         |UNION ALL SELECT 'region', COUNT(*) FROM region
         |UNION ALL SELECT 'supplier', COUNT(*) FROM supplier
-        |ORDER BY table_name""".stripMargin,
+        |ORDER BY table_name""".stripMargin),
     // §2.B
-    "dlp_mask_chars" ->
+    Op("dlp_mask_chars", DlpQueries.dlpMaskChars,
       """SELECT c_custkey, c_name,
         |  substr(c_name, 1, 9) || repeat('#', greatest(length(c_name) - 9, 0)) AS masked
-        |FROM customer ORDER BY c_custkey""".stripMargin,
-    "dlp_redact" ->
+        |FROM customer ORDER BY c_custkey""".stripMargin),
+    Op("dlp_redact", DlpQueries.dlpRedact,
       s"""WITH t AS (SELECT c_custkey, $ContactSql AS contact FROM customer)
          |SELECT c_custkey, regexp_replace(contact, '$EmailReSql|$PhoneReSql', '[REDACTED]', 'g') AS redacted
-         |FROM t ORDER BY c_custkey""".stripMargin,
-    "dlp_replace_infotype" ->
+         |FROM t ORDER BY c_custkey""".stripMargin),
+    Op("dlp_replace_infotype", DlpQueries.dlpReplaceInfotype,
       s"""WITH t AS (SELECT c_custkey, $ContactSql AS contact FROM customer)
          |SELECT c_custkey, regexp_replace(regexp_replace(contact, '$EmailReSql', '[EMAIL_ADDRESS]', 'g'), '$PhoneReSql', '[PHONE_NUMBER]', 'g') AS replaced
-         |FROM t ORDER BY c_custkey""".stripMargin,
+         |FROM t ORDER BY c_custkey""".stripMargin),
     // dlp_inspect_dictionary: custom term-list infoType findings
     // (term list mirrored verbatim from DlpQueries.dlpInspectDictionary).
-    "dlp_inspect_dictionary" ->
+    Op("dlp_inspect_dictionary", DlpQueries.dlpInspectDictionary,
       """WITH h AS (SELECT doc_id, unnest(list_filter(string_split(lower(text), ' '),
         |  x -> x IN ('customer', 'vector', 'stream', 'window', 'merge', 'batch'))) AS term FROM documents)
         |SELECT doc_id, 'CUSTOM_DICTIONARY' AS info_type, term, CAST(COUNT(*) AS BIGINT) AS n
-        |FROM h GROUP BY doc_id, term ORDER BY doc_id, term""".stripMargin,
-    "dlp_inspect" ->
+        |FROM h GROUP BY doc_id, term ORDER BY doc_id, term""".stripMargin),
+    Op("dlp_inspect", DlpQueries.dlpInspect,
       s"""WITH t AS (SELECT c_custkey, $ContactSql AS contact FROM customer),
          |u AS (
          |  SELECT c_custkey, 'EMAIL_ADDRESS' AS info_type,
@@ -1075,44 +510,44 @@ object SparkEntry {
          |  SELECT c_custkey, 'PHONE_NUMBER',
          |    CAST(len(regexp_extract_all(contact, '$PhoneReSql')) AS BIGINT),
          |    regexp_extract(contact, '$PhoneReSql') FROM t)
-         |SELECT * FROM u WHERE n > 0 ORDER BY c_custkey, info_type""".stripMargin,
-    "dlp_crypto_hash" ->
+         |SELECT * FROM u WHERE n > 0 ORDER BY c_custkey, info_type""".stripMargin),
+    Op("dlp_crypto_hash", DlpQueries.dlpCryptoHash,
       """SELECT c_custkey, sha256('graft-key:' || c_name) AS token
-        |FROM customer ORDER BY c_custkey""".stripMargin,
-    "dlp_deterministic_token" ->
+        |FROM customer ORDER BY c_custkey""".stripMargin),
+    Op("dlp_deterministic_token", DlpQueries.dlpDeterministicToken,
       """SELECT c_custkey, 'TOK_' || substr(sha256('det-key:' || c_name), 1, 32) AS token
-        |FROM customer ORDER BY c_custkey""".stripMargin,
-    "dlp_reidentify" ->
+        |FROM customer ORDER BY c_custkey""".stripMargin),
+    Op("dlp_reidentify", DlpQueries.dlpReidentify,
       """WITH tok AS (SELECT c_custkey, 'TOK_' || substr(sha256('det-key:' || c_name), 1, 32) AS token FROM customer),
         |vault AS (SELECT DISTINCT 'TOK_' || substr(sha256('det-key:' || c_name), 1, 32) AS token, c_name AS plaintext FROM customer)
         |SELECT c_custkey, token, plaintext AS recovered
-        |FROM tok JOIN vault USING (token) ORDER BY c_custkey""".stripMargin,
-    "dlp_date_shift" ->
+        |FROM tok JOIN vault USING (token) ORDER BY c_custkey""".stripMargin),
+    Op("dlp_date_shift", DlpQueries.dlpDateShift,
       """SELECT o_orderkey, o_orderdate,
         |  o_orderdate + INTERVAL (o_custkey % 61 - 30) DAY AS shifted
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-    "dlp_bucketing" ->
+        |FROM orders ORDER BY o_orderkey""".stripMargin),
+    Op("dlp_bucketing", DlpQueries.dlpBucketing,
       """SELECT c_custkey,
         |  CAST(CAST(floor(c_acctbal/500)*500 AS BIGINT) AS VARCHAR) || '_' ||
         |  CAST(CAST(floor(c_acctbal/500)*500 + 500 AS BIGINT) AS VARCHAR) AS acctbal_bucket
-        |FROM customer ORDER BY c_custkey""".stripMargin,
-    "dlp_row_batches" ->
+        |FROM customer ORDER BY c_custkey""".stripMargin),
+    Op("dlp_row_batches", DlpQueries.dlpRowBatches,
       """WITH c AS (SELECT COUNT(*) AS cnt FROM customer)
         |SELECT batch_id, CAST(LEAST(500, cnt - batch_id*500) AS BIGINT) AS rows_in_batch
         |FROM (SELECT unnest(range(0, CAST(ceil(cnt/500.0) AS BIGINT))) AS batch_id, cnt FROM c)
-        |ORDER BY batch_id""".stripMargin,
-    "dlp_config_apply" ->
+        |ORDER BY batch_id""".stripMargin),
+    Op("dlp_config_apply", DlpQueries.dlpConfigApply,
       """SELECT c_custkey,
         |  'TOK_' || substr(sha256('det-key:' || c_name), 1, 32) AS c_name,
         |  c_nationkey,
         |  CAST(CAST(floor(c_acctbal/500)*500 AS BIGINT) AS VARCHAR) || '_' ||
         |  CAST(CAST(floor(c_acctbal/500)*500 + 500 AS BIGINT) AS VARCHAR) AS c_acctbal,
         |  c_mktsegment
-        |FROM customer ORDER BY c_custkey""".stripMargin,
+        |FROM customer ORDER BY c_custkey""".stripMargin),
     // dlp_transformation_summary: each transform's before/after pair
     // recomputed from the same template semantics; canonical string
     // forms (DECIMAL(12,2) / timestamp) make byte counts engine-exact
-    "dlp_transformation_summary" ->
+    Op("dlp_transformation_summary", DlpQueries.dlpTransformationSummary,
       """WITH t1 AS (SELECT c_name AS b,
         |    'TOK_' || substr(sha256('det-key:' || c_name), 1, 32) AS a FROM customer),
         |t2 AS (SELECT CAST(CAST(c_acctbal AS DECIMAL(12,2)) AS VARCHAR) AS b,
@@ -1137,8 +572,8 @@ object SparkEntry {
         |    COUNT(b), SUM(CASE WHEN b IS NOT NULL AND (a IS NULL OR a <> b) THEN 1 ELSE 0 END),
         |    SUM(CASE WHEN b IS NOT NULL THEN strlen(b) ELSE 0 END),
         |    SUM(CASE WHEN b IS NOT NULL THEN COALESCE(strlen(a), 0) ELSE 0 END) FROM t3
-        |) t ORDER BY table_name, column_name""".stripMargin,
-    "dlp_k_anonymity" ->
+        |) t ORDER BY table_name, column_name""".stripMargin),
+    Op("dlp_k_anonymity", DlpQueries.dlpKAnonymity,
       """WITH q AS (SELECT c_mktsegment, c_nationkey,
         |  CAST(CAST(floor(c_acctbal/2000)*2000 AS BIGINT) AS VARCHAR) || '_' ||
         |  CAST(CAST(floor(c_acctbal/2000)*2000 + 2000 AS BIGINT) AS VARCHAR) AS bal_bucket
@@ -1146,67 +581,67 @@ object SparkEntry {
         |cls AS (SELECT c_mktsegment, c_nationkey, bal_bucket, COUNT(*) AS class_size
         |  FROM q GROUP BY 1, 2, 3)
         |SELECT class_size, COUNT(*) AS n_classes FROM cls
-        |GROUP BY class_size ORDER BY class_size""".stripMargin,
-    "dlp_l_diversity" ->
+        |GROUP BY class_size ORDER BY class_size""".stripMargin),
+    Op("dlp_l_diversity", DlpQueries.dlpLDiversity,
       """WITH q AS (SELECT c_mktsegment, c_nationkey,
         |  CAST(CAST(floor(c_acctbal/2000)*2000 AS BIGINT) AS VARCHAR) || '_' ||
         |  CAST(CAST(floor(c_acctbal/2000)*2000 + 2000 AS BIGINT) AS VARCHAR) AS bal_bucket
         |  FROM customer)
         |SELECT c_mktsegment, c_nationkey, COUNT(*) AS class_size,
         |  COUNT(DISTINCT bal_bucket) AS l_diversity
-        |FROM q GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q_join_types" ->
+        |FROM q GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+    Op("q_join_types", Analytics.qJoinTypes,
       """SELECT c_custkey, c_name, o_custkey, total
         |FROM (SELECT c_custkey, c_name FROM customer WHERE c_custkey < 700) c
         |FULL OUTER JOIN (SELECT o_custkey,
         |    CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT) AS total
         |  FROM orders GROUP BY o_custkey) o
         |ON c_custkey = o_custkey
-        |ORDER BY COALESCE(c_custkey, o_custkey), c_custkey ASC NULLS FIRST""".stripMargin,
-    "q_window_range" ->
+        |ORDER BY COALESCE(c_custkey, o_custkey), c_custkey ASC NULLS FIRST""".stripMargin),
+    Op("q_window_range", Analytics.qWindowRange,
       """WITH e AS (SELECT user_id, event_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us, value FROM events)
         |SELECT user_id, event_id,
         |  COUNT(*) OVER w AS cnt_1h,
         |  CAST(SUM(CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)) OVER w AS BIGINT) AS sum_1h
         |FROM e
         |WINDOW w AS (PARTITION BY user_id ORDER BY us RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW)
-        |ORDER BY user_id, event_id""".stripMargin,
-    "text_ngram_freq" ->
+        |ORDER BY user_id, event_id""".stripMargin),
+    Op("text_ngram_freq", TextOps.ngramFreq,
       """WITH g AS (SELECT unnest(list_transform(range(1, greatest(len(w) - 1, 1) + 1),
         |    i -> concat_ws(' ', w[i], w[i+1]))) AS gram
         |  FROM (SELECT string_split(text, ' ') AS w FROM documents))
         |SELECT gram, COUNT(*) AS n FROM g GROUP BY gram
-        |ORDER BY n DESC, gram LIMIT 100""".stripMargin,
-    "text_vocab" ->
+        |ORDER BY n DESC, gram LIMIT 100""".stripMargin),
+    Op("text_vocab", TextOps.vocab,
       """WITH c AS (SELECT word, COUNT(*) AS n FROM
         |    (SELECT unnest(string_split(text, ' ')) AS word FROM documents) GROUP BY word),
         |t AS (SELECT word, n,
         |  SUM(n) OVER (ORDER BY n DESC, word ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
         |  SUM(n) OVER () AS total FROM c)
         |SELECT word, n, CAST(cum * 10000 // total AS BIGINT) AS cum_bp
-        |FROM t ORDER BY n DESC, word LIMIT 200""".stripMargin,
-    "q_salted_join" ->
+        |FROM t ORDER BY n DESC, word LIMIT 200""".stripMargin),
+    Op("q_salted_join", Analytics.qSaltedJoin,
       """SELECT l_orderkey, l_linenumber,
         |  CAST(CAST(l_quantity AS DECIMAL(18,2)) * 100 AS BIGINT) AS qty,
         |  CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS total
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
+        |ORDER BY l_orderkey, l_linenumber""".stripMargin),
     // §2.C
-    "bq_row_convert" ->
+    Op("bq_row_convert", DlpQueries.bqRowConvert,
       """SELECT c_custkey, CAST(c_custkey AS VARCHAR) AS custkey_s, c_name AS name_s,
         |  printf('%.2f', c_acctbal) AS acctbal_s,
         |  CAST(c_nationkey AS VARCHAR) AS nationkey_s,
         |  c_mktsegment AS mktsegment_s,
         |  to_base64(encode(c_name)) AS name_b64
-        |FROM customer ORDER BY c_custkey""".stripMargin,
-    "dead_letter_split" ->
+        |FROM customer ORDER BY c_custkey""".stripMargin),
+    Op("dead_letter_split", DlpQueries.deadLetterSplit,
       """WITH t AS (SELECT event_id,
         |  try_cast(nullif(regexp_extract(props, '"k": ([0-9]+)', 1), '') AS BIGINT) AS k FROM events)
         |SELECT event_id, k,
         |  CASE WHEN k IS NULL THEN 'dead' WHEN k >= 80 THEN 'dead' ELSE 'ok' END AS status,
         |  CASE WHEN k IS NULL THEN 'malformed_props' WHEN k >= 80 THEN 'value_out_of_range' ELSE '' END AS reason
-        |FROM t ORDER BY event_id""".stripMargin,
-    "migration_manifest" ->
+        |FROM t ORDER BY event_id""".stripMargin),
+    Op("migration_manifest", graft.etl.Migration.manifest,
       """WITH dead AS (SELECT COUNT(*) AS n FROM events
         |  WHERE try_cast(nullif(regexp_extract(props, '"k": ([0-9]+)', 1), '') AS BIGINT) IS NULL
         |     OR try_cast(nullif(regexp_extract(props, '"k": ([0-9]+)', 1), '') AS BIGINT) >= 80)
@@ -1221,19 +656,19 @@ object SparkEntry {
         |  UNION ALL SELECT 'part', (SELECT COUNT(*) FROM part), 0, 0
         |  UNION ALL SELECT 'region', (SELECT COUNT(*) FROM region), 0, 0
         |  UNION ALL SELECT 'supplier', (SELECT COUNT(*) FROM supplier), 0, 0
-        |) ORDER BY table_name""".stripMargin,
-    "reid_publish_format" ->
+        |) ORDER BY table_name""".stripMargin),
+    Op("reid_publish_format", DlpQueries.reidPublishFormat,
       """SELECT c_custkey,
         |  '{"c_custkey":' || CAST(c_custkey AS VARCHAR) || ',"c_name":"' || c_name ||
         |  '","c_mktsegment":"' || c_mktsegment || '"}' AS message
-        |FROM customer ORDER BY c_custkey""".stripMargin,
+        |FROM customer ORDER BY c_custkey""".stripMargin),
     // §2.G
-    "text_token_count" ->
+    Op("text_token_count", TextOps.tokenCount,
       """SELECT doc_id,
         |  CAST(len(string_split(text, ' ')) AS BIGINT) AS ws_tokens,
         |  CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]')) AS BIGINT) AS bpe_tokens
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "text_lang_id" ->
+        |FROM documents ORDER BY doc_id""".stripMargin),
+    Op("text_lang_id", TextOps.langId,
       (s"""WITH t AS (SELECT doc_id, lang AS labeled_lang, string_split(text, ' ') AS w FROM documents),
          |s AS (SELECT doc_id, labeled_lang,
          |  ${langHits(TextOps.LangMarkers.toMap.apply("en"))} AS s_en,
@@ -1247,9 +682,9 @@ object SparkEntry {
          |       WHEN s_es >= s_en AND s_es >= s_de AND s_es > s_fr THEN 'es'
          |       ELSE 'fr' END AS predicted,
          |  s_en, s_de, s_es, s_fr
-         |FROM s ORDER BY doc_id""".stripMargin),
+         |FROM s ORDER BY doc_id""".stripMargin)),
     // pipeline_quality_gate: first-failing-rule corpus filter.
-    "pipeline_quality_gate" ->
+    Op("pipeline_quality_gate", TextOps.qualityGate,
       (s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
          |q AS (SELECT doc_id,
          |  CAST(len(w) AS BIGINT) AS n_words,
@@ -1263,8 +698,8 @@ object SparkEntry {
          |       ELSE 'ok' END AS gate FROM q)
          |SELECT doc_id, n_words, marker_hits, dup_word_bp, gate,
          |  CAST(CASE WHEN gate = 'ok' THEN 1 ELSE 0 END AS BIGINT) AS pass
-         |FROM r ORDER BY doc_id""".stripMargin),
-    "text_quality_score" ->
+         |FROM r ORDER BY doc_id""".stripMargin)),
+    Op("text_quality_score", TextOps.qualityScore,
       """WITH t AS (SELECT doc_id,
         |  CAST(length(text) AS BIGINT) AS n_chars_m,
         |  CAST(len(string_split(text, ' ')) AS BIGINT) AS n_words,
@@ -1275,22 +710,22 @@ object SparkEntry {
         |       (CASE WHEN n_chars_m / n_words BETWEEN 3 AND 8 THEN 3000 ELSE 900 END) +
         |       (2000 * LEAST(n_words, 5 * n_stop)) // n_words
         |  AS BIGINT) AS quality_bp
-        |FROM t ORDER BY doc_id""".stripMargin,
-    "text_fingerprint" ->
+        |FROM t ORDER BY doc_id""".stripMargin),
+    Op("text_fingerprint", TextOps.fingerprint,
       """WITH t AS (SELECT doc_id,
         |  list_transform(range(1, greatest(length(text) - 4, 1) + 1), i -> md5(substr(text, i, 5))) AS hs
         |  FROM documents)
         |SELECT doc_id, list_min(hs) AS fp, CAST(len(list_distinct(hs)) AS BIGINT) AS n_windows
-        |FROM t ORDER BY doc_id""".stripMargin,
+        |FROM t ORDER BY doc_id""".stripMargin),
     // §2.E
-    "dedup_exact" ->
+    Op("dedup_exact", Dedup.exact,
       """SELECT min(doc_id) AS keeper, COUNT(*) AS n, md5(text) AS h
-        |FROM documents GROUP BY md5(text) ORDER BY keeper""".stripMargin,
-    "dedup_minhash_sig" ->
+        |FROM documents GROUP BY md5(text) ORDER BY keeper""".stripMargin),
+    Op("dedup_minhash_sig", Dedup.minhashSig,
       (s"""WITH $GramsCte,
          |$SigCte
-         |SELECT doc_id, h0, h1, h2, h3, h4, h5, h6, h7 FROM sig ORDER BY doc_id""".stripMargin),
-    "dedup_minhash_pairs" ->
+         |SELECT doc_id, h0, h1, h2, h3, h4, h5, h6, h7 FROM sig ORDER BY doc_id""".stripMargin)),
+    Op("dedup_minhash_pairs", (s, d) => Dedup.minhashPairs(s, d).orderBy("doc_a", "doc_b"),
       (s"""WITH $GramsCte,
          |$SigCte,
          |bands AS (
@@ -1302,10 +737,10 @@ object SparkEntry {
          |  FROM bands a JOIN bands b ON a.band_id = b.band_id AND a.bk = b.bk AND a.doc_id < b.doc_id),
          |j AS (SELECT doc_a, doc_b, $JaccExpr AS jacc
          |  FROM cand JOIN g ga ON ga.doc_id = doc_a JOIN g gb ON gb.doc_id = doc_b)
-         |SELECT doc_a, doc_b, jacc FROM j WHERE jacc >= 0.5 ORDER BY doc_a, doc_b""".stripMargin),
+         |SELECT doc_a, doc_b, jacc FROM j WHERE jacc >= 0.5 ORDER BY doc_a, doc_b""".stripMargin)),
     // dedup_incremental: batch (odd ids) vs corpus (even ids) band-key
     // join only — no corpus self-pairing.
-    "dedup_incremental" ->
+    Op("dedup_incremental", Dedup.incremental,
       (s"""WITH $GramsCte,
          |$SigCte,
          |bands AS (
@@ -1325,10 +760,10 @@ object SparkEntry {
          |  CAST(coalesce(m.dup_of, -1) AS BIGINT) AS dup_of,
          |  CAST(coalesce(m.n_dups, 0) AS BIGINT) AS n_dups
          |FROM documents d LEFT JOIN m ON d.doc_id = m.doc_id
-         |WHERE d.doc_id % 2 = 1 ORDER BY d.doc_id""".stripMargin),
+         |WHERE d.doc_id % 2 = 1 ORDER BY d.doc_id""".stripMargin)),
     // split_decontaminate: eval/test docs with a verified near-dup in
     // the train split (hash-bucket split × verified pair list).
-    "split_decontaminate" ->
+    Op("split_decontaminate", Dedup.decontaminate,
       (s"""WITH $GramsCte,
          |$SigCte,
          |bands AS (
@@ -1346,19 +781,19 @@ object SparkEntry {
          |SELECT u.doc_id, s.split, MIN(u.nbr) AS train_dup, CAST(COUNT(*) AS BIGINT) AS n_train_dups
          |FROM und u JOIN s ON s.doc_id = u.doc_id AND s.split <> 'train'
          |JOIN s t ON t.doc_id = u.nbr AND t.split = 'train'
-         |GROUP BY u.doc_id, s.split ORDER BY u.doc_id""".stripMargin),
-    "dedup_simhash" ->
+         |GROUP BY u.doc_id, s.split ORDER BY u.doc_id""".stripMargin)),
+    Op("dedup_simhash", Dedup.simhash,
       (s"""WITH m AS (SELECT doc_id, list_transform(string_split(text, ' '), x -> md5(x)) AS mdw FROM documents),
          |s AS (SELECT doc_id, CAST($SimhashExpr AS BIGINT) AS simhash FROM m)
-         |SELECT doc_id, simhash, CAST(simhash // 16 AS BIGINT) AS bucket FROM s ORDER BY doc_id""".stripMargin),
-    "dedup_ngram_jaccard" ->
+         |SELECT doc_id, simhash, CAST(simhash // 16 AS BIGINT) AS bucket FROM s ORDER BY doc_id""".stripMargin)),
+    Op("dedup_ngram_jaccard", Dedup.ngramJaccard(_, _),
       (s"""WITH $GramsCte,
          |cand AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
          |  FROM documents a JOIN documents b ON a.n_chars // 32 = b.n_chars // 32 AND a.doc_id < b.doc_id),
          |j AS (SELECT doc_a, doc_b, $JaccExpr AS jacc
          |  FROM cand JOIN g ga ON ga.doc_id = doc_a JOIN g gb ON gb.doc_id = doc_b)
-         |SELECT doc_a, doc_b, jacc FROM j WHERE jacc >= 0.5 ORDER BY doc_a, doc_b""".stripMargin),
-    "ingest_schema_drift" ->
+         |SELECT doc_a, doc_b, jacc FROM j WHERE jacc >= 0.5 ORDER BY doc_a, doc_b""".stripMargin)),
+    Op("ingest_schema_drift", SourceQueries.schemaDrift,
       """SELECT * FROM (VALUES
         |  ('c_acctbal', 'double', 'string', 'type_changed'),
         |  ('c_custkey', 'bigint', 'bigint', 'same'),
@@ -1366,8 +801,8 @@ object SparkEntry {
         |  ('c_mktsegment', 'string', '', 'removed'),
         |  ('c_name', 'string', 'string', 'same'),
         |  ('c_nationkey', 'int', 'int', 'same')
-        |) t(column_name, v1_type, v2_type, status) ORDER BY column_name""".stripMargin,
-    "dedup_minhash_est" ->
+        |) t(column_name, v1_type, v2_type, status) ORDER BY column_name""".stripMargin),
+    Op("dedup_minhash_est", Dedup.minhashEstimate,
       (s"""WITH $GramsCte,
          |$SigCte,
          |bands AS (
@@ -1386,8 +821,8 @@ object SparkEntry {
          |        (CASE WHEN sa.h4 = sb.h4 THEN 1 ELSE 0 END) + (CASE WHEN sa.h5 = sb.h5 THEN 1 ELSE 0 END) +
          |        (CASE WHEN sa.h6 = sb.h6 THEN 1 ELSE 0 END) + (CASE WHEN sa.h7 = sb.h7 THEN 1 ELSE 0 END)) * 1250 AS BIGINT) AS est_bp
          |FROM p JOIN sig sa ON sa.doc_id = doc_a JOIN sig sb ON sb.doc_id = doc_b
-         |ORDER BY doc_a, doc_b""".stripMargin),
-    "dedup_containment" ->
+         |ORDER BY doc_a, doc_b""".stripMargin)),
+    Op("dedup_containment", Dedup.containment,
       (s"""WITH $GramsCte,
          |cand AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
          |  FROM documents a JOIN documents b ON a.n_chars // 32 = b.n_chars // 32 AND a.doc_id < b.doc_id),
@@ -1398,8 +833,8 @@ object SparkEntry {
          |u AS (SELECT doc_a AS contained_id, doc_b AS container_id, ROUND(c / sza, 4) AS cont FROM j
          |  UNION ALL SELECT doc_b, doc_a, ROUND(c / szb, 4) FROM j)
          |SELECT contained_id, container_id, cont FROM u
-         |WHERE cont >= 0.6 ORDER BY contained_id, container_id""".stripMargin),
-    "dedup_embedding_cos" ->
+         |WHERE cont >= 0.6 ORDER BY contained_id, container_id""".stripMargin)),
+    Op("dedup_embedding_cos", Dedup.embeddingCosine,
       (s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
          |eb AS (SELECT vec_id, emb,
          |  (CASE WHEN emb[1] >= 0 THEN '1' ELSE '0' END || CASE WHEN emb[2] >= 0 THEN '1' ELSE '0' END ||
@@ -1409,22 +844,22 @@ object SparkEntry {
          |p AS (SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, a.emb AS ea, b.emb AS eb2
          |  FROM eb a JOIN eb b ON a.bucket = b.bucket AND a.vec_id < b.vec_id),
          |c AS (SELECT vec_a, vec_b, ROUND(${duckCos("ea", "eb2")}, 4) AS cos FROM p)
-         |SELECT vec_a, vec_b, cos FROM c WHERE cos >= 0.35 ORDER BY vec_a, vec_b""".stripMargin),
-    "dedup_corpus_sig" ->
+         |SELECT vec_a, vec_b, cos FROM c WHERE cos >= 0.35 ORDER BY vec_a, vec_b""".stripMargin)),
+    Op("dedup_corpus_sig", Dedup.corpusSig,
       """SELECT source,
         |  concat_ws(',', min(md5('0:' || text)), min(md5('1:' || text)),
         |   min(md5('2:' || text)), min(md5('3:' || text))) AS sig,
         |  COUNT(*) AS n_docs
-        |FROM documents GROUP BY source ORDER BY source""".stripMargin,
+        |FROM documents GROUP BY source ORDER BY source""".stripMargin),
     // §2.F
-    "ann_topk_bruteforce" ->
+    Op("ann_topk_bruteforce", Ann.topkBruteforce,
       (s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
          |q AS (SELECT vec_id AS query_id, emb AS qe FROM e WHERE vec_id < 10),
          |s AS (SELECT query_id, e.vec_id, ${duckCos("qe", "emb")} AS c
          |  FROM q JOIN e ON e.vec_id <> query_id),
          |r AS (SELECT query_id, vec_id, CAST(row_number() OVER (PARTITION BY query_id ORDER BY c DESC, vec_id) AS BIGINT) AS rank FROM s)
-         |SELECT query_id, vec_id AS neighbor_id, rank FROM r WHERE rank <= 10 ORDER BY query_id, rank""".stripMargin),
-    "ann_ivf_topk" ->
+         |SELECT query_id, vec_id AS neighbor_id, rank FROM r WHERE rank <= 10 ORDER BY query_id, rank""".stripMargin)),
+    Op("ann_ivf_topk", Ann.ivfTopk,
       (s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
          |cent AS (SELECT vec_id AS cent_id, emb AS ce FROM e WHERE vec_id < 8),
          |a AS (SELECT e.vec_id, e.emb, cent_id, ${duckCos("emb", "ce")} AS c FROM e CROSS JOIN cent),
@@ -1434,12 +869,12 @@ object SparkEntry {
          |s AS (SELECT query_id, c2.vec_id, ${duckCos("qe", "emb")} AS c
          |  FROM q JOIN cells c2 USING (cell) WHERE c2.vec_id <> query_id),
          |r AS (SELECT query_id, vec_id, CAST(row_number() OVER (PARTITION BY query_id ORDER BY c DESC, vec_id) AS BIGINT) AS rank FROM s)
-         |SELECT query_id, vec_id AS neighbor_id, rank FROM r WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
+         |SELECT query_id, vec_id AS neighbor_id, rank FROM r WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin)),
     // ann_bucketed_serve: the bucketed-index probe is semantically the
     // ivf probe-1 restricted to queries 8-10 — same assignment CTE,
     // same rank rule; the bucketed layout is a plan property the spec
     // pins, invisible to the result
-    "ann_bucketed_serve" ->
+    Op("ann_bucketed_serve", Ann.bucketedServe,
       (s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
          |cent AS (SELECT vec_id AS cent_id, emb AS ce FROM e WHERE vec_id < 8),
          |a AS (SELECT e.vec_id, e.emb, cent_id, ${duckCos("emb", "ce")} AS c FROM e CROSS JOIN cent),
@@ -1449,10 +884,10 @@ object SparkEntry {
          |s AS (SELECT query_id, c2.vec_id, ${duckCos("qe", "emb")} AS c
          |  FROM q JOIN cells c2 USING (cell) WHERE c2.vec_id <> query_id),
          |r AS (SELECT query_id, vec_id, CAST(row_number() OVER (PARTITION BY query_id ORDER BY c DESC, vec_id) AS BIGINT) AS rank FROM s)
-         |SELECT query_id, vec_id AS neighbor_id, rank FROM r WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
+         |SELECT query_id, vec_id AS neighbor_id, rank FROM r WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin)),
     // round 8: per-cell population share vs the uniform ideal (1250 bp
     // for 8 cells) — same cell assignment CTE as ann_ivf_topk
-    "ann_cell_balance" ->
+    Op("ann_cell_balance", Ann.cellBalance,
       (s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
          |cent AS (SELECT vec_id AS cent_id, emb AS ce FROM e WHERE vec_id < 8),
          |a AS (SELECT e.vec_id, cent_id, ${duckCos("emb", "ce")} AS c FROM e CROSS JOIN cent),
@@ -1462,11 +897,11 @@ object SparkEntry {
          |t AS (SELECT cell, n, SUM(n) OVER () AS tot FROM g)
          |SELECT cell, n, CAST((n * 10000) // tot AS BIGINT) AS share_bp,
          |  CAST(abs((n * 10000) // tot - 1250) AS BIGINT) AS dev_bp
-         |FROM t ORDER BY cell""".stripMargin),
+         |FROM t ORDER BY cell""".stripMargin)),
     // ann_incremental_assign: same assignment CTE as ann_cell_balance,
     // split base (vec_id % 10 <> 9) vs the incremental batch; shares in
     // bp before/after, drift, retrain trigger at >= 50 bp
-    "ann_incremental_assign" ->
+    Op("ann_incremental_assign", Ann.incrementalAssign,
       (s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
          |cent AS (SELECT vec_id AS cent_id, emb AS ce FROM e WHERE vec_id < 8),
          |a AS (SELECT e.vec_id, cent_id, ${duckCos("emb", "ce")} AS c FROM e CROSS JOIN cent),
@@ -1483,8 +918,8 @@ object SparkEntry {
          |  CAST((n_base + n_new) * 10000 // tot_after AS BIGINT) AS share_after_bp,
          |  CAST(abs(n_base * 10000 // tot_base - (n_base + n_new) * 10000 // tot_after) AS BIGINT) AS drift_bp,
          |  CAST(CASE WHEN abs(n_base * 10000 // tot_base - (n_base + n_new) * 10000 // tot_after) >= 50 THEN 1 ELSE 0 END AS BIGINT) AS retrain
-         |FROM t ORDER BY cell""".stripMargin),
-    "ann_ivf_probe2" ->
+         |FROM t ORDER BY cell""".stripMargin)),
+    Op("ann_ivf_probe2", Ann.ivfTopkProbe2,
       (s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
          |cent AS (SELECT vec_id AS cent_id, emb AS ce FROM e WHERE vec_id < 8),
          |a AS (SELECT e.vec_id, e.emb, cent_id, ${duckCos("emb", "ce")} AS c FROM e CROSS JOIN cent),
@@ -1495,14 +930,14 @@ object SparkEntry {
          |s AS (SELECT DISTINCT query_id, c2.vec_id, ${duckCos("qe", "emb")} AS c
          |  FROM q JOIN cells c2 USING (cell) WHERE c2.vec_id <> query_id),
          |rk AS (SELECT query_id, vec_id, CAST(row_number() OVER (PARTITION BY query_id ORDER BY c DESC, vec_id) AS BIGINT) AS rank FROM s)
-         |SELECT query_id, vec_id AS neighbor_id, rank FROM rk WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
-    "ann_pq_topk" ->
+         |SELECT query_id, vec_id AS neighbor_id, rank FROM rk WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin)),
+    Op("ann_pq_topk", Ann.pqTopk,
       (s"""WITH $PqAdcCte,
          |r AS (SELECT query_id, vec_id, CAST(row_number() OVER (PARTITION BY query_id ORDER BY ad, vec_id) AS BIGINT) AS rank FROM d)
-         |SELECT query_id, vec_id AS neighbor_id, rank FROM r WHERE rank <= 10 ORDER BY query_id, rank""".stripMargin),
+         |SELECT query_id, vec_id AS neighbor_id, rank FROM r WHERE rank <= 10 ORDER BY query_id, rank""".stripMargin)),
     // ann_pq_rerank: ADC top-20 shortlist → exact cosine re-rank top-5
     // (fold orders match the Spark side bit-for-bit, so ranks agree).
-    "ann_pq_rerank" ->
+    Op("ann_pq_rerank", Ann.pqRerank,
       (s"""WITH $PqAdcCte,
          |s AS (SELECT query_id, vec_id FROM (
          |  SELECT query_id, vec_id, row_number() OVER (PARTITION BY query_id ORDER BY ad, vec_id) AS arank FROM d)
@@ -1510,8 +945,8 @@ object SparkEntry {
          |x AS (SELECT s.query_id, s.vec_id, ${duckCos("qe", "emb")} AS c
          |  FROM s JOIN e ON e.vec_id = s.vec_id JOIN q ON q.query_id = s.query_id),
          |rr AS (SELECT query_id, vec_id, CAST(row_number() OVER (PARTITION BY query_id ORDER BY c DESC, vec_id) AS BIGINT) AS rank FROM x)
-         |SELECT query_id, vec_id AS neighbor_id, rank FROM rr WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
-    "embed_centroid_update" ->
+         |SELECT query_id, vec_id AS neighbor_id, rank FROM rr WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin)),
+    Op("embed_centroid_update", Ann.centroidUpdate,
       (s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
          |cent AS (SELECT vec_id AS cent_id, emb AS ce FROM e WHERE vec_id < 8),
          |a AS (SELECT e.vec_id, e.emb, cent_id, ${duckCos("emb", "ce")} AS c FROM e CROSS JOIN cent),
@@ -1522,8 +957,8 @@ object SparkEntry {
          |  CAST(SUM(CAST(CAST(emb[2] AS DECIMAL(9,6)) * 1000000 AS BIGINT)) AS BIGINT) AS s2,
          |  CAST(SUM(CAST(CAST(emb[3] AS DECIMAL(9,6)) * 1000000 AS BIGINT)) AS BIGINT) AS s3,
          |  CAST(SUM(CAST(CAST(emb[4] AS DECIMAL(9,6)) * 1000000 AS BIGINT)) AS BIGINT) AS s4
-         |FROM cells GROUP BY cell ORDER BY cell""".stripMargin),
-    "embed_kmeans_train" ->
+         |FROM cells GROUP BY cell ORDER BY cell""".stripMargin)),
+    Op("embed_kmeans_train", Ann.kmeansTrain(_, _),
       (s"""WITH ${duckKmeansCte(3)}
          |SELECT p1.cent_id, p1.n AS n_members,
          |  p1.cv AS c1, p2.cv AS c2, p3.cv AS c3, p4.cv AS c4
@@ -1531,8 +966,8 @@ object SparkEntry {
          |JOIN centp3 p2 ON p2.cent_id = p1.cent_id AND p2.pos = 1
          |JOIN centp3 p3 ON p3.cent_id = p1.cent_id AND p3.pos = 2
          |JOIN centp3 p4 ON p4.cent_id = p1.cent_id AND p4.pos = 3
-         |WHERE p1.pos = 0 ORDER BY p1.cent_id""".stripMargin),
-    "ann_ivfpq_topk" ->
+         |WHERE p1.pos = 0 ORDER BY p1.cent_id""".stripMargin)),
+    Op("ann_ivfpq_topk", Ann.ivfPqTopk,
       (s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
          |cent AS (SELECT vec_id AS cent_id, emb AS ce FROM e WHERE vec_id < 8),
          |asg AS (SELECT e.vec_id, emb, cent_id, ${duckSqL2Full("emb", "ce")} AS d FROM e CROSS JOIN cent),
@@ -1563,16 +998,16 @@ object SparkEntry {
          |  JOIN tb t3q ON t3q.query_id = t0q.query_id AND t3q.code_id = codes.c3
          |  WHERE codes.vec_id <> t0q.query_id),
          |r AS (SELECT query_id, vec_id, CAST(row_number() OVER (PARTITION BY query_id ORDER BY ad, vec_id) AS BIGINT) AS rank FROM d)
-         |SELECT query_id, vec_id AS neighbor_id, rank FROM r WHERE rank <= 10 ORDER BY query_id, rank""".stripMargin),
+         |SELECT query_id, vec_id AS neighbor_id, rank FROM r WHERE rank <= 10 ORDER BY query_id, rank""".stripMargin)),
     // §2.I
-    "stream_window_agg" ->
+    Op("stream_window_agg", Streams.windowAggBatch,
       """WITH e AS (SELECT CAST(ts AS TIMESTAMP) AS ts, event_type, value FROM events)
         |SELECT TIMESTAMP '1970-01-01 00:00:00' +
         |    INTERVAL ((CAST(floor(epoch(ts)) AS BIGINT) // 300) * 300) SECOND AS window_start,
         |  event_type, COUNT(*) AS n,
         |  CAST(SUM(CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT) AS sum_value
-        |FROM e GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "stream_sessionize" ->
+        |FROM e GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+    Op("stream_sessionize", Streams.sessionizeBatch,
       """WITH e AS (SELECT user_id, event_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us FROM events),
         |s AS (SELECT user_id, event_id, us,
         |  CASE WHEN lag(us) OVER w IS NULL OR us - lag(us) OVER w > 1800000000 THEN 1 ELSE 0 END AS new_s
@@ -1581,13 +1016,13 @@ object SparkEntry {
         |  (PARTITION BY user_id ORDER BY us, event_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id FROM s)
         |SELECT user_id, CAST(session_id AS BIGINT) AS session_id, COUNT(*) AS n_events,
         |  make_timestamp(MIN(us)) AS session_start, make_timestamp(MAX(us)) AS session_end
-        |FROM t GROUP BY user_id, session_id ORDER BY user_id, session_id""".stripMargin,
-    "stream_dedup" ->
+        |FROM t GROUP BY user_id, session_id ORDER BY user_id, session_id""".stripMargin),
+    Op("stream_dedup", Streams.dedupBatch,
       """WITH e AS (SELECT user_id, event_type, epoch_us(CAST(ts AS TIMESTAMP)) AS us, event_id FROM events)
         |SELECT user_id, event_type, make_timestamp(MIN(us)) AS first_ts,
         |  MIN(event_id) AS min_event_id, COUNT(*) AS n
-        |FROM e GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "stream_session_window" ->
+        |FROM e GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+    Op("stream_session_window", Streams.sessionWindowBatch,
       """WITH e AS (SELECT user_id, event_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us FROM events),
         |s AS (SELECT user_id, event_id, us,
         |  CASE WHEN lag(us) OVER w IS NULL OR us - lag(us) OVER w >= 1800000000 THEN 1 ELSE 0 END AS new_s
@@ -1595,8 +1030,8 @@ object SparkEntry {
         |t AS (SELECT user_id, us, SUM(new_s) OVER
         |  (PARTITION BY user_id ORDER BY us, event_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid FROM s)
         |SELECT user_id, make_timestamp(MIN(us)) AS session_start, COUNT(*) AS n_events
-        |FROM t GROUP BY user_id, sid ORDER BY user_id, session_start""".stripMargin,
-    "pipeline_dedup_survivors" ->
+        |FROM t GROUP BY user_id, sid ORDER BY user_id, session_start""".stripMargin),
+    Op("pipeline_dedup_survivors", Dedup.pipelineSurvivors,
       (s"""WITH $GramsCte,
          |$SigCte,
          |bands AS (
@@ -1610,8 +1045,8 @@ object SparkEntry {
          |  FROM cand JOIN g ga ON ga.doc_id = doc_a JOIN g gb ON gb.doc_id = doc_b)
          |SELECT doc_id, source FROM documents
          |WHERE doc_id NOT IN (SELECT doc_b FROM j WHERE jacc >= 0.5)
-         |ORDER BY doc_id""".stripMargin),
-    "stream_event_join" ->
+         |ORDER BY doc_id""".stripMargin)),
+    Op("stream_event_join", Streams.eventJoinBatch,
       """WITH e AS (SELECT event_id, user_id, event_type, epoch_us(CAST(ts AS TIMESTAMP)) AS us FROM events),
         |c AS (SELECT event_id AS click_id, user_id, us AS click_us FROM e WHERE event_type = 'click'),
         |p AS (SELECT event_id AS purchase_id, user_id, us AS purchase_us FROM e WHERE event_type = 'purchase')
@@ -1619,8 +1054,8 @@ object SparkEntry {
         |  purchase_us - click_us AS lag_us
         |FROM c JOIN p USING (user_id)
         |WHERE purchase_us > click_us AND purchase_us <= click_us + 3600000000
-        |ORDER BY user_id, click_id, purchase_id""".stripMargin,
-    "stream_windowed_topk" ->
+        |ORDER BY user_id, click_id, purchase_id""".stripMargin),
+    Op("stream_windowed_topk", Streams.windowedTopkBatch,
       """WITH e AS (SELECT CAST(ts AS TIMESTAMP) AS ts, event_type FROM events),
         |c AS (SELECT TIMESTAMP '1970-01-01 00:00:00' +
         |    INTERVAL ((CAST(floor(epoch(ts)) AS BIGINT) // 3600) * 3600) SECOND AS window_start,
@@ -1628,31 +1063,31 @@ object SparkEntry {
         |r AS (SELECT window_start, event_type, n,
         |  CAST(row_number() OVER (PARTITION BY window_start ORDER BY n DESC, event_type) AS BIGINT) AS rk FROM c)
         |SELECT window_start, event_type, n, rk FROM r WHERE rk <= 3
-        |ORDER BY window_start, rk""".stripMargin,
-    "q_histogram" ->
+        |ORDER BY window_start, rk""".stripMargin),
+    Op("q_histogram", Analytics.qHistogram,
       """SELECT CAST(floor(l_extendedprice / 5000) AS BIGINT) AS bucket,
         |  CAST(floor(l_extendedprice / 5000) AS BIGINT) * 5000 AS lo,
         |  (CAST(floor(l_extendedprice / 5000) AS BIGINT) + 1) * 5000 AS hi,
         |  COUNT(*) AS n,
         |  CAST(SUM(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT) AS total_cents
-        |FROM lineitem GROUP BY 1, 2, 3 ORDER BY bucket""".stripMargin,
-    "stream_latest_state" ->
+        |FROM lineitem GROUP BY 1, 2, 3 ORDER BY bucket""".stripMargin),
+    Op("stream_latest_state", Streams.latestState,
       """WITH e AS (SELECT user_id, event_id, event_type,
         |  epoch_us(CAST(ts AS TIMESTAMP)) AS us,
         |  CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS value_cents FROM events),
         |r AS (SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY us DESC, event_id DESC) AS rn FROM e)
         |SELECT user_id, event_id AS last_event_id, event_type AS last_type,
         |  value_cents AS last_value, us AS last_us
-        |FROM r WHERE rn = 1 ORDER BY user_id""".stripMargin,
-    "ingest_incremental" ->
+        |FROM r WHERE rn = 1 ORDER BY user_id""".stripMargin),
+    Op("ingest_incremental", graft.etl.Ingest.incrementalPlan(_, _),
       """WITH b AS (SELECT MIN(epoch_us(CAST(ts AS TIMESTAMP))) AS lo,
         |                  MAX(epoch_us(CAST(ts AS TIMESTAMP))) AS hi FROM events),
         |c AS (SELECT (lo + hi) // 2 AS ckpt_us FROM b)
         |SELECT (SELECT ckpt_us FROM c) AS ckpt_us,
         |  COUNT(*) AS n_new,
         |  MAX(epoch_us(CAST(ts AS TIMESTAMP))) AS next_ckpt_us
-        |FROM events WHERE epoch_us(CAST(ts AS TIMESTAMP)) > (SELECT ckpt_us FROM c)""".stripMargin,
-    "stream_funnel" ->
+        |FROM events WHERE epoch_us(CAST(ts AS TIMESTAMP)) > (SELECT ckpt_us FROM c)""".stripMargin),
+    Op("stream_funnel", Streams.funnel,
       """WITH e AS (SELECT user_id, event_type, epoch_us(CAST(ts AS TIMESTAMP)) AS us FROM events),
         |s AS (SELECT user_id,
         |  min(CASE WHEN event_type = 'signup' THEN us END) AS t_signup,
@@ -1662,41 +1097,41 @@ object SparkEntry {
         |SELECT COUNT(CASE WHEN t_signup IS NOT NULL THEN 1 END) AS n_signup,
         |  COUNT(CASE WHEN t_signup IS NOT NULL AND t_click > t_signup THEN 1 END) AS n_click_after,
         |  COUNT(CASE WHEN t_signup IS NOT NULL AND t_click > t_signup AND t_purchase > t_click THEN 1 END) AS n_purchase_after
-        |FROM s""".stripMargin,
-    "stream_retention" ->
+        |FROM s""".stripMargin),
+    Op("stream_retention", Streams.retention,
       """WITH e AS (SELECT user_id, epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day FROM events),
         |f AS (SELECT user_id, min(day) AS cohort_day FROM e GROUP BY user_id),
         |a AS (SELECT DISTINCT e.user_id, 1 AS retained FROM e JOIN f USING (user_id)
         |      WHERE day >= cohort_day + 7 AND day < cohort_day + 14)
         |SELECT cohort_day, COUNT(*) AS n_users, COUNT(retained) AS n_retained
-        |FROM f LEFT JOIN a USING (user_id) GROUP BY cohort_day ORDER BY cohort_day""".stripMargin,
-    "text_normalize" ->
+        |FROM f LEFT JOIN a USING (user_id) GROUP BY cohort_day ORDER BY cohort_day""".stripMargin),
+    Op("text_normalize", TextOps.normalize,
       """WITH t AS (SELECT doc_id, text,
         |  trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g'), ' +', ' ', 'g')) AS normalized
         |  FROM documents)
         |SELECT doc_id, normalized,
         |  CAST(CASE WHEN normalized = text THEN 0 ELSE 1 END AS BIGINT) AS changed
-        |FROM t ORDER BY doc_id""".stripMargin,
-    "mm_frame_sample" ->
+        |FROM t ORDER BY doc_id""".stripMargin),
+    Op("mm_frame_sample", Multimodal.frameSample,
       """SELECT doc_id, CAST(frame_idx AS BIGINT) AS frame_idx,
         |  md5(substr(text, 1 + frame_idx * 64, 16)) AS frame_hash
         |FROM (SELECT doc_id, text,
         |      unnest(range(0, least(3, (length(text) - 1) // 64) + 1)) AS frame_idx FROM documents)
-        |ORDER BY doc_id, frame_idx""".stripMargin,
+        |ORDER BY doc_id, frame_idx""".stripMargin),
     // mm_modality_route: Spark sniffs the actual leading bytes of the
     // payload; the oracle derives modality from the generator rule —
     // two independent formulations that must agree.
-    "mm_modality_route" ->
+    Op("mm_modality_route", Multimodal.modalityRoute,
       """WITH m AS (SELECT doc_id,
         |  CASE doc_id % 3 WHEN 0 THEN 'image/jpeg' WHEN 1 THEN 'image/png' ELSE 'audio/wav' END AS modality,
         |  CAST(octet_length(encode(text)) + CASE doc_id % 3 WHEN 0 THEN 3 ELSE 4 END AS BIGINT) AS n_bytes
         |  FROM documents)
         |SELECT modality, COUNT(*) AS n_docs, MIN(doc_id) AS min_doc,
         |  CAST(SUM(n_bytes) AS BIGINT) AS total_bytes
-        |FROM m GROUP BY modality ORDER BY modality""".stripMargin,
+        |FROM m GROUP BY modality ORDER BY modality""".stripMargin),
     // mm_decode_batch_plan: byte-budgeted decode batches per
     // (modality, shard) — the window is bounded at 1000 rows/shard.
-    "mm_decode_batch_plan" ->
+    Op("mm_decode_batch_plan", Multimodal.decodeBatchPlan,
       """WITH m AS (SELECT doc_id,
         |  CASE doc_id % 3 WHEN 0 THEN 'image/jpeg' WHEN 1 THEN 'image/png' ELSE 'audio/wav' END AS modality,
         |  CAST(octet_length(encode(text)) + CASE doc_id % 3 WHEN 0 THEN 3 ELSE 4 END AS BIGINT) AS n_bytes,
@@ -1707,9 +1142,9 @@ object SparkEntry {
         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum FROM m)
         |SELECT doc_id, modality, shard, n_bytes,
         |  CAST((cum - n_bytes) // 4096 AS BIGINT) AS batch_in_shard
-        |FROM c ORDER BY doc_id""".stripMargin,
+        |FROM c ORDER BY doc_id""".stripMargin),
     // decoder-pool balance audit over the decode_batch_plan layout
-    "mm_shard_skew" ->
+    Op("mm_shard_skew", Multimodal.shardSkew,
       """WITH m AS (SELECT doc_id,
         |  CASE doc_id % 3 WHEN 0 THEN 'image/jpeg' WHEN 1 THEN 'image/png' ELSE 'audio/wav' END AS modality,
         |  CAST(octet_length(encode(text)) + CASE doc_id % 3 WHEN 0 THEN 3 ELSE 4 END AS BIGINT) AS n_bytes,
@@ -1722,27 +1157,27 @@ object SparkEntry {
         |SELECT p.modality, shard, n_payloads, total_bytes,
         |  CAST(total_bytes * 10000 * n_shards // mod_bytes AS BIGINT) AS load_bp
         |FROM p JOIN t ON p.modality = t.modality
-        |ORDER BY p.modality, shard""".stripMargin,
+        |ORDER BY p.modality, shard""".stripMargin),
     // mm_feature_extract: the mapPartitions decode produces
     // md5/byte-derived features the oracle recomputes in SQL.
-    "mm_feature_extract" ->
+    Op("mm_feature_extract", Multimodal.featureExtract,
       """SELECT doc_id,
         |  CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
         |  CAST(128 + ascii(substr(md5(text), 1, 1)) AS BIGINT) AS fake_width,
         |  CAST(128 + ascii(substr(md5(text), 2, 1)) AS BIGINT) AS fake_height,
         |  CAST(ascii(substr(text, 1, 1)) AS BIGINT) AS head_cp
-        |FROM documents ORDER BY doc_id""".stripMargin,
+        |FROM documents ORDER BY doc_id""".stripMargin),
     // §2.H
-    "mm_binary_meta" ->
+    Op("mm_binary_meta", Multimodal.binaryMeta,
       """SELECT doc_id,
         |  CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
         |  substr(to_base64(encode(text)), 1, 16) AS b64_head,
         |  CAST(128 + ascii(substr(md5(text), 1, 1)) AS BIGINT) AS fake_width,
         |  CAST(128 + ascii(substr(md5(text), 2, 1)) AS BIGINT) AS fake_height
-        |FROM documents ORDER BY doc_id""".stripMargin,
+        |FROM documents ORDER BY doc_id""".stripMargin),
     // §2.D (round 4): bucketed interval join — oracle is the direct
     // inequality join DuckDB plans natively.
-    "q_range_join" ->
+    Op("q_range_join", Analytics.qRangeJoin,
       """WITH e AS (SELECT event_id, event_type, value, epoch_us(CAST(ts AS TIMESTAMP)) AS us FROM events),
         |w AS (SELECT event_id AS purchase_id, us AS lo, us + 1800000000 AS hi
         |      FROM e WHERE event_type = 'purchase' AND value >= 95),
@@ -1751,8 +1186,8 @@ object SparkEntry {
         |      FROM w LEFT JOIN c ON c.us >= w.lo AND c.us < w.hi
         |      GROUP BY purchase_id)
         |SELECT purchase_id, CAST(n_clicks AS BIGINT) AS n_clicks
-        |FROM j ORDER BY purchase_id""".stripMargin,
-    "q_grouping_sets" ->
+        |FROM j ORDER BY purchase_id""".stripMargin),
+    Op("q_grouping_sets", Analytics.qGroupingSets,
       """SELECT o_orderstatus, o_orderpriority,
         |  CAST(grouping(o_orderstatus) AS BIGINT) AS g_status,
         |  CAST(grouping(o_orderpriority) AS BIGINT) AS g_priority,
@@ -1760,16 +1195,16 @@ object SparkEntry {
         |  CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT) AS total
         |FROM orders
         |GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
-        |ORDER BY o_orderstatus ASC NULLS FIRST, o_orderpriority ASC NULLS FIRST""".stripMargin,
-    "q_lateral" ->
+        |ORDER BY o_orderstatus ASC NULLS FIRST, o_orderpriority ASC NULLS FIRST""".stripMargin),
+    Op("q_lateral", Analytics.qLateral,
       """SELECT c_custkey, t.o_orderkey,
         |  CAST(CAST(t.o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS price
         |FROM customer,
         |LATERAL (SELECT o_orderkey, o_totalprice FROM orders
         |         WHERE o_custkey = c_custkey
         |         ORDER BY o_totalprice DESC, o_orderkey LIMIT 1) t
-        |ORDER BY c_custkey""".stripMargin,
-    "q_window_lead_lag" ->
+        |ORDER BY c_custkey""".stripMargin),
+    Op("q_window_lead_lag", Analytics.qWindowLeadLag,
       """WITH t AS (SELECT l_suppkey, l_orderkey, l_linenumber, l_shipdate,
         |  CAST(CAST(l_quantity AS DECIMAL(18,2)) * 100 AS BIGINT) AS qty FROM lineitem)
         |SELECT l_suppkey, l_orderkey, l_linenumber, qty,
@@ -1779,8 +1214,8 @@ object SparkEntry {
         |  first_value(qty) OVER (w ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS first_qty
         |FROM t
         |WINDOW w AS (PARTITION BY l_suppkey ORDER BY l_shipdate, l_orderkey, l_linenumber, qty)
-        |ORDER BY l_suppkey, rn""".stripMargin,
-    "q_ntile" ->
+        |ORDER BY l_suppkey, rn""".stripMargin),
+    Op("q_ntile", Analytics.qNtile,
       """WITH t AS (SELECT l_returnflag,
         |  CAST(CAST(l_quantity AS DECIMAL(18,2)) * 100 AS BIGINT) AS qty,
         |  CAST(ntile(4) OVER (PARTITION BY l_returnflag
@@ -1788,17 +1223,17 @@ object SparkEntry {
         |  FROM lineitem)
         |SELECT l_returnflag, quartile, COUNT(*) AS n,
         |  MIN(qty) AS min_qty, MAX(qty) AS max_qty
-        |FROM t GROUP BY l_returnflag, quartile ORDER BY l_returnflag, quartile""".stripMargin,
+        |FROM t GROUP BY l_returnflag, quartile ORDER BY l_returnflag, quartile""".stripMargin),
     // q_bloom_join: the bloom sketch is a pre-filter only; the exact
     // semi join defines the result, so the oracle is the plain EXISTS.
-    "q_bloom_join" ->
+    Op("q_bloom_join", BloomJoin.qBloomJoin,
       """SELECT l_returnflag, COUNT(*) AS n,
         |  CAST(SUM(CAST(CAST(l_quantity AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT) AS sum_qty
         |FROM lineitem
         |WHERE EXISTS (SELECT 1 FROM orders
         |              WHERE o_orderkey = l_orderkey AND o_totalprice > 400000)
-        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "dlp_format_preserving" ->
+        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
+    Op("dlp_format_preserving", DlpQueries.dlpFormatPreserving,
       """WITH t AS (SELECT c_custkey,
         |  '555-867-' || lpad(CAST(c_custkey % 10000 AS VARCHAR), 4, '0') AS phone
         |  FROM customer)
@@ -1808,16 +1243,16 @@ object SparkEntry {
         |      THEN CAST((CAST(substr(phone, i, 1) AS INT) +
         |                 ascii(substr(md5('fpe-key' || ':' || CAST(i AS VARCHAR)), 1, 1))) % 10 AS VARCHAR)
         |      ELSE substr(phone, i, 1) END), '') AS fpe_phone
-        |FROM t ORDER BY c_custkey""".stripMargin,
-    "ingest_partition_pruning" ->
+        |FROM t ORDER BY c_custkey""".stripMargin),
+    Op("ingest_partition_pruning", SourceQueries.partitionPruning,
       """SELECT o_orderstatus, COUNT(*) AS n,
         |  CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT) AS total
         |FROM orders WHERE o_orderstatus = 'F'
-        |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
+        |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin),
     // §2.E (round 4): connected components via recursive reachability
     // (min label over everything reachable through verified near-dup
     // pairs) — an independent formulation of the same fixpoint.
-    "dedup_components" ->
+    Op("dedup_components", Dedup.components(_, _),
       (s"""WITH RECURSIVE $GramsCte,
          |$SigCte,
          |bands AS (
@@ -1839,11 +1274,11 @@ object SparkEntry {
          |comp AS (SELECT doc_id, MIN(r) AS comp FROM reach GROUP BY doc_id),
          |sizes AS (SELECT comp, COUNT(*) AS n_members FROM comp GROUP BY comp)
          |SELECT c.doc_id, c.comp, s.n_members
-         |FROM comp c JOIN sizes s USING (comp) ORDER BY doc_id""".stripMargin),
+         |FROM comp c JOIN sizes s USING (comp) ORDER BY doc_id""".stripMargin)),
     // dedup_keep_best: highest-quality representative per near-dup
     // component (quality bp desc, doc_id tiebreak), multi-doc
     // components only.
-    "dedup_keep_best" ->
+    Op("dedup_keep_best", Dedup.keepBest,
       (s"""WITH RECURSIVE $GramsCte,
          |$SigCte,
          |bands AS (
@@ -1879,20 +1314,20 @@ object SparkEntry {
          |  WHERE s.n_members > 1),
          |r AS (SELECT *, row_number() OVER (PARTITION BY comp ORDER BY quality_bp DESC, doc_id) AS rn FROM m)
          |SELECT comp, doc_id AS keeper, quality_bp AS keeper_bp, n_members
-         |FROM r WHERE rn = 1 ORDER BY comp""".stripMargin),
+         |FROM r WHERE rn = 1 ORDER BY comp""".stripMargin)),
     // sampling/splitting: the hash-bucket SQL is shared verbatim with
     // the Spark side (TextOps.HashBucketSql), so the oracle IS the
     // same function evaluated by a different engine.
-    "sample_stratified" ->
+    Op("sample_stratified", TextOps.sampleStratified,
       (s"""SELECT doc_id, source, ${TextOps.HashBucketSql} AS hash_bucket
          |FROM documents WHERE ${TextOps.HashBucketSql} < 20
-         |ORDER BY doc_id""".stripMargin),
-    "split_train_eval" ->
+         |ORDER BY doc_id""".stripMargin)),
+    Op("split_train_eval", TextOps.splitTrainEval,
       (s"""WITH s AS (SELECT doc_id, source, ${TextOps.SplitCaseSql} AS split FROM documents)
          |SELECT source, split, COUNT(*) AS n, MIN(doc_id) AS min_doc, MAX(doc_id) AS max_doc
-         |FROM s GROUP BY source, split ORDER BY source, split""".stripMargin),
+         |FROM s GROUP BY source, split ORDER BY source, split""".stripMargin)),
     // §2.G (round 4): Gopher-style repetition filters.
-    "text_repetition" ->
+    Op("text_repetition", TextOps.repetition,
       """WITH t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
         |b AS (SELECT doc_id, w, list_transform(range(1, greatest(len(w) - 1, 1) + 1),
         |  i -> concat_ws(' ', w[i], w[i+1])) AS bg FROM t)
@@ -1901,28 +1336,28 @@ object SparkEntry {
         |  CAST((len(w) - len(list_distinct(w))) * 10000 // len(w) AS BIGINT) AS dup_word_bp,
         |  CAST(list_max(list_transform(list_distinct(w), x -> len(list_filter(w, y -> y = x)))) * 10000 // len(w) AS BIGINT) AS top_word_bp,
         |  CAST(list_max(list_transform(list_distinct(bg), x -> len(list_filter(bg, y -> y = x)))) * 10000 // len(bg) AS BIGINT) AS top_bigram_bp
-        |FROM b ORDER BY doc_id""".stripMargin,
+        |FROM b ORDER BY doc_id""".stripMargin),
     // §2.A/§2.C (round 4)
     // jdbc_live_extract: Spark reads rows back out of a live Derby DB
     // via a partitioned JDBC range scan; the oracle reads the same rows
     // straight from parquet — equal aggregates prove the DB round-trip.
-    "jdbc_live_extract" ->
+    Op("jdbc_live_extract", SourceQueries.jdbcLiveExtract,
       """SELECT c_mktsegment, COUNT(*) AS n_rows,
         |  CAST(SUM(CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT) AS sum_acctbal
-        |FROM customer GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
+        |FROM customer GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin),
     // jdbc_live_extract_nopk: same rows round-tripped through a Derby
     // table with NO primary key (string-boundary range partitions);
     // min/max of the derived string key prove no split boundary lost
     // or duplicated a row.
-    "jdbc_live_extract_nopk" ->
+    Op("jdbc_live_extract_nopk", SourceQueries.jdbcLiveExtractNoPk,
       """SELECT c_mktsegment, COUNT(*) AS n_rows,
         |  CAST(SUM(CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT) AS sum_acctbal,
         |  MIN(concat('K', lpad(CAST(c_custkey AS VARCHAR), 10, '0'))) AS min_key,
         |  MAX(concat('K', lpad(CAST(c_custkey AS VARCHAR), 10, '0'))) AS max_key
-        |FROM customer GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
+        |FROM customer GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin),
     // jdbc_type_map: DDL is fixed in the query → the discovered
     // TYPE_NAME→BQ mapping is a literal expected table.
-    "jdbc_type_map" ->
+    Op("jdbc_type_map", SourceQueries.jdbcTypeMap,
       """SELECT CAST(ordinal AS BIGINT) AS ordinal, column_name, source_type, bq_type
         |FROM (VALUES
         |  (1, 'id', 'BIGINT', 'INTEGER'),
@@ -1939,24 +1374,24 @@ object SparkEntry {
         |  (12, 'seen', 'TIMESTAMP', 'STRING'),
         |  (13, 'payload', 'BLOB', 'BYTES'),
         |  (14, 'thumb', 'VARCHAR () FOR BIT DATA', 'BYTES')
-        |) t(ordinal, column_name, source_type, bq_type) ORDER BY ordinal""".stripMargin,
+        |) t(ordinal, column_name, source_type, bq_type) ORDER BY ordinal""".stripMargin),
     // jdbc_pk_catalog: the DDL is fixed in the query, so the expected
     // discovery result is a literal table.
-    "jdbc_pk_catalog" ->
+    Op("jdbc_pk_catalog", SourceQueries.jdbcPkCatalog,
       """SELECT * FROM (VALUES
         |  ('acct', 'id', CAST(0 AS BIGINT)),
         |  ('order_line', 'order_id,line_no', CAST(0 AS BIGINT)),
         |  ('raw_log', 'ts,msg,lvl', CAST(1 AS BIGINT))
-        |) t(table_name, pk_cols, pk_inferred) ORDER BY table_name""".stripMargin,
-    "reid_header_map" ->
+        |) t(table_name, pk_cols, pk_inferred) ORDER BY table_name""".stripMargin),
+    Op("reid_header_map", SourceQueries.reidHeaderMap,
       """WITH tok AS (SELECT c_custkey, 'TOK_' || substr(sha256('det-key:' || c_name), 1, 32) AS token FROM customer),
         |vault AS (SELECT DISTINCT 'TOK_' || substr(sha256('det-key:' || c_name), 1, 32) AS token, c_name AS plaintext FROM customer)
         |SELECT c_custkey AS customer_id, token, plaintext AS customer_name
-        |FROM tok JOIN vault USING (token) ORDER BY customer_id""".stripMargin,
+        |FROM tok JOIN vault USING (token) ORDER BY customer_id""".stripMargin),
     // the n_rows > 0 guard keeps the oracle row-count-equal to Spark's
     // groupBy (which emits nothing for an empty source) on datasets
     // where a signature group is empty
-    "reid_group_signature" ->
+    Op("reid_group_signature", SourceQueries.reidGroupSignature,
       """WITH s AS (
         |  SELECT 'c_custkey,c_name' AS headers, COUNT(*) AS n_rows FROM (
         |    SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING'
@@ -1965,8 +1400,8 @@ object SparkEntry {
         |  SELECT 'o_orderkey,o_custkey,o_totalprice', COUNT(*) FROM orders)
         |SELECT md5(headers) AS signature, headers, CAST(n_rows AS BIGINT) AS n_rows,
         |  CAST(ceil(n_rows / 500.0) AS BIGINT) AS n_batches
-        |FROM s WHERE n_rows > 0 ORDER BY headers""".stripMargin,
-    "load_retry_deadletter" ->
+        |FROM s WHERE n_rows > 0 ORDER BY headers""".stripMargin),
+    Op("load_retry_deadletter", SourceQueries.loadRetryDispositions,
       """WITH t AS (SELECT event_id,
         |  try_cast(nullif(regexp_extract(props, '"k": ([0-9]+)', 1), '') AS BIGINT) AS k,
         |  substr(md5(CAST(event_id AS VARCHAR)), 1, 1) IN ('0','1','2','3') AS flaky
@@ -1976,23 +1411,23 @@ object SparkEntry {
         |  CASE WHEN k IS NULL THEN 'dead_letter:malformed_props'
         |       WHEN k >= 80 THEN 'dead_letter:value_out_of_range'
         |       WHEN flaky THEN 'loaded_retry' ELSE 'loaded' END AS disposition
-        |FROM t ORDER BY event_id""".stripMargin,
-    "migration_jdbc_manifest" ->
+        |FROM t ORDER BY event_id""".stripMargin),
+    Op("migration_jdbc_manifest", SourceQueries.jdbcImportManifest,
       """SELECT * FROM (
         |  SELECT 'nation' AS table_name, (SELECT COUNT(*) FROM nation) AS n_rows,
         |    'n_nationkey' AS pk_col, CAST(4 AS BIGINT) AS n_splits, CAST(0 AS BIGINT) AS deid_applied
         |  UNION ALL
         |  SELECT 'supplier', (SELECT COUNT(*) FROM supplier), 's_suppkey', 4, 1
-        |) ORDER BY table_name""".stripMargin,
-    "dlp_k_map" ->
+        |) ORDER BY table_name""".stripMargin),
+    Op("dlp_k_map", DlpQueries.dlpKMap,
       """WITH s AS (SELECT c_mktsegment, c_nationkey, COUNT(*) AS n_sample
         |  FROM customer WHERE c_custkey % 7 = 0 GROUP BY 1, 2),
         |p AS (SELECT c_mktsegment, c_nationkey, COUNT(*) AS k_map
         |  FROM customer GROUP BY 1, 2)
         |SELECT c_mktsegment, c_nationkey, n_sample, k_map
         |FROM s JOIN p USING (c_mktsegment, c_nationkey)
-        |ORDER BY c_mktsegment, c_nationkey""".stripMargin,
-    "load_scd2_merge" ->
+        |ORDER BY c_mktsegment, c_nationkey""".stripMargin),
+    Op("load_scd2_merge", SourceQueries.scd2Merge,
       """WITH cur AS (SELECT c_custkey, c_mktsegment FROM customer),
         |chg AS (SELECT c_custkey, 'MACHINERY' AS new_segment FROM cur
         |        WHERE c_custkey % 10 = 3 AND c_mktsegment <> 'MACHINERY')
@@ -2005,47 +1440,47 @@ object SparkEntry {
         |UNION ALL
         |SELECT c_custkey, new_segment, '1996-06-01', CAST(NULL AS VARCHAR), 1
         |FROM chg
-        |ORDER BY c_custkey, valid_from, is_current""".stripMargin,
-    "source_csv_roundtrip" ->
+        |ORDER BY c_custkey, valid_from, is_current""".stripMargin),
+    Op("source_csv_roundtrip", SourceQueries.csvRoundtrip,
       """SELECT o_orderstatus, COUNT(*) AS n,
         |  CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT) AS total
-        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-    "source_orc_roundtrip" ->
+        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin),
+    Op("source_orc_roundtrip", SourceQueries.orcRoundtrip,
       """SELECT l_returnflag, COUNT(*) AS n,
         |  CAST(SUM(CAST(CAST(l_quantity AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT) AS total
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "source_json_roundtrip" ->
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
+    Op("source_json_roundtrip", SourceQueries.jsonRoundtrip,
       """SELECT p_brand, COUNT(*) AS n,
         |  CAST(SUM(CAST(CAST(p_retailprice AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT) AS total
-        |FROM part GROUP BY p_brand ORDER BY p_brand""".stripMargin,
+        |FROM part GROUP BY p_brand ORDER BY p_brand""".stripMargin),
     // round 8: the oracle joins the SOURCE parquet — a row lost or
     // re-keyed in the bucketed write/read path breaks the hash
-    "source_bucketed_join" ->
+    Op("source_bucketed_join", SourceQueries.bucketedJoin,
       """SELECT c_mktsegment, COUNT(*) AS n,
         |  CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT) AS total_cents
         |FROM orders JOIN customer ON o_custkey = c_custkey
-        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-    "q_distinct_skew" ->
+        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin),
+    Op("q_distinct_skew", Analytics.qDistinctSkew,
       """SELECT event_type, CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin),
     // round 8: the oracle is the FULL recompute over raw events — the
     // hash match proves the incremental stored-state + batch merge in
     // aggUpsert is lossless
-    "load_agg_upsert" ->
+    Op("load_agg_upsert", SourceQueries.aggUpsert,
       """SELECT event_type, COUNT(*) AS n,
         |  CAST(SUM(CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT) AS total_cents,
         |  MAX(ts) AS last_ts
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "sample_weighted" ->
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin),
+    Op("sample_weighted", TextOps.sampleWeighted,
       (s"""SELECT doc_id, source, n_chars, priority FROM (
          |  SELECT doc_id, source, n_chars,
          |    CAST(FLOOR(CAST(${TextOps.Hash24Sql} AS DOUBLE) * 1000000 / GREATEST(n_chars, 1)) AS BIGINT) AS priority
          |  FROM documents ORDER BY priority, doc_id LIMIT 50) t
-         |ORDER BY doc_id""".stripMargin),
+         |ORDER BY doc_id""".stripMargin)),
     // round 8: the oracle is the NAIVE single global window; the Spark
     // side runs the two-level (bucketed + boundary) decomposition, so
     // the hash match proves the decomposition exact
-    "ingest_gap_audit" ->
+    Op("ingest_gap_audit", SourceQueries.gapAudit,
       """WITH e AS (SELECT o_orderkey FROM orders
         |  WHERE CAST(FLOOR(o_orderkey / 512) AS BIGINT) % 17 <> 5),
         |g AS (SELECT o_orderkey, LAG(o_orderkey) OVER (ORDER BY o_orderkey) AS prev
@@ -2054,11 +1489,11 @@ object SparkEntry {
         |    o_orderkey - prev - 1 AS n_missing
         |  FROM g WHERE prev IS NOT NULL AND o_orderkey - prev > 1
         |  ORDER BY n_missing DESC, gap_start LIMIT 25)
-        |SELECT gap_start, gap_end, n_missing FROM gaps ORDER BY gap_start""".stripMargin,
+        |SELECT gap_start, gap_end, n_missing FROM gaps ORDER BY gap_start""".stripMargin),
     // round 8: deid transforms + range batching + order-insensitive
     // payload fingerprint (sorted token list) — same token/sha256
     // fragment as dlp_config_apply
-    "stream_deid_pipeline" -> {
+    Op("stream_deid_pipeline", Streams.deidPipelineBatch, {
       // batch size interpolated FROM the config, like the Spark side —
       // ExampleConfig is the single source for both engines
       val batch = graft.etl.DlpConfig.parse(graft.etl.DlpConfig.ExampleConfig)
@@ -2070,10 +1505,10 @@ object SparkEntry {
          |  COUNT(*) AS n_rows, MIN(c_custkey) AS lo_key, MAX(c_custkey) AS hi_key,
          |  md5(array_to_string(list_sort(list(tok)), ',')) AS payload_md5
          |FROM deid GROUP BY 1 ORDER BY 1""".stripMargin
-    },
+    }),
     // round 8: DuckDB list slice ws[a:b] is 1-based inclusive =
     // Spark slice(ws, a, 8); range(0,16) covers the ≤100-word docs
-    "dedup_paragraph" ->
+    Op("dedup_paragraph", Dedup.paragraphDedup,
       """WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
         |seg AS (SELECT doc_id, md5(array_to_string(ws[i*8+1 : i*8+8], ' ')) AS h
         |  FROM w, (SELECT unnest(range(0, 16)) AS i) g
@@ -2081,12 +1516,12 @@ object SparkEntry {
         |SELECT h, CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_docs,
         |  COUNT(*) AS n_occ, MIN(doc_id) AS min_doc
         |FROM seg GROUP BY h HAVING COUNT(DISTINCT doc_id) > 1
-        |ORDER BY h""".stripMargin,
+        |ORDER BY h""".stripMargin),
     // round 10: character-granularity exact-substring dedup — 64-char
     // windows anchored where md5 of the 8-gram ends in '0' (winnowing-
     // style content-defined anchors, alignment-invariant); window texts
     // in >1 doc mark their anchors, overlapping windows merge to spans
-    "dedup_substring" ->
+    Op("dedup_substring", Dedup.substringDedup,
       """WITH d AS (SELECT doc_id, text, length(text) AS len FROM documents WHERE length(text) >= 64),
         |pos AS (SELECT doc_id, unnest(generate_series(1, len - 63)) AS o, text FROM d),
         |a AS (SELECT doc_id, o, md5(substr(text, o, 64)) AS h FROM pos
@@ -2104,10 +1539,10 @@ object SparkEntry {
         |  CAST(MAX(o) + 64 - MIN(o) AS BIGINT) AS span_chars,
         |  COUNT(*) AS n_windows
         |FROM g GROUP BY doc_id, grp
-        |ORDER BY doc_id, span_start""".stripMargin,
+        |ORDER BY doc_id, span_start""".stripMargin),
     // round 8: bit-interleave in portable integer ops; DuckDB's
     // date_part('day', ...) = Spark's dayofmonth
-    "layout_zorder" ->
+    Op("layout_zorder", Analytics.layoutZorder,
       """WITH dims AS (
         |  SELECT o_custkey % 16 AS cb,
         |    CAST(date_part('day', o_orderdate) - 1 AS BIGINT) % 16 AS db
@@ -2122,11 +1557,11 @@ object SparkEntry {
         |SELECT CAST(zkey >> 4 AS BIGINT) AS zbucket, COUNT(*) AS n,
         |  MIN(cb) AS cb_min, MAX(cb) AS cb_max,
         |  MIN(db) AS db_min, MAX(db) AS db_max
-        |FROM z GROUP BY 1 ORDER BY 1""".stripMargin,
+        |FROM z GROUP BY 1 ORDER BY 1""".stripMargin),
     // §2.G (round 7): sliding token-window chunks — 32-token window,
     // stride 24; DuckDB list slice w[a:b] is 1-based inclusive =
     // Spark slice(w, a, 32)
-    "text_chunking" ->
+    Op("text_chunking", TextOps.chunk(_, _),
       """WITH doc AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
         |n AS (SELECT doc_id, w,
         |  CASE WHEN len(w) <= 32 THEN 1 ELSE 1 + (len(w) - 32 + 23) // 24 END AS nchunks FROM doc),
@@ -2135,8 +1570,8 @@ object SparkEntry {
         |  CAST((chunk_idx - 1) * 24 + 1 AS BIGINT) AS start_tok,
         |  CAST(len(w[(chunk_idx - 1) * 24 + 1 : (chunk_idx - 1) * 24 + 32]) AS BIGINT) AS n_tok,
         |  array_to_string(w[(chunk_idx - 1) * 24 + 1 : (chunk_idx - 1) * 24 + 32], ' ') AS chunk
-        |FROM c ORDER BY doc_id, chunk_idx""".stripMargin,
-    "text_ngram_coverage" ->
+        |FROM c ORDER BY doc_id, chunk_idx""".stripMargin),
+    Op("text_ngram_coverage", TextOps.ngramCoverage(_, _),
       """WITH g AS (SELECT doc_id, unnest(list_transform(range(1, greatest(len(w) - 1, 1) + 1),
         |    i -> concat_ws(' ', w[i], w[i+1]))) AS gram
         |  FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents)),
@@ -2146,8 +1581,8 @@ object SparkEntry {
         |  CAST(SUM(CASE WHEN t.gram IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_top,
         |  CAST(SUM(CASE WHEN t.gram IS NOT NULL THEN 1 ELSE 0 END) * 10000
         |    // COUNT(*) AS BIGINT) AS coverage_bp
-        |FROM g LEFT JOIN top t USING (gram) GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "text_tfidf" ->
+        |FROM g LEFT JOIN top t USING (gram) GROUP BY doc_id ORDER BY doc_id""".stripMargin),
+    Op("text_tfidf", TextOps.tfidfTopTerms,
       """WITH wds AS (SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM documents),
         |tf AS (SELECT doc_id, word, COUNT(*) AS tf FROM wds GROUP BY doc_id, word),
         |dfx AS (SELECT word, COUNT(*) AS df_docs FROM tf GROUP BY word),
@@ -2156,9 +1591,9 @@ object SparkEntry {
         |r AS (SELECT *, CAST(row_number() OVER
         |  (PARTITION BY doc_id ORDER BY score_u DESC, word) AS BIGINT) AS rank FROM s)
         |SELECT doc_id, word, tf, df_docs, CAST(score_u AS BIGINT) AS score_u, rank
-        |FROM r WHERE rank <= 3 ORDER BY doc_id, rank""".stripMargin,
+        |FROM r WHERE rank <= 3 ORDER BY doc_id, rank""".stripMargin),
     // §2.F (round 7)
-    "ann_lsh_topk" ->
+    Op("ann_lsh_topk", Ann.lshTopk,
       (s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
          |eb AS (SELECT vec_id, emb,
          |  (CASE WHEN emb[1] >= 0 THEN '1' ELSE '0' END || CASE WHEN emb[2] >= 0 THEN '1' ELSE '0' END ||
@@ -2171,11 +1606,11 @@ object SparkEntry {
          |r AS (SELECT query_id, vec_id, CAST(row_number() OVER
          |  (PARTITION BY query_id ORDER BY c DESC, vec_id) AS BIGINT) AS rank FROM s)
          |SELECT query_id, vec_id AS neighbor_id, rank FROM r WHERE rank <= 5
-         |ORDER BY query_id, rank""".stripMargin),
+         |ORDER BY query_id, rank""".stripMargin)),
     // int8 quantization replayed in the same integer micro-unit space:
     // the shifted division keeps every dividend positive, so DuckDB's
     // // and Spark's DIV agree exactly
-    "embed_quantize_int8" ->
+    Op("embed_quantize_int8", Ann.quantizeInt8,
       """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
         |x AS (SELECT vec_id,
         |  list_transform(emb, v -> CAST(FLOOR(v * 1000000) AS BIGINT)) AS xq FROM e),
@@ -2190,9 +1625,9 @@ object SparkEntry {
         |  CAST(qc[3] AS BIGINT) AS q3, CAST(qc[4] AS BIGINT) AS q4,
         |  CAST(list_reduce(list_transform(range(1, len(xq) + 1),
         |    i -> abs(127 * xq[i] - qc[i] * s)), (acc, v) -> acc + v) AS BIGINT) AS err_u
-        |FROM q ORDER BY vec_id""".stripMargin,
+        |FROM q ORDER BY vec_id""".stripMargin),
     // conjunctive keyword retrieval over the tf/df statistics
-    "text_search_rank" ->
+    Op("text_search_rank", TextOps.searchRank(_, _),
       """WITH wds AS (SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM documents),
         |tf AS (SELECT doc_id, word, COUNT(*) AS tf FROM wds GROUP BY doc_id, word),
         |dfx AS (SELECT word, COUNT(*) AS df_docs FROM tf GROUP BY word),
@@ -2200,10 +1635,10 @@ object SparkEntry {
         |  FROM tf JOIN dfx USING (word) WHERE word IN ('spark', 'table')),
         |m AS (SELECT doc_id, SUM(score_u) AS score FROM s GROUP BY doc_id HAVING COUNT(*) = 2)
         |SELECT doc_id, CAST(score AS BIGINT) AS score_u
-        |FROM m ORDER BY score_u DESC, doc_id LIMIT 20""".stripMargin,
+        |FROM m ORDER BY score_u DESC, doc_id LIMIT 20""".stripMargin),
     // late-data audit: per-key high-water-mark replay in arrival
     // (event_id) order — 10-minute tolerance in microseconds
-    "stream_late_audit" ->
+    Op("stream_late_audit", Streams.lateAuditBatch(_, _),
       """WITH e AS (SELECT event_id, user_id, event_type, epoch_us(CAST(ts AS TIMESTAMP)) AS us FROM events),
         |h AS (SELECT event_type, us,
         |  MAX(us) OVER (PARTITION BY user_id ORDER BY event_id
@@ -2214,14 +1649,14 @@ object SparkEntry {
         |    // COUNT(*) AS BIGINT) AS late_bp,
         |  CAST(MAX(CASE WHEN hwm IS NULL THEN 0 ELSE GREATEST(hwm - us, 0) END) AS BIGINT) AS max_skew_us,
         |  CAST(MAX(CASE WHEN hwm IS NULL THEN 0 ELSE GREATEST(us - hwm, 0) END) AS BIGINT) AS max_jump_us
-        |FROM h GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "dlp_time_extract" ->
+        |FROM h GROUP BY event_type ORDER BY event_type""".stripMargin),
+    Op("dlp_time_extract", DlpQueries.dlpTimeExtract,
       """SELECT o_orderkey,
         |  CAST(year(o_orderdate) AS BIGINT) AS order_year,
         |  CAST(month(o_orderdate) AS BIGINT) AS order_month
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
+        |FROM orders ORDER BY o_orderkey""".stripMargin),
     // recall@5 of the IVF index vs exact brute-force ground truth
-    "ann_recall_eval" ->
+    Op("ann_recall_eval", Ann.recallEval,
       (s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
          |cent AS (SELECT vec_id AS cent_id, emb AS ce FROM e WHERE vec_id < 8),
          |a AS (SELECT e.vec_id, e.emb, cent_id, ${duckCos("emb", "ce")} AS c FROM e CROSS JOIN cent),
@@ -2242,9 +1677,9 @@ object SparkEntry {
          |  CAST(SUM(CASE WHEN i.hit IS NOT NULL THEN 1 ELSE 0 END) * 10000
          |    // COUNT(*) AS BIGINT) AS recall_bp
          |FROM ex LEFT JOIN ivf i ON i.query_id = ex.query_id AND i.neighbor_id = ex.neighbor_id
-         |GROUP BY ex.query_id ORDER BY ex.query_id""".stripMargin),
+         |GROUP BY ex.query_id ORDER BY ex.query_id""".stripMargin)),
     // §2.E (round 7): components over the embedding-cosine pair graph
-    "dedup_semantic_cluster" ->
+    Op("dedup_semantic_cluster", Dedup.semanticClusters,
       (s"""WITH RECURSIVE e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
          |eb AS (SELECT vec_id, emb,
          |  (CASE WHEN emb[1] >= 0 THEN '1' ELSE '0' END || CASE WHEN emb[2] >= 0 THEN '1' ELSE '0' END ||
@@ -2263,11 +1698,11 @@ object SparkEntry {
          |comp AS (SELECT vec_id, MIN(r) AS cluster FROM reach GROUP BY vec_id),
          |sizes AS (SELECT cluster, COUNT(*) AS n_members FROM comp GROUP BY cluster)
          |SELECT c.vec_id, c.cluster, s.n_members
-         |FROM comp c JOIN sizes s USING (cluster) ORDER BY vec_id""".stripMargin),
+         |FROM comp c JOIN sizes s USING (cluster) ORDER BY vec_id""".stripMargin)),
     // round 8 (cont): unigram-LM scoring — integer counts, total
     // tie-break at the LIMIT boundary; SUM casts back to BIGINT
     // (DuckDB sum(int) is HUGEINT)
-    "text_lm_score" ->
+    Op("text_lm_score", TextOps.lmScore,
       """WITH toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS word
         |  FROM documents),
         |cnt AS (SELECT word, CAST(COUNT(*) AS BIGINT) AS n FROM toks GROUP BY word),
@@ -2276,11 +1711,11 @@ object SparkEntry {
         |  CAST(SUM(COALESCE(lm.n, 0)) AS BIGINT) AS score_sum,
         |  CAST(SUM(COALESCE(lm.n, 0)) // COUNT(*) AS BIGINT) AS score_avg
         |FROM toks t LEFT JOIN lm ON t.word = lm.word
-        |GROUP BY t.doc_id ORDER BY t.doc_id""".stripMargin,
+        |GROUP BY t.doc_id ORDER BY t.doc_id""".stripMargin),
     // round 8 (cont): per-bucket checksum reconcile — the row hash is
     // the SAME SQL text the Spark side evaluates (the shared
     // OrdersRowHashSql val), so the checksums agree bit-for-bit
-    "ingest_checksum_reconcile" -> {
+    Op("ingest_checksum_reconcile", SourceQueries.checksumReconcile, {
       val rowHash = SourceQueries.OrdersRowHashSql
       s"""WITH src AS (SELECT o_orderkey % 97 AS bucket, COUNT(*) AS n,
          |    CAST(SUM($rowHash) AS BIGINT) AS s
@@ -2295,10 +1730,10 @@ object SparkEntry {
          |    THEN 1 ELSE 0 END AS BIGINT) AS ok
          |FROM src FULL OUTER JOIN dst ON src.bucket = dst.bucket
          |ORDER BY bucket""".stripMargin
-    },
+    }),
     // round 8 (cont): CDC apply — row_number over seq DESC is the
     // oracle's form of the Spark side's max_by struct compaction
-    "load_cdc_apply" ->
+    Op("load_cdc_apply", SourceQueries.cdcApply,
       """WITH snap AS (SELECT c_custkey AS k,
         |    CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT) AS snap_cents
         |  FROM customer),
@@ -2315,12 +1750,12 @@ object SparkEntry {
         |  CASE WHEN lst.op = 'U' THEN lst.cdc_cents ELSE snap.snap_cents END AS val_cents
         |FROM snap FULL OUTER JOIN lst ON snap.k = lst.k
         |WHERE COALESCE(lst.op, 'U') <> 'D'
-        |ORDER BY k""".stripMargin,
+        |ORDER BY k""".stripMargin),
     // round 8 (cont): ±1 random projection in integer space — the
     // sign is md5 parity of (i*8+j), identical text both engines;
     // unnest+SUM replaces list_reduce (version-fragile, the r7
     // kmeans lesson)
-    "embed_random_projection" -> {
+    Op("embed_random_projection", Ann.randomProjection, {
       val pivot = (0 until 8)
         .map(j => s"MAX(CASE WHEN j = $j THEN p END) AS p$j").mkString(",\n  ")
       s"""WITH q AS (SELECT vec_id,
@@ -2337,12 +1772,12 @@ object SparkEntry {
          |SELECT vec_id,
          |  $pivot
          |FROM proj GROUP BY vec_id ORDER BY vec_id""".stripMargin
-    },
+    }),
     // round 8 (cont): rate-spike detection — lag-sum trailing window
     // (nulls propagate through +, so <4 priors filters itself);
     // integer compare n*4 > 3*trail, same epoch-bucket idiom as
     // stream_window_agg
-    "stream_rate_anomaly" ->
+    Op("stream_rate_anomaly", Streams.rateAnomalyBatch,
       """WITH e AS (SELECT CAST(ts AS TIMESTAMP) AS ts, event_type FROM events),
         |w AS (SELECT TIMESTAMP '1970-01-01 00:00:00' +
         |    INTERVAL ((CAST(floor(epoch(ts)) AS BIGINT) // 900) * 900) SECOND AS ws,
@@ -2356,13 +1791,13 @@ object SparkEntry {
         |  FROM c)
         |SELECT event_type, ws, n, trail,
         |  CAST(CASE WHEN n * 4 > 3 * trail THEN 1 ELSE 0 END AS BIGINT) AS anomaly
-        |FROM t WHERE trail IS NOT NULL ORDER BY event_type, ws""".stripMargin,
+        |FROM t WHERE trail IS NOT NULL ORDER BY event_type, ws""".stripMargin),
     // round 9: batch REPLAYS of the streaming state machines. The
     // sessionize replay emits only CLOSED sessions (each user's final
     // session stays open in flatMapGroupsWithState state), so the
     // oracle is the islands SQL minus every user's last session; all
     // timestamps stay BIGINT micros (the portable compare contract).
-    "stream_sessionize_replay" ->
+    Op("stream_sessionize_replay", Streams.sessionizeReplay,
       """WITH e AS (SELECT user_id, event_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us FROM events),
         |s AS (SELECT user_id, event_id, us,
         |  CASE WHEN lag(us) OVER w IS NULL OR us - lag(us) OVER w > 1800000000 THEN 1 ELSE 0 END AS new_s
@@ -2374,13 +1809,13 @@ object SparkEntry {
         |m AS (SELECT user_id, MAX(session_id) AS last_s FROM g GROUP BY 1)
         |SELECT g.user_id, g.session_id, g.n_events, g.start_us, g.end_us
         |FROM g JOIN m ON g.user_id = m.user_id AND g.session_id < m.last_s
-        |ORDER BY g.user_id, g.session_id""".stripMargin,
-    "stream_latest_state_replay" ->
+        |ORDER BY g.user_id, g.session_id""".stripMargin),
+    Op("stream_latest_state_replay", Streams.latestStateReplay,
       """WITH e AS (SELECT user_id, event_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us FROM events),
         |r AS (SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY us DESC, event_id DESC) AS rn FROM e)
         |SELECT user_id, event_id AS last_event_id FROM r WHERE rn = 1
-        |ORDER BY user_id""".stripMargin,
-    "stream_rate_anomaly_replay" ->
+        |ORDER BY user_id""".stripMargin),
+    Op("stream_rate_anomaly_replay", Streams.rateAnomalyReplay,
       """WITH e AS (SELECT event_type,
         |  (CAST(floor(epoch(CAST(ts AS TIMESTAMP))) AS BIGINT) // 900) * 900 * 1000000 AS ws_us FROM events),
         |c AS (SELECT event_type, ws_us, COUNT(*) AS n FROM e GROUP BY 1, 2),
@@ -2392,12 +1827,12 @@ object SparkEntry {
         |  FROM c)
         |SELECT event_type, ws_us, n, CAST(trail AS BIGINT) AS trail,
         |  CAST(CASE WHEN n * 4 > 3 * trail THEN 1 ELSE 0 END AS BIGINT) AS anomaly
-        |FROM t WHERE trail IS NOT NULL ORDER BY event_type, ws_us""".stripMargin,
+        |FROM t WHERE trail IS NOT NULL ORDER BY event_type, ws_us""".stripMargin),
     // round 8 (cont): fuzzy record linkage — canonicalize → token
     // blocking (df-capped at 64, mirroring Dedup.fuzzyLink's blocking
     // bound) → levenshtein verify; both engines implement standard
     // unit-cost edit distance
-    "dedup_fuzzy_link" ->
+    Op("dedup_fuzzy_link", Dedup.fuzzyLink,
       """WITH names AS (SELECT DISTINCT p_name FROM part),
         |toks AS (SELECT p_name, unnest(string_split(p_name, ' ')) AS tok FROM names),
         |dftab AS (SELECT tok FROM toks GROUP BY tok HAVING COUNT(*) <= 64),
@@ -2407,11 +1842,11 @@ object SparkEntry {
         |d AS (SELECT name_a, name_b,
         |  CAST(levenshtein(name_a, name_b) AS BIGINT) AS dist FROM cand)
         |SELECT name_a, name_b, dist FROM d WHERE dist <= 3
-        |ORDER BY name_a, name_b""".stripMargin,
+        |ORDER BY name_a, name_b""".stripMargin),
     // round 8 (cont): interval union — identical windows both engines;
     // tie rows are identical tuples so island numbering is stable;
     // epoch floor-cast per the stream_window_agg idiom
-    "q_interval_union" ->
+    Op("q_interval_union", Analytics.qIntervalUnion,
       """WITH iv AS (SELECT user_id,
         |    CAST(floor(epoch(CAST(ts AS TIMESTAMP))) AS BIGINT) AS s,
         |    CAST(floor(epoch(CAST(ts AS TIMESTAMP))) AS BIGINT) + 300 AS e
@@ -2430,12 +1865,12 @@ object SparkEntry {
         |  FROM isl GROUP BY 1, 2)
         |SELECT user_id, COUNT(*) AS n_islands,
         |  CAST(SUM(ie - is_) AS BIGINT) AS covered_sec
-        |FROM g GROUP BY user_id ORDER BY user_id""".stripMargin,
+        |FROM g GROUP BY user_id ORDER BY user_id""".stripMargin),
     // round 8 (cont): the full funnel — composed from the SAME proven
     // fragments as its standalone stages (pairs/bands from the dedup
     // oracles, gate from pipeline_quality_gate, split/token count
     // from the shared portable fragments)
-    "pipeline_training_mix" ->
+    Op("pipeline_training_mix", Dedup.trainingMix,
       (s"""WITH $GramsCte,
          |$SigCte,
          |bands AS (
@@ -2469,19 +1904,19 @@ object SparkEntry {
          |JOIN ok ON ok.doc_id = d.doc_id
          |WHERE d.doc_id NOT IN (SELECT doc_b FROM p)
          |  AND d.doc_id NOT IN (SELECT doc_id FROM contaminated)
-         |GROUP BY d.source, s.split ORDER BY d.source, s.split""".stripMargin),
+         |GROUP BY d.source, s.split ORDER BY d.source, s.split""".stripMargin)),
     // round 8 (cont): binaryFile ingest — the oracle recomputes each
     // staged file's size and md5 from the source-of-truth table, so a
     // lost/truncated/mis-keyed payload file fails the hash
-    "mm_binary_ingest" ->
+    Op("mm_binary_ingest", Multimodal.binaryIngest,
       """SELECT doc_id,
         |  CAST(octet_length(CAST(text AS BLOB)) AS BIGINT) AS n_bytes,
         |  md5(text) AS payload_md5
-        |FROM documents WHERE text IS NOT NULL ORDER BY doc_id""".stripMargin,
+        |FROM documents WHERE text IS NOT NULL ORDER BY doc_id""".stripMargin),
     // round 9: ordered funnel match — three chained running-min
     // windows over ONE (us, event_id) order; strictly-after = the
     // PRECEDING-rows frame, identical text on both engines
-    "q_sequence_match" ->
+    Op("q_sequence_match", Analytics.qSequenceMatch,
       """WITH e AS (SELECT user_id, event_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us, event_type
         |  FROM events WHERE user_id IS NOT NULL AND event_type IN ('signup', 'click', 'purchase')),
         |s1 AS (SELECT *, CASE WHEN event_type = 'signup' THEN us END AS s_q FROM e),
@@ -2494,11 +1929,11 @@ object SparkEntry {
         |SELECT user_id, MIN(s_q) AS signup_us, MIN(c_q) AS click_us, MIN(p_q) AS purchase_us,
         |  CAST(CASE WHEN MIN(p_q) IS NOT NULL THEN 3 WHEN MIN(c_q) IS NOT NULL THEN 2
         |            WHEN MIN(s_q) IS NOT NULL THEN 1 ELSE 0 END AS BIGINT) AS stage
-        |FROM s5 GROUP BY user_id ORDER BY user_id""".stripMargin,
+        |FROM s5 GROUP BY user_id ORDER BY user_id""".stripMargin),
     // layout_column_stats: ANALYZE-shaped per-month per-column stats;
     // DuckDB SUM/COUNT DISTINCT outputs cast to BIGINT per the
     // HUGEINT portability rule
-    "layout_column_stats" ->
+    Op("layout_column_stats", Analytics.layoutColumnStats,
       """WITH o AS (SELECT
         |  CAST(date_part('year', o_orderdate) * 100 + date_part('month', o_orderdate) AS BIGINT) AS part_month,
         |  o_orderstatus, o_orderpriority, o_custkey,
@@ -2522,10 +1957,10 @@ object SparkEntry {
         |  UNION ALL SELECT part_month, n_rows, 'o_orderpriority', min_prio, max_prio, ndv_prio, null_prio FROM a
         |  UNION ALL SELECT part_month, n_rows, 'o_custkey', min_cust, max_cust, ndv_cust, null_cust FROM a
         |  UNION ALL SELECT part_month, n_rows, 'o_totalprice_c', min_price, max_price, ndv_price, null_price FROM a)
-        |ORDER BY part_month, col_name""".stripMargin,
+        |ORDER BY part_month, col_name""".stripMargin),
     // layout_compaction_plan: cumulative-byte next-fit packing at a
     // 64 KiB target; `//` (DuckDB) = DIV (Spark) on non-negative longs
-    "layout_compaction_plan" ->
+    Op("layout_compaction_plan", Analytics.layoutCompactionPlan(_, _),
       """WITH f AS (SELECT
         |  CAST(date_part('year', l_shipdate) * 10000 + date_part('month', l_shipdate) * 100
         |    + date_part('day', l_shipdate) AS BIGINT) AS file_key,
@@ -2536,19 +1971,19 @@ object SparkEntry {
         |  (ORDER BY file_key ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS BIGINT), 0) AS cum_before FROM f)
         |SELECT file_key, n_rows, bytes,
         |  cum_before // 65536 AS bin_id, cum_before % 65536 AS bin_offset
-        |FROM c ORDER BY file_key""".stripMargin,
+        |FROM c ORDER BY file_key""".stripMargin),
     // text_bpe_pairs: vocabulary-weighted adjacent char pairs;
     // word[i:i+1] (1-based inclusive slice) = substring(word, i, 2)
-    "text_bpe_pairs" ->
+    Op("text_bpe_pairs", TextOps.bpePairs,
       """WITH v AS (SELECT word, COUNT(*) AS n FROM
         |  (SELECT unnest(string_split(text, ' ')) AS word FROM documents)
         |  WHERE len(word) >= 2 GROUP BY word),
         |p AS (SELECT n, unnest(list_transform(range(1, len(word)), i -> word[i:i+1])) AS pair FROM v)
         |SELECT pair, CAST(SUM(n) AS BIGINT) AS weight FROM p GROUP BY pair
-        |ORDER BY weight DESC, pair LIMIT 50""".stripMargin,
+        |ORDER BY weight DESC, pair LIMIT 50""".stripMargin),
     // text_length_outliers: exact integer lower-median + MAD per
     // source, rank-selected under a (value, doc_id) total order
-    "text_length_outliers" ->
+    Op("text_length_outliers", TextOps.lengthOutliers,
       """WITH d AS (SELECT doc_id, source, CAST(len(string_split(text, ' ')) AS BIGINT) AS len FROM documents),
         |r1 AS (SELECT *, row_number() OVER (PARTITION BY source ORDER BY len, doc_id) AS rn,
         |  COUNT(*) OVER (PARTITION BY source) AS n_src FROM d),
@@ -2563,12 +1998,12 @@ object SparkEntry {
         |  CAST(MIN(med) AS BIGINT) AS med_len, CAST(MIN(mad) AS BIGINT) AS mad_len,
         |  CAST(SUM(CASE WHEN adev >= 3 * GREATEST(mad, 1) THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers,
         |  CAST(SUM(CASE WHEN adev >= 3 * GREATEST(mad, 1) THEN 1 ELSE 0 END) * 10000 // COUNT(*) AS BIGINT) AS outlier_bp
-        |FROM m2 GROUP BY source ORDER BY source""".stripMargin,
+        |FROM m2 GROUP BY source ORDER BY source""".stripMargin),
     // pipeline_mix_weights: temperature-0.5 allocation over the gated
     // supply, BILLED in iterated-ledger tokenizer tokens (alpha words
     // via tokw, non-alpha 1 each); FLOOR(SQRT(x)) is engine-exact
     // (correctly-rounded IEEE sqrt, x < 2^53), everything else integer
-    "pipeline_mix_weights" ->
+    Op("pipeline_mix_weights", TextOps.mixWeights,
       (BpeChainCte + s""",
          |tw AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
          |q AS (SELECT doc_id,
@@ -2590,11 +2025,11 @@ object SparkEntry {
          |  (tot_tokens // 2) * weight // tot_weight AS alloc_tokens FROM t)
          |SELECT source, avail_tokens, weight, CAST(alloc_tokens AS BIGINT) AS alloc_tokens,
          |  CAST(alloc_tokens * 10000 // avail_tokens AS BIGINT) AS epochs_bp
-         |FROM al ORDER BY source""".stripMargin),
+         |FROM al ORDER BY source""".stripMargin)),
     // embed_matryoshka_eval: recall@5 of first-16-dim cosine vs the
     // full-dimension exact top-5; the sliced fold matches
     // Ann.cosineSim on 16 elements bit-for-bit (same left fold)
-    "embed_matryoshka_eval" ->
+    Op("embed_matryoshka_eval", Ann.matryoshkaEval(_, _),
       (s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
          |q AS (SELECT vec_id AS query_id, emb AS qe, emb[1:16] AS qt FROM e WHERE vec_id >= 8 AND vec_id < 18),
          |x AS (SELECT query_id, vec_id, ${duckCos("qe", "emb")} AS c
@@ -2610,11 +2045,11 @@ object SparkEntry {
          |  CAST(SUM(CASE WHEN tr.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hit,
          |  CAST(SUM(CASE WHEN tr.vec_id IS NOT NULL THEN 1 ELSE 0 END) * 10000 // COUNT(*) AS BIGINT) AS recall_bp
          |FROM ex LEFT JOIN tr ON tr.query_id = ex.query_id AND tr.vec_id = ex.vec_id
-         |GROUP BY ex.query_id ORDER BY ex.query_id""".stripMargin),
+         |GROUP BY ex.query_id ORDER BY ex.query_id""".stripMargin)),
     // q_skyline: the oracle is the DEFINITION (quadratic NOT EXISTS
     // dominance); the Spark side is the two-phase linear window
     // decomposition — the hash match proves the decomposition exact
-    "q_skyline" ->
+    Op("q_skyline", Analytics.qSkyline,
       """WITH o AS (SELECT o_orderkey,
         |  CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS price_c,
         |  epoch_us(CAST(o_orderdate AS TIMESTAMP)) AS date_us FROM orders)
@@ -2622,10 +2057,10 @@ object SparkEntry {
         |WHERE NOT EXISTS (SELECT 1 FROM o a WHERE
         |  (a.price_c < b.price_c AND a.date_us >= b.date_us) OR
         |  (a.price_c <= b.price_c AND a.date_us > b.date_us))
-        |ORDER BY price_c, o_orderkey""".stripMargin,
+        |ORDER BY price_c, o_orderkey""".stripMargin),
     // ingest_snapshot_diff: v2 reconstructed from the same snapshot by
     // the identical deterministic rule, then full-outer diff on PK
-    "ingest_snapshot_diff" ->
+    Op("ingest_snapshot_diff", SourceQueries.snapshotDiff,
       """WITH base AS (SELECT o_orderkey AS k, o_custkey, o_orderstatus,
         |  CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS price_c FROM orders),
         |v2 AS (SELECT k, o_custkey, o_orderstatus,
@@ -2646,10 +2081,10 @@ object SparkEntry {
         |       WHEN k2 IS NULL THEN 'removed'
         |       WHEN ck1 <> ck2 OR st1 <> st2 OR p1 <> p2 THEN 'changed'
         |       ELSE 'same' END) <> 'same'
-        |ORDER BY order_key""".stripMargin,
+        |ORDER BY order_key""".stripMargin),
     // embed_dim_stats: per-dimension micro-unit stats; the floor-mean
     // offset keeps DIV (trunc) and // (floor) in agreement
-    "embed_dim_stats" ->
+    Op("embed_dim_stats", Ann.dimStats,
       """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
         |d AS (SELECT CAST(i AS BIGINT) AS dim,
         |    CAST(CAST(emb[i] AS DECIMAL(9,6)) * 1000000 AS BIGINT) AS vu
@@ -2660,19 +2095,19 @@ object SparkEntry {
         |SELECT dim, n_vecs, sum_u,
         |  (sum_u + n_vecs * 1000000) // n_vecs - 1000000 AS mean_u,
         |  min_u, max_u, max_u - min_u AS range_u
-        |FROM a ORDER BY dim""".stripMargin,
+        |FROM a ORDER BY dim""".stripMargin),
     // sample_group_topk: fixed-k hash-priority sample per source over
     // the shared portable 24-bit key hash
-    "sample_group_topk" ->
+    Op("sample_group_topk", TextOps.sampleGroupTopk(_, _),
       (s"""WITH h AS (SELECT doc_id, source, ${TextOps.Hash24Sql} AS h FROM documents),
          |r AS (SELECT *, CAST(row_number() OVER
          |  (PARTITION BY source ORDER BY h, doc_id) AS BIGINT) AS rk FROM h)
          |SELECT doc_id, source, h, rk FROM r WHERE rk <= 5
-         |ORDER BY source, rk""".stripMargin),
+         |ORDER BY source, rk""".stripMargin)),
     // text_bm25: integer Okapi BM25 — k1=1.2, b=0.75 cleared to the
     // rational form 22·A·tf / (10·A·tf + 3·A + 9·dl_m); identical
     // formula text on both engines, everything non-negative
-    "text_bm25" ->
+    Op("text_bm25", TextOps.bm25(_, _),
       """WITH dl AS (SELECT doc_id, CAST(len(string_split(text, ' ')) AS BIGINT) AS dl FROM documents),
         |s AS (SELECT CAST(SUM(dl) * 1000 // COUNT(*) AS BIGINT) AS a FROM dl),
         |tf AS (SELECT doc_id, word, CAST(COUNT(*) AS BIGINT) AS tf FROM
@@ -2683,10 +2118,10 @@ object SparkEntry {
         |  (1000000 // df_docs) * 22 * a * tf // (10 * a * tf + 3 * a + 9 * dl.dl * 1000) AS score_t
         |  FROM tf JOIN dfx USING (word) JOIN dl ON dl.doc_id = tf.doc_id CROSS JOIN s)
         |SELECT doc_id, COUNT(*) AS n_terms, CAST(SUM(score_t) AS BIGINT) AS score_u
-        |FROM sc GROUP BY doc_id ORDER BY score_u DESC, doc_id LIMIT 20""".stripMargin,
+        |FROM sc GROUP BY doc_id ORDER BY score_u DESC, doc_id LIMIT 20""".stripMargin),
     // dedup_lsh_tuning: the three banding configs replayed over the
     // same signature CTE; per config candidates, verified, precision
-    "dedup_lsh_tuning" ->
+    Op("dedup_lsh_tuning", Dedup.lshTuning,
       (s"""WITH $GramsCte,
          |$SigCte,
          |b1 AS (${(0 until 8).map(b => s"SELECT doc_id, $b AS band_id, md5(concat(h$b)) AS bk FROM sig").mkString(" UNION ALL ")}),
@@ -2708,9 +2143,9 @@ object SparkEntry {
          |    CASE WHEN nc = 0 THEN 0 ELSE nv * 10000 // nc END FROM v2
          |  UNION ALL SELECT CAST(4 AS BIGINT), CAST(2 AS BIGINT), nc, nv,
          |    CASE WHEN nc = 0 THEN 0 ELSE nv * 10000 // nc END FROM v4)
-         |ORDER BY rows_per_band""".stripMargin),
+         |ORDER BY rows_per_band""".stripMargin)),
     // dedup_source_dup_rate: components CTE joined back to sources
-    "dedup_source_dup_rate" ->
+    Op("dedup_source_dup_rate", Dedup.sourceDupRate,
       (s"""WITH RECURSIVE $GramsCte,
          |$SigCte,
          |bands AS (
@@ -2736,10 +2171,10 @@ object SparkEntry {
          |  CAST(SUM(CASE WHEN lab.n_members > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_dup,
          |  CAST(SUM(CASE WHEN lab.n_members > 1 THEN 1 ELSE 0 END) * 10000 // COUNT(*) AS BIGINT) AS dup_bp
          |FROM documents d JOIN lab ON lab.doc_id = d.doc_id
-         |GROUP BY d.source ORDER BY d.source""".stripMargin),
+         |GROUP BY d.source ORDER BY d.source""".stripMargin)),
     // mm_payload_dedup: content-addressable-storage audit; md5 over
     // the text bytes equals md5 over the cast binary payload
-    "mm_payload_dedup" ->
+    Op("mm_payload_dedup", Multimodal.payloadDedup,
       """WITH g AS (SELECT md5(text) AS h, COUNT(*) AS n_copies,
         |    CAST(MAX(octet_length(CAST(text AS BLOB))) AS BIGINT) AS bytes_each
         |  FROM documents GROUP BY md5(text))
@@ -2748,11 +2183,11 @@ object SparkEntry {
         |  CAST(SUM(CASE WHEN n_copies > 1 THEN 1 ELSE 0 END) AS BIGINT) AS dup_groups,
         |  CAST(SUM(n_copies - 1) AS BIGINT) AS dup_copies,
         |  CAST(SUM((n_copies - 1) * bytes_each) AS BIGINT) AS bytes_reclaimable
-        |FROM g""".stripMargin,
+        |FROM g""".stripMargin),
     // ann_probe_curve: probe-1 and probe-2 recall vs exact ground
     // truth, summarized — same CTE bodies as the ivf/probe2/recall
     // oracles, two summary rows
-    "ann_probe_curve" ->
+    Op("ann_probe_curve", Ann.probeCurve,
       (s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
          |cent AS (SELECT vec_id AS cent_id, emb AS ce FROM e WHERE vec_id < 8),
          |a AS (SELECT e.vec_id, e.emb, cent_id, ${duckCos("emb", "ce")} AS c FROM e CROSS JOIN cent),
@@ -2789,11 +2224,11 @@ object SparkEntry {
          |  UNION ALL SELECT CAST(2 AS BIGINT), COUNT(*),
          |    CAST(SUM(recall_bp) // COUNT(*) AS BIGINT),
          |    CAST(MIN(recall_bp) AS BIGINT) FROM rec2)
-         |ORDER BY probe""".stripMargin),
+         |ORDER BY probe""".stripMargin)),
     // ann_reassign_drift: assignment under the seed (round-0) codebook
     // vs the 3-round-trained one, both by the kmeans pipeline's exact
     // integer L2 — per trained cell, migration and churn
-    "ann_reassign_drift" ->
+    Op("ann_reassign_drift", Ann.reassignDrift,
       (s"""WITH ${duckKmeansCte(3)},
          |d4 AS (SELECT qp.vec_id, cp.cent_id,
          |  CAST(SUM((qp.v - cp.cv) * (qp.v - cp.cv)) AS BIGINT) AS dist
@@ -2812,10 +2247,10 @@ object SparkEntry {
          |  CASE WHEN COALESCE(n_new, 0) = 0 THEN 0
          |       ELSE (n_new - n_stayed) * 10000 // n_new END AS churn_bp
          |FROM inc FULL OUTER JOIN outg USING (cell)
-         |ORDER BY cell""".stripMargin),
+         |ORDER BY cell""".stripMargin)),
     // q_funnel_conversion: the sequence-match CTE regrouped into the
     // conversion-latency summary (exact lower-median, min, max)
-    "q_funnel_conversion" ->
+    Op("q_funnel_conversion", Analytics.qFunnelConversion,
       """WITH e AS (SELECT user_id, event_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us, event_type
         |  FROM events WHERE user_id IS NOT NULL AND event_type IN ('signup', 'click', 'purchase')),
         |s1 AS (SELECT *, CASE WHEN event_type = 'signup' THEN us END AS s_q FROM e),
@@ -2832,11 +2267,11 @@ object SparkEntry {
         |SELECT COUNT(*) AS n_converted,
         |  MIN(CASE WHEN rn = (n + 1) // 2 THEN conv_us END) AS med_conv_us,
         |  MIN(conv_us) AS min_conv_us, MAX(conv_us) AS max_conv_us
-        |FROM r""".stripMargin,
+        |FROM r""".stripMargin),
     // stream_funnel_match_replay: the per-user funnel STATE MACHINE
     // in batch execution; the oracle is the WINDOW form's stage
     // table, so the hash proves state machine ≡ chained windows
-    "stream_funnel_match_replay" ->
+    Op("stream_funnel_match_replay", Streams.funnelStagesReplay,
       """WITH e AS (SELECT user_id, event_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us, event_type
         |  FROM events WHERE user_id IS NOT NULL AND event_type IN ('signup', 'click', 'purchase')),
         |s1 AS (SELECT *, CASE WHEN event_type = 'signup' THEN us END AS s_q FROM e),
@@ -2851,12 +2286,12 @@ object SparkEntry {
         |  SELECT user_id, CAST(1 AS BIGINT) AS stage, s AS at_us FROM u WHERE s IS NOT NULL
         |  UNION ALL SELECT user_id, CAST(2 AS BIGINT), c FROM u WHERE c IS NOT NULL
         |  UNION ALL SELECT user_id, CAST(3 AS BIGINT), p FROM u WHERE p IS NOT NULL)
-        |ORDER BY user_id, stage""".stripMargin,
+        |ORDER BY user_id, stage""".stripMargin),
     // pipeline_mm_curation: dedup key (modality, md5(text)) ≡ Spark's
     // md5(magic || text) — the three magics differ in byte 1 and are
     // a pure function of doc_id % 3, so the groups coincide; payload
     // bytes = text bytes + magic length (3 for jpeg, 4 for png/riff)
-    "pipeline_mm_curation" ->
+    Op("pipeline_mm_curation", Multimodal.mmCuration,
       (s"""WITH p AS (SELECT doc_id, doc_id % 3 AS m3, md5(text) AS h,
          |  CAST(octet_length(CAST(text AS BLOB)) +
          |    CASE WHEN doc_id % 3 = 0 THEN 3 ELSE 4 END AS BIGINT) AS n_bytes
@@ -2879,10 +2314,10 @@ object SparkEntry {
          |  FROM canon JOIN ok USING (doc_id) JOIN modal USING (m3) GROUP BY modality)
          |SELECT modality, n_total, n_canonical, n_curated, curated_bytes
          |FROM tot JOIN can USING (modality) JOIN cur USING (modality)
-         |ORDER BY modality""".stripMargin),
+         |ORDER BY modality""".stripMargin)),
     // dedup_corpus_matrix: exact pairwise vocabulary Jaccard between
     // sources over the distinct (source, word) relation
-    "dedup_corpus_matrix" ->
+    Op("dedup_corpus_matrix", Dedup.corpusMatrix,
       """WITH ws AS (SELECT DISTINCT source, word FROM
         |  (SELECT source, unnest(string_split(text, ' ')) AS word FROM documents)),
         |sz AS (SELECT source, COUNT(*) AS n FROM ws GROUP BY source),
@@ -2892,11 +2327,11 @@ object SparkEntry {
         |SELECT src_a, src_b, sa.n AS n_a, sb.n AS n_b, n_common,
         |  CAST(n_common * 10000 // (sa.n + sb.n - n_common) AS BIGINT) AS jaccard_bp
         |FROM it JOIN sz sa ON sa.source = src_a JOIN sz sb ON sb.source = src_b
-        |ORDER BY src_a, src_b""".stripMargin,
+        |ORDER BY src_a, src_b""".stripMargin),
     // dedup_lsh_recall: the two candidate strategies cross-audited —
     // LSH band pairs vs length-bucket blocked pairs, overlap, and
     // each one's recall against the other
-    "dedup_lsh_recall" ->
+    Op("dedup_lsh_recall", Dedup.lshRecall,
       (s"""WITH $GramsCte,
          |$SigCte,
          |bands AS (
@@ -2920,10 +2355,10 @@ object SparkEntry {
          |  CAST(n_common AS BIGINT) AS n_common,
          |  CAST(CASE WHEN n_blocked = 0 THEN 0 ELSE n_common * 10000 // n_blocked END AS BIGINT) AS lsh_recall_bp,
          |  CAST(CASE WHEN n_lsh = 0 THEN 0 ELSE n_common * 10000 // n_lsh END AS BIGINT) AS block_recall_bp
-         |FROM cnts""".stripMargin),
+         |FROM cnts""".stripMargin)),
     // text_cooccurrence: integer lift collocations over the top-50
     // df words; incidence is DISTINCT (doc, word), pair key unique
-    "text_cooccurrence" ->
+    Op("text_cooccurrence", TextOps.cooccurrence(_, _),
       """WITH inc AS (SELECT DISTINCT doc_id, word FROM
         |  (SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM documents)),
         |dfx AS (SELECT word, COUNT(*) AS df FROM inc GROUP BY word),
@@ -2935,10 +2370,10 @@ object SparkEntry {
         |SELECT w_a, w_b, CAST(n_ab AS BIGINT) AS n_ab, ta.df AS n_a, tb.df AS n_b,
         |  CAST(n_ab * nd * 1000000 // (ta.df * tb.df) AS BIGINT) AS lift_u
         |FROM pr JOIN top ta ON ta.word = w_a JOIN top tb ON tb.word = w_b CROSS JOIN n
-        |ORDER BY lift_u DESC, w_a, w_b LIMIT 100""".stripMargin,
+        |ORDER BY lift_u DESC, w_a, w_b LIMIT 100""".stripMargin),
     // dlp_quantile_bucketing: exact integer lower-quartile bounds
     // rank-selected under a (value, key) total order
-    "dlp_quantile_bucketing" ->
+    Op("dlp_quantile_bucketing", DlpQueries.dlpQuantileBucketing,
       """WITH c AS (SELECT c_custkey,
         |  CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT) AS acctbal_c FROM customer),
         |r AS (SELECT *, row_number() OVER (ORDER BY acctbal_c, c_custkey) AS rn,
@@ -2953,10 +2388,10 @@ object SparkEntry {
         |       WHEN acctbal_c <= q3_c THEN 'q3'
         |       ELSE 'q4' END AS bucket,
         |  q1_c, q2_c, q3_c
-        |FROM c CROSS JOIN qs ORDER BY c_custkey""".stripMargin,
+        |FROM c CROSS JOIN qs ORDER BY c_custkey""".stripMargin),
     // stream_reorder_depth: |arrival rank − event-time rank| per
     // event; rank-at-position median is tie-insensitive
-    "stream_reorder_depth" ->
+    Op("stream_reorder_depth", Streams.reorderDepthBatch,
       """WITH e AS (SELECT event_id, user_id, event_type, epoch_us(CAST(ts AS TIMESTAMP)) AS us
         |  FROM events WHERE user_id IS NOT NULL),
         |d AS (SELECT event_type,
@@ -2970,10 +2405,10 @@ object SparkEntry {
         |  CAST(SUM(CASE WHEN depth = 0 THEN 1 ELSE 0 END) * 10000 // COUNT(*) AS BIGINT) AS inorder_bp,
         |  CAST(MIN(CASE WHEN rn = (n + 1) // 2 THEN depth END) AS BIGINT) AS med_depth,
         |  CAST(MAX(depth) AS BIGINT) AS max_depth
-        |FROM r GROUP BY event_type ORDER BY event_type""".stripMargin,
+        |FROM r GROUP BY event_type ORDER BY event_type""".stripMargin),
     // embed_pair_hist: pairwise-cosine histogram over the first-64
     // sample; identical FLOOR bucket math on bit-identical cosines
-    "embed_pair_hist" ->
+    Op("embed_pair_hist", Ann.pairHist,
       (s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings WHERE vec_id < 64),
          |pp AS (SELECT a.emb AS ea, b.emb AS eb FROM e a JOIN e b ON a.vec_id < b.vec_id),
          |p AS (SELECT ${duckCos("ea", "eb")} AS c FROM pp),
@@ -2981,10 +2416,10 @@ object SparkEntry {
          |g AS (SELECT bucket, COUNT(*) AS n_pairs FROM bk GROUP BY bucket)
          |SELECT bucket, n_pairs,
          |  CAST(n_pairs * 10000 // (SELECT COUNT(*) FROM p) AS BIGINT) AS share_bp
-         |FROM g ORDER BY bucket""".stripMargin),
+         |FROM g ORDER BY bucket""".stripMargin)),
     // dedup_component_stats: the components CTE regrouped into the
     // duplication-mass curve; share denominator = the full corpus
-    "dedup_component_stats" ->
+    Op("dedup_component_stats", Dedup.componentStats,
       (s"""WITH RECURSIVE $GramsCte,
          |$SigCte,
          |bands AS (
@@ -3008,11 +2443,11 @@ object SparkEntry {
          |SELECT n_members AS csize, CAST(COUNT(*) AS BIGINT) AS n_components,
          |  CAST(SUM(n_members) AS BIGINT) AS n_docs,
          |  CAST(SUM(n_members) * 10000 // (SELECT COUNT(*) FROM documents) AS BIGINT) AS doc_share_bp
-         |FROM sizes GROUP BY n_members ORDER BY csize""".stripMargin),
+         |FROM sizes GROUP BY n_members ORDER BY csize""".stripMargin)),
     // round 11 widening. dedup_bloom_prefilter: the oracle is the
     // PLAIN content-hash join — the bloom gate must change nothing
     // (no false negatives), so the hash match proves the sketch exact
-    "dedup_bloom_prefilter" ->
+    Op("dedup_bloom_prefilter", Dedup.bloomPrefilter,
       """WITH h AS (SELECT doc_id, md5(text) AS h FROM documents),
         |c AS (SELECT h AS hc, MIN(doc_id) AS dup_of, CAST(COUNT(*) AS BIGINT) AS n_corpus
         |  FROM h WHERE doc_id % 2 = 0 GROUP BY h)
@@ -3020,8 +2455,8 @@ object SparkEntry {
         |  CAST(CASE WHEN dup_of IS NULL THEN 0 ELSE 1 END AS BIGINT) AS is_dup,
         |  COALESCE(dup_of, -1) AS dup_of, COALESCE(n_corpus, 0) AS n_corpus
         |FROM h b LEFT JOIN c ON b.h = c.hc WHERE b.doc_id % 2 = 1
-        |ORDER BY b.doc_id""".stripMargin,
-    "dedup_ngram13_contain" ->
+        |ORDER BY b.doc_id""".stripMargin),
+    Op("dedup_ngram13_contain", Dedup.ngram13Contamination,
       (s"""WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents
          |  WHERE len(string_split(text, ' ')) >= 13),
          |g AS (SELECT DISTINCT doc_id, md5(array_to_string(ws[i+1 : i+13], ' ')) AS g
@@ -3032,12 +2467,12 @@ object SparkEntry {
          |SELECT g.doc_id, s.split, CAST(COUNT(DISTINCT g.g) AS BIGINT) AS n_shared,
          |  MIN(t.train_doc) AS train_doc
          |FROM g JOIN s USING (doc_id) JOIN t ON g.g = t.g
-         |WHERE s.split <> 'train' GROUP BY g.doc_id, s.split ORDER BY g.doc_id""".stripMargin),
+         |WHERE s.split <> 'train' GROUP BY g.doc_id, s.split ORDER BY g.doc_id""".stripMargin)),
     // ann_int8_recall: the whole int8 pipeline replayed (quantize rule
     // = embed_quantize_int8's oracle verbatim) + exact ground truth,
     // compared at rank 5 — codes are integer-valued doubles, so every
     // dot product is exact and the cosines bit-match cross-engine
-    "ann_int8_recall" ->
+    Op("ann_int8_recall", Ann.int8Recall,
       (s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
          |x AS (SELECT vec_id, list_transform(emb, v -> CAST(FLOOR(v * 1000000) AS BIGINT)) AS xq FROM e),
          |m AS (SELECT vec_id, xq, list_aggregate(list_transform(xq, v -> abs(v)), 'max') AS s FROM x),
@@ -3057,8 +2492,8 @@ object SparkEntry {
          |  CAST(SUM(CASE WHEN qt.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hit,
          |  CAST(SUM(CASE WHEN qt.vec_id IS NOT NULL THEN 1 ELSE 0 END) * 10000 // COUNT(*) AS BIGINT) AS recall_bp
          |FROM et LEFT JOIN qt ON et.query_id = qt.query_id AND et.neighbor_id = qt.vec_id
-         |GROUP BY et.query_id ORDER BY et.query_id""".stripMargin),
-    "embed_threshold_curve" ->
+         |GROUP BY et.query_id ORDER BY et.query_id""".stripMargin)),
+    Op("embed_threshold_curve", Ann.thresholdCurve,
       (s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
          |b AS (SELECT vec_id, emb, ${(1 to 8).map(i =>
              s"(CASE WHEN emb[$i] >= 0 THEN '1' ELSE '0' END)").mkString(" || ")} AS bucket FROM e),
@@ -3068,13 +2503,13 @@ object SparkEntry {
          |  CAST((SELECT COUNT(*) FROM p WHERE cos >= t.cut) AS BIGINT) AS n_pairs
          |FROM (VALUES (2000, 0.2), (3500, 0.35), (5000, 0.5), (7000, 0.7), (9000, 0.9))
          |  t(threshold_bp, cut)
-         |ORDER BY threshold_bp""".stripMargin),
-    "text_zipf_fit" ->
+         |ORDER BY threshold_bp""".stripMargin)),
+    Op("text_zipf_fit", TextOps.zipfFit,
       """WITH c AS (SELECT word, CAST(COUNT(*) AS BIGINT) AS n
         |  FROM (SELECT unnest(string_split(text, ' ')) AS word FROM documents) GROUP BY word),
         |t AS (SELECT word, n, CAST(row_number() OVER (ORDER BY n DESC, word) AS BIGINT) AS rank FROM c)
-        |SELECT rank, word, n AS freq, rank * n AS zipf_c FROM t WHERE rank <= 50 ORDER BY rank""".stripMargin,
-    "dlp_risk_delta" ->
+        |SELECT rank, word, n AS freq, rank * n AS zipf_c FROM t WHERE rank <= 50 ORDER BY rank""".stripMargin),
+    Op("dlp_risk_delta", DlpQueries.dlpRiskDelta,
       """WITH raw AS (SELECT c_mktsegment, c_nationkey,
         |    CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents, COUNT(*) AS n
         |  FROM customer GROUP BY 1, 2, 3),
@@ -3085,8 +2520,8 @@ object SparkEntry {
         |SELECT CAST(k AS BIGINT) AS k,
         |  CAST((SELECT SUM(CASE WHEN n < k THEN n ELSE 0 END) FROM raw) AS BIGINT) AS exposed_raw,
         |  CAST((SELECT SUM(CASE WHEN n < k THEN n ELSE 0 END) FROM gen) AS BIGINT) AS exposed_gen
-        |FROM ks ORDER BY k""".stripMargin,
-    "dlp_token_consistency" ->
+        |FROM ks ORDER BY k""".stripMargin),
+    Op("dlp_token_consistency", DlpQueries.dlpTokenConsistency,
       """WITH tc AS (SELECT c_custkey,
         |    'TOK_' || substr(sha256('fk-key:' || CAST(c_custkey AS VARCHAR)), 1, 32) AS tok
         |  FROM customer),
@@ -3099,8 +2534,8 @@ object SparkEntry {
         |    THEN 1 ELSE 0 END AS BIGINT) AS consistent
         |FROM tc LEFT JOIN ot ON tc.tok = ot.tok
         |LEFT JOIN okk ON tc.c_custkey = okk.o_custkey
-        |ORDER BY tc.tok""".stripMargin,
-    "q_session_overlap" ->
+        |ORDER BY tc.tok""".stripMargin),
+    Op("q_session_overlap", Analytics.qSessionOverlap,
       """WITH iv AS (SELECT user_id,
         |    CAST(floor(epoch(CAST(ts AS TIMESTAMP))) AS BIGINT) AS s,
         |    CAST(floor(epoch(CAST(ts AS TIMESTAMP))) AS BIGINT) + 300 AS e
@@ -3111,8 +2546,8 @@ object SparkEntry {
         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS depth FROM p)
         |SELECT user_id, CAST(MAX(depth) AS BIGINT) AS max_concurrent,
         |  CAST(COUNT(*) // 2 AS BIGINT) AS n_intervals
-        |FROM dep GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "layout_skipping_eval" ->
+        |FROM dep GROUP BY user_id ORDER BY user_id""".stripMargin),
+    Op("layout_skipping_eval", Analytics.layoutSkippingEval,
       """WITH li AS (SELECT epoch_us(CAST(l_shipdate AS TIMESTAMP)) AS sd FROM lineitem),
         |bounds AS (SELECT MIN(sd) AS lo, MAX(sd) AS hi FROM li),
         |z AS (SELECT (sd - lo) * 16 // (hi - lo + 1) AS bucket,
@@ -3127,8 +2562,8 @@ object SparkEntry {
         |SELECT CAST(pred_id AS BIGINT) AS pred_id, CAST(COUNT(*) AS BIGINT) AS n_buckets,
         |  CAST(SUM(CASE WHEN zmax < plo OR zmin >= phi THEN 1 ELSE 0 END) AS BIGINT) AS n_skipped,
         |  CAST(SUM(CASE WHEN zmax < plo OR zmin >= phi THEN 0 ELSE n_rows END) AS BIGINT) AS rows_scanned
-        |FROM z, preds GROUP BY pred_id ORDER BY pred_id""".stripMargin,
-    "load_partition_plan" ->
+        |FROM z, preds GROUP BY pred_id ORDER BY pred_id""".stripMargin),
+    Op("load_partition_plan", SourceQueries.loadPartitionPlan(_, _),
       """WITH p AS (SELECT CAST(year(o_orderdate) * 100 + month(o_orderdate) AS BIGINT) AS part_month,
         |    CAST(COUNT(*) AS BIGINT) AS n_rows,
         |    CAST(SUM(length(o_orderstatus) + length(o_orderpriority)) + COUNT(*) * 24 AS BIGINT) AS bytes
@@ -3136,8 +2571,8 @@ object SparkEntry {
         |f AS (SELECT *, (bytes + 65535) // 65536 AS n_files FROM p)
         |SELECT part_month, n_rows, bytes, CAST(n_files AS BIGINT) AS n_files,
         |  CAST((n_rows + n_files - 1) // n_files AS BIGINT) AS rows_per_file
-        |FROM f ORDER BY part_month""".stripMargin,
-    "stream_heartbeat_gap" ->
+        |FROM f ORDER BY part_month""".stripMargin),
+    Op("stream_heartbeat_gap", Streams.heartbeatGap(_, _),
       """WITH e AS (SELECT user_id, event_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us
         |  FROM events WHERE user_id IS NOT NULL),
         |g AS (SELECT user_id,
@@ -3145,8 +2580,8 @@ object SparkEntry {
         |SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n_events,
         |  CAST(COALESCE(MAX(gap), 0) AS BIGINT) AS max_gap_us,
         |  CAST(SUM(CASE WHEN gap > 1800000000 THEN 1 ELSE 0 END) AS BIGINT) AS n_alarms
-        |FROM g GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "mm_embedding_align" ->
+        |FROM g GROUP BY user_id ORDER BY user_id""".stripMargin),
+    Op("mm_embedding_align", Multimodal.embeddingAlign,
       """WITH d AS (SELECT doc_id, CASE WHEN doc_id % 3 = 0 THEN 'image/jpeg'
         |    WHEN doc_id % 3 = 1 THEN 'image/png' ELSE 'audio/wav' END AS modality FROM documents),
         |j AS (SELECT d.modality, d.doc_id, e.vec_id, e.label
@@ -3164,10 +2599,10 @@ object SparkEntry {
         |  COALESCE(CAST(label AS BIGINT), -1) AS maj_label,
         |  CAST(CASE WHEN n_paired = 0 THEN 0 ELSE nl * 10000 // n_paired END AS BIGINT) AS maj_share_bp
         |FROM cov LEFT JOIN mj ON cov.modality = mj.modality AND mj.rn = 1
-        |ORDER BY cov.modality""".stripMargin,
+        |ORDER BY cov.modality""".stripMargin),
     // round 11 batch 2. ingest_fk_discovery: CTEs generated from the
     // SAME candidate list the operator iterates (one val, no drift)
-    "ingest_fk_discovery" -> {
+    Op("ingest_fk_discovery", SourceQueries.fkDiscovery, {
       val rs = SourceQueries.FkCandidates.zipWithIndex.map {
         case ((name, (ct, cc), (pt, pc)), i) =>
           s"""c$i AS (SELECT DISTINCT CAST($cc AS BIGINT) AS v FROM $ct WHERE $cc IS NOT NULL),
@@ -3185,10 +2620,10 @@ object SparkEntry {
          |  CAST(n_contained * 10000 // n_child_distinct AS BIGINT) AS containment_bp,
          |  CAST(CASE WHEN n_contained = n_child_distinct THEN 1 ELSE 0 END AS BIGINT) AS is_fk
          |FROM u ORDER BY candidate""".stripMargin
-    },
+    }),
     // ingest_load_order: same containment aggregates as fk_discovery
     // tagged with table names, then bounded level propagation unrolled
-    "ingest_load_order" -> {
+    Op("ingest_load_order", SourceQueries.loadOrderPlan, {
       val rs = SourceQueries.FkCandidates.zipWithIndex.map {
         case ((_, (ct, cc), (pt, pc)), i) =>
           s"""c$i AS (SELECT DISTINCT CAST($cc AS BIGINT) AS v FROM $ct WHERE $cc IS NOT NULL),
@@ -3223,8 +2658,8 @@ object SparkEntry {
          |  COALESCE(parents, '') AS parents
          |FROM l$depth l LEFT JOIN pa USING (table_name)
          |ORDER BY level, table_name""".stripMargin
-    },
-    "dlp_surrogate_annotate" ->
+    }),
+    Op("dlp_surrogate_annotate", DlpQueries.dlpSurrogateAnnotate,
       (s"""WITH c AS (SELECT c_custkey, $ContactSql AS contact FROM customer),
          |m AS (SELECT c_custkey, contact,
          |  regexp_extract(contact, '$EmailReSql') AS e,
@@ -3233,23 +2668,23 @@ object SparkEntry {
          |  replace(replace(contact, e,
          |    'EMAIL_ADDRESS(16):' || substr(sha256('sur-key:' || e), 1, 16)), p,
          |    'PHONE_NUMBER(16):' || substr(sha256('sur-key:' || p), 1, 16)) AS surrogated
-         |FROM m ORDER BY c_custkey""".stripMargin),
-    "dlp_shift_consistency" ->
+         |FROM m ORDER BY c_custkey""".stripMargin)),
+    Op("dlp_shift_consistency", DlpQueries.dlpShiftConsistency,
       """WITH d AS (SELECT o_custkey,
         |    date_diff('day', o_orderdate, o_orderdate + INTERVAL (o_custkey % 61 - 30) DAY) AS delta
         |  FROM orders)
         |SELECT o_custkey, CAST(COUNT(*) AS BIGINT) AS n_orders,
         |  CAST(MIN(delta) AS BIGINT) AS shift_days,
         |  CAST(CASE WHEN MIN(delta) = MAX(delta) THEN 1 ELSE 0 END AS BIGINT) AS coherent
-        |FROM d GROUP BY o_custkey ORDER BY o_custkey""".stripMargin,
+        |FROM d GROUP BY o_custkey ORDER BY o_custkey""".stripMargin),
     // load_schema_evolve: presence derived from the version rule alone
     // — independent of the union-by-name machinery under test
-    "load_schema_evolve" ->
+    Op("load_schema_evolve", SourceQueries.loadSchemaEvolve,
       """SELECT o_orderstatus, CAST(COUNT(*) AS BIGINT) AS n_rows,
         |  CAST(SUM(CASE WHEN o_orderkey % 2 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_with_priority,
         |  CAST(SUM(CASE WHEN o_orderkey % 2 = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_with_year
-        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-    "q_running_distinct" ->
+        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin),
+    Op("q_running_distinct", Analytics.qRunningDistinct,
       """WITH e AS (SELECT event_type, user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us
         |  FROM events WHERE user_id IS NOT NULL),
         |f AS (SELECT event_type, user_id, MIN(us) // 86400000000 AS day FROM e GROUP BY 1, 2),
@@ -3258,8 +2693,8 @@ object SparkEntry {
         |SELECT event_type, day, new_users,
         |  CAST(SUM(new_users) OVER (PARTITION BY event_type ORDER BY day
         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_users
-        |FROM d ORDER BY event_type, day""".stripMargin,
-    "embed_norm_outliers" ->
+        |FROM d ORDER BY event_type, day""".stripMargin),
+    Op("embed_norm_outliers", Ann.normOutliers,
       """WITH v AS (SELECT vec_id, CAST(label AS BIGINT) AS label,
         |  list_reduce(list_transform(list_transform(CAST(embedding AS DOUBLE[]),
         |    v -> CAST(FLOOR(v * 1000000) AS BIGINT)), q -> q * q), (acc, x) -> acc + x) AS nsq
@@ -3277,8 +2712,8 @@ object SparkEntry {
         |  CAST(MIN(mad) AS BIGINT) AS mad_nsq,
         |  CAST(SUM(CASE WHEN adev >= 3 * GREATEST(mad, 1) THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers,
         |  CAST(SUM(CASE WHEN adev >= 3 * GREATEST(mad, 1) THEN 1 ELSE 0 END) * 10000 // COUNT(*) AS BIGINT) AS outlier_bp
-        |FROM d2 GROUP BY label ORDER BY label""".stripMargin,
-    "text_lang_confusion" ->
+        |FROM d2 GROUP BY label ORDER BY label""".stripMargin),
+    Op("text_lang_confusion", TextOps.langConfusion,
       (s"""WITH t AS (SELECT doc_id, lang AS labeled_lang, string_split(text, ' ') AS w FROM documents),
          |s AS (SELECT doc_id, labeled_lang,
          |  ${langHits(TextOps.LangMarkers.toMap.apply("en"))} AS s_en,
@@ -3294,27 +2729,27 @@ object SparkEntry {
          |g AS (SELECT labeled_lang, predicted, CAST(COUNT(*) AS BIGINT) AS n FROM p GROUP BY 1, 2)
          |SELECT labeled_lang, predicted, n,
          |  CAST(n * 10000 // SUM(n) OVER (PARTITION BY labeled_lang) AS BIGINT) AS share_bp
-         |FROM g ORDER BY labeled_lang, predicted""".stripMargin),
-    "stream_replay_dedup" ->
+         |FROM g ORDER BY labeled_lang, predicted""".stripMargin)),
+    Op("stream_replay_dedup", Streams.replayDedup,
       """WITH d AS (SELECT event_id, event_type FROM events
         |  UNION ALL SELECT event_id, event_type FROM events WHERE event_id % 10 = 0)
         |SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_delivered,
         |  CAST(COUNT(DISTINCT event_id) AS BIGINT) AS n_unique,
         |  CAST(COUNT(*) - COUNT(DISTINCT event_id) AS BIGINT) AS n_dup_dropped
-        |FROM d GROUP BY event_type ORDER BY event_type""".stripMargin,
+        |FROM d GROUP BY event_type ORDER BY event_type""".stripMargin),
     // q_heavy_hitters: the oracle is the EXACT per-month heavy set
     // (freq > n/(cap+1), cap=2) with in_sketch pinned 1 — the MG
     // theorem says the sketch must contain every such key, so a
     // dropped key loses a row and fails the compare
-    "q_heavy_hitters" ->
+    Op("q_heavy_hitters", Analytics.qHeavyHitters(_, _),
       """WITH o AS (SELECT CAST(year(o_orderdate) * 100 + month(o_orderdate) AS BIGINT) AS part_month,
         |    o_orderstatus FROM orders),
         |c AS (SELECT part_month, o_orderstatus, CAST(COUNT(*) AS BIGINT) AS freq FROM o GROUP BY 1, 2),
         |t AS (SELECT part_month, CAST(COUNT(*) AS BIGINT) AS n_rows FROM o GROUP BY 1)
         |SELECT c.part_month, c.o_orderstatus, freq, n_rows, CAST(1 AS BIGINT) AS in_sketch
         |FROM c JOIN t ON c.part_month = t.part_month WHERE freq * 3 > n_rows
-        |ORDER BY c.part_month, c.o_orderstatus""".stripMargin,
-    "q_topk_rewrite" ->
+        |ORDER BY c.part_month, c.o_orderstatus""".stripMargin),
+    Op("q_topk_rewrite", Analytics.qTopkRewrite,
       """SELECT l_partkey, l_orderkey, l_linenumber,
         |  epoch_us(CAST(l_shipdate AS TIMESTAMP)) AS ship_us,
         |  CAST(rk AS BIGINT) AS rk
@@ -3322,8 +2757,8 @@ object SparkEntry {
         |    row_number() OVER (PARTITION BY l_partkey
         |      ORDER BY epoch_us(CAST(l_shipdate AS TIMESTAMP)) DESC, l_orderkey, l_linenumber) AS rk
         |  FROM lineitem)
-        |WHERE rk <= 2 ORDER BY l_partkey, rk""".stripMargin,
-    "q_gap_fill" ->
+        |WHERE rk <= 2 ORDER BY l_partkey, rk""".stripMargin),
+    Op("q_gap_fill", Analytics.qGapFill,
       """WITH e AS (SELECT user_id,
         |    CAST(date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS BIGINT) AS day,
         |    epoch_us(CAST(ts AS TIMESTAMP)) AS us, event_id,
@@ -3340,8 +2775,8 @@ object SparkEntry {
         |  CAST(LAST_VALUE(close_c IGNORE NULLS) OVER (PARTITION BY user_id ORDER BY day
         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS filled_c,
         |  CAST(CASE WHEN close_c IS NOT NULL THEN 1 ELSE 0 END AS BIGINT) AS is_observed
-        |FROM j ORDER BY user_id, day""".stripMargin,
-    "q_mode_per_group" ->
+        |FROM j ORDER BY user_id, day""".stripMargin),
+    Op("q_mode_per_group", Analytics.qModePerGroup,
       """WITH c AS (SELECT o_orderpriority AS priority,
         |    CAST(year(o_orderdate) * 100 + month(o_orderdate) AS BIGINT) AS ym,
         |    CAST(COUNT(*) AS BIGINT) AS n
@@ -3350,8 +2785,8 @@ object SparkEntry {
         |    row_number() OVER (PARTITION BY priority ORDER BY n DESC, ym ASC) AS rn,
         |    SUM(n) OVER (PARTITION BY priority) AS n_total FROM c)
         |SELECT priority, ym AS mode_ym, n AS mode_n, CAST(n_total AS BIGINT) AS n_total
-        |FROM r WHERE rn = 1 ORDER BY priority""".stripMargin,
-    "q_ancestor_closure" ->
+        |FROM r WHERE rn = 1 ORDER BY priority""".stripMargin),
+    Op("q_ancestor_closure", Analytics.qAncestorClosure,
       """WITH RECURSIVE a AS (
         |  SELECT CAST(c_custkey AS BIGINT) AS node, CAST(c_custkey // 2 AS BIGINT) AS anc,
         |    CAST(1 AS BIGINT) AS d
@@ -3359,8 +2794,8 @@ object SparkEntry {
         |  UNION ALL
         |  SELECT node, anc // 2, d + 1 FROM a WHERE anc >= 2)
         |SELECT anc, CAST(COUNT(*) AS BIGINT) AS n_desc, CAST(MAX(d) AS BIGINT) AS max_depth
-        |FROM a GROUP BY anc ORDER BY anc""".stripMargin,
-    "q_attribution" ->
+        |FROM a GROUP BY anc ORDER BY anc""".stripMargin),
+    Op("q_attribution", Analytics.qAttribution,
       """WITH e AS (SELECT user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us, event_id, event_type,
         |    CAST(json_extract_string(props, '$.k') AS BIGINT) AS k,
         |    CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS v_c
@@ -3371,8 +2806,8 @@ object SparkEntry {
         |  FROM e)
         |SELECT CAST(COALESCE(lck % 4, -1) AS BIGINT) AS channel,
         |  CAST(COUNT(*) AS BIGINT) AS n_purchases, CAST(SUM(v_c) AS BIGINT) AS revenue_c
-        |FROM a WHERE event_type = 'purchase' GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q_decayed_sum" ->
+        |FROM a WHERE event_type = 'purchase' GROUP BY 1 ORDER BY 1""".stripMargin),
+    Op("q_decayed_sum", Analytics.qDecayedSum,
       """WITH e AS (SELECT user_id,
         |    CAST(date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS BIGINT) AS day,
         |    CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS v_c
@@ -3380,8 +2815,8 @@ object SparkEntry {
         |m AS (SELECT MIN(day) AS mind FROM e)
         |SELECT user_id, CAST(SUM(v_c << (day - mind)) AS BIGINT) AS score_sh,
         |  CAST(COUNT(*) AS BIGINT) AS n_events
-        |FROM e, m GROUP BY user_id ORDER BY score_sh DESC, user_id""".stripMargin,
-    "ingest_orphan_audit" ->
+        |FROM e, m GROUP BY user_id ORDER BY score_sh DESC, user_id""".stripMargin),
+    Op("ingest_orphan_audit", SourceQueries.ingestOrphanAudit,
       """WITH r1 AS (SELECT 'lineitem.l_orderkey->orders' AS relation,
         |    CAST(COUNT(*) AS BIGINT) AS n_child,
         |    CAST(SUM(CASE WHEN o.o_orderkey IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_orphan
@@ -3404,8 +2839,8 @@ object SparkEntry {
         |  FROM events e LEFT JOIN customer c ON e.user_id = c.c_custkey)
         |SELECT * FROM r1 UNION ALL SELECT * FROM r2 UNION ALL SELECT * FROM r3
         |UNION ALL SELECT * FROM r4 UNION ALL SELECT * FROM r5
-        |ORDER BY relation""".stripMargin,
-    "dlp_suppression_curve" ->
+        |ORDER BY relation""".stripMargin),
+    Op("dlp_suppression_curve", DlpQueries.dlpSuppressionCurve,
       """WITH sizes AS (SELECT c_nationkey, c_mktsegment, CAST(COUNT(*) AS BIGINT) AS g
         |  FROM customer GROUP BY 1, 2),
         |tot AS (SELECT CAST(SUM(g) AS BIGINT) AS n_total FROM sizes),
@@ -3414,10 +2849,10 @@ object SparkEntry {
         |  CAST(COALESCE((SELECT SUM(g) FROM sizes WHERE g < ks.k), 0) AS BIGINT) AS n_suppressed,
         |  CAST(COALESCE((SELECT SUM(g) FROM sizes WHERE g < ks.k), 0) * 10000
         |    // (SELECT n_total FROM tot) AS BIGINT) AS suppressed_bp
-        |FROM ks ORDER BY k""".stripMargin,
+        |FROM ks ORDER BY k""".stripMargin),
     // pipeline_pack_sequences: pack budgets billed in iterated-ledger
     // tokenizer tokens (alpha words via tokw, non-alpha 1 each)
-    "pipeline_pack_sequences" ->
+    Op("pipeline_pack_sequences", TextOps.packSequences,
       (BpeChainCte + """,
         |dw AS (SELECT source, doc_id, unnest(string_split(text, ' ')) AS word FROM documents),
         |d AS (SELECT source, doc_id, CAST(SUM(COALESCE(n_tok, 1)) AS BIGINT) AS tok
@@ -3430,8 +2865,8 @@ object SparkEntry {
         |  CAST(COUNT(*) AS BIGINT) AS n_docs, CAST(SUM(tok) AS BIGINT) AS n_tokens,
         |  CAST(MIN(doc_id) AS BIGINT) AS first_doc,
         |  CAST(LEAST(SUM(tok), 512) * 10000 // 512 AS BIGINT) AS fill_bp
-        |FROM p GROUP BY source, prefix // 512 ORDER BY source, pack_id""".stripMargin),
-    "dedup_source_novelty" ->
+        |FROM p GROUP BY source, prefix // 512 ORDER BY source, pack_id""".stripMargin)),
+    Op("dedup_source_novelty", Dedup.sourceNovelty,
       (s"""WITH $GramsCte,
          |x AS (SELECT doc_id, UNNEST(grams) AS gram FROM g),
          |f AS (SELECT gram, MIN(doc_id) AS first_doc FROM x GROUP BY 1),
@@ -3443,8 +2878,8 @@ object SparkEntry {
          |  FROM j JOIN documents d USING (doc_id) GROUP BY 1)
          |SELECT source, n_grams, n_novel,
          |  CAST(n_novel * 10000 // n_grams AS BIGINT) AS novelty_bp
-         |FROM s ORDER BY source""".stripMargin),
-    "q_changepoint" ->
+         |FROM s ORDER BY source""".stripMargin)),
+    Op("q_changepoint", Analytics.qChangepoint,
       """WITH daily AS (SELECT event_type,
         |    CAST(date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS BIGINT) AS day,
         |    CAST(SUM(CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT) AS r
@@ -3464,8 +2899,8 @@ object SparkEntry {
         |SELECT event_type, CAST(day AS BIGINT) AS cp_day,
         |  CAST(abs(cusum_sc) AS BIGINT) AS max_abs_cusum_sc,
         |  CAST(n_days AS BIGINT) AS n_days
-        |FROM r WHERE pick = 1 ORDER BY event_type""".stripMargin,
-    "mm_bytes_profile" ->
+        |FROM r WHERE pick = 1 ORDER BY event_type""".stripMargin),
+    Op("mm_bytes_profile", Multimodal.bytesProfile,
       """WITH b AS (SELECT doc_id, hex(CAST(text AS BLOB)) AS h,
         |    CAST(octet_length(CAST(text AS BLOB)) AS BIGINT) AS n_bytes
         |  FROM documents),
@@ -3480,8 +2915,8 @@ object SparkEntry {
         |  GROUP BY doc_id)
         |SELECT b.doc_id, b.n_bytes, m.n_distinct_bytes,
         |  CAST(m.top_cnt * 10000 // b.n_bytes AS BIGINT) AS top_byte_bp
-        |FROM b JOIN m USING (doc_id) ORDER BY doc_id""".stripMargin,
-    "embed_batch_drift" ->
+        |FROM b JOIN m USING (doc_id) ORDER BY doc_id""".stripMargin),
+    Op("embed_batch_drift", Ann.batchDrift,
       """WITH e AS (SELECT vec_id % 2 AS batch, CAST(label AS BIGINT) AS label,
         |    CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
         |d AS (SELECT label, batch, CAST(i AS BIGINT) AS dim,
@@ -3498,8 +2933,8 @@ object SparkEntry {
         |  FROM c GROUP BY 1, 2)
         |SELECT label, CAST(MAX(n0) AS BIGINT) AS n_even, CAST(MAX(n1) AS BIGINT) AS n_odd,
         |  CAST(SUM((m0 - m1) * (m0 - m1)) AS BIGINT) AS drift_d2
-        |FROM p GROUP BY label ORDER BY label""".stripMargin,
-    "stream_static_enrich" ->
+        |FROM p GROUP BY label ORDER BY label""".stripMargin),
+    Op("stream_static_enrich", Streams.staticEnrichBatch,
       """WITH p AS (SELECT user_id,
         |    CAST(date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS BIGINT) AS day,
         |    CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS v_c
@@ -3507,8 +2942,8 @@ object SparkEntry {
         |SELECT c.c_nationkey, p.day, CAST(COUNT(*) AS BIGINT) AS n_purchases,
         |  CAST(SUM(v_c) AS BIGINT) AS revenue_c
         |FROM p JOIN customer c ON p.user_id = c.c_custkey
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "ann_filtered_topk" ->
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+    Op("ann_filtered_topk", Ann.filteredTopk,
       (s"""WITH e AS (SELECT vec_id, CAST(label AS BIGINT) AS label,
          |    CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
          |cent AS (SELECT vec_id AS cent_id, emb AS ce FROM e WHERE vec_id < 8),
@@ -3520,8 +2955,8 @@ object SparkEntry {
          |  FROM q JOIN cells c2 USING (cell)
          |  WHERE c2.vec_id <> query_id AND c2.label = q.ql),
          |r AS (SELECT query_id, vec_id, CAST(row_number() OVER (PARTITION BY query_id ORDER BY c DESC, vec_id) AS BIGINT) AS rank FROM s)
-         |SELECT query_id, vec_id AS neighbor_id, rank FROM r WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
-    "q_yoy_growth" ->
+         |SELECT query_id, vec_id AS neighbor_id, rank FROM r WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin)),
+    Op("q_yoy_growth", Analytics.qYoyGrowth,
       """WITH m AS (SELECT CAST(year(o_orderdate) AS BIGINT) AS y,
         |    CAST(month(o_orderdate) AS BIGINT) AS m,
         |    CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT) AS rev_c
@@ -3534,8 +2969,8 @@ object SparkEntry {
         |  CASE WHEN py = y - 1 THEN pr END AS prev_rev_c,
         |  CAST(CASE WHEN py = y - 1 THEN
         |    ((rev_c - pr) * 10000 + pr * 1000000) // pr - 1000000 END AS BIGINT) AS growth_bp
-        |FROM l ORDER BY y, m""".stripMargin,
-    "q_retention_matrix" ->
+        |FROM l ORDER BY y, m""".stripMargin),
+    Op("q_retention_matrix", Analytics.qRetentionMatrix,
       """WITH uw AS (SELECT DISTINCT user_id,
         |    epoch_us(CAST(ts AS TIMESTAMP)) // 604800000000 AS week FROM events),
         |c AS (SELECT user_id, MIN(week) AS cohort_week FROM uw GROUP BY 1),
@@ -3546,8 +2981,8 @@ object SparkEntry {
         |SELECT CAST(a.cohort_week AS BIGINT) AS cohort_week,
         |  CAST(week_no AS BIGINT) AS week_no, n_active, n_cohort,
         |  CAST(n_active * 10000 // n_cohort AS BIGINT) AS retained_bp
-        |FROM a JOIN s USING (cohort_week) ORDER BY cohort_week, week_no""".stripMargin,
-    "mm_chunk_dedup" ->
+        |FROM a JOIN s USING (cohort_week) ORDER BY cohort_week, week_no""".stripMargin),
+    Op("mm_chunk_dedup", Multimodal.chunkDedup,
       """WITH d AS (SELECT doc_id, source, text, len(text) AS L FROM documents),
         |anch AS (SELECT source, text, L,
         |    list_sort(list_distinct(list_prepend(CAST(1 AS BIGINT),
@@ -3568,8 +3003,8 @@ object SparkEntry {
         |  CAST(COUNT(*) AS BIGINT) AS n_distinct_chunks,
         |  CAST(SUM(len) AS BIGINT) AS distinct_bytes,
         |  CAST((SUM(n_copies * len) - SUM(len)) * 10000 // SUM(n_copies * len) AS BIGINT) AS reclaim_bp
-        |FROM p GROUP BY source ORDER BY source""".stripMargin,
-    "dlp_hotword_boost" ->
+        |FROM p GROUP BY source ORDER BY source""".stripMargin),
+    Op("dlp_hotword_boost", DlpQueries.dlpHotwordBoost,
       (s"""WITH c AS (SELECT c_custkey, $ContactSql AS contact FROM customer),
          |t AS (SELECT c_custkey,
          |    CASE WHEN c_custkey % 3 = 0 THEN replace(contact, ' call ', ' ref ')
@@ -3581,8 +3016,8 @@ object SparkEntry {
          |  'POSSIBLE' AS base_likelihood,
          |  CASE WHEN strpos(substring(text, CAST(GREATEST(pos - 10, 1) AS INT), 10), 'call') > 0
          |    THEN 'VERY_LIKELY' ELSE 'POSSIBLE' END AS likelihood
-         |FROM p WHERE pos > 0 ORDER BY c_custkey""".stripMargin),
-    "ingest_split_balance" ->
+         |FROM p WHERE pos > 0 ORDER BY c_custkey""".stripMargin)),
+    Op("ingest_split_balance", SourceQueries.ingestSplitBalance,
       """WITH k1 AS (SELECT CAST(event_id AS BIGINT) AS k FROM events),
         |k2 AS (SELECT CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS k FROM events),
         |s1 AS (SELECT 'event_id' AS split_key,
@@ -3599,13 +3034,13 @@ object SparkEntry {
         |t AS (SELECT split_key, CAST(SUM(n_rows) AS BIGINT) AS n_total FROM a GROUP BY 1)
         |SELECT a.split_key, a.split_id, a.n_rows,
         |  CAST(a.n_rows * 10000 // t.n_total AS BIGINT) AS share_bp
-        |FROM a JOIN t USING (split_key) ORDER BY split_key, split_id""".stripMargin,
-    "source_custom_dsv2" ->
+        |FROM a JOIN t USING (split_key) ORDER BY split_key, split_id""".stripMargin),
+    Op("source_custom_dsv2", SourceQueries.customDsv2,
       """WITH s AS (SELECT CAST(UNNEST(range(10000, 30000)) AS BIGINT) AS id)
         |SELECT id % 97 AS bucket, CAST(COUNT(*) AS BIGINT) AS n,
         |  MIN(md5(CAST(id AS VARCHAR))) AS min_h
-        |FROM s GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q_bitmap_setops" ->
+        |FROM s GROUP BY 1 ORDER BY 1""".stripMargin),
+    Op("q_bitmap_setops", Analytics.qBitmapSetops,
       """WITH e AS (SELECT DISTINCT event_type, user_id FROM events),
         |c AS (SELECT event_type, user_id // 32 AS chunk,
         |    (CAST(1 AS BIGINT) << CAST(user_id % 32 AS INT)) AS m FROM e),
@@ -3619,17 +3054,17 @@ object SparkEntry {
         |  CAST(n_overlap * 10000 // (sa.n + sb.n - n_overlap) AS BIGINT) AS jaccard_bp
         |FROM ov JOIN sz sa ON sa.event_type = type_a
         |JOIN sz sb ON sb.event_type = type_b
-        |ORDER BY type_a, type_b""".stripMargin,
-    "dedup_edit_distance" ->
+        |ORDER BY type_a, type_b""".stripMargin),
+    Op("dedup_edit_distance", Dedup.editDistancePairs,
       """WITH d AS (SELECT doc_id, text, substring(text, 1, 16) AS pfx,
         |    len(text) // 32 AS lb FROM documents)
         |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
         |  CAST(levenshtein(a.text, b.text) AS BIGINT) AS dist
         |FROM d a JOIN d b ON a.pfx = b.pfx AND a.lb = b.lb AND a.doc_id < b.doc_id
         |WHERE levenshtein(a.text, b.text) <= 16
-        |ORDER BY doc_a, doc_b""".stripMargin,
+        |ORDER BY doc_a, doc_b""".stripMargin),
     // round 11 batch 8
-    "q_transition_matrix" ->
+    Op("q_transition_matrix", Analytics.qTransitionMatrix,
       """WITH e AS (SELECT user_id, event_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us, event_type FROM events),
         |t AS (SELECT lag(event_type) OVER (PARTITION BY user_id ORDER BY us, event_id) AS from_type,
         |    event_type AS to_type FROM e),
@@ -3637,8 +3072,8 @@ object SparkEntry {
         |  FROM t WHERE from_type IS NOT NULL GROUP BY 1, 2),
         |tot AS (SELECT from_type, CAST(SUM(n) AS BIGINT) AS n_from FROM c GROUP BY 1)
         |SELECT c.from_type, to_type, n, CAST(n * 10000 // n_from AS BIGINT) AS bp
-        |FROM c JOIN tot USING (from_type) ORDER BY from_type, to_type""".stripMargin,
-    "q_funnel_windowed" ->
+        |FROM c JOIN tot USING (from_type) ORDER BY from_type, to_type""".stripMargin),
+    Op("q_funnel_windowed", Analytics.qFunnelWindowed,
       """WITH e AS (SELECT user_id, event_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us, event_type
         |  FROM events WHERE event_type IN ('signup', 'click', 'purchase')),
         |s1 AS (SELECT *, CASE WHEN event_type = 'signup' THEN us END AS s_q FROM e),
@@ -3653,8 +3088,8 @@ object SparkEntry {
         |SELECT user_id, MIN(s_q) AS signup_us, MIN(c_q) AS wclick_us, MIN(p_q) AS wpurchase_us,
         |  CAST(CASE WHEN MIN(p_q) IS NOT NULL THEN 3 WHEN MIN(c_q) IS NOT NULL THEN 2
         |    WHEN MIN(s_q) IS NOT NULL THEN 1 ELSE 0 END AS BIGINT) AS stage
-        |FROM s5 GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "q_rfm_segments" ->
+        |FROM s5 GROUP BY user_id ORDER BY user_id""".stripMargin),
+    Op("q_rfm_segments", Analytics.qRfmSegments,
       """WITH o AS (SELECT o_custkey, date_diff('day', DATE '1970-01-01', o_orderdate) AS day,
         |    CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS price_c FROM orders),
         |a AS (SELECT MAX(day) AS maxd FROM o),
@@ -3686,8 +3121,8 @@ object SparkEntry {
         |  FROM rfm, qr, qf, qm)
         |SELECT segment, CAST(COUNT(*) AS BIGINT) AS n_customers,
         |  CAST(SUM(monetary_c) AS BIGINT) AS sum_monetary_c
-        |FROM seg GROUP BY segment ORDER BY segment""".stripMargin,
-    "embed_degree_hubs" ->
+        |FROM seg GROUP BY segment ORDER BY segment""".stripMargin),
+    Op("embed_degree_hubs", Dedup.degreeHubs,
       (s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
          |eb AS (SELECT vec_id, emb,
          |  (CASE WHEN emb[1] >= 0 THEN '1' ELSE '0' END || CASE WHEN emb[2] >= 0 THEN '1' ELSE '0' END ||
@@ -3704,8 +3139,8 @@ object SparkEntry {
          |  FROM embeddings e2 LEFT JOIN d USING (vec_id))
          |SELECT degree, CAST(COUNT(*) AS BIGINT) AS n_vecs,
          |  MIN(vec_id) AS min_vec, MAX(vec_id) AS max_vec
-         |FROM al GROUP BY degree ORDER BY degree""".stripMargin),
-    "split_kfold" ->
+         |FROM al GROUP BY degree ORDER BY degree""".stripMargin)),
+    Op("split_kfold", TextOps.splitKfold,
       (s"""WITH d AS (SELECT doc_id, source, md5(text) AS th,
          |    ${TextOps.HashBucketSql} % 5 AS fold FROM documents),
          |g AS (SELECT th, fold, COUNT(*) AS cnt FROM d GROUP BY 1, 2),
@@ -3714,8 +3149,8 @@ object SparkEntry {
          |f AS (SELECT fold, CAST(COUNT(*) AS BIGINT) AS n_docs,
          |    CAST(COUNT(DISTINCT source) AS BIGINT) AS n_sources FROM d GROUP BY 1)
          |SELECT f.fold, n_docs, n_sources, COALESCE(n_leaked, CAST(0 AS BIGINT)) AS n_leaked
-         |FROM f LEFT JOIN lf USING (fold) ORDER BY fold""".stripMargin),
-    "dlp_column_profile" ->
+         |FROM f LEFT JOIN lf USING (fold) ORDER BY fold""".stripMargin)),
+    Op("dlp_column_profile", DlpQueries.dlpColumnProfile,
       (s"""WITH t AS (SELECT c_name, $ContactSql AS contact, c_mktsegment,
          |    CAST(CAST(c_acctbal AS DECIMAL(18,2)) AS VARCHAR) AS acctbal_s FROM customer),
          |u AS (SELECT 'c_name' AS column_name, c_name AS v FROM t
@@ -3731,17 +3166,17 @@ object SparkEntry {
          |  CASE WHEN n_email > 0 AND n_email >= n_phone AND n_email >= n_number THEN 'EMAIL_ADDRESS'
          |    WHEN n_phone > 0 AND n_phone >= n_number THEN 'PHONE_NUMBER'
          |    WHEN n_number > 0 THEN 'NUMBER' ELSE 'NONE' END AS predicted
-         |FROM a ORDER BY column_name""".stripMargin),
-    "ingest_freshness_lag" ->
+         |FROM a ORDER BY column_name""".stripMargin)),
+    Op("ingest_freshness_lag", SourceQueries.ingestFreshnessLag,
       """WITH e AS (SELECT event_type, epoch_us(CAST(ts AS TIMESTAMP)) AS us FROM events),
         |w AS (SELECT MAX(us) AS hwm_us FROM e)
         |SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_events, MAX(us) AS last_us,
         |  CAST((hwm_us - MAX(us)) // 60000000 AS BIGINT) AS lag_min,
         |  CAST(SUM(CASE WHEN us > hwm_us - 86400000000 THEN 1 ELSE 0 END) AS BIGINT) AS n_last_day,
         |  CAST(CASE WHEN hwm_us - MAX(us) > 3600000000 THEN 1 ELSE 0 END AS BIGINT) AS stale
-        |FROM e, w GROUP BY event_type, hwm_us ORDER BY event_type""".stripMargin,
+        |FROM e, w GROUP BY event_type, hwm_us ORDER BY event_type""".stripMargin),
     // round 11 batch 9
-    "text_winnowing" ->
+    Op("text_winnowing", TextOps.winnowingPairs,
       (s"""WITH pos AS (SELECT doc_id, text,
          |    CAST(unnest(range(1, greatest(len(text) - 15, 0) + 1)) AS BIGINT) AS i FROM documents),
          |h AS (SELECT doc_id, i, ${graft.functions.AnchorExprs.winnowHashSql("text", "i", 16)} AS hv FROM pos),
@@ -3759,8 +3194,8 @@ object SparkEntry {
          |  CAST(n_shared * 10000 // least(sa.nf, sb.nf) AS BIGINT) AS ov_bp
          |FROM sh JOIN sizes sa ON sa.doc_id = doc_a JOIN sizes sb ON sb.doc_id = doc_b
          |WHERE n_shared * 10000 // least(sa.nf, sb.nf) >= 2500
-         |ORDER BY doc_a, doc_b""".stripMargin),
-    "embed_silhouette" ->
+         |ORDER BY doc_a, doc_b""".stripMargin)),
+    Op("embed_silhouette", Ann.silhouette,
       """WITH e AS (SELECT vec_id, CAST(label AS BIGINT) AS label,
         |    CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
         |d AS (SELECT vec_id, label, CAST(i AS BIGINT) AS dim,
@@ -3781,8 +3216,8 @@ object SparkEntry {
         |SELECT label, CAST(COUNT(*) AS BIGINT) AS n_vecs,
         |  CAST((SUM(s_bp) + 20000 * COUNT(*)) // COUNT(*) - 20000 AS BIGINT) AS mean_s_bp,
         |  CAST(SUM(CASE WHEN s_bp < 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_neg
-        |FROM s GROUP BY label ORDER BY label""".stripMargin,
-    "dedup_triangle_count" ->
+        |FROM s GROUP BY label ORDER BY label""".stripMargin),
+    Op("dedup_triangle_count", Dedup.triangleCount,
       (s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
          |eb AS (SELECT vec_id, emb,
          |  (CASE WHEN emb[1] >= 0 THEN '1' ELSE '0' END || CASE WHEN emb[2] >= 0 THEN '1' ELSE '0' END ||
@@ -3801,8 +3236,8 @@ object SparkEntry {
          |  WHERE EXISTS (SELECT 1 FROM pr e3 WHERE e3.a = e1.a AND e3.b = e2.b))
          |SELECT n_edges, n_wedges, n_triangles,
          |  CAST(CASE WHEN n_wedges > 0 THEN 3 * n_triangles * 10000 // n_wedges ELSE 0 END AS BIGINT) AS closure_bp
-         |FROM ds, tr""".stripMargin),
-    "q_top_paths" ->
+         |FROM ds, tr""".stripMargin)),
+    Op("q_top_paths", Analytics.qTopPaths,
       """WITH e AS (SELECT user_id, event_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us, event_type FROM events),
         |r AS (SELECT user_id, event_type,
         |    row_number() OVER (PARTITION BY user_id ORDER BY us, event_id) AS rn FROM e),
@@ -3813,8 +3248,8 @@ object SparkEntry {
         |  FROM r WHERE rn <= 3 GROUP BY user_id),
         |c AS (SELECT concat_ws('>', t1, t2, t3) AS path, CAST(COUNT(*) AS BIGINT) AS n_users
         |  FROM p GROUP BY 1)
-        |SELECT path, n_users FROM c ORDER BY n_users DESC, path LIMIT 20""".stripMargin,
-    "ingest_backfill_plan" ->
+        |SELECT path, n_users FROM c ORDER BY n_users DESC, path LIMIT 20""".stripMargin),
+    Op("ingest_backfill_plan", SourceQueries.ingestBackfillPlan,
       """WITH e AS (SELECT event_type, epoch_us(CAST(ts AS TIMESTAMP)) // 3600000000 AS hr FROM events),
         |p AS (SELECT DISTINCT event_type, hr FROM e),
         |b AS (SELECT MIN(hr) AS h0, MAX(hr) AS h1 FROM e),
@@ -3827,9 +3262,9 @@ object SparkEntry {
         |    hr - row_number() OVER (PARTITION BY event_type ORDER BY hr) AS grp FROM m)
         |SELECT event_type, CAST(MIN(hr) AS BIGINT) AS start_hr, CAST(MAX(hr) AS BIGINT) AS end_hr,
         |  CAST(COUNT(*) AS BIGINT) AS n_hours
-        |FROM i GROUP BY event_type, grp ORDER BY event_type, start_hr""".stripMargin,
+        |FROM i GROUP BY event_type, grp ORDER BY event_type, start_hr""".stripMargin),
     // round 11 batch 10
-    "dedup_bbit_minhash" ->
+    Op("dedup_bbit_minhash", Dedup.bbitMinhash,
       (s"""WITH $GramsCte,
          |$SigCte,
          |bands AS (
@@ -3850,8 +3285,8 @@ object SparkEntry {
          |  FROM p JOIN sig sa ON sa.doc_id = doc_a JOIN sig sb ON sb.doc_id = doc_b)
          |SELECT doc_a, doc_b, jacc, est_bp, bbit_est_bp,
          |  CAST(ABS(bbit_est_bp - est_bp) AS BIGINT) AS gap_bp
-         |FROM m ORDER BY doc_a, doc_b""".stripMargin),
-    "q_ab_lift" ->
+         |FROM m ORDER BY doc_a, doc_b""".stripMargin)),
+    Op("q_ab_lift", Analytics.qAbLift,
       """WITH u AS (SELECT DISTINCT user_id FROM events),
         |arms AS (SELECT user_id, user_id % 2 AS arm FROM u),
         |cv AS (SELECT DISTINCT user_id FROM events WHERE event_type = 'purchase'),
@@ -3867,8 +3302,8 @@ object SparkEntry {
         |  CAST(conv_b * 10000 // n_b AS BIGINT) AS conv_b_bp,
         |  CAST(((conv_b * n_a - conv_a * n_b) * 10000 + 10000 * GREATEST(conv_a * n_b, 1)) // GREATEST(conv_a * n_b, 1) - 10000 AS BIGINT) AS lift_bp,
         |  CAST((conv_b * (n_a - conv_a)) * 10000 // GREATEST(conv_a * (n_b - conv_b), 1) AS BIGINT) AS odds_ratio_bp
-        |FROM pv""".stripMargin,
-    "q_cohort_funnel" ->
+        |FROM pv""".stripMargin),
+    Op("q_cohort_funnel", Analytics.qCohortFunnel,
       """WITH e AS (SELECT user_id, event_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us, event_type
         |  FROM events WHERE user_id IS NOT NULL AND event_type IN ('signup', 'click', 'purchase')),
         |s1 AS (SELECT *, CASE WHEN event_type = 'signup' THEN us END AS s_q FROM e),
@@ -3888,16 +3323,16 @@ object SparkEntry {
         |  CAST(SUM(CASE WHEN stage = 3 THEN 1 ELSE 0 END) AS BIGINT) AS n_purchased,
         |  CAST(SUM(CASE WHEN stage = 3 THEN 1 ELSE 0 END) * 10000 // COUNT(*) AS BIGINT) AS conv_bp
         |FROM per_user WHERE signup_us IS NOT NULL
-        |GROUP BY 1 ORDER BY week""".stripMargin,
-    "stream_transition_replay" ->
+        |GROUP BY 1 ORDER BY week""".stripMargin),
+    Op("stream_transition_replay", Streams.transitionReplay,
       """WITH e AS (SELECT user_id, event_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us, event_type FROM events),
         |t AS (SELECT lag(event_type) OVER (PARTITION BY user_id ORDER BY us, event_id) AS from_type,
         |    event_type AS to_type FROM e)
         |SELECT from_type, to_type, CAST(COUNT(*) AS BIGINT) AS n
         |FROM t WHERE from_type IS NOT NULL GROUP BY 1, 2
-        |ORDER BY from_type, to_type""".stripMargin,
+        |ORDER BY from_type, to_type""".stripMargin),
     // round 11 batch 11
-    "q_pagerank" -> {
+    Op("q_pagerank", Analytics.qPagerank, {
       val iters = (1 to 3).map { t =>
         s"""s$t AS (SELECT e.dst AS node_id, CAST(SUM(r.r // e.deg) AS BIGINT) AS s
            |  FROM e JOIN r${t - 1} r ON r.node_id = e.src GROUP BY e.dst),
@@ -3919,8 +3354,8 @@ object SparkEntry {
          |  COALESCE(deg.deg, 0) AS degree, r3.r AS rank_u
          |FROM r3 LEFT JOIN deg ON deg.src = r3.node_id
          |ORDER BY rank_u DESC, node_id LIMIT 20""".stripMargin
-    },
-    "q_gini" ->
+    }),
+    Op("q_gini", Analytics.qGini,
       """WITH sp AS (SELECT o_custkey, CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT) AS spend
         |  FROM orders GROUP BY o_custkey),
         |x AS (SELECT c_mktsegment AS segment, o_custkey, spend, spend // 1000000 AS b
@@ -3939,8 +3374,8 @@ object SparkEntry {
         |  GROUP BY rin.segment)
         |SELECT segment, n_customers, total_spend,
         |  CAST((2 * t - (n_customers + 1) * total_d) // GREATEST((n_customers * total_d) // 10000, 1) AS BIGINT) AS gini_bp
-        |FROM g ORDER BY segment""".stripMargin,
-    "q_benford" ->
+        |FROM g ORDER BY segment""".stripMargin),
+    Op("q_benford", Analytics.qBenford,
       """WITH d AS (SELECT CAST(substring(CAST(CAST(FLOOR(o_totalprice) AS BIGINT) AS VARCHAR), 1, 1) AS BIGINT) AS digit
         |  FROM orders WHERE o_totalprice >= 1),
         |g AS (SELECT digit, CAST(COUNT(*) AS BIGINT) AS n FROM d GROUP BY digit),
@@ -3950,8 +3385,8 @@ object SparkEntry {
         |SELECT t.digit, t.n, CAST((t.n * 10000) // t.tot AS BIGINT) AS obs_bp,
         |  CAST(exp.exp_bp AS BIGINT) AS exp_bp,
         |  CAST(ABS((t.n * 10000) // t.tot - exp.exp_bp) AS BIGINT) AS dev_bp
-        |FROM t JOIN exp ON exp.digit = t.digit ORDER BY t.digit""".stripMargin,
-    "q_hhi" ->
+        |FROM t JOIN exp ON exp.digit = t.digit ORDER BY t.digit""".stripMargin),
+    Op("q_hhi", Analytics.qHhi,
       """WITH rev AS (SELECT l_suppkey,
         |    CAST(SUM(CAST(CAST(l_extendedprice*(1-l_discount) AS DECIMAL(18,4)) * 10000 AS BIGINT)) AS BIGINT) AS rev
         |  FROM lineitem GROUP BY l_suppkey),
@@ -3964,8 +3399,8 @@ object SparkEntry {
         |    CAST(MAX(share_bp) AS BIGINT) AS top_share_bp
         |  FROM sh GROUP BY s_nationkey)
         |SELECT n_name, n_suppliers, CAST(sq // 10000 AS BIGINT) AS hhi, top_share_bp
-        |FROM h JOIN nation ON n_nationkey = s_nationkey ORDER BY n_name""".stripMargin,
-    "dedup_sorted_neighborhood" ->
+        |FROM h JOIN nation ON n_nationkey = s_nationkey ORDER BY n_name""".stripMargin),
+    Op("dedup_sorted_neighborhood", Dedup.sortedNeighborhood,
       (s"""WITH $GramsCte,
          |blk AS (SELECT doc_id, lang, n_chars, substring(text, 1, 12) AS blk FROM documents),
          |r AS (SELECT doc_id, lang, blk,
@@ -3975,8 +3410,8 @@ object SparkEntry {
          |j AS (SELECT doc_a, doc_b, CAST(wdist AS BIGINT) AS wdist, $JaccExpr AS jacc
          |  FROM cand JOIN g ga ON ga.doc_id = doc_a JOIN g gb ON gb.doc_id = doc_b)
          |SELECT doc_a, doc_b, wdist, jacc FROM j WHERE jacc >= 0.3
-         |ORDER BY doc_a, doc_b""".stripMargin),
-    "embed_mutual_knn" ->
+         |ORDER BY doc_a, doc_b""".stripMargin)),
+    Op("embed_mutual_knn", Dedup.mutualKnn,
       (s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
          |eb AS (SELECT vec_id, emb,
          |  (CASE WHEN emb[1] >= 0 THEN '1' ELSE '0' END || CASE WHEN emb[2] >= 0 THEN '1' ELSE '0' END ||
@@ -3997,8 +3432,8 @@ object SparkEntry {
          |alln AS (SELECT e.vec_id, COALESCE(md.mdeg, 0) AS mutual_degree
          |  FROM e LEFT JOIN md USING (vec_id))
          |SELECT mutual_degree, CAST(COUNT(*) AS BIGINT) AS n_vecs
-         |FROM alln GROUP BY mutual_degree ORDER BY mutual_degree""".stripMargin),
-    "split_temporal" ->
+         |FROM alln GROUP BY mutual_degree ORDER BY mutual_degree""".stripMargin)),
+    Op("split_temporal", TextOps.splitTemporal,
       """WITH e AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) AS us, user_id FROM events),
         |b AS (SELECT MIN(us) + ((MAX(us) - MIN(us)) * 8) // 10 AS cutoff FROM e),
         |tagged AS (SELECT CASE WHEN us < cutoff THEN 'train' ELSE 'eval' END AS split, user_id
@@ -4014,9 +3449,9 @@ object SparkEntry {
         |  GROUP BY split),
         |t AS (SELECT CAST(SUM(n_events) AS BIGINT) AS tot FROM sides)
         |SELECT split, n_events, n_users, CAST((n_events * 10000) // tot AS BIGINT) AS share_bp, n_span_users
-        |FROM sides CROSS JOIN t CROSS JOIN span ORDER BY split""".stripMargin,
+        |FROM sides CROSS JOIN t CROSS JOIN span ORDER BY split""".stripMargin),
     // round 11 batch 12
-    "q_basket_pairs" ->
+    Op("q_basket_pairs", Analytics.qBasketPairs,
       """WITH b AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
         |pn AS (SELECT l_partkey, CAST(COUNT(*) AS BIGINT) AS n_p FROM b GROUP BY l_partkey),
         |no AS (SELECT CAST(COUNT(DISTINCT l_orderkey) AS BIGINT) AS n_orders FROM b),
@@ -4028,8 +3463,8 @@ object SparkEntry {
         |  CAST((n_ab * n_orders * 1000000) // (pa.n_p * pb.n_p) AS BIGINT) AS lift_u
         |FROM pr JOIN pn pa ON pa.l_partkey = part_a JOIN pn pb ON pb.l_partkey = part_b
         |CROSS JOIN no
-        |ORDER BY n_ab DESC, lift_u DESC, part_a, part_b LIMIT 50""".stripMargin,
-    "ann_graph_search" -> {
+        |ORDER BY n_ab DESC, lift_u DESC, part_a, part_b LIMIT 50""".stripMargin),
+    Op("ann_graph_search", Ann.graphSearch, {
       val rounds = (1 to 2).map { t =>
         s"""c$t AS (SELECT DISTINCT query_id, cand FROM (
            |    SELECT query_id, cand FROM b${t - 1}
@@ -4061,8 +3496,8 @@ object SparkEntry {
          |$rounds
          |SELECT query_id, cand AS neighbor_id, rn AS rank
          |FROM b2 ORDER BY query_id, rank""".stripMargin
-    },
-    "sample_class_balance" ->
+    }),
+    Op("sample_class_balance", Ann.classBalance,
       """WITH e AS (SELECT vec_id, CAST(label AS BIGINT) AS label FROM embeddings),
         |c AS (SELECT label, CAST(COUNT(*) AS BIGINT) AS n_before FROM e GROUP BY label),
         |nm AS (SELECT MIN(n_before) AS n_min FROM c),
@@ -4074,8 +3509,8 @@ object SparkEntry {
         |SELECT k.label, c.n_before, k.n_after,
         |  CAST(((c.n_before - k.n_after) * 10000) // c.n_before AS BIGINT) AS drop_bp,
         |  k.kept_id_sum
-        |FROM k JOIN c USING (label) ORDER BY label""".stripMargin,
-    "dlp_top_coding" ->
+        |FROM k JOIN c USING (label) ORDER BY label""".stripMargin),
+    Op("dlp_top_coding", DlpQueries.dlpTopCoding,
       """WITH c AS (SELECT c_custkey, CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT) AS v FROM customer),
         |r AS (SELECT v, CAST(row_number() OVER (ORDER BY v, c_custkey) AS BIGINT) AS rn,
         |    CAST(COUNT(*) OVER () AS BIGINT) AS n FROM c),
@@ -4084,9 +3519,9 @@ object SparkEntry {
         |  CAST(SUM(CASE WHEN v > p95_c THEN 1 ELSE 0 END) AS BIGINT) AS n_clamped,
         |  CAST(SUM(CASE WHEN v > p95_c THEN v - p95_c ELSE 0 END) AS BIGINT) AS excess_c,
         |  CAST(SUM(LEAST(v, p95_c)) AS BIGINT) AS winsor_sum_c
-        |FROM c CROSS JOIN thr""".stripMargin,
+        |FROM c CROSS JOIN thr""".stripMargin),
     // round 11 batch 13
-    "q_growth_accounting" ->
+    Op("q_growth_accounting", Analytics.qGrowthAccounting,
       """WITH uw AS (SELECT DISTINCT user_id, epoch_us(CAST(ts AS TIMESTAMP)) // 604800000000 AS week
         |  FROM events WHERE user_id IS NOT NULL),
         |t AS (SELECT week, user_id,
@@ -4108,8 +3543,8 @@ object SparkEntry {
         |  FROM tagged WHERE churn_week IS NOT NULL GROUP BY churn_week)
         |SELECT CAST(active.week AS BIGINT) AS week, n_active, n_new, n_retained, n_resurrected,
         |  CAST(COALESCE(n_churned, 0) AS BIGINT) AS n_churned
-        |FROM active LEFT JOIN ch ON ch.week = active.week ORDER BY week""".stripMargin,
-    "q_countmin_audit" -> {
+        |FROM active LEFT JOIN ch ON ch.week = active.week ORDER BY week""".stripMargin),
+    Op("q_countmin_audit", Analytics.qCountminAudit, {
       // mirror of the Spark side: decode two md5 hex digits → byte % 64
       def bucketSql(d: Int) = {
         def hex(i: Int) =
@@ -4130,8 +3565,8 @@ object SparkEntry {
          |SELECT user_id, n_exact, n_est,
          |  CAST(((n_est - n_exact) * 10000) // n_exact AS BIGINT) AS over_bp
          |FROM est ORDER BY n_exact DESC, user_id""".stripMargin
-    },
-    "embed_pca_power" -> {
+    }),
+    Op("embed_pca_power", Ann.pcaPower, {
       def signSafe(x: String, m: String) =
         s"CASE WHEN $x >= 0 THEN ($x * 1000) // $m ELSE -((-($x) * 1000) // $m) END"
       s"""WITH d AS (SELECT vec_id, CAST(pos - 1 AS BIGINT) AS dim,
@@ -4149,9 +3584,9 @@ object SparkEntry {
          |m2 AS (SELECT CAST(MAX(ABS(x)) AS BIGINT) AS m FROM x2)
          |SELECT j AS dim, CAST(${signSafe("x", "GREATEST(m, 1)")} AS BIGINT) AS loading_milli
          |FROM x2 CROSS JOIN m2 ORDER BY dim""".stripMargin
-    },
+    }),
     // round 11 batch 14
-    "dlp_t_closeness" ->
+    Op("dlp_t_closeness", DlpQueries.dlpTCloseness,
       """WITH c AS (SELECT c_mktsegment, c_nationkey,
         |    CAST(FLOOR(c_acctbal / 2000) AS BIGINT) AS sb FROM customer),
         |n AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_total FROM c),
@@ -4175,8 +3610,8 @@ object SparkEntry {
         |  CAST(SUM(ABS(cum)) // GREATEST(n_buckets - 1, 1) AS BIGINT) AS t_bp
         |FROM cum CROSS JOIN nb
         |GROUP BY c_mktsegment, c_nationkey, class_size, n_buckets
-        |ORDER BY c_mktsegment, c_nationkey""".stripMargin,
-    "q_ship_latency" ->
+        |ORDER BY c_mktsegment, c_nationkey""".stripMargin),
+    Op("q_ship_latency", Analytics.qShipLatency,
       """WITH d AS (SELECT o_orderpriority AS prio, l_orderkey, l_linenumber,
         |    CAST(date_diff('day', o_orderdate, l_shipdate) AS BIGINT) AS days
         |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
@@ -4187,9 +3622,9 @@ object SparkEntry {
         |  CAST(MIN(CASE WHEN rn = GREATEST((n + 1) // 2, 1) THEN days END) AS BIGINT) AS p50_days,
         |  CAST(MIN(CASE WHEN rn = GREATEST((9 * (n + 1)) // 10, 1) THEN days END) AS BIGINT) AS p90_days,
         |  CAST(MAX(days) AS BIGINT) AS max_days
-        |FROM r GROUP BY prio ORDER BY o_orderpriority""".stripMargin,
+        |FROM r GROUP BY prio ORDER BY o_orderpriority""".stripMargin),
     // round 11 batch 15
-    "q_dau_mau" ->
+    Op("q_dau_mau", Analytics.qDauMau,
       """WITH ud AS (SELECT DISTINCT user_id, epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day
         |  FROM events WHERE user_id IS NOT NULL),
         |dau AS (SELECT day, CAST(COUNT(DISTINCT user_id) AS BIGINT) AS dau FROM ud GROUP BY day),
@@ -4197,8 +3632,8 @@ object SparkEntry {
         |mau AS (SELECT day, CAST(COUNT(DISTINCT user_id) AS BIGINT) AS mau FROM ex GROUP BY day)
         |SELECT CAST(dau.day AS BIGINT) AS day, dau, mau,
         |  CAST((dau * 10000) // mau AS BIGINT) AS stickiness_bp
-        |FROM dau JOIN mau ON mau.day = dau.day ORDER BY day""".stripMargin,
-    "embed_label_precision" ->
+        |FROM dau JOIN mau ON mau.day = dau.day ORDER BY day""".stripMargin),
+    Op("embed_label_precision", Ann.labelPrecision,
       (s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb, CAST(label AS BIGINT) AS label FROM embeddings),
          |eb AS (SELECT vec_id, emb,
          |  (CASE WHEN emb[1] >= 0 THEN '1' ELSE '0' END || CASE WHEN emb[2] >= 0 THEN '1' ELSE '0' END ||
@@ -4215,8 +3650,8 @@ object SparkEntry {
          |  FROM p0 JOIN e la ON la.vec_id = vec_a JOIN e lb ON lb.vec_id = vec_b)
          |SELECT band, CAST(COUNT(*) AS BIGINT) AS n_pairs, CAST(SUM(same) AS BIGINT) AS n_same,
          |  CAST((SUM(same) * 10000) // COUNT(*) AS BIGINT) AS precision_bp
-         |FROM j GROUP BY band ORDER BY band""".stripMargin),
-    "q_dow_profile" ->
+         |FROM j GROUP BY band ORDER BY band""".stripMargin)),
+    Op("q_dow_profile", Analytics.qDowProfile,
       """WITH g AS (SELECT event_type,
         |    (epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 + 4) % 7 AS dow,
         |    CAST(COUNT(*) AS BIGINT) AS n
@@ -4226,9 +3661,9 @@ object SparkEntry {
         |SELECT event_type, dow, n,
         |  CAST((n * 10000) // tot AS BIGINT) AS share_bp,
         |  CAST(ABS((n * 10000) // tot - 1428) AS BIGINT) AS dev_bp
-        |FROM t ORDER BY event_type, dow""".stripMargin,
+        |FROM t ORDER BY event_type, dow""".stripMargin),
     // round 11 batch 16
-    "stream_rate_limit" ->
+    Op("stream_rate_limit", Streams.rateLimit(_, _),
       """WITH e AS (SELECT user_id, event_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us
         |  FROM events WHERE user_id IS NOT NULL),
         |r AS (SELECT user_id, us // 60000000 AS win,
@@ -4240,8 +3675,8 @@ object SparkEntry {
         |    CAST(COUNT(DISTINCT win) AS BIGINT) AS n_windows
         |  FROM r GROUP BY user_id)
         |SELECT user_id, n_events, n_throttled, peak_rate, n_windows
-        |FROM g ORDER BY n_events DESC, user_id LIMIT 20""".stripMargin,
-    "text_keywords" -> {
+        |FROM g ORDER BY n_events DESC, user_id LIMIT 20""".stripMargin),
+    Op("text_keywords", TextOps.keywords, {
       val stop = TextOps.RakeStop.map(w => s"'$w'").mkString(", ")
       s"""WITH w AS (SELECT doc_id, generate_subscripts(string_split(text, ' '), 1) AS pos,
          |    unnest(string_split(text, ' ')) AS word FROM documents),
@@ -4261,9 +3696,9 @@ object SparkEntry {
          |SELECT pd.phrase, n_words, n_occur, score_milli
          |FROM pd JOIN sc USING (phrase)
          |ORDER BY score_milli DESC, phrase LIMIT 20""".stripMargin
-    },
+    }),
     // round 11 batch 17
-    "q_forecast_backtest" ->
+    Op("q_forecast_backtest", Analytics.qForecastBacktest,
       """WITH weekly AS (SELECT epoch_us(CAST(o_orderdate AS TIMESTAMP)) // 604800000000 AS week,
         |    CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT) AS rev_c
         |  FROM orders GROUP BY 1),
@@ -4274,8 +3709,8 @@ object SparkEntry {
         |SELECT CAST(week AS BIGINT) AS week, rev_c, CAST(s4 // 4 AS BIGINT) AS pred_c,
         |  CAST(ABS(rev_c - s4 // 4) AS BIGINT) AS abs_err_c,
         |  CAST((ABS(rev_c - s4 // 4) * 10000) // rev_c AS BIGINT) AS err_bp
-        |FROM r WHERE n_hist = 4 ORDER BY week""".stripMargin,
-    "q_return_rate" ->
+        |FROM r WHERE n_hist = 4 ORDER BY week""".stripMargin),
+    Op("q_return_rate", Analytics.qReturnRate,
       """WITH ud AS (SELECT DISTINCT user_id, epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day
         |  FROM events WHERE user_id IS NOT NULL),
         |ret AS (SELECT day, CAST(COUNT(*) AS BIGINT) AS n_returned FROM (
@@ -4286,9 +3721,9 @@ object SparkEntry {
         |SELECT CAST(act.day AS BIGINT) AS day, n_active,
         |  CAST(COALESCE(n_returned, 0) AS BIGINT) AS n_returned,
         |  CAST((COALESCE(n_returned, 0) * 10000) // n_active AS BIGINT) AS return_bp
-        |FROM act LEFT JOIN ret ON ret.day = act.day ORDER BY day""".stripMargin,
+        |FROM act LEFT JOIN ret ON ret.day = act.day ORDER BY day""".stripMargin),
     // round 11 batch 18
-    "q_supplier_spread" ->
+    Op("q_supplier_spread", Analytics.qSupplierSpread,
       """WITH per AS (SELECT o_custkey,
         |    CAST(COUNT(DISTINCT l_suppkey) AS BIGINT) AS n_suppliers,
         |    CAST(COUNT(DISTINCT s_nationkey) AS BIGINT) AS n_nations
@@ -4298,8 +3733,8 @@ object SparkEntry {
         |SELECT n_suppliers, CAST(COUNT(*) AS BIGINT) AS n_customers,
         |  CAST(SUM(CASE WHEN n_nations >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_multi_nation,
         |  CAST((SUM(CASE WHEN n_nations >= 2 THEN 1 ELSE 0 END) * 10000) // COUNT(*) AS BIGINT) AS multi_nation_bp
-        |FROM per GROUP BY n_suppliers ORDER BY n_suppliers""".stripMargin,
-    "ingest_row_width" -> {
+        |FROM per GROUP BY n_suppliers ORDER BY n_suppliers""".stripMargin),
+    Op("ingest_row_width", SourceQueries.rowWidth, {
       // (table, n_cols, fixed-width bytes, string cols, float-array cols)
       // — the PINNED expected schema per table; drift fails the gate
       val tables = Seq(
@@ -4324,9 +3759,9 @@ object SparkEntry {
            |FROM $t""".stripMargin
       }
       selects.mkString("", "\nUNION ALL ", "\nORDER BY table_name")
-    },
+    }),
     // ---- round 12 additions ----
-    "q_lorenz_topshare" ->
+    Op("q_lorenz_topshare", Analytics.qLorenzTopshare,
       """WITH sp AS (SELECT o_custkey,
         |    CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT) AS spend
         |  FROM orders GROUP BY o_custkey),
@@ -4340,8 +3775,8 @@ object SparkEntry {
         |  CAST(SUM(CASE WHEN rn > n - k THEN 1 ELSE 0 END) AS BIGINT) AS n_top,
         |  CAST(SUM(CASE WHEN rn > n - k THEN spend ELSE 0 END) AS BIGINT) AS top_spend,
         |  CAST(SUM(CASE WHEN rn > n - k THEN spend // 100 ELSE 0 END) * 10000 // MIN(total_d) AS BIGINT) AS share_bp
-        |FROM c GROUP BY top_pct ORDER BY top_pct""".stripMargin,
-    "q_autocorr" ->
+        |FROM c GROUP BY top_pct ORDER BY top_pct""".stripMargin),
+    Op("q_autocorr", Analytics.qAutocorr,
       """WITH day AS (SELECT CAST(floor(epoch(CAST(o_orderdate AS TIMESTAMP))) AS BIGINT) // 86400 AS dn,
         |    CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) // 100000) AS BIGINT) AS rev_k
         |  FROM orders GROUP BY 1),
@@ -4356,8 +3791,8 @@ object SparkEntry {
         |SELECT CAST(k AS BIGINT) AS lag, n_pairs,
         |  CAST(CASE WHEN acov >= 0 THEN (acov * 10000) // v
         |       ELSE -((-acov * 10000) // v) END AS BIGINT) AS ac_bp
-        |FROM agg CROSS JOIN v ORDER BY lag""".stripMargin,
-    "q_cohort_ltv" ->
+        |FROM agg CROSS JOIN v ORDER BY lag""".stripMargin),
+    Op("q_cohort_ltv", Analytics.qCohortLtv,
       """WITH o AS (SELECT o_custkey,
         |    CAST(year(o_orderdate) * 12 + (month(o_orderdate) - 1) AS BIGINT) AS m,
         |    CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS sp FROM orders),
@@ -4372,8 +3807,8 @@ object SparkEntry {
         |SELECT concat(CAST(cm // 12 AS VARCHAR), '-', lpad(CAST(cm % 12 + 1 AS VARCHAR), 2, '0')) AS cohort_month,
         |  age, n_customers, rev, cum_rev,
         |  CAST(cum_rev // n_customers AS BIGINT) AS ltv_cents
-        |FROM c ORDER BY cohort_month, age""".stripMargin,
-    "q_interorder_gap" ->
+        |FROM c ORDER BY cohort_month, age""".stripMargin),
+    Op("q_interorder_gap", Analytics.qInterorderGap,
       """WITH o AS (SELECT o_custkey, o_orderkey,
         |    CAST(floor(epoch(CAST(o_orderdate AS TIMESTAMP))) AS BIGINT) // 86400 AS dn FROM orders),
         |g AS (SELECT dn - lag(dn, 1) OVER (PARTITION BY o_custkey ORDER BY dn, o_orderkey) AS gap_days FROM o),
@@ -4382,8 +3817,8 @@ object SparkEntry {
         |t AS (SELECT CAST(SUM(n) AS BIGINT) AS tot FROM h)
         |SELECT CAST(gap_weeks AS BIGINT) AS gap_weeks, n,
         |  CAST((n * 10000) // tot AS BIGINT) AS share_bp
-        |FROM h CROSS JOIN t ORDER BY gap_weeks""".stripMargin,
-    "dedup_method_agreement" ->
+        |FROM h CROSS JOIN t ORDER BY gap_weeks""".stripMargin),
+    Op("dedup_method_agreement", Dedup.methodAgreement,
       (s"""WITH $GramsCte,
          |$SigCte,
          |bands AS (
@@ -4423,8 +3858,8 @@ object SparkEntry {
          |  CAST((neg2 * 10000) // GREATEST(ueg, 1) AS BIGINT) FROM a
          |UNION ALL SELECT 'minhash', 'ngram', nm, ng, nmg, umg,
          |  CAST((nmg * 10000) // GREATEST(umg, 1) AS BIGINT) FROM a
-         |ORDER BY method_a, method_b""".stripMargin),
-    "pipeline_dedup_token_audit" ->
+         |ORDER BY method_a, method_b""".stripMargin)),
+    Op("pipeline_dedup_token_audit", Dedup.dedupTokenAudit,
       (s"""WITH $GramsCte,
          |$SigCte,
          |bands AS (
@@ -4443,8 +3878,8 @@ object SparkEntry {
          |  CAST(SUM(CASE WHEN rm.doc_id IS NULL THEN tok ELSE 0 END) AS BIGINT) AS surv_tokens,
          |  CAST(((SUM(tok) - SUM(CASE WHEN rm.doc_id IS NULL THEN tok ELSE 0 END)) * 10000) // SUM(tok) AS BIGINT) AS removed_bp
          |FROM tk LEFT JOIN rm ON rm.doc_id = tk.doc_id
-         |GROUP BY source ORDER BY source""".stripMargin),
-    "sample_cell_coverage" ->
+         |GROUP BY source ORDER BY source""".stripMargin)),
+    Op("sample_cell_coverage", Ann.sampleCellCoverage,
       (s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
          |cent AS (SELECT vec_id AS cent_id, emb AS ce FROM e WHERE vec_id < 8),
          |a AS (SELECT e.vec_id, cent_id, ${duckCos("emb", "ce")} AS c FROM e CROSS JOIN cent),
@@ -4465,15 +3900,15 @@ object SparkEntry {
          |  CAST((n_corpus * 10000) // tc AS BIGINT) AS corpus_bp,
          |  CAST((n_sample * 10000) // ts AS BIGINT) AS sample_bp,
          |  CAST((n_sample * 10000) // ts - (n_corpus * 10000) // tc AS BIGINT) AS delta_bp
-         |FROM bc CROSS JOIN t ORDER BY cell""".stripMargin),
-    "stream_new_users" ->
+         |FROM bc CROSS JOIN t ORDER BY cell""".stripMargin)),
+    Op("stream_new_users", Streams.newUsersBatch,
       """WITH f AS (SELECT user_id, MIN(epoch_us(CAST(ts AS TIMESTAMP))) AS first_us
         |  FROM events WHERE user_id IS NOT NULL GROUP BY 1)
         |SELECT TIMESTAMP '1970-01-01 00:00:00' +
         |    INTERVAL ((first_us // 86400000000) * 86400) SECOND AS day,
         |  CAST(COUNT(*) AS BIGINT) AS n_new
-        |FROM f GROUP BY 1 ORDER BY day""".stripMargin,
-    "q_abc_class" ->
+        |FROM f GROUP BY 1 ORDER BY day""".stripMargin),
+    Op("q_abc_class", Analytics.qAbcClass,
       """WITH pr AS (SELECT l_partkey,
         |    CAST(SUM(CAST(CAST(l_extendedprice*(1-l_discount) AS DECIMAL(18,4)) * 10000 AS BIGINT)) AS BIGINT) AS rev
         |  FROM lineitem GROUP BY 1),
@@ -4488,8 +3923,8 @@ object SparkEntry {
         |SELECT abc_class, CAST(COUNT(*) AS BIGINT) AS n_parts,
         |  CAST(SUM(rev) AS BIGINT) AS revenue,
         |  CAST(SUM(rev // 10000) * 10000 // MIN(total_d) AS BIGINT) AS share_bp
-        |FROM c GROUP BY abc_class ORDER BY abc_class""".stripMargin,
-    "q_duplicate_orders" ->
+        |FROM c GROUP BY abc_class ORDER BY abc_class""".stripMargin),
+    Op("q_duplicate_orders", Analytics.qDuplicateOrders,
       """WITH g AS (SELECT o_custkey, CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS sp,
         |    CAST(floor(epoch(CAST(o_orderdate AS TIMESTAMP))) AS BIGINT) // 86400 AS dn,
         |    CAST(COUNT(*) AS BIGINT) AS n
@@ -4499,8 +3934,8 @@ object SparkEntry {
         |t AS (SELECT CAST(SUM(n_orders) AS BIGINT) AS tot FROM h)
         |SELECT group_size, n_groups, n_orders,
         |  CAST((n_orders * 10000) // tot AS BIGINT) AS share_bp
-        |FROM h CROSS JOIN t ORDER BY group_size""".stripMargin,
-    "dlp_generalization_ladder" -> {
+        |FROM h CROSS JOIN t ORDER BY group_size""".stripMargin),
+    Op("dlp_generalization_ladder", DlpQueries.dlpGeneralizationLadder, {
       def level(lvl: Int, qi: String, g: String) =
         s"""SELECT CAST($lvl AS BIGINT) AS level, '$qi' AS qi,
            |  CAST(COUNT(*) AS BIGINT) AS n_groups, CAST(MIN(k) AS BIGINT) AS min_k,
@@ -4515,8 +3950,8 @@ object SparkEntry {
          |UNION ALL ${level(1, "segment+region", "r_name")}
          |UNION ALL ${level(2, "segment", "'*'")}
          |ORDER BY level""".stripMargin
-    },
-    "text_charset_profile" ->
+    }),
+    Op("text_charset_profile", TextOps.charsetProfile,
       """WITH d AS (SELECT source, CAST(length(text) AS BIGINT) AS nc,
         |    CAST(length(text) - length(regexp_replace(text, '[A-Za-z]', '', 'g')) AS BIGINT) AS na,
         |    CAST(length(text) - length(regexp_replace(text, '[0-9]', '', 'g')) AS BIGINT) AS nd,
@@ -4527,8 +3962,8 @@ object SparkEntry {
         |  CAST(SUM(nd) * 10000 // SUM(nc) AS BIGINT) AS digit_bp,
         |  CAST(SUM(ns) * 10000 // SUM(nc) AS BIGINT) AS space_bp,
         |  CAST((SUM(nc) - SUM(na) - SUM(nd) - SUM(ns)) * 10000 // SUM(nc) AS BIGINT) AS other_bp
-        |FROM d GROUP BY source ORDER BY source""".stripMargin,
-    "embed_assign_margin" ->
+        |FROM d GROUP BY source ORDER BY source""".stripMargin),
+    Op("embed_assign_margin", Ann.assignMargin,
       (s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
          |cent AS (SELECT vec_id AS cent_id, emb AS ce FROM e WHERE vec_id < 8),
          |a AS (SELECT e.vec_id, cent_id, ${duckCos("emb", "ce")} AS c FROM e CROSS JOIN cent),
@@ -4541,16 +3976,16 @@ object SparkEntry {
          |t AS (SELECT CAST(SUM(n_vecs) AS BIGINT) AS tot FROM h)
          |SELECT CAST(margin_bucket AS BIGINT) AS margin_bucket, n_vecs,
          |  CAST((n_vecs * 10000) // tot AS BIGINT) AS share_bp
-         |FROM h CROSS JOIN t ORDER BY margin_bucket""".stripMargin),
-    "stream_dup_ratio" ->
+         |FROM h CROSS JOIN t ORDER BY margin_bucket""".stripMargin)),
+    Op("stream_dup_ratio", Streams.dupRatioBatch,
       """WITH e AS (SELECT TIMESTAMP '1970-01-01 00:00:00' +
         |    INTERVAL ((CAST(floor(epoch(CAST(ts AS TIMESTAMP))) AS BIGINT) // 3600) * 3600) SECOND AS window_start,
         |  user_id, event_type FROM events)
         |SELECT window_start, CAST(COUNT(*) AS BIGINT) AS n_events,
         |  CAST(COUNT(DISTINCT (user_id, event_type)) AS BIGINT) AS n_keys,
         |  CAST((COUNT(*) - COUNT(DISTINCT (user_id, event_type))) * 10000 // COUNT(*) AS BIGINT) AS dup_bp
-        |FROM e GROUP BY 1 ORDER BY window_start""".stripMargin,
-    "q_customer_lifespan" ->
+        |FROM e GROUP BY 1 ORDER BY window_start""".stripMargin),
+    Op("q_customer_lifespan", Analytics.qCustomerLifespan,
       """WITH s AS (SELECT o_custkey,
         |    CAST(MAX(year(o_orderdate) * 12 + (month(o_orderdate) - 1))
         |       - MIN(year(o_orderdate) * 12 + (month(o_orderdate) - 1)) AS BIGINT) AS lifespan_months
@@ -4562,8 +3997,8 @@ object SparkEntry {
         |    CAST(SUM(n_customers) OVER () AS BIGINT) AS tot FROM h)
         |SELECT lifespan_months, n_customers, n_surviving,
         |  CAST((n_surviving * 10000) // tot AS BIGINT) AS surviving_bp
-        |FROM c ORDER BY lifespan_months""".stripMargin,
-    "dlp_sampling_risk" -> {
+        |FROM c ORDER BY lifespan_months""".stripMargin),
+    Op("dlp_sampling_risk", DlpQueries.dlpSamplingRisk, {
       def census(scope: String, where: String) =
         s"""SELECT '$scope' AS scope, CAST(COUNT(*) AS BIGINT) AS n_classes,
            |  CAST(MIN(k) AS BIGINT) AS min_k,
@@ -4575,8 +4010,8 @@ object SparkEntry {
          |UNION ALL ${census("b_sample25",
         "WHERE strpos('0123456789abcdef', substring(md5(CAST(c_custkey AS VARCHAR)), 1, 1)) - 1 < 4")}
          |ORDER BY scope""".stripMargin
-    },
-    "dedup_shingle_sweep" -> {
+    }),
+    Op("dedup_shingle_sweep", Dedup.shingleSweep, {
       def gw(w: Int) =
         s"list_distinct(list_transform(range(1, greatest(len(w) - ${w - 1}, 1) + 1), " +
           s"i -> concat_ws(' ', ${(0 until w).map(k => s"w[i+$k]").mkString(", ")})))"
@@ -4606,8 +4041,8 @@ object SparkEntry {
          |UNION ALL ${sweep(3)}
          |UNION ALL ${sweep(5)}
          |ORDER BY w""".stripMargin
-    },
-    "mm_phash_neardup" -> {
+    }),
+    Op("mm_phash_neardup", Multimodal.phashNearDup, {
       val bits = (0 until 16).map { j =>
         val hexd = "0123456789abcdef".charAt(j)
         s"(CASE WHEN 16 * len(list_filter(bs, x -> substring(x, 1, 1) = '$hexd')) >= CAST(n_bytes AS INT) THEN ${1 << j} ELSE 0 END)"
@@ -4628,8 +4063,8 @@ object SparkEntry {
          |SELECT ph.doc_id, ph.ph, COALESCE(deg.n_near, 0) AS n_near
          |FROM ph LEFT JOIN deg ON deg.doc_id = ph.doc_id
          |ORDER BY ph.doc_id""".stripMargin
-    },
-    "stream_outage_minutes" ->
+    }),
+    Op("stream_outage_minutes", Streams.outageMinutesBatch,
       """WITH m AS (SELECT DISTINCT event_type,
         |    CAST(floor(epoch(CAST(ts AS TIMESTAMP))) AS BIGINT) // 60 AS mn FROM events),
         |g AS (SELECT event_type, mn,
@@ -4638,8 +4073,8 @@ object SparkEntry {
         |  CAST(SUM(CASE WHEN gap > 5 THEN 1 ELSE 0 END) AS BIGINT) AS n_outages,
         |  CAST(MAX(COALESCE(gap, 0)) AS BIGINT) AS max_gap_min,
         |  CAST((COUNT(*) * 10000) // (MAX(mn) - MIN(mn) + 1) AS BIGINT) AS uptime_bp
-        |FROM g GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "q_trade_balance" ->
+        |FROM g GROUP BY event_type ORDER BY event_type""".stripMargin),
+    Op("q_trade_balance", Analytics.qTradeBalance,
       """WITH flow AS (SELECT CAST(s_nationkey AS BIGINT) AS sn, CAST(c_nationkey AS BIGINT) AS cn,
         |    CAST(SUM(CAST(CAST(l_extendedprice*(1-l_discount) AS DECIMAL(18,4)) * 10000 AS BIGINT)) AS BIGINT) AS rev
         |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
@@ -4658,8 +4093,8 @@ object SparkEntry {
         |  COALESCE(exports, 0) - COALESCE(imports, 0) AS balance
         |FROM ex FULL JOIN im USING (nk)
         |JOIN nation ON CAST(n_nationkey AS BIGINT) = nk
-        |ORDER BY n_name""".stripMargin,
-    "q_weekly_volatility" ->
+        |ORDER BY n_name""".stripMargin),
+    Op("q_weekly_volatility", Analytics.qWeeklyVolatility,
       """WITH wk AS (SELECT CAST(floor(epoch(CAST(o_orderdate AS TIMESTAMP))) AS BIGINT) // 604800 AS wn,
         |    CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) // 100) AS BIGINT) AS rev_d
         |  FROM orders GROUP BY 1),
@@ -4673,8 +4108,8 @@ object SparkEntry {
         |SELECT CAST(COUNT(*) AS BIGINT) AS n_weeks, CAST(MAX(m) AS BIGINT) AS median_d,
         |  CAST(MIN(mad) AS BIGINT) AS mad_d,
         |  CAST((MIN(mad) * 10000) // GREATEST(MAX(m), 1) AS BIGINT) AS volatility_bp
-        |FROM dev CROSS JOIN mad""".stripMargin,
-    "ingest_distinctness_profile" -> {
+        |FROM dev CROSS JOIN mad""".stripMargin),
+    Op("ingest_distinctness_profile", SourceQueries.ingestDistinctnessProfile, {
       def one(name: String, v: String) =
         s"SELECT '$name' AS column_name, $v AS v FROM customer"
       s"""WITH vals AS (
@@ -4689,8 +4124,8 @@ object SparkEntry {
          |  CAST(MAX(nv) * 10000 // SUM(nv) AS BIGINT) AS top_share_bp,
          |  CAST(CASE WHEN COUNT(*) = SUM(nv) THEN 1 ELSE 0 END AS BIGINT) AS pk_candidate
          |FROM g GROUP BY column_name ORDER BY column_name""".stripMargin
-    },
-    "stream_mix_drift" ->
+    }),
+    Op("stream_mix_drift", Streams.mixDriftBatch,
       """WITH e AS (SELECT TIMESTAMP '1970-01-01 00:00:00' +
         |    INTERVAL ((CAST(floor(epoch(CAST(ts AS TIMESTAMP))) AS BIGINT) // 3600) * 3600) SECOND AS window_start,
         |  event_type FROM events),
@@ -4704,8 +4139,8 @@ object SparkEntry {
         |    ws.win_bp - base.base_bp AS delta_bp FROM ws JOIN base USING (event_type))
         |SELECT window_start, event_type, n, win_bp, base_bp, delta_bp,
         |  CAST(SUM(ABS(delta_bp)) OVER (PARTITION BY window_start) // 2 AS BIGINT) AS tv_bp
-        |FROM d ORDER BY window_start, event_type""".stripMargin,
-    "q_backlog_aging" ->
+        |FROM d ORDER BY window_start, event_type""".stripMargin),
+    Op("q_backlog_aging", Analytics.qBacklogAging,
       """WITH o AS (SELECT CAST(floor(epoch(CAST(o_orderdate AS TIMESTAMP))) AS BIGINT) // 86400 AS dn,
         |    CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS sp
         |  FROM orders WHERE o_orderstatus = 'O'),
@@ -4717,8 +4152,8 @@ object SparkEntry {
         |t AS (SELECT CAST(SUM(value_d) AS BIGINT) AS tot FROM h)
         |SELECT CAST(age_quarters AS BIGINT) AS age_quarters, n_orders, value_cents,
         |  CAST((value_d * 10000) // tot AS BIGINT) AS value_share_bp
-        |FROM h CROSS JOIN t ORDER BY age_quarters""".stripMargin,
-    "pipeline_quality_matrix" ->
+        |FROM h CROSS JOIN t ORDER BY age_quarters""".stripMargin),
+    Op("pipeline_quality_matrix", TextOps.qualityMatrix,
       (s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
          |q AS (SELECT doc_id,
          |  CAST(len(w) AS BIGINT) AS n_words,
@@ -4736,8 +4171,8 @@ object SparkEntry {
          |  CAST(SUM(f_rep) AS BIGINT) AS n_repetitive,
          |  CAST(SUM(CASE WHEN f_short + f_lang + f_rep > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_any_fail,
          |  CAST((COUNT(*) - SUM(CASE WHEN f_short + f_lang + f_rep > 0 THEN 1 ELSE 0 END)) * 10000 // COUNT(*) AS BIGINT) AS pass_bp
-         |FROM f GROUP BY source ORDER BY source""".stripMargin),
-    "ann_lsh_bucket_profile" ->
+         |FROM f GROUP BY source ORDER BY source""".stripMargin)),
+    Op("ann_lsh_bucket_profile", Ann.lshBucketProfile,
       """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
         |b AS (SELECT vec_id, concat(
         |    CASE WHEN emb[1] >= 0 THEN '1' ELSE '0' END, CASE WHEN emb[2] >= 0 THEN '1' ELSE '0' END,
@@ -4752,8 +4187,8 @@ object SparkEntry {
         |t AS (SELECT CAST(SUM(pair_work) AS BIGINT) AS tot FROM h)
         |SELECT bucket_size, n_buckets, n_vecs, pair_work,
         |  CAST((pair_work * 10000) // GREATEST(tot, 1) AS BIGINT) AS work_share_bp
-        |FROM h CROSS JOIN t ORDER BY bucket_size""".stripMargin,
-    "ingest_type_infer" -> {
+        |FROM h CROSS JOIN t ORDER BY bucket_size""".stripMargin),
+    Op("ingest_type_infer", SourceQueries.ingestTypeInfer, {
       def one(name: String, v: String) =
         s"SELECT '$name' AS column_name, $v AS v FROM orders"
       s"""WITH vals AS (
@@ -4773,8 +4208,8 @@ object SparkEntry {
          |       WHEN n_date = n_values THEN 'DATE'
          |       ELSE 'VARCHAR' END AS inferred_type
          |FROM c ORDER BY column_name""".stripMargin
-    },
-    "ingest_composite_key" ->
+    }),
+    Op("ingest_composite_key", SourceQueries.ingestCompositeKey,
       """WITH a AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
         |    CAST(COUNT(DISTINCT l_orderkey) AS BIGINT) AS d1,
         |    CAST(COUNT(DISTINCT (l_orderkey, l_linenumber)) AS BIGINT) AS d2,
@@ -4789,13 +4224,13 @@ object SparkEntry {
         |  n_rows - n_distinct AS dup_rows,
         |  CAST(((n_rows - n_distinct) * 10000) // n_rows AS BIGINT) AS dup_bp,
         |  CAST(CASE WHEN n_distinct = n_rows THEN 1 ELSE 0 END AS BIGINT) AS is_key
-        |FROM u ORDER BY candidate""".stripMargin,
-    "load_bucket_pruning" ->
+        |FROM u ORDER BY candidate""".stripMargin),
+    Op("load_bucket_pruning", SourceQueries.loadBucketPruning,
       """SELECT o_custkey, CAST(COUNT(*) AS BIGINT) AS n_orders,
         |  CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT) AS total_cents
         |FROM orders WHERE o_custkey IN (7, 77, 777)
-        |GROUP BY o_custkey ORDER BY o_custkey""".stripMargin,
-    "load_partition_evolution" ->
+        |GROUP BY o_custkey ORDER BY o_custkey""".stripMargin),
+    Op("load_partition_evolution", SourceQueries.loadPartitionEvolution,
       """WITH cells AS (SELECT year(o_orderdate) * 100 + month(o_orderdate) AS old_part,
         |    o_orderstatus AS status, CAST(COUNT(*) AS BIGINT) AS n
         |  FROM orders GROUP BY 1, 2)
@@ -4804,8 +4239,8 @@ object SparkEntry {
         |  CAST(COUNT(*) AS BIGINT) AS n_targets,
         |  CAST(SUM(n) * 96 AS BIGINT) AS rewrite_bytes,
         |  CAST(CASE WHEN COUNT(*) > 1 THEN 1 ELSE 0 END AS BIGINT) AS needs_rewrite
-        |FROM cells GROUP BY old_part ORDER BY old_part""".stripMargin,
-    "q_ols_trend" ->
+        |FROM cells GROUP BY old_part ORDER BY old_part""".stripMargin),
+    Op("q_ols_trend", Analytics.qOlsTrend,
       """WITH daily AS (SELECT o_orderpriority,
         |    CAST(floor(epoch(CAST(o_orderdate AS TIMESTAMP))) AS BIGINT) // 86400 AS dn,
         |    CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) // 100000) AS BIGINT) AS y
@@ -4825,8 +4260,8 @@ object SparkEntry {
         |SELECT o_orderpriority, n_days, sy AS total_rev_k,
         |  CAST(q * 1000000 + (CASE WHEN r >= 0 THEN (r * 1000000) // den
         |    ELSE -((-r * 1000000) // den) END) AS BIGINT) AS slope_micro_k
-        |FROM qr ORDER BY o_orderpriority""".stripMargin,
-    "mm_resolution_bucket" ->
+        |FROM qr ORDER BY o_orderpriority""".stripMargin),
+    Op("mm_resolution_bucket", Multimodal.resolutionBucket,
       """WITH dims AS (SELECT CAST(128 + ascii(substr(md5(text), 1, 1)) AS BIGINT) AS w,
         |    CAST(128 + ascii(substr(md5(text), 2, 1)) AS BIGINT) AS h FROM documents),
         |byar AS (SELECT (w * 1000) // h AS ar_milli, CAST(COUNT(*) AS BIGINT) AS n,
@@ -4842,10 +4277,10 @@ object SparkEntry {
         |  CAST(MIN(ar_milli) AS BIGINT) AS min_ar, CAST(MAX(ar_milli) AS BIGINT) AS max_ar,
         |  CAST(SUM(px) AS BIGINT) AS src_pixels
         |FROM ranked WHERE rk = 1
-        |GROUP BY 1, 2, 3 ORDER BY bucket_ar""".stripMargin,
+        |GROUP BY 1, 2, 3 ORDER BY bucket_ar""".stripMargin),
     // round 12 batch 8: outer attribution join, boilerplate screen,
     // clustering-depth audit, vault key rotation, hard negatives
-    "stream_event_join_outer" ->
+    Op("stream_event_join_outer", Streams.eventJoinOuterBatch,
       """WITH e AS (SELECT event_id, user_id, event_type, epoch_us(CAST(ts AS TIMESTAMP)) AS us FROM events),
         |c AS (SELECT event_id AS click_id, user_id, us AS click_us FROM e WHERE event_type = 'click'),
         |p AS (SELECT event_id AS purchase_id, user_id AS p_user, us AS purchase_us FROM e WHERE event_type = 'purchase')
@@ -4854,8 +4289,8 @@ object SparkEntry {
         |  CAST(CASE WHEN purchase_id IS NULL THEN 0 ELSE 1 END AS BIGINT) AS matched
         |FROM c LEFT JOIN p ON c.user_id = p.p_user
         |  AND purchase_us > click_us AND purchase_us <= click_us + 3600000000
-        |ORDER BY user_id, click_id, purchase_id""".stripMargin,
-    "text_boilerplate" ->
+        |ORDER BY user_id, click_id, purchase_id""".stripMargin),
+    Op("text_boilerplate", TextOps.boilerplate,
       """WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
         |seg AS (SELECT doc_id, md5(array_to_string(ws[i*8+1 : i*8+8], ' ')) AS h
         |  FROM w, (SELECT unnest(range(0, 16)) AS i) g
@@ -4866,8 +4301,8 @@ object SparkEntry {
         |  FROM seg GROUP BY doc_id)
         |SELECT doc_id, n_segs, n_boiler,
         |  CAST((n_boiler * 10000) // n_segs AS BIGINT) AS boiler_bp
-        |FROM d WHERE n_boiler > 0 ORDER BY doc_id""".stripMargin,
-    "layout_cluster_depth" ->
+        |FROM d WHERE n_boiler > 0 ORDER BY doc_id""".stripMargin),
+    Op("layout_cluster_depth", Analytics.layoutClusterDepth,
       """WITH f AS (SELECT CAST(year(l_shipdate)*10000 + month(l_shipdate)*100 + day(l_shipdate) AS BIGINT) AS file_key,
         |    CAST(MIN(l_orderkey) AS BIGINT) AS rmin, CAST(MAX(l_orderkey) AS BIGINT) AS rmax
         |  FROM lineitem GROUP BY 1),
@@ -4880,8 +4315,8 @@ object SparkEntry {
         |SELECT CAST(depth AS BIGINT) AS depth, CAST(COUNT(*) AS BIGINT) AS n_segments,
         |  CAST(SUM(span) AS BIGINT) AS span_keys,
         |  CAST((SUM(span) * 10000) // MAX(covered) AS BIGINT) AS span_bp
-        |FROM segs CROSS JOIN t GROUP BY depth ORDER BY depth""".stripMargin,
-    "dlp_vault_rotation" ->
+        |FROM segs CROSS JOIN t GROUP BY depth ORDER BY depth""".stripMargin),
+    Op("dlp_vault_rotation", DlpQueries.dlpVaultRotation,
       """WITH rows_t AS (SELECT c_custkey, 'TOK_' || substr(sha256('det-key:' || c_name), 1, 32) AS old_token FROM customer),
         |rot AS (SELECT DISTINCT 'TOK_' || substr(sha256('det-key:' || c_name), 1, 32) AS old_token,
         |    'TOK_' || substr(sha256('det-key-v2:' || c_name), 1, 32) AS new_token FROM customer),
@@ -4889,8 +4324,8 @@ object SparkEntry {
         |  FROM rows_t JOIN rot USING (old_token) GROUP BY 1, 2)
         |SELECT old_token, new_token, n_rows,
         |  CAST(CASE WHEN COUNT(*) OVER (PARTITION BY new_token) > 1 THEN 1 ELSE 0 END AS BIGINT) AS collided
-        |FROM g ORDER BY old_token""".stripMargin,
-    "sample_hard_negatives" ->
+        |FROM g ORDER BY old_token""".stripMargin),
+    Op("sample_hard_negatives", Ann.hardNegatives,
       (s"""WITH e AS (SELECT vec_id, CAST(label AS BIGINT) AS label,
          |    CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
          |cent AS (SELECT vec_id AS cent_id, emb AS ce FROM e WHERE vec_id < 8),
@@ -4907,10 +4342,10 @@ object SparkEntry {
          |  CAST(CASE WHEN pos.c_pos IS NULL OR r.c >= pos.c_pos THEN 1 ELSE 0 END AS BIGINT) AS is_hard,
          |  CAST(FLOOR((r.c - pos.c_pos) * 1000000) AS BIGINT) AS margin_u
          |FROM r LEFT JOIN pos USING (query_id) WHERE rank <= 5
-         |ORDER BY query_id, rank""".stripMargin),
+         |ORDER BY query_id, rank""".stripMargin)),
     // round 12 batch 9: drawdown risk, lexical richness, residual
     // scan, cluster medoid election, state-store sizing
-    "q_max_drawdown" ->
+    Op("q_max_drawdown", Analytics.qMaxDrawdown,
       """WITH d AS (SELECT o_orderpriority,
         |    epoch_us(CAST(o_orderdate AS TIMESTAMP)) // 86400000000 AS dn,
         |    CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT) AS rev_c
@@ -4925,16 +4360,16 @@ object SparkEntry {
         |  CAST(MAX(peak_c) AS BIGINT) AS peak_rev_c,
         |  CAST(MAX(dd_bp) AS BIGINT) AS max_dd_bp,
         |  CAST(MIN(CASE WHEN dd_bp = mx THEN dn END) AS BIGINT) AS dd_day
-        |FROM dd2 GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-    "text_hapax_ratio" ->
+        |FROM dd2 GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin),
+    Op("text_hapax_ratio", TextOps.hapaxRatio,
       """WITH tf AS (SELECT source, w AS term, CAST(COUNT(*) AS BIGINT) AS n
         |  FROM (SELECT source, unnest(string_split(text, ' ')) AS w FROM documents) u GROUP BY 1, 2)
         |SELECT source, CAST(SUM(n) AS BIGINT) AS n_tokens, CAST(COUNT(*) AS BIGINT) AS n_types,
         |  CAST(SUM(CASE WHEN n = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_hapax,
         |  CAST((SUM(CASE WHEN n = 1 THEN 1 ELSE 0 END) * 10000) // COUNT(*) AS BIGINT) AS hapax_bp,
         |  CAST((COUNT(*) * 10000) // SUM(n) AS BIGINT) AS ttr_bp
-        |FROM tf GROUP BY source ORDER BY source""".stripMargin,
-    "dlp_residual_scan" ->
+        |FROM tf GROUP BY source ORDER BY source""".stripMargin),
+    Op("dlp_residual_scan", DlpQueries.dlpResidualScan,
       (s"""WITH t AS (SELECT c_mktsegment, $ContactSql AS contact FROM customer),
          |r AS (SELECT c_mktsegment, contact,
          |    regexp_replace(contact, '$EmailReSql|$PhoneReSql', '[REDACTED]', 'g') AS red FROM t)
@@ -4943,8 +4378,8 @@ object SparkEntry {
          |  CAST(SUM(length(contact)) AS BIGINT) AS chars_before,
          |  CAST(SUM(length(red)) AS BIGINT) AS chars_after,
          |  CAST(((SUM(length(contact)) - SUM(length(red))) * 10000) // SUM(length(contact)) AS BIGINT) AS delta_bp
-         |FROM r GROUP BY 1 ORDER BY 1""".stripMargin),
-    "dedup_cluster_medoid" ->
+         |FROM r GROUP BY 1 ORDER BY 1""".stripMargin)),
+    Op("dedup_cluster_medoid", Dedup.clusterMedoid,
       (s"""WITH RECURSIVE $GramsCte,
          |$SigCte,
          |bands AS (
@@ -4973,8 +4408,8 @@ object SparkEntry {
          |  FROM comp c JOIN sc USING (doc_id))
          |SELECT m.comp AS comp_id, s.n_members, m.doc_id AS medoid_doc,
          |  m.degree AS medoid_degree, m.score_bp AS medoid_score_bp
-         |FROM m JOIN sizes s ON s.comp = m.comp WHERE rk = 1 ORDER BY comp_id""".stripMargin),
-    "stream_state_size" ->
+         |FROM m JOIN sizes s ON s.comp = m.comp WHERE rk = 1 ORDER BY comp_id""".stripMargin)),
+    Op("stream_state_size", Streams.stateSizeBatch,
       """WITH e AS (SELECT user_id, CAST(floor(epoch(CAST(ts AS TIMESTAMP))) AS BIGINT) AS sec FROM events),
         |b AS (SELECT user_id, ((sec // 3600) + 1) * 3600 AS hb,
         |    CASE WHEN sec % 3600 >= 1800 THEN 1 ELSE 0 END AS in_tail FROM e),
@@ -4982,10 +4417,10 @@ object SparkEntry {
         |SELECT TIMESTAMP '1970-01-01 00:00:00' + INTERVAL (hb) SECOND AS hour_end,
         |  CAST(COUNT(*) AS BIGINT) AS n_users, CAST(SUM(live) AS BIGINT) AS n_live,
         |  CAST((SUM(live) * 10000) // COUNT(*) AS BIGINT) AS live_bp
-        |FROM g GROUP BY hb ORDER BY hour_end""".stripMargin,
+        |FROM g GROUP BY hb ORDER BY hour_end""".stripMargin),
     // round 12 batch 10: runs test, discount elasticity, audio
     // framing plan, watermark sweep, key-space completeness
-    "q_runs_test" ->
+    Op("q_runs_test", Analytics.qRunsTest,
       """WITH d AS (SELECT epoch_us(CAST(o_orderdate AS TIMESTAMP)) // 86400000000 AS dn,
         |    CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT) AS rev
         |  FROM orders GROUP BY 1),
@@ -4998,8 +4433,8 @@ object SparkEntry {
         |  CAST(SUM(1 - s) AS BIGINT) AS n_below, CAST(SUM(chg) AS BIGINT) AS n_runs,
         |  CAST(100 + (200 * SUM(s) * SUM(1 - s)) // COUNT(*) AS BIGINT) AS e_runs_c,
         |  CAST(SUM(chg) * 100 - (100 + (200 * SUM(s) * SUM(1 - s)) // COUNT(*)) AS BIGINT) AS delta_c
-        |FROM c""".stripMargin,
-    "q_discount_elasticity" ->
+        |FROM c""".stripMargin),
+    Op("q_discount_elasticity", Analytics.qDiscountElasticity,
       """WITH l AS (SELECT CAST(CAST(l_discount AS DECIMAL(18,2)) * 100 AS BIGINT) AS disc_pct,
         |    CAST(CAST(l_quantity AS DECIMAL(18,2)) * 100 AS BIGINT) AS qty_c,
         |    (CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT) *
@@ -5010,8 +4445,8 @@ object SparkEntry {
         |t AS (SELECT CAST(SUM(rev_c) AS BIGINT) AS tot FROM g)
         |SELECT disc_pct, n_lines, qty_c, CAST(qty_c // n_lines AS BIGINT) AS avg_qty_c, rev_c,
         |  CAST((rev_c * 10000) // tot AS BIGINT) AS rev_share_bp
-        |FROM g CROSS JOIN t ORDER BY disc_pct""".stripMargin,
-    "mm_audio_window_plan" ->
+        |FROM g CROSS JOIN t ORDER BY disc_pct""".stripMargin),
+    Op("mm_audio_window_plan", Multimodal.audioWindowPlan,
       """WITH a AS (SELECT doc_id, CAST(octet_length(encode(text)) AS BIGINT) AS data_bytes
         |  FROM documents WHERE doc_id % 3 = 2),
         |b AS (SELECT doc_id, data_bytes, data_bytes // 32 AS dur_ms FROM a),
@@ -5019,8 +4454,8 @@ object SparkEntry {
         |    CASE WHEN dur_ms >= 25 THEN 1 + (dur_ms - 25) // 10 ELSE 0 END AS n_frames FROM b)
         |SELECT doc_id, data_bytes, dur_ms, CAST(n_frames AS BIGINT) AS n_frames,
         |  CAST((n_frames + 63) // 64 AS BIGINT) AS n_batches
-        |FROM c ORDER BY doc_id""".stripMargin,
-    "stream_late_sweep" ->
+        |FROM c ORDER BY doc_id""".stripMargin),
+    Op("stream_late_sweep", Streams.lateSweepBatch,
       """WITH e AS (SELECT event_id, user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us FROM events),
         |h AS (SELECT us, MAX(us) OVER (PARTITION BY user_id ORDER BY event_id
         |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS hwm FROM e),
@@ -5034,22 +4469,22 @@ object SparkEntry {
         |FROM (SELECT 5 AS delay_min, n_events, d5 AS n_dropped FROM a
         |  UNION ALL SELECT 10, n_events, d10 FROM a
         |  UNION ALL SELECT 30, n_events, d30 FROM a) u
-        |ORDER BY delay_min""".stripMargin,
-    "ingest_pk_completeness" ->
+        |ORDER BY delay_min""".stripMargin),
+    Op("ingest_pk_completeness", SourceQueries.ingestPkCompleteness,
       """SELECT CAST(o_orderkey // 1024 AS BIGINT) AS bucket, CAST(COUNT(*) AS BIGINT) AS n_rows,
         |  CAST(COUNT(DISTINCT o_orderkey) AS BIGINT) AS n_keys,
         |  CAST(MIN(o_orderkey) AS BIGINT) AS k_min, CAST(MAX(o_orderkey) AS BIGINT) AS k_max,
         |  CAST((MAX(o_orderkey) - MIN(o_orderkey) + 1) - COUNT(DISTINCT o_orderkey) AS BIGINT) AS n_missing,
         |  CAST(CASE WHEN (MAX(o_orderkey) - MIN(o_orderkey) + 1) = COUNT(DISTINCT o_orderkey) THEN 1 ELSE 0 END AS BIGINT) AS complete
-        |FROM orders GROUP BY 1 ORDER BY bucket""".stripMargin,
+        |FROM orders GROUP BY 1 ORDER BY bucket""".stripMargin),
     // round 12 batch 11: dynamic partition overwrite, constraint
     // gate, order fan-out, pair-sim histogram, PQ distortion
-    "load_dynamic_overwrite" ->
+    Op("load_dynamic_overwrite", SourceQueries.loadDynamicOverwrite,
       """SELECT o_orderstatus, CAST(COUNT(*) AS BIGINT) AS n_rows,
         |  CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) *
         |    CASE WHEN o_orderstatus = 'F' THEN 2 ELSE 1 END) AS BIGINT) AS total_c
-        |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin,
-    "load_constraint_check" ->
+        |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin),
+    Op("load_constraint_check", SourceQueries.loadConstraintCheck,
       """WITH a AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_checked,
         |  CAST(SUM(CASE WHEN o_orderkey IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS v1,
         |  CAST(SUM(CASE WHEN o_totalprice <= 0 THEN 1 ELSE 0 END) AS BIGINT) AS v2,
@@ -5066,16 +4501,16 @@ object SparkEntry {
         |  UNION ALL SELECT 'o_orderpriority_domain', n_checked, v4 FROM a
         |  UNION ALL SELECT 'o_custkey_not_null', n_checked, v5 FROM a
         |  UNION ALL SELECT 'o_orderdate_in_range', n_checked, v6 FROM a) u
-        |ORDER BY rule""".stripMargin,
-    "q_order_linecount_dist" ->
+        |ORDER BY rule""".stripMargin),
+    Op("q_order_linecount_dist", Analytics.qOrderLinecountDist,
       """WITH c AS (SELECT l_orderkey, CAST(COUNT(*) AS BIGINT) AS n_lines FROM lineitem GROUP BY 1),
         |h AS (SELECT n_lines, CAST(COUNT(*) AS BIGINT) AS n_orders FROM c GROUP BY 1),
         |t AS (SELECT CAST(SUM(n_orders) AS BIGINT) AS tot_o, CAST(SUM(n_orders * n_lines) AS BIGINT) AS tot_l FROM h)
         |SELECT n_lines, n_orders,
         |  CAST((n_orders * 10000) // tot_o AS BIGINT) AS order_share_bp,
         |  CAST((n_orders * n_lines * 10000) // tot_l AS BIGINT) AS line_share_bp
-        |FROM h CROSS JOIN t ORDER BY n_lines""".stripMargin,
-    "dedup_pair_sim_histogram" ->
+        |FROM h CROSS JOIN t ORDER BY n_lines""".stripMargin),
+    Op("dedup_pair_sim_histogram", Dedup.pairSimHistogram,
       (s"""WITH $GramsCte,
          |$SigCte,
          |bands AS (
@@ -5093,8 +4528,8 @@ object SparkEntry {
          |t AS (SELECT CAST(SUM(n_pairs) AS BIGINT) AS tot FROM b)
          |SELECT CAST(band AS BIGINT) AS band, CAST(band * 500 AS BIGINT) AS band_lo_bp, n_pairs,
          |  CAST((n_pairs * 10000) // tot AS BIGINT) AS share_bp, min_bp, max_bp
-         |FROM b CROSS JOIN t ORDER BY band""".stripMargin),
-    "ann_pq_distortion" ->
+         |FROM b CROSS JOIN t ORDER BY band""".stripMargin)),
+    Op("ann_pq_distortion", Ann.pqDistortion,
       (s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
          |cent AS (SELECT vec_id AS cent_id, emb AS ce FROM e WHERE vec_id < 8),
          |d AS (SELECT e.vec_id, ${duckSqL2("emb", "ce", 1)} AS d0, ${duckSqL2("emb", "ce", 17)} AS d1,
@@ -5108,10 +4543,10 @@ object SparkEntry {
          |SELECT CAST(subspace AS BIGINT) AS subspace, CAST(COUNT(*) AS BIGINT) AS n_vecs,
          |  CAST(SUM(err_u) AS BIGINT) AS sum_err_u, CAST(SUM(err_u) // COUNT(*) AS BIGINT) AS avg_err_u,
          |  CAST(MAX(err_u) AS BIGINT) AS max_err_u
-         |FROM u GROUP BY 1 ORDER BY subspace""".stripMargin),
+         |FROM u GROUP BY 1 ORDER BY subspace""".stripMargin)),
     // round 12 batch 12: rank-ratio windows, activity streaks,
     // weighted median, chi-square audit, rolling median, readability
-    "q_percent_rank" ->
+    Op("q_percent_rank", Analytics.qPercentRank,
       """WITH rev AS (SELECT l_suppkey,
         |    CAST(SUM(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT) AS rev_c
         |  FROM lineitem GROUP BY 1),
@@ -5123,8 +4558,8 @@ object SparkEntry {
         |    CAST(ROUND(cume_dist() OVER (PARTITION BY nation ORDER BY rev_c) * 10000) AS BIGINT) AS cd_bp
         |  FROM s)
         |SELECT nation, s_suppkey, rev_c, pr_bp, cd_bp FROM r
-        |WHERE cd_bp >= 9000 ORDER BY nation, rev_c, s_suppkey""".stripMargin,
-    "q_streaks" ->
+        |WHERE cd_bp >= 9000 ORDER BY nation, rev_c, s_suppkey""".stripMargin),
+    Op("q_streaks", Analytics.qStreaks,
       """WITH d AS (SELECT DISTINCT user_id,
         |    epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS dn FROM events),
         |i AS (SELECT user_id, dn,
@@ -5135,8 +4570,8 @@ object SparkEntry {
         |    CAST(SUM(len) AS BIGINT) AS active_days FROM runs GROUP BY 1)
         |SELECT longest, CAST(COUNT(*) AS BIGINT) AS n_users,
         |  CAST(SUM(active_days) AS BIGINT) AS user_days
-        |FROM u GROUP BY 1 ORDER BY longest""".stripMargin,
-    "q_weighted_median" ->
+        |FROM u GROUP BY 1 ORDER BY longest""".stripMargin),
+    Op("q_weighted_median", Analytics.qWeightedMedian,
       """WITH v AS (SELECT l_returnflag,
         |    CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS price_c,
         |    CAST(SUM(CAST(CAST(l_quantity AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT) AS w
@@ -5147,8 +4582,8 @@ object SparkEntry {
         |    SUM(w) OVER (PARTITION BY l_returnflag) AS tot FROM v)
         |SELECT l_returnflag, CAST(MIN(tot) AS BIGINT) AS total_w,
         |  CAST(MIN(price_c) AS BIGINT) AS wmedian_price_c
-        |FROM c WHERE cum * 2 >= tot GROUP BY 1 ORDER BY l_returnflag""".stripMargin,
-    "q_chi_square" ->
+        |FROM c WHERE cum * 2 >= tot GROUP BY 1 ORDER BY l_returnflag""".stripMargin),
+    Op("q_chi_square", Analytics.qChiSquare,
       """WITH cell AS (SELECT o_orderpriority, o_orderstatus,
         |    CAST(COUNT(*) AS BIGINT) AS obs FROM orders GROUP BY 1, 2),
         |m AS (SELECT o_orderpriority, o_orderstatus, obs,
@@ -5163,8 +4598,8 @@ object SparkEntry {
         |SELECT o_orderpriority, o_orderstatus, obs, CAST(exp_f AS BIGINT) AS exp_f,
         |  CAST(contrib_micro AS BIGINT) AS contrib_micro,
         |  CAST(SUM(contrib_micro) OVER () AS BIGINT) AS chi2_micro
-        |FROM k ORDER BY o_orderpriority, o_orderstatus""".stripMargin,
-    "q_moving_median" ->
+        |FROM k ORDER BY o_orderpriority, o_orderstatus""".stripMargin),
+    Op("q_moving_median", Analytics.qMovingMedian,
       """WITH daily AS (SELECT o_orderpriority,
         |    CAST(floor(epoch(CAST(o_orderdate AS TIMESTAMP))) AS BIGINT) // 86400 AS dn,
         |    CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT) AS rev_c
@@ -5175,8 +4610,8 @@ object SparkEntry {
         |FROM daily
         |WINDOW w7 AS (PARTITION BY o_orderpriority ORDER BY dn
         |  ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)
-        |ORDER BY o_orderpriority, dn""".stripMargin,
-    "text_readability" ->
+        |ORDER BY o_orderpriority, dn""".stripMargin),
+    Op("text_readability", TextOps.readability,
       """WITH d AS (SELECT source,
         |    GREATEST(len(regexp_extract_all(text, '\S+')), 1) AS w,
         |    GREATEST(len(regexp_extract_all(text, '[.!?]+')), 1) AS s,
@@ -5195,10 +4630,10 @@ object SparkEntry {
         |    ELSE -((-sum_milli) // n_docs) END AS BIGINT) AS mean_score_milli,
         |  CAST((n_easy * 10000) // n_docs AS BIGINT) AS easy_bp,
         |  CAST((n_hard * 10000) // n_docs AS BIGINT) AS hard_bp
-        |FROM g ORDER BY source""".stripMargin,
+        |FROM g ORDER BY source""".stripMargin),
     // round 12 batch 13: seasonal index, MAD outliers, degree
     // distribution, noise-injected release, label concentration
-    "q_seasonal_index" ->
+    Op("q_seasonal_index", Analytics.qSeasonalIndex,
       """WITH m AS (SELECT CAST(month(CAST(o_orderdate AS TIMESTAMP)) AS BIGINT) AS month,
         |    CAST(COUNT(*) AS BIGINT) AS n_orders,
         |    CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT) AS rev_c
@@ -5207,8 +4642,8 @@ object SparkEntry {
         |SELECT month, n_orders, rev_c,
         |  CAST((rev_c * 10000) // tot AS BIGINT) AS share_bp,
         |  CAST((rev_c * 120000) // tot AS BIGINT) AS index_bp
-        |FROM m CROSS JOIN t ORDER BY month""".stripMargin,
-    "q_mad_outliers" ->
+        |FROM m CROSS JOIN t ORDER BY month""".stripMargin),
+    Op("q_mad_outliers", Analytics.qMadOutliers,
       """WITH daily AS (SELECT o_orderpriority,
         |    CAST(floor(epoch(CAST(o_orderdate AS TIMESTAMP))) AS BIGINT) // 86400 AS dn,
         |    CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT) AS rev_c
@@ -5233,8 +4668,8 @@ object SparkEntry {
         |  CAST(SUM(CASE WHEN dev_c > mad_c * 3 THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers,
         |  CAST(MIN(CASE WHEN dev_c = mx THEN dn END) AS BIGINT) AS worst_dn,
         |  CAST(MAX(dev_c) AS BIGINT) AS worst_dev_c
-        |FROM j GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-    "q_degree_dist" ->
+        |FROM j GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin),
+    Op("q_degree_dist", Analytics.qDegreeDist,
       """WITH e AS (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem),
         |p AS (SELECT l_partkey, CAST(COUNT(*) AS BIGINT) AS degree FROM e GROUP BY 1),
         |s AS (SELECT l_suppkey, CAST(COUNT(*) AS BIGINT) AS degree FROM e GROUP BY 1),
@@ -5242,8 +4677,8 @@ object SparkEntry {
         |  UNION ALL SELECT 'supplier', degree, CAST(COUNT(*) AS BIGINT) FROM s GROUP BY 2)
         |SELECT side, degree, n_nodes,
         |  CAST((n_nodes * 10000) // SUM(n_nodes) OVER (PARTITION BY side) AS BIGINT) AS node_share_bp
-        |FROM h ORDER BY side, degree""".stripMargin,
-    "dlp_noise_counts" ->
+        |FROM h ORDER BY side, degree""".stripMargin),
+    Op("dlp_noise_counts", DlpQueries.dlpNoiseCounts,
       """WITH cell AS (SELECT c_mktsegment AS segment, CAST(c_nationkey AS BIGINT) AS nation,
         |    CAST(COUNT(*) AS BIGINT) AS true_n FROM customer GROUP BY 1, 2),
         |nz AS (SELECT segment, nation, true_n,
@@ -5254,8 +4689,8 @@ object SparkEntry {
         |  CAST(GREATEST(true_n + noise, 0) AS BIGINT) AS noisy_n,
         |  CAST(abs(GREATEST(true_n + noise, 0) - true_n) AS BIGINT) AS abs_err,
         |  CAST((abs(GREATEST(true_n + noise, 0) - true_n) * 10000) // GREATEST(true_n, 1) AS BIGINT) AS err_bp
-        |FROM nz ORDER BY segment, nation""".stripMargin,
-    "embed_spherical_variance" ->
+        |FROM nz ORDER BY segment, nation""".stripMargin),
+    Op("embed_spherical_variance", Ann.sphericalVariance,
       """WITH e AS (SELECT CAST(label AS BIGINT) AS label, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
         |q AS (SELECT label, CAST(i AS BIGINT) AS pos,
         |    CAST(CAST(emb[i] AS DECIMAL(9,3)) * 1000 AS BIGINT) AS vm
@@ -5269,8 +4704,8 @@ object SparkEntry {
         |  FROM e GROUP BY 1)
         |SELECT label, n_vecs, r2, norm2,
         |  CAST((r2 * 10000) // (n_vecs * norm2) AS BIGINT) AS concentration_bp
-        |FROM g JOIN n ON label = l2 ORDER BY label""".stripMargin,
-    "q_spearman_rho" ->
+        |FROM g JOIN n ON label = l2 ORDER BY label""".stripMargin),
+    Op("q_spearman_rho", Analytics.qSpearmanRho,
       """WITH s AS (SELECT l_suppkey,
         |    CAST(SUM(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT) AS rev_c,
         |    CAST(COUNT(*) AS BIGINT) AS vol FROM lineitem GROUP BY 1),
@@ -5284,8 +4719,8 @@ object SparkEntry {
         |  CAST(SUM((r_rev - r_vol) * (r_rev - r_vol)) AS BIGINT) AS sum_d2,
         |  CAST(10000 - (60000 * SUM((r_rev - r_vol) * (r_rev - r_vol)))
         |    // (COUNT(*) * (COUNT(*) * COUNT(*) - 1)) AS BIGINT) AS rho_bp
-        |FROM r GROUP BY 1 HAVING COUNT(*) >= 2 ORDER BY nation""".stripMargin,
-    "q_bowley_skew" ->
+        |FROM r GROUP BY 1 HAVING COUNT(*) >= 2 ORDER BY nation""".stripMargin),
+    Op("q_bowley_skew", Analytics.qBowleySkew,
       """WITH daily AS (SELECT o_orderpriority,
         |    CAST(floor(epoch(CAST(o_orderdate AS TIMESTAMP))) AS BIGINT) // 86400 AS dn,
         |    CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT) AS rev_c
@@ -5305,8 +4740,8 @@ object SparkEntry {
         |      THEN -(((2 * q2_c - q3_c - q1_c) * 10000) // (q3_c - q1_c))
         |    ELSE ((q3_c + q1_c - 2 * q2_c) * 10000) // (q3_c - q1_c)
         |  END AS BIGINT) AS skew_bp
-        |FROM q ORDER BY o_orderpriority""".stripMargin,
-    "q_mix_shift" ->
+        |FROM q ORDER BY o_orderpriority""".stripMargin),
+    Op("q_mix_shift", Analytics.qMixShift,
       """WITH m AS (SELECT CAST(year(o_orderdate) AS BIGINT) AS yr, o_orderpriority,
         |    CAST(COUNT(*) AS BIGINT) AS n FROM orders GROUP BY 1, 2),
         |s AS (SELECT yr, o_orderpriority, n,
@@ -5317,8 +4752,8 @@ object SparkEntry {
         |SELECT yr AS year, CAST(MAX(n_year) AS BIGINT) AS n_orders,
         |  CAST(COUNT(*) AS BIGINT) AS n_priorities,
         |  CAST(SUM(abs(share_bp - prev_bp)) // 2 AS BIGINT) AS tvd_bp
-        |FROM lg WHERE prev_bp IS NOT NULL GROUP BY 1 ORDER BY year""".stripMargin,
-    "dlp_infotype_cooccurrence" ->
+        |FROM lg WHERE prev_bp IS NOT NULL GROUP BY 1 ORDER BY year""".stripMargin),
+    Op("dlp_infotype_cooccurrence", DlpQueries.dlpInfotypeCooccurrence,
       s"""WITH subj AS (SELECT
          |    (CASE WHEN c_custkey % 3 > 0
          |       THEN 'user' || CAST(c_custkey AS VARCHAR) || '@example.com ' ELSE '' END) ||
@@ -5347,8 +4782,8 @@ object SparkEntry {
          |  CAST((n_both * 10000) // n_records AS BIGINT) AS joint_bp,
          |  CAST(CASE WHEN n_a * n_b = 0 THEN 0
          |    ELSE (n_both * n_records * 10000) // (n_a * n_b) END AS BIGINT) AS lift_bp
-         |FROM u ORDER BY type_a, type_b""".stripMargin,
-    "text_dup_ngrams" ->
+         |FROM u ORDER BY type_a, type_b""".stripMargin),
+    Op("text_dup_ngrams", TextOps.dupNgrams,
       """WITH w AS (SELECT doc_id, source, string_split(text, ' ') AS ws FROM documents),
         |g AS (SELECT doc_id, source, ws[i] || ' ' || ws[i+1] AS gram
         |  FROM w, (SELECT unnest(range(1, 256)) AS i) t WHERE len(ws) >= i + 1),
@@ -5360,8 +4795,8 @@ object SparkEntry {
         |  CAST((SUM(dup_occ) * 10000) // SUM(n_grams) AS BIGINT) AS dup_bp,
         |  CAST((SUM(CASE WHEN dup_occ * 10000 > n_grams * 2000 THEN 1 ELSE 0 END) * 10000)
         |    // COUNT(*) AS BIGINT) AS flagged_bp
-        |FROM d GROUP BY 1 ORDER BY source""".stripMargin,
-    "stream_concurrency_curve" ->
+        |FROM d GROUP BY 1 ORDER BY source""".stripMargin),
+    Op("stream_concurrency_curve", Streams.concurrencyCurveBatch,
       """WITH e AS (SELECT user_id, event_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us FROM events),
         |s AS (SELECT user_id, event_id, us,
         |    CASE WHEN lag(us) OVER w IS NULL OR us - lag(us) OVER w > 1800000000 THEN 1 ELSE 0 END AS new_s
@@ -5381,10 +4816,10 @@ object SparkEntry {
         |SELECT CAST((m // 60) * 3600 AS BIGINT) AS hour_start_s, CAST(COUNT(*) AS BIGINT) AS n_minutes,
         |  CAST(MAX(depth) AS BIGINT) AS peak, CAST(SUM(depth) // COUNT(*) AS BIGINT) AS mean_depth,
         |  CAST(SUM(n_starts) AS BIGINT) AS n_starts
-        |FROM cum GROUP BY m // 60 ORDER BY hour_start_s""".stripMargin,
+        |FROM cum GROUP BY m // 60 ORDER BY hour_start_s""".stripMargin),
     // round 12 batch 15: Gini–Simpson brand diversity — no-log
     // diversity stays in exact integer math (the §6 rule)
-    "q_simpson_diversity" ->
+    Op("q_simpson_diversity", Analytics.qSimpsonDiversity,
       """WITH mix AS (SELECT CAST(s_nationkey AS BIGINT) AS nation, p_brand,
         |    CAST(COUNT(*) AS BIGINT) AS n
         |  FROM lineitem JOIN part ON l_partkey = p_partkey
@@ -5393,10 +4828,10 @@ object SparkEntry {
         |  CAST(COUNT(*) AS BIGINT) AS n_brands,
         |  CAST(10000 - (10000 * SUM(n * n)) // (SUM(n) * SUM(n)) AS BIGINT) AS diversity_bp,
         |  CAST((100 * SUM(n) * SUM(n)) // SUM(n * n) AS BIGINT) AS eff_brands_x100
-        |FROM mix GROUP BY nation ORDER BY nation""".stripMargin,
+        |FROM mix GROUP BY nation ORDER BY nation""".stripMargin),
     // price-volume-mix bridge: unit price floors land in resid_c so
     // the waterfall reconciles EXACTLY in integer arithmetic
-    "q_price_volume_mix" ->
+    Op("q_price_volume_mix", Analytics.qPriceVolumeMix(_, _),
       """WITH by AS (SELECT p_brand, CAST(year(l_shipdate) AS BIGINT) AS yr,
         |    CAST(SUM(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT) AS rev_c,
         |    CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS qty
@@ -5413,10 +4848,10 @@ object SparkEntry {
         |  CAST((p1 - p0) * (qty1 - qty0) AS BIGINT) AS cross_eff_c,
         |  CAST((rev1 - rev0) - qty0 * (p1 - p0) - p0 * (qty1 - qty0)
         |    - (p1 - p0) * (qty1 - qty0) AS BIGINT) AS resid_c
-        |FROM s0 JOIN s1 USING (p_brand) ORDER BY p_brand""".stripMargin,
+        |FROM s0 JOIN s1 USING (p_brand) ORDER BY p_brand""".stripMargin),
     // new-vs-repeat revenue: first order resolved by (day, orderkey)
     // rank — deterministic same-day tiebreak on both engines
-    "q_new_vs_repeat" ->
+    Op("q_new_vs_repeat", Analytics.qNewVsRepeat,
       """WITH o AS (SELECT o_orderkey, o_custkey,
         |    CAST(floor(epoch(CAST(o_orderdate AS TIMESTAMP))) AS BIGINT) // 86400 AS dn,
         |    CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS rev_c
@@ -5431,13 +4866,13 @@ object SparkEntry {
         |  CAST(SUM(CASE WHEN o_orderkey <> first_key THEN rev_c ELSE 0 END) AS BIGINT) AS repeat_rev_c,
         |  CAST((SUM(CASE WHEN o_orderkey <> first_key THEN rev_c ELSE 0 END) * 10000)
         |    // SUM(rev_c) AS BIGINT) AS repeat_share_bp
-        |FROM o JOIN f ON o_custkey = fc GROUP BY dn // 30 ORDER BY month_start_dn""".stripMargin,
+        |FROM o JOIN f ON o_custkey = fc GROUP BY dn // 30 ORDER BY month_start_dn""".stripMargin),
     // 1-bit Hamming top-k: bit 63's place value is Long.MinValue added
     // as a literal (1<<63 overflows DuckDB's shift); the % 63 keeps
     // the unselected CASE branch in shift range even under eager
     // vectorized evaluation. list_sum promotes to HUGEINT internally
     // and the cast back to BIGINT is exact by construction.
-    "embed_hamming_topk" ->
+    Op("embed_hamming_topk", Ann.hammingTopk,
       """WITH p AS (SELECT vec_id, CAST(list_sum(list_transform(range(1, 65),
         |    i -> CASE WHEN embedding[i] > 0 THEN
         |           (CASE WHEN i = 64 THEN CAST(-9223372036854775808 AS BIGINT)
@@ -5451,10 +4886,10 @@ object SparkEntry {
         |    CAST(row_number() OVER (PARTITION BY query_id ORDER BY hamming, vec_id) AS BIGINT) AS rank
         |  FROM d)
         |SELECT query_id, rank, vec_id AS neighbor_id, hamming
-        |FROM r WHERE rank <= 10 ORDER BY query_id, rank""".stripMargin,
+        |FROM r WHERE rank <= 10 ORDER BY query_id, rank""".stripMargin),
     // absence timeout: purchase strictly after the view, at most 30
     // minutes later — (vus, vus+T], per-user join fan-out only
-    "stream_absence_timeout" ->
+    Op("stream_absence_timeout", Streams.absenceTimeout(_, _),
       """WITH e AS (SELECT user_id, event_id, event_type,
         |    epoch_us(CAST(ts AS TIMESTAMP)) AS us
         |  FROM events WHERE user_id IS NOT NULL),
@@ -5469,10 +4904,10 @@ object SparkEntry {
         |  CAST(SUM(converted) AS BIGINT) AS n_converted,
         |  CAST(COUNT(*) - SUM(converted) AS BIGINT) AS n_abandoned,
         |  CAST(((COUNT(*) - SUM(converted)) * 10000) // COUNT(*) AS BIGINT) AS abandon_bp
-        |FROM per_view GROUP BY user_id ORDER BY user_id""".stripMargin,
+        |FROM per_view GROUP BY user_id ORDER BY user_id""".stripMargin),
     // truncated-surrogate collision audit: observed vs birthday-bound
     // expected, capacity via shift (16^L = 2^(4L)) — pure integer
-    "dlp_hash_collision_audit" ->
+    Op("dlp_hash_collision_audit", DlpQueries.dlpHashCollisionAudit,
       """WITH h AS (SELECT md5(c_name) AS h FROM customer),
         |x AS (SELECT CAST(pfx_len AS BIGINT) AS pfx_len, h
         |  FROM h, (SELECT unnest([4, 6, 8]) AS pfx_len) l),
@@ -5484,10 +4919,10 @@ object SparkEntry {
         |  CAST(((n_plain - n_tokens) * 10000) // n_plain AS BIGINT) AS collision_bp,
         |  CAST((n_plain * (n_plain - 1) * 100)
         |    // (2 * (CAST(1 AS BIGINT) << CAST(4 * pfx_len AS INT))) AS BIGINT) AS expected_x100
-        |FROM g ORDER BY pfx_len""".stripMargin,
+        |FROM g ORDER BY pfx_len""".stripMargin),
     // round 12 batch 16: binned two-sample KS — exact cross-multiplied
     // ECDF gap (no per-bin division), ties on D break to smallest bin
-    "q_ks_binned" ->
+    Op("q_ks_binned", Analytics.qKsBinned(_, _),
       """WITH b AS (SELECT CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) // 10000 AS bin,
         |    CAST(SUM(CASE WHEN year(o_orderdate) = 1996 THEN 1 ELSE 0 END) AS BIGINT) AS c1,
         |    CAST(SUM(CASE WHEN year(o_orderdate) = 1997 THEN 1 ELSE 0 END) AS BIGINT) AS c2
@@ -5499,10 +4934,10 @@ object SparkEntry {
         |t AS (SELECT CAST(SUM(c1) AS BIGINT) AS n1, CAST(SUM(c2) AS BIGINT) AS n2 FROM b)
         |SELECT n1, n2, CAST(bin AS BIGINT) AS ks_bin,
         |  CAST((abs(cum1 * n2 - cum2 * n1) * 10000) // (n1 * n2) AS BIGINT) AS ks_bp
-        |FROM c, t ORDER BY abs(cum1 * n2 - cum2 * n1) DESC, bin LIMIT 1""".stripMargin,
+        |FROM c, t ORDER BY abs(cum1 * n2 - cum2 * n1) DESC, bin LIMIT 1""".stripMargin),
     // Markov steady state: the quantized power iteration unrolled as
     // 8 CTE steps — every floor of the recurrence mirrored exactly
-    "q_markov_steady" -> {
+    Op("q_markov_steady", Analytics.qMarkovSteady(_, _), {
       val steps = (1 to 8).map(i =>
         s"""it$i AS (SELECT tm.to_type AS state,
            |  CAST(SUM(p.pi_bp * tm.p_bp) // 10000 AS BIGINT) AS pi_bp
@@ -5531,10 +4966,10 @@ object SparkEntry {
          |  CAST(COALESCE(n_out, 0) AS BIGINT) AS n_out
          |FROM it0 i0 LEFT JOIN it8 i8 ON i0.state = i8.state
          |LEFT JOIN nout ON nout.state = i0.state ORDER BY event_type""".stripMargin
-    },
+    }),
     // 1-bit Hamming recall vs exact cosine — same query slice and
     // ground truth as ann_int8_recall (the quantization recall bill)
-    "ann_hamming_recall" ->
+    Op("ann_hamming_recall", Ann.hammingRecall,
       (s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
          |p AS (SELECT vec_id, CAST(list_sum(list_transform(range(1, 65),
          |    i -> CASE WHEN embedding[i] > 0 THEN
@@ -5556,10 +4991,10 @@ object SparkEntry {
          |  CAST(SUM(CASE WHEN ht.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hit,
          |  CAST(SUM(CASE WHEN ht.vec_id IS NOT NULL THEN 1 ELSE 0 END) * 10000 // COUNT(*) AS BIGINT) AS recall_bp
          |FROM et LEFT JOIN ht ON et.query_id = ht.query_id AND et.neighbor_id = ht.vec_id
-         |GROUP BY et.query_id ORDER BY et.query_id""".stripMargin),
+         |GROUP BY et.query_id ORDER BY et.query_id""".stripMargin)),
     // Heaps vocabulary growth: words attributed to the ventile of
     // their FIRST document; 20-row cumulative axis
-    "text_heaps_curve" ->
+    Op("text_heaps_curve", TextOps.heapsCurve(_, _),
       """WITH m AS (SELECT MAX(doc_id) AS maxd FROM documents),
         |fw AS (SELECT word, MIN(doc_id) AS fd FROM
         |    (SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM documents)
@@ -5572,10 +5007,10 @@ object SparkEntry {
         |  CAST(SUM(n_docs) OVER (ORDER BY nd.bucket ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_docs,
         |  CAST(COALESCE(new_words, 0) AS BIGINT) AS new_words,
         |  CAST(SUM(COALESCE(new_words, 0)) OVER (ORDER BY nd.bucket ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_vocab
-        |FROM nd LEFT JOIN nw ON nd.bucket = nw.bucket ORDER BY nd.bucket""".stripMargin,
+        |FROM nd LEFT JOIN nw ON nd.bucket = nw.bucket ORDER BY nd.bucket""".stripMargin),
     // retention sweep: anchor = max order date (data-derived, both
     // engines see the same cutoff), 4-year policy
-    "dlp_retention_sweep" ->
+    Op("dlp_retention_sweep", DlpQueries.dlpRetentionSweep(_, _),
       """WITH o AS (SELECT CAST(year(o_orderdate) AS BIGINT) AS yr,
         |    CAST(floor(epoch(CAST(o_orderdate AS TIMESTAMP))) AS BIGINT) // 86400 AS dn
         |  FROM orders),
@@ -5584,11 +5019,11 @@ object SparkEntry {
         |  CAST(SUM(CASE WHEN dn < amax - 1460 THEN 1 ELSE 0 END) AS BIGINT) AS n_expired,
         |  CAST((SUM(CASE WHEN dn < amax - 1460 THEN 1 ELSE 0 END) * 10000) // COUNT(*) AS BIGINT) AS expired_bp,
         |  CAST(MIN(dn) AS BIGINT) AS first_dn, CAST(MAX(dn) AS BIGINT) AS last_dn
-        |FROM o, a GROUP BY yr ORDER BY year""".stripMargin,
+        |FROM o, a GROUP BY yr ORDER BY year""".stripMargin),
     // round 12 batch 17: winsorized mean — the oracle ranks directly
     // (DuckDB at sf scale); the Spark side uses the two-level
     // bucket-rank decomposition, same exact ranks
-    "q_winsorized_mean" ->
+    Op("q_winsorized_mean", Analytics.qWinsorizedMean,
       """WITH o AS (SELECT o_orderpriority AS prio, o_orderkey,
         |    CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS c
         |  FROM orders),
@@ -5603,10 +5038,10 @@ object SparkEntry {
         |  CAST(SUM(LEAST(GREATEST(c, lo_c), hi_c)) // b.n AS BIGINT) AS winsor_mean_c,
         |  CAST(SUM(c) // b.n AS BIGINT) AS raw_mean_c
         |FROM o JOIN b ON o.prio = b.prio
-        |GROUP BY 1, b.n, lo_c, hi_c ORDER BY o_orderpriority""".stripMargin,
+        |GROUP BY 1, b.n, lo_c, hi_c ORDER BY o_orderpriority""".stripMargin),
     // recursive (c=3, l=2)-diversity: top sensitive band must not
     // dominate the tail; band shifted positive before the DIV
-    "dlp_cl_diversity" ->
+    Op("dlp_cl_diversity", DlpQueries.dlpClDiversity(_, _),
       """WITH bands AS (SELECT CAST(c_nationkey AS BIGINT) AS nation, c_mktsegment,
         |    (CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT) + 100000) // 200000 AS band,
         |    CAST(COUNT(*) AS BIGINT) AS r
@@ -5620,11 +5055,11 @@ object SparkEntry {
         |  CAST(SUM(r) - MAX(CASE WHEN rk = 1 THEN r END) AS BIGINT) AS tail_count,
         |  CAST(CASE WHEN COUNT(*) >= 2 AND MAX(CASE WHEN rk = 1 THEN r END)
         |      < 3 * (SUM(r) - MAX(CASE WHEN rk = 1 THEN r END)) THEN 1 ELSE 0 END AS BIGINT) AS satisfies_cl
-        |FROM rk GROUP BY 1, 2 ORDER BY nation, c_mktsegment""".stripMargin,
+        |FROM rk GROUP BY 1, 2 ORDER BY nation, c_mktsegment""".stripMargin),
     // kNN-distance density outliers: 3rd-NN similarity inside the
     // 8-sign-bit LSH bucket, banded on the SHIFTED bp (cosine can be
     // negative — a negative numerator never meets the DIV)
-    "embed_knn_dist" -> {
+    Op("embed_knn_dist", Ann.knnDist(_, _), {
       val bucket = (1 to 8).map(i =>
         s"(CASE WHEN emb[$i] >= 0 THEN '1' ELSE '0' END)").mkString(" || ")
       s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
@@ -5640,20 +5075,20 @@ object SparkEntry {
          |  CAST(COUNT(*) AS BIGINT) AS n_vectors
          |FROM e LEFT JOIN kth ON e.vec_id = kth.vec_id
          |GROUP BY 1 ORDER BY band""".stripMargin
-    },
+    }),
     // round 12 batch 18: per-partition watermark skew — the stalled-
     // watermark diagnosis; partition proxy = user_id % 8
-    "stream_watermark_skew" ->
+    Op("stream_watermark_skew", Streams.watermarkSkew(_, _),
       """WITH per AS (SELECT user_id % 8 AS part_id, CAST(COUNT(*) AS BIGINT) AS n_events,
         |    CAST(MAX(epoch_us(CAST(ts AS TIMESTAMP))) AS BIGINT) AS last_us
         |  FROM events WHERE user_id IS NOT NULL GROUP BY 1),
         |w AS (SELECT MIN(last_us) AS wm_us FROM per)
         |SELECT CAST(part_id AS BIGINT) AS part_id, n_events, last_us,
         |  CAST(wm_us AS BIGINT) AS wm_us, CAST(last_us - wm_us AS BIGINT) AS lead_us
-        |FROM per, w ORDER BY part_id""".stripMargin,
+        |FROM per, w ORDER BY part_id""".stripMargin),
     // session depth -> conversion value: same 30-min-gap sessionizer
     // the concurrency curve uses, with the purchase-value ledger
-    "stream_session_value" ->
+    Op("stream_session_value", Streams.sessionValue,
       """WITH e AS (SELECT user_id, event_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us,
         |    event_type, CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT) AS v_c
         |  FROM events WHERE user_id IS NOT NULL),
@@ -5674,10 +5109,10 @@ object SparkEntry {
         |  CAST(SUM(buy_c) AS BIGINT) AS buy_c,
         |  CAST(CASE WHEN SUM(converted) = 0 THEN 0
         |    ELSE SUM(buy_c) // SUM(converted) END AS BIGINT) AS buy_per_conv_c
-        |FROM sess GROUP BY depth ORDER BY depth""".stripMargin,
+        |FROM sess GROUP BY depth ORDER BY depth""".stripMargin),
     // shipment-spread histogram: per-order first->last ship span,
     // week buckets, share inside the priority
-    "q_ship_spread" ->
+    Op("q_ship_spread", Analytics.qShipSpread,
       """WITH spans AS (SELECT l_orderkey,
         |    CAST(MAX(CAST(floor(epoch(CAST(l_shipdate AS TIMESTAMP))) AS BIGINT) // 86400)
         |      - MIN(CAST(floor(epoch(CAST(l_shipdate AS TIMESTAMP))) AS BIGINT) // 86400) AS BIGINT) AS span_days,
@@ -5689,10 +5124,10 @@ object SparkEntry {
         |    CAST(SUM(n_lines) AS BIGINT) AS n_lines FROM j GROUP BY 1, 2)
         |SELECT o_orderpriority, CAST(week_bucket AS BIGINT) AS week_bucket, n_orders, n_lines,
         |  CAST((n_orders * 10000) // SUM(n_orders) OVER (PARTITION BY o_orderpriority) AS BIGINT) AS share_bp
-        |FROM h ORDER BY o_orderpriority, week_bucket""".stripMargin,
+        |FROM h ORDER BY o_orderpriority, week_bucket""".stripMargin),
     // LSH blocking recall: how many exact top-5 share the query's
     // 8-sign-bit bucket — the miss-rate the blocked operators inherit
-    "ann_bucket_recall" -> {
+    Op("ann_bucket_recall", Ann.bucketRecall, {
       val bucket = (1 to 8).map(i =>
         s"(CASE WHEN emb[$i] >= 0 THEN '1' ELSE '0' END)").mkString(" || ")
       s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
@@ -5708,17 +5143,17 @@ object SparkEntry {
          |FROM et JOIN b qb ON qb.vec_id = et.query_id
          |JOIN b nb ON nb.vec_id = et.neighbor_id
          |GROUP BY 1 ORDER BY query_id""".stripMargin
-    },
+    }),
     // round 12 batch 19: DSv2 write roundtrip — the oracle recomputes
     // the rollup from the source of truth, so any commit-protocol
     // fault (lost task file, leaked temp, torn manifest) fails here
-    "source_dsv2_write" ->
+    Op("source_dsv2_write", SourceQueries.dsv2WriteRoundtrip,
       """SELECT o_orderstatus AS val, CAST(COUNT(*) AS BIGINT) AS n,
         |  CAST(SUM(o_orderkey) AS BIGINT) AS key_sum
-        |FROM orders GROUP BY 1 ORDER BY val""".stripMargin,
+        |FROM orders GROUP BY 1 ORDER BY val""".stripMargin),
     // media metadata strip: injected EXIF-style header mirrored
     // byte-identical; char positions safe (marker region is ASCII)
-    "mm_metadata_strip" ->
+    Op("mm_metadata_strip", Multimodal.metadataStrip,
       """WITH raw AS (SELECT doc_id, source,
         |    CASE WHEN doc_id % 3 = 0
         |      THEN concat('EXIF:gps=', CAST(doc_id % 180 AS VARCHAR), ';cam=X;', text)
@@ -5736,10 +5171,10 @@ object SparkEntry {
         |  CAST(SUM(strlen(stripped)) AS BIGINT) AS bytes_after,
         |  CAST(SUM(strlen(raw)) - SUM(strlen(stripped)) AS BIGINT) AS meta_bytes,
         |  CAST(SUM(CASE WHEN strpos(stripped, 'EXIF:') > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_residual
-        |FROM x GROUP BY source ORDER BY source""".stripMargin,
+        |FROM x GROUP BY source ORDER BY source""".stripMargin),
     // round 12 batch 20: shadow sessionizer diff — both gap variants
     // out of one lag pass, per-user delta histogram
-    "stream_shadow_diff" ->
+    Op("stream_shadow_diff", Streams.shadowDiff(_, _),
       """WITH e AS (SELECT user_id, event_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us
         |  FROM events WHERE user_id IS NOT NULL),
         |s AS (SELECT user_id,
@@ -5753,10 +5188,10 @@ object SparkEntry {
         |    CAST(SUM(n_canary) AS BIGINT) AS sessions_canary FROM pu GROUP BY 1)
         |SELECT CAST(session_delta AS BIGINT) AS session_delta, n_users, sessions_prod,
         |  sessions_canary, CAST((n_users * 10000) // SUM(n_users) OVER () AS BIGINT) AS user_share_bp
-        |FROM h ORDER BY session_delta""".stripMargin,
+        |FROM h ORDER BY session_delta""".stripMargin),
     // experiment sizing: n = 2(1.96+0.84)^2 p(1-p)/d^2 — the constant
     // is EXACTLY 15.68, so the formula clears to pure Int64
-    "q_ab_power_plan" ->
+    Op("q_ab_power_plan", Analytics.qAbPowerPlan,
       """WITH e AS (SELECT user_id, event_id, event_type,
         |    epoch_us(CAST(ts AS TIMESTAMP)) AS us FROM events WHERE user_id IS NOT NULL),
         |v AS (SELECT user_id, event_id, us AS vus FROM e WHERE event_type = 'view'),
@@ -5780,10 +5215,10 @@ object SparkEntry {
         |SELECT CAST(lift_bp AS BIGINT) AS lift_bp, CAST(p_bp AS BIGINT) AS p_bp,
         |  CAST(delta_bp AS BIGINT) AS delta_bp, CAST(n_per_arm AS BIGINT) AS n_per_arm,
         |  CAST((2 * n_per_arm + views_per_day - 1) // views_per_day AS BIGINT) AS days_needed
-        |FROM y ORDER BY lift_bp""".stripMargin,
+        |FROM y ORDER BY lift_bp""".stripMargin),
     // round 12 batch 21: sample-based stats accuracy — keyed ~1%
     // sample (o_orderkey % 101 = 0) vs exact, modal tie by value
-    "ingest_sample_stats" ->
+    Op("ingest_sample_stats", SourceQueries.sampleStatsAccuracy,
       """WITH st AS (SELECT o_orderkey, 'o_orderstatus' AS col_name, o_orderstatus AS value FROM orders
         |  UNION ALL SELECT o_orderkey, 'o_orderpriority', o_orderpriority FROM orders),
         |ex AS (SELECT col_name, CAST(SUM(n) AS BIGINT) AS n_rows, CAST(COUNT(*) AS BIGINT) AS ndv,
@@ -5800,10 +5235,10 @@ object SparkEntry {
         |  CAST(n_rows_s * 101 AS BIGINT) AS est_rows,
         |  CAST((abs(n_rows_s * 101 - n_rows) * 10000) // n_rows AS BIGINT) AS row_err_bp,
         |  CAST(CASE WHEN top = top_s THEN 1 ELSE 0 END AS BIGINT) AS top_match
-        |FROM ex JOIN sm ON ex.col_name = sm.col_name ORDER BY 1""".stripMargin,
+        |FROM ex JOIN sm ON ex.col_name = sm.col_name ORDER BY 1""".stripMargin),
     // round 12 batch 22: IDF-weighted Jaccard over the verified pair
     // list — integer IDF surrogate w = (N*100) // df, no logs
-    "dedup_idf_jaccard" ->
+    Op("dedup_idf_jaccard", Dedup.idfJaccard,
       (s"""WITH $GramsCte,
          |$SigCte,
          |bands AS (
@@ -5830,11 +5265,11 @@ object SparkEntry {
          |  CAST(wa.tw + wb.tw - w_shared AS BIGINT) AS w_union,
          |  CAST((w_shared * 10000) // (wa.tw + wb.tw - w_shared) AS BIGINT) AS wj_bp
          |FROM sh JOIN dw wa ON wa.doc_id = sh.doc_a JOIN dw wb ON wb.doc_id = sh.doc_b
-         |ORDER BY doc_a, doc_b""".stripMargin),
+         |ORDER BY doc_a, doc_b""".stripMargin)),
     // round 13 batch 1: the oracle recomputes both version snapshots
     // from the source of truth — a version chain that leaks job 2's
     // files into v1 or drops job 1's from the latest fails the hash
-    "load_time_travel" ->
+    Op("load_time_travel", SourceQueries.timeTravelRead,
       """SELECT CAST(1 AS BIGINT) AS version, c_mktsegment AS val,
         |  CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(c_custkey) AS BIGINT) AS key_sum
         |FROM customer WHERE c_custkey % 2 = 0 GROUP BY 2
@@ -5842,28 +5277,28 @@ object SparkEntry {
         |SELECT CAST(2 AS BIGINT), c_mktsegment,
         |  CAST(COUNT(*) AS BIGINT), CAST(SUM(c_custkey) AS BIGINT)
         |FROM customer GROUP BY 2
-        |ORDER BY version, val""".stripMargin,
+        |ORDER BY version, val""".stripMargin),
     // layout_stats_sweep: the catalog-wide ANALYZE — per (table,
     // partition, column): stringified min/max, exact ndv, null count,
     // row count; numeric mins/maxes computed numerically then cast
-    "layout_stats_sweep" ->
+    Op("layout_stats_sweep", Analytics.layoutStatsSweep,
       (StatsSweepCte +
       """SELECT table_name, part_key, col_name, min_s, max_s,
         |  CAST(ndv AS BIGINT) AS ndv, CAST(n_null AS BIGINT) AS n_null, CAST(n_rows AS BIGINT) AS n_rows
-        |FROM sw ORDER BY table_name, part_key, col_name""".stripMargin),
+        |FROM sw ORDER BY table_name, part_key, col_name""".stripMargin)),
     // layout_stats_sweep_approx: HLL estimate engine-specific; the
     // portable contract is the within-6%-or-±2 bit over the exact ndv
-    "layout_stats_sweep_approx" ->
+    Op("layout_stats_sweep_approx", Analytics.layoutStatsSweepApprox,
       (StatsSweepCte +
       """SELECT table_name, part_key, col_name,
         |  CAST(ndv AS BIGINT) AS ndv, CAST(1 AS BIGINT) AS within_band
-        |FROM sw ORDER BY table_name, part_key, col_name""".stripMargin),
+        |FROM sw ORDER BY table_name, part_key, col_name""".stripMargin)),
 
     // load_optimize_compact: protocol constants (6 appends → 1
     // compacted file at version 7) + row conservation from the
     // source-of-truth table, including across pre-compaction time
     // travel
-    "load_optimize_compact" ->
+    Op("load_optimize_compact", SourceQueries.optimizeCompactOp,
       """WITH c AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM customer)
         |SELECT stage, metric, CAST(value AS BIGINT) AS value FROM (
         |  SELECT '01_before' AS stage, 'files' AS metric, 6 AS value
@@ -5873,12 +5308,12 @@ object SparkEntry {
         |  UNION ALL SELECT '03_after', 'files', 1
         |  UNION ALL SELECT '03_after', 'rows_at_pre_compaction_v6', (SELECT n FROM c)
         |  UNION ALL SELECT '03_after', 'rows_readable', (SELECT n FROM c)
-        |) t ORDER BY stage, metric""".stripMargin,
+        |) t ORDER BY stage, metric""".stripMargin),
     // load_manifest_compaction: the lifecycle counts are protocol
     // constants (12 commits, checkpoint interval 10, retain 3 → fold
     // reads 3 manifests, vacuum drops v1-v9 + 1 stray); readability is
     // recomputed from the source-of-truth table on both sides
-    "load_manifest_compaction" ->
+    Op("load_manifest_compaction", SourceQueries.manifestCompaction,
       """WITH c AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM customer)
         |SELECT stage, metric, CAST(value AS BIGINT) AS value FROM (
         |  SELECT '01_before' AS stage, 'manifests_read_for_latest' AS metric, 3 AS value
@@ -5889,25 +5324,25 @@ object SparkEntry {
         |  UNION ALL SELECT '02_vacuum', 'strays_removed', 1
         |  UNION ALL SELECT '03_after', 'rows_readable', (SELECT n FROM c)
         |  UNION ALL SELECT '03_after', 'versions', 3
-        |) t ORDER BY stage, metric""".stripMargin,
+        |) t ORDER BY stage, metric""".stripMargin),
     // stream_source_tail: exactly-once delivery across appends + a
     // skipped rewrite = the plain per-type rollup over all events
-    "stream_source_tail" ->
+    Op("stream_source_tail", Streams.streamSourceTail,
       """SELECT event_type AS val, CAST(COUNT(*) AS BIGINT) AS n,
         |  CAST(SUM(event_id) AS BIGINT) AS key_sum
         |FROM events WHERE event_id IS NOT NULL AND event_type IS NOT NULL
-        |GROUP BY 1 ORDER BY val""".stripMargin,
+        |GROUP BY 1 ORDER BY val""".stripMargin),
     // replay-absorbing sink: the duplicate batch must add ZERO rows,
     // so the oracle is the plain per-type rollup over events
-    "stream_exactly_once_sink" ->
+    Op("stream_exactly_once_sink", Streams.exactlyOnceSink,
       """SELECT event_type AS val, CAST(COUNT(*) AS BIGINT) AS n,
         |  CAST(SUM(event_id) AS BIGINT) AS key_sum
         |FROM events WHERE event_id IS NOT NULL AND event_type IS NOT NULL
-        |GROUP BY 1 ORDER BY val""".stripMargin,
+        |GROUP BY 1 ORDER BY val""".stripMargin),
     // load_restore: protocol constants (3 appends + restore = v4) +
     // both row sets recomputed from the source of truth — rolled-back
     // latest = the v1 third, forward time travel = the full table
-    "load_restore" ->
+    Op("load_restore", SourceQueries.restoreOp,
       """WITH c AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
         |  CAST(SUM(CASE WHEN c_custkey % 3 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n0
         |  FROM customer)
@@ -5918,11 +5353,11 @@ object SparkEntry {
         |  UNION ALL SELECT '03_after', 'rows_at_v3_forward', (SELECT n FROM c)
         |  UNION ALL SELECT '03_after', 'rows_latest', (SELECT n0 FROM c)
         |  UNION ALL SELECT '03_after', 'versions', 4
-        |) t ORDER BY stage, metric""".stripMargin,
+        |) t ORDER BY stage, metric""".stripMargin),
     // load_delete_verb: every count recomputed from the delete rule —
     // merge-on-read masks key%7=0 at read time, v1 time-travels to the
     // full set, OPTIMIZE folds the DV into one clean file
-    "load_delete_verb" ->
+    Op("load_delete_verb", SourceQueries.deleteVerbOp,
       """WITH c AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
         |  CAST(SUM(CASE WHEN c_custkey % 7 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS nd
         |  FROM customer)
@@ -5937,12 +5372,12 @@ object SparkEntry {
         |  UNION ALL SELECT '04_optimize', 'files', 1
         |  UNION ALL SELECT '04_optimize', 'rows_readable', (SELECT n FROM c) - (SELECT nd FROM c)
         |  UNION ALL SELECT '04_optimize', 'version_published', 3
-        |) t ORDER BY stage, metric""".stripMargin,
+        |) t ORDER BY stage, metric""".stripMargin),
     // layout_prune_from_stats: prune decisions recomputed from the
     // SAME per-month stats the sweep derives (lineitem quantity
     // min/max + row counts), evaluated against the same predicate
     // catalog — the ANALYZE → prune loop closed on both engines
-    "layout_prune_from_stats" ->
+    Op("layout_prune_from_stats", Analytics.layoutPruneFromStats,
       """WITH l AS (SELECT CAST(date_part('year', l_shipdate) * 100 + date_part('month', l_shipdate) AS BIGINT) AS pmonth,
         |    CAST(l_quantity AS BIGINT) AS qty FROM lineitem),
         |z AS (SELECT pmonth, MIN(qty) AS qmin, MAX(qty) AS qmax,
@@ -5965,10 +5400,10 @@ object SparkEntry {
         |  CAST(COUNT(*) AS BIGINT) AS n_parts,
         |  CAST(SUM(skipped) AS BIGINT) AS n_skipped,
         |  CAST(SUM(CASE WHEN skipped = 0 THEN n_rows ELSE 0 END) AS BIGINT) AS rows_scanned
-        |FROM j GROUP BY pred_id, dim ORDER BY pred_id""".stripMargin,
+        |FROM j GROUP BY pred_id, dim ORDER BY pred_id""".stripMargin),
     // load_file_skipping: layout constants (8 slices, quarter-probe
     // plans exactly 2) + rows/sums recomputed from the predicate
-    "load_file_skipping" ->
+    Op("load_file_skipping", SourceQueries.fileSkipping,
       """WITH c AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM customer),
         |q AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_rows, CAST(SUM(c_custkey) AS BIGINT) AS ks
         |  FROM customer WHERE c_custkey < (SELECT n FROM c) // 4)
@@ -5977,12 +5412,12 @@ object SparkEntry {
         |  UNION ALL SELECT '02_probe', 'files_planned', 2
         |  UNION ALL SELECT '03_result', 'key_sum', (SELECT ks FROM q)
         |  UNION ALL SELECT '03_result', 'rows', (SELECT n_rows FROM q)
-        |) t ORDER BY stage, metric""".stripMargin,
+        |) t ORDER BY stage, metric""".stripMargin),
     // load_update_verb: the update hits exactly the first-quarter
     // keys — slices 0..1 of the 8-slice layout — so 6 files survive
     // the COW rewrite untouched; every count derives from the
     // predicate (keys are dense 0..n-1)
-    "load_update_verb" ->
+    Op("load_update_verb", SourceQueries.updateVerbOp,
       """WITH c AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM customer),
         |q AS (SELECT CAST(COUNT(*) AS BIGINT) AS nu FROM customer
         |  WHERE c_custkey < (SELECT n FROM c) // 4)
@@ -5995,12 +5430,12 @@ object SparkEntry {
         |  UNION ALL SELECT '03_after', 'rows_at_pre_update', 0
         |  UNION ALL SELECT '04_cdf', 'pre_images', (SELECT nu FROM q)
         |  UNION ALL SELECT '04_cdf', 'post_images', (SELECT nu FROM q)
-        |) t ORDER BY stage, metric""".stripMargin,
+        |) t ORDER BY stage, metric""".stripMargin),
     // load_clone_shallow: the clone freezes the source's
     // key%7-deleted snapshot; afterwards each side sees only its own
     // divergence — all counts closed-form from the two delete rules
     // and the key%13 append
-    "load_clone_shallow" ->
+    Op("load_clone_shallow", SourceQueries.cloneShallowOp,
       """WITH c AS (SELECT c_custkey AS key FROM customer),
         |m AS (SELECT
         |  CAST(SUM(CASE WHEN key % 7 <> 0 THEN 1 ELSE 0 END) AS BIGINT) AS n7,
@@ -6016,11 +5451,11 @@ object SparkEntry {
         |  UNION ALL SELECT '02_diverge', 'source_rows_after_delete', (SELECT n73 FROM m)
         |  UNION ALL SELECT '03_isolated', 'clone_rows_unaffected_by_source_delete', (SELECT n7k3 FROM m)
         |  UNION ALL SELECT '03_isolated', 'source_rows_unaffected_by_clone_append', 0
-        |) t ORDER BY stage, metric""".stripMargin,
+        |) t ORDER BY stage, metric""".stripMargin),
     // load_merge_mor: the COW merge's contract plus the zero-rewrite
     // property (files_rewritten=0, one tombstone file) and OPTIMIZE
     // folding the DV away afterwards
-    "load_merge_mor" ->
+    Op("load_merge_mor", SourceQueries.mergeMorOp,
       """WITH c AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
         |  CAST(SUM(CASE WHEN c_custkey % 3 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n3,
         |  CAST(SUM(CASE WHEN c_custkey % 11 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n11
@@ -6039,11 +5474,11 @@ object SparkEntry {
         |  UNION ALL SELECT '04_cdf', 'inserts', (SELECT n3 + n11 FROM c)
         |  UNION ALL SELECT '05_optimize', 'rows_readable', (SELECT n + n11 FROM c)
         |  UNION ALL SELECT '05_optimize', 'dv_files', 0
-        |) t ORDER BY stage, metric""".stripMargin,
+        |) t ORDER BY stage, metric""".stripMargin),
     // load_describe_history: the classification contract itself — each
     // verb's #op: (and the structural fallback for the header-less
     // legacy v6), with the structural flags fixed by the chain
-    "load_describe_history" ->
+    Op("load_describe_history", SourceQueries.describeHistoryOp,
       """SELECT CAST(version AS BIGINT) AS version, operation,
         |  CAST(has_adds AS BIGINT) AS has_adds,
         |  CAST(has_removes AS BIGINT) AS has_removes,
@@ -6057,11 +5492,11 @@ object SparkEntry {
         |  (5, 'UPGRADE PROTOCOL', 0, 0, 0, 0),
         |  (6, 'WRITE', 1, 0, 0, 0)
         |) t(version, operation, has_adds, has_removes, n_dvs, is_checkpoint)
-        |ORDER BY version""".stripMargin,
+        |ORDER BY version""".stripMargin),
     // load_describe_detail: structural facts fixed by the chain (3
     // single-task appends, one DV, protocol 2:2) + the data-derived
     // readable row count under the key%7 delete
-    "load_describe_detail" ->
+    Op("load_describe_detail", SourceQueries.describeDetailOp,
       """WITH c AS (SELECT CAST(SUM(CASE WHEN c_custkey % 7 <> 0 THEN 1 ELSE 0 END) AS BIGINT) AS n7
         |  FROM customer)
         |SELECT metric, CAST(value AS BIGINT) AS value FROM (
@@ -6074,11 +5509,11 @@ object SparkEntry {
         |  UNION ALL SELECT 'num_files_with_stats', 3
         |  UNION ALL SELECT 'num_manifests', 5
         |  UNION ALL SELECT 'rows_readable', (SELECT n7 FROM c)
-        |) t ORDER BY metric""".stripMargin,
+        |) t ORDER BY metric""".stripMargin),
     // load_vacuum_dryrun: the dry run must report exactly what the
     // real vacuum then does — 9 manifests below checkpoint 10, the
     // one aged orphan — while the readable rows never change
-    "load_vacuum_dryrun" ->
+    Op("load_vacuum_dryrun", SourceQueries.vacuumDryRunOp,
       """WITH c AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM customer)
         |SELECT stage, metric, CAST(value AS BIGINT) AS value FROM (
         |  SELECT '01_before' AS stage, 'versions' AS metric, 13 AS value
@@ -6095,7 +5530,7 @@ object SparkEntry {
         |  UNION ALL SELECT '05_after', 'versions', 4
         |  UNION ALL SELECT '05_after', 'rows_readable', (SELECT n FROM c)
         |  UNION ALL SELECT '05_after', 'stray_present', 0
-        |) t ORDER BY stage, metric""".stripMargin,
+        |) t ORDER BY stage, metric""".stripMargin),
     // load_cdf_sync: the feed's net effect per val group equals the
     // closed-form final state — survivors keep their segment, key%3
     // becomes UPDATED (resurrects included), key%11 adds NEWROW keys
@@ -6103,7 +5538,7 @@ object SparkEntry {
     // default, 2:2 after the upgrade (reads/writes keep working), a
     // future 9:9 version refuses both while pre-future time travel
     // still reads
-    "load_protocol_gate" ->
+    Op("load_protocol_gate", SourceQueries.protocolGateOp,
       """WITH c AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
         |  CAST(SUM(CASE WHEN c_custkey % 13 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n13
         |  FROM customer)
@@ -6118,12 +5553,12 @@ object SparkEntry {
         |  UNION ALL SELECT '04_future', 'read_refused', 1
         |  UNION ALL SELECT '04_future', 'write_refused', 1
         |  UNION ALL SELECT '04_future', 'time_travel_pre_future_rows', (SELECT n + n13 FROM c)
-        |) t ORDER BY stage, metric""".stripMargin,
+        |) t ORDER BY stage, metric""".stripMargin),
     // stream_cdf_consume: what the streamed typed feed must deliver,
     // version by version — v1/v2 parity inserts, v3's doomed rows as
     // deletes WITH values, v4's merge sidecars (live key%3 pre-image
     // deletes; all key%3 + rekeyed key%11 inserts)
-    "stream_cdf_consume" ->
+    Op("stream_cdf_consume", Streams.streamCdfConsume,
       """WITH c AS (SELECT c_custkey AS key FROM customer)
         |SELECT CAST(commit_version AS BIGINT) AS commit_version, change_type,
         |  CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(key) AS BIGINT) AS key_sum
@@ -6134,11 +5569,11 @@ object SparkEntry {
         |  UNION ALL SELECT 4, 'delete', key FROM c WHERE key % 3 = 0 AND key % 5 <> 0
         |  UNION ALL SELECT 4, 'insert', key FROM c WHERE key % 3 = 0
         |  UNION ALL SELECT 4, 'insert', key + 10000000 FROM c WHERE key % 11 = 0
-        |) t GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
+        |) t GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
     // layout_zorder_cluster: both engines compute the same Morton
     // interleave closed-form; files are modeled ranges, so every count
     // derives from the data alone
-    "layout_zorder_cluster" -> {
+    Op("layout_zorder_cluster", Analytics.layoutZorderCluster, {
       val zd = (0 until 8).map(i =>
         s"((((px >> $i) & 1) << ${2 * i}) + (((sx >> $i) & 1) << ${2 * i + 1}))")
         .mkString(" + ")
@@ -6161,8 +5596,8 @@ object SparkEntry {
          |  UNION ALL SELECT 'zorder', 'suppkey',
          |    COUNT(DISTINCT CASE WHEN ps = 1 THEN file_z END), SUM(ps) FROM g
          |) t ORDER BY layout, probe""".stripMargin
-    },
-    "load_cdf_sync" ->
+    }),
+    Op("load_cdf_sync", SourceQueries.cdfSyncOp,
       """WITH c AS (SELECT c_custkey AS key, c_mktsegment AS seg FROM customer),
         |final AS (
         |  SELECT seg AS val, key FROM c WHERE key % 5 <> 0 AND key % 3 <> 0
@@ -6174,11 +5609,11 @@ object SparkEntry {
         |  CAST(SUM(key) AS BIGINT) AS key_sum_feed,
         |  CAST(COUNT(*) AS BIGINT) AS n_snap,
         |  CAST(SUM(key) AS BIGINT) AS key_sum_snap
-        |FROM final GROUP BY val ORDER BY val""".stripMargin,
+        |FROM final GROUP BY val ORDER BY val""".stripMargin),
     // load_change_feed: the CDF rollup recomputed from the change
     // rules — v1/v2 inserts are the key-parity halves, v3 deletes are
     // the key%5 rows, v4 (OPTIMIZE) contributes nothing
-    "load_change_feed" ->
+    Op("load_change_feed", SourceQueries.changeFeedOp,
       """WITH c AS (SELECT c_custkey AS key FROM customer)
         |SELECT CAST(commit_version AS BIGINT) AS commit_version, change_type,
         |  CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(key) AS BIGINT) AS key_sum
@@ -6186,11 +5621,11 @@ object SparkEntry {
         |  SELECT 1 AS commit_version, 'insert' AS change_type, key FROM c WHERE key % 2 = 0
         |  UNION ALL SELECT 2, 'insert', key FROM c WHERE key % 2 = 1
         |  UNION ALL SELECT 3, 'delete', key FROM c WHERE key % 5 = 0
-        |) t GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
+        |) t GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
     // load_merge_verb: every count recomputed from the update rules —
     // matched = key%3 customers (replaced in place), inserted = the
     // key%11 re-keys, CDF sidecars declare exactly those changes
-    "load_merge_verb" ->
+    Op("load_merge_verb", SourceQueries.mergeVerbOp,
       """WITH c AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
         |  CAST(SUM(CASE WHEN c_custkey % 3 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n3,
         |  CAST(SUM(CASE WHEN c_custkey % 11 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n11
@@ -6205,12 +5640,12 @@ object SparkEntry {
         |  UNION ALL SELECT '03_after', 'rows_at_v1', (SELECT n FROM c)
         |  UNION ALL SELECT '04_cdf', 'deletes', (SELECT n3 FROM c)
         |  UNION ALL SELECT '04_cdf', 'inserts', (SELECT n3 + n11 FROM c)
-        |) t ORDER BY stage, metric""".stripMargin,
+        |) t ORDER BY stage, metric""".stripMargin),
     // load_occ_retry: the race recomputed from the slice geometry —
     // merge A touches slice 7, merge B (stale pin) slice 0; disjoint
     // zones prove compatibility so B rebases to v10, the overlapping
     // merge C errors, and the final state carries both value sets
-    "load_occ_retry" ->
+    Op("load_occ_retry", SourceQueries.occRetryOp,
       """WITH c AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM customer),
         |s AS (SELECT
         |  CAST(SUM(CASE WHEN c_custkey * 8 // (SELECT n FROM c) = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n0,
@@ -6227,11 +5662,11 @@ object SparkEntry {
         |  UNION ALL SELECT '05_after', 'rows_readable', (SELECT n FROM c)
         |  UNION ALL SELECT '05_after', 'rows_val_a', (SELECT n7 FROM s)
         |  UNION ALL SELECT '05_after', 'rows_val_b', (SELECT n0 FROM s)
-        |) t ORDER BY stage, metric""".stripMargin,
+        |) t ORDER BY stage, metric""".stripMargin),
     // load_file_skipping_val: layout constants (5 segment files; the
     // probes plan 1/2/1 of them) + row counts from the segment
     // histogram
-    "load_file_skipping_val" ->
+    Op("load_file_skipping_val", SourceQueries.fileSkippingValOp,
       """WITH s AS (SELECT
         |  CAST(SUM(CASE WHEN c_mktsegment = 'BUILDING' THEN 1 ELSE 0 END) AS BIGINT) AS nb,
         |  CAST(SUM(CASE WHEN c_mktsegment IN ('FURNITURE','HOUSEHOLD') THEN 1 ELSE 0 END) AS BIGINT) AS nfh,
@@ -6245,12 +5680,12 @@ object SparkEntry {
         |  UNION ALL SELECT '03_range', 'rows', (SELECT nfh FROM s)
         |  UNION ALL SELECT '04_prefix', 'files_planned', 1
         |  UNION ALL SELECT '04_prefix', 'rows', (SELECT nm FROM s)
-        |) t ORDER BY stage, metric""".stripMargin,
+        |) t ORDER BY stage, metric""".stripMargin),
     // load_optimize_zorder: the clustered-rewrite payoff in closed
     // form — mod-sliced zones prune nothing (8/8 planned), the Morton
     // layout prunes the key quarter to 2 files and the BUILDING
     // segment to 4 (top-3 Morton bits = key15,val15,key14)
-    "load_optimize_zorder" ->
+    Op("load_optimize_zorder", SourceQueries.optimizeZorderOp,
       """WITH c AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM customer),
         |s AS (SELECT
         |  CAST(SUM(CASE WHEN c_custkey < (SELECT n FROM c) // 4 THEN 1 ELSE 0 END) AS BIGINT) AS nq,
@@ -6269,11 +5704,11 @@ object SparkEntry {
         |  UNION ALL SELECT '05_invariant', 'key_rows_stable', 1
         |  UNION ALL SELECT '05_invariant', 'rows_readable', (SELECT n FROM c)
         |  UNION ALL SELECT '05_invariant', 'val_rows_stable', 1
-        |) t ORDER BY stage, metric""".stripMargin,
+        |) t ORDER BY stage, metric""".stripMargin),
     // load_schema_evolution: zero-rewrite ALTER — constants for the
     // chain geometry, row counts from the customer table (old rows
     // null-fill segment, new rows carry it)
-    "load_schema_evolution" ->
+    Op("load_schema_evolution", SourceQueries.schemaEvolutionOp,
       """WITH c AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
         |  CAST(SUM(CASE WHEN c_mktsegment = 'BUILDING' THEN 1 ELSE 0 END) AS BIGINT) AS nb
         |  FROM customer)
@@ -6287,12 +5722,12 @@ object SparkEntry {
         |  UNION ALL SELECT '03_travel', 'cols_at_v1', 2
         |  UNION ALL SELECT '03_travel', 'rows_at_v1', (SELECT n FROM c)
         |  UNION ALL SELECT '04_history', 'alter_ops', 1
-        |) t ORDER BY stage, metric""".stripMargin,
+        |) t ORDER BY stage, metric""".stripMargin),
     // load_maintenance_plan: every trigger recomputed from the staged
     // geometry — 11 live files (8 mod slices + 3 tails), dead_bp =
     // (n/4 deleted keys)*10000 over n+3 live rows, 9 reclaimable
     // manifests below checkpoint 10 at retainLast=2, overlap depth 8
-    "load_maintenance_plan" ->
+    Op("load_maintenance_plan", SourceQueries.maintenancePlanOp,
       """WITH c AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM customer),
         |d AS (SELECT CAST(SUM(CASE WHEN c_custkey % 4 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS ndel
         |  FROM customer)
@@ -6310,11 +5745,11 @@ object SparkEntry {
         |  UNION ALL SELECT '02_plan', 'vacuum_fired', 1
         |  UNION ALL SELECT '02_plan', 'vacuum_reclaimable', 9
         |  UNION ALL SELECT '02_plan', 'zorder_fired', 1
-        |) t ORDER BY stage, metric""".stripMargin,
+        |) t ORDER BY stage, metric""".stripMargin),
     // stream_source_snapshot_paced: geometry constants (10-file
     // snapshot at rate 2 → 5 slices + 1 version batch, no batch over
     // 2 files) + exactly-once totals from events
-    "stream_source_snapshot_paced" ->
+    Op("stream_source_snapshot_paced", Streams.streamSourceSnapshotPaced,
       """WITH e AS (SELECT event_id AS key FROM events
         |  WHERE event_id IS NOT NULL AND event_type IS NOT NULL)
         |SELECT stage, metric, CAST(value AS BIGINT) AS value FROM (
@@ -6323,11 +5758,11 @@ object SparkEntry {
         |  UNION ALL SELECT '02_run', 'max_files_per_batch', 2
         |  UNION ALL SELECT '03_sink', 'key_sum', (SELECT SUM(key) FROM e)
         |  UNION ALL SELECT '03_sink', 'rows', (SELECT COUNT(*) FROM e)
-        |) t ORDER BY stage, metric""".stripMargin,
+        |) t ORDER BY stage, metric""".stripMargin),
     // stream_cdf_tail: run 1 skips all history by declaration; run 2
     // delivers exactly the post-start DELETE + append, recomputed
     // from the change rules
-    "stream_cdf_tail" ->
+    Op("stream_cdf_tail", Streams.streamCdfTail,
       """WITH d AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
         |    CAST(SUM(c_custkey) AS BIGINT) AS ks
         |  FROM customer WHERE c_custkey % 7 = 0),
@@ -6342,11 +5777,11 @@ object SparkEntry {
         |  UNION ALL SELECT '02_run2', 'insert_base_key_sum', (SELECT ks FROM i)
         |  UNION ALL SELECT '02_run2', 'insert_rows', (SELECT n FROM i)
         |  UNION ALL SELECT '02_run2', 'insert_versions', 1
-        |) t ORDER BY stage, metric""".stripMargin,
+        |) t ORDER BY stage, metric""".stripMargin),
     // load_maintenance_cycle: the staged geometry in closed form —
     // 3 triggers fire, one binpack rewrite settles all of them, the
     // re-plan is empty, the quarter probe plans 1 of 4 disjoint bins
-    "load_maintenance_cycle" ->
+    Op("load_maintenance_cycle", SourceQueries.maintenanceCycleOp,
       """WITH c AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
         |  CAST(SUM(CASE WHEN c_custkey % 4 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS ndel
         |  FROM customer)
@@ -6362,10 +5797,10 @@ object SparkEntry {
         |  UNION ALL SELECT '04_after', 'files_live', 4
         |  UNION ALL SELECT '04_after', 'quarter_probe_files_planned', 1
         |  UNION ALL SELECT '04_after', 'rows_readable', (SELECT n - ndel FROM c)
-        |) t ORDER BY stage, metric""".stripMargin,
+        |) t ORDER BY stage, metric""".stripMargin),
     // load_merge_evolved: the guards-gone headline — MERGE/UPDATE/CDF
     // on a widened table, every count closed-form from customer
-    "load_merge_evolved" ->
+    Op("load_merge_evolved", SourceQueries.mergeEvolvedOp,
       """WITH c AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
         |  CAST(SUM(CASE WHEN c_custkey % 3 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n3,
         |  CAST(SUM(CASE WHEN c_mktsegment = 'BUILDING' THEN 1 ELSE 0 END) AS BIGINT) AS nb
@@ -6384,12 +5819,12 @@ object SparkEntry {
         |  UNION ALL SELECT '05_cdf', 'deletes', (SELECT n3 + nb FROM c)
         |  UNION ALL SELECT '05_cdf', 'inserts', (SELECT n3 + nb FROM c)
         |  UNION ALL SELECT '05_cdf', 'merged_inserts', (SELECT n3 FROM c)
-        |) t ORDER BY stage, metric""".stripMargin,
+        |) t ORDER BY stage, metric""".stripMargin),
     // load_optimize_evolved: maintenance survives ALTER — the staged
     // geometry in closed form (5 files, 50%-of-narrow delete ≈
     // 2500 bp, binpack to 4 disjoint wide bins, re-plan empty,
     // quarter probe plans 1 bin)
-    "load_optimize_evolved" ->
+    Op("load_optimize_evolved", SourceQueries.optimizeEvolvedOp,
       """WITH c AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
         |  CAST(SUM(CASE WHEN c_custkey % 2 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS ndel
         |  FROM customer),
@@ -6409,11 +5844,11 @@ object SparkEntry {
         |  UNION ALL SELECT '05_after', 'null_segment', (SELECT n - ndel FROM c)
         |  UNION ALL SELECT '05_after', 'quarter_probe_files_planned', 1
         |  UNION ALL SELECT '05_after', 'quarter_probe_rows', (SELECT nq FROM q)
-        |) t ORDER BY stage, metric""".stripMargin,
+        |) t ORDER BY stage, metric""".stripMargin),
     // load_cdf_evolved: the feed across an ALTER — per-version change
     // rollups with key sums; narrow inserts null-fill, the DELETE's
     // retractions materialize wide, MERGE sidecars carry both images
-    "load_cdf_evolved" ->
+    Op("load_cdf_evolved", SourceQueries.cdfEvolvedOp,
       """WITH e AS (SELECT c_custkey AS k FROM customer WHERE c_custkey % 2 = 0),
         |o AS (SELECT c_custkey AS k FROM customer WHERE c_custkey % 2 = 1),
         |d AS (SELECT c_custkey AS k FROM customer WHERE c_custkey % 10 = 5),
@@ -6427,11 +5862,11 @@ object SparkEntry {
         |  UNION ALL SELECT 4, 'delete', COUNT(*), SUM(k), 0 FROM d
         |  UNION ALL SELECT 5, 'delete', COUNT(*), SUM(k), COUNT(*) FROM m
         |  UNION ALL SELECT 5, 'insert', COUNT(*), SUM(k), 0 FROM m
-        |) t ORDER BY commit_version, change_type""".stripMargin,
+        |) t ORDER BY commit_version, change_type""".stripMargin),
     // load_file_skipping_cols: layout constants (9 files — the
     // cstats-free narrow file always plans, +1 on every probe; probes
     // plan 2/3/2) + row counts from the segment histogram
-    "load_file_skipping_cols" ->
+    Op("load_file_skipping_cols", SourceQueries.fileSkippingColsOp,
       """WITH s AS (SELECT
         |  CAST(SUM(CASE WHEN c_mktsegment = 'BUILDING' THEN 1 ELSE 0 END) AS BIGINT) AS nb,
         |  CAST(SUM(CASE WHEN c_mktsegment IN ('FURNITURE','HOUSEHOLD') THEN 1 ELSE 0 END) AS BIGINT) AS nfh,
@@ -6446,10 +5881,10 @@ object SparkEntry {
         |  UNION ALL SELECT '03_range', 'rows', (SELECT nfh FROM s)
         |  UNION ALL SELECT '04_prefix', 'files_planned', 2
         |  UNION ALL SELECT '04_prefix', 'rows', (SELECT nm FROM s)
-        |) t ORDER BY stage, metric""".stripMargin,
+        |) t ORDER BY stage, metric""".stripMargin),
     // load_rename_column: metadata-only rename — counts closed-form
     // (n7 merge matches on the NEW name; nulls = narrow minus merged)
-    "load_rename_column" ->
+    Op("load_rename_column", SourceQueries.renameColumnOp,
       """WITH c AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
         |  CAST(SUM(CASE WHEN c_custkey % 7 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n7,
         |  CAST(SUM(CASE WHEN c_mktsegment = 'BUILDING' THEN 1 ELSE 0 END) AS BIGINT) AS nb
@@ -6470,12 +5905,12 @@ object SparkEntry {
         |  UNION ALL SELECT '05_after', 'building_rows', (SELECT nb FROM c)
         |  UNION ALL SELECT '05_after', 'null_rows', (SELECT n - n7 FROM c)
         |  UNION ALL SELECT '06_history', 'rename_ops', 1
-        |) t ORDER BY stage, metric""".stripMargin,
+        |) t ORDER BY stage, metric""".stripMargin),
     // load_drop_column: metadata-only drop — all counts closed-form
     // (3 slices before the drop, one post-drop append, n7 merged rows
     // carrying nat='MG', the re-added segment non-null only on the 3
     // tail rows; time travel below the drop reads the column back)
-    "load_drop_column" ->
+    Op("load_drop_column", SourceQueries.dropColumnOp,
       """WITH c AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
         |  CAST(SUM(CASE WHEN c_custkey % 7 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n7,
         |  CAST(SUM(CASE WHEN c_mktsegment = 'BUILDING' THEN 1 ELSE 0 END) AS BIGINT) AS nb
@@ -6503,20 +5938,20 @@ object SparkEntry {
         |  UNION ALL SELECT '07_readd', 'nat_nonnull', (SELECT 2 * n + n7 + 3 FROM c)
         |  UNION ALL SELECT '07_readd', 'mg_nat', (SELECT n7 FROM c)
         |  UNION ALL SELECT '08_history', 'drop_ops', 1
-        |) t ORDER BY stage, metric""".stripMargin,
+        |) t ORDER BY stage, metric""".stripMargin),
     // dedup_soft_weights: global md5 clusters, per-source rollup;
     // integer-bp weights (10000 // n) are engine-exact
-    "dedup_soft_weights" ->
+    Op("dedup_soft_weights", Dedup.softDedupWeights,
       """WITH cl AS (SELECT md5(text) AS th, CAST(COUNT(*) AS BIGINT) AS n
         |  FROM documents GROUP BY 1),
         |d AS (SELECT source, md5(text) AS th FROM documents)
         |SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
         |  CAST(SUM(CASE WHEN n > 1 THEN 1 ELSE 0 END) AS BIGINT) AS dup_docs,
         |  CAST(SUM(10000 // n) AS BIGINT) AS eff_bp
-        |FROM d JOIN cl USING (th) GROUP BY source ORDER BY source""".stripMargin,
+        |FROM d JOIN cl USING (th) GROUP BY source ORDER BY source""".stripMargin),
     // ann_epsilon_ball: exact cosine ball at 0.2 vs the 8-bit sign-LSH
     // bucketed ball (the ann_lsh_topk bucket), recall in integer bp
-    "ann_epsilon_ball" ->
+    Op("ann_epsilon_ball", Ann.epsilonBall,
       (s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
          |eb AS (SELECT vec_id, emb,
          |  (CASE WHEN emb[1] >= 0 THEN '1' ELSE '0' END || CASE WHEN emb[2] >= 0 THEN '1' ELSE '0' END ||
@@ -6530,10 +5965,10 @@ object SparkEntry {
          |SELECT query_id, CAST(COUNT(*) AS BIGINT) AS exact_n,
          |  CAST(SUM(CASE WHEN bucket = qbucket THEN 1 ELSE 0 END) AS BIGINT) AS lsh_n,
          |  CAST(SUM(CASE WHEN bucket = qbucket THEN 1 ELSE 0 END) * 10000 // COUNT(*) AS BIGINT) AS recall_bp
-         |FROM f GROUP BY query_id ORDER BY query_id""".stripMargin),
+         |FROM f GROUP BY query_id ORDER BY query_id""".stripMargin)),
     // text_tokenizer_fertility: the text_token_count regex per
     // language; strlen = BYTES in DuckDB (octet_length in Spark)
-    "text_tokenizer_fertility" ->
+    Op("text_tokenizer_fertility", TextOps.tokenizerFertility,
       """WITH t AS (SELECT lang,
         |  CAST(len(string_split(text, ' ')) AS BIGINT) AS ws,
         |  CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]')) AS BIGINT) AS tok,
@@ -6543,10 +5978,10 @@ object SparkEntry {
         |  CAST(SUM(nb) AS BIGINT) AS bytes,
         |  CAST(SUM(tok) * 10000 // SUM(ws) AS BIGINT) AS fertility_bp,
         |  CAST(SUM(nb) * 10000 // SUM(tok) AS BIGINT) AS bytes_per_token_bp
-        |FROM t GROUP BY lang ORDER BY lang""".stripMargin,
+        |FROM t GROUP BY lang ORDER BY lang""".stripMargin),
     // stream_dedup_window: kept = distinct (user, type, 15-min
     // tumbling window) groups; timestamps positive so // == DIV
-    "stream_dedup_window" ->
+    Op("stream_dedup_window", Streams.dedupWindowBatch,
       """WITH e AS (SELECT user_id, event_type,
         |  epoch_us(CAST(ts AS TIMESTAMP)) AS us FROM events),
         |g AS (SELECT user_id, event_type, us // 900000000 AS win,
@@ -6555,11 +5990,11 @@ object SparkEntry {
         |  CAST(COUNT(*) AS BIGINT) AS kept_events,
         |  CAST(SUM(n) - COUNT(*) AS BIGINT) AS dups_suppressed,
         |  CAST((SUM(n) - COUNT(*)) * 10000 // SUM(n) AS BIGINT) AS dup_bp
-        |FROM g GROUP BY event_type ORDER BY event_type""".stripMargin,
+        |FROM g GROUP BY event_type ORDER BY event_type""".stripMargin),
     // load_occ_crossproc: chain geometry constants + the slice
     // arithmetic recomputed via generate_series (2 slices x 30 files
     // x 10 keys at slice*1e6 + i*10 + j)
-    "load_occ_crossproc" ->
+    Op("load_occ_crossproc", SourceQueries.occCrossProcOp,
       """WITH k AS (SELECT (s.g * 1000000 + i.g * 10 + j.g) AS key
         |  FROM generate_series(0, 1) s(g), generate_series(0, 29) i(g),
         |       generate_series(0, 9) j(g))
@@ -6573,11 +6008,11 @@ object SparkEntry {
         |  UNION ALL SELECT '03_rows', 'key_sum', (SELECT SUM(key) FROM k)
         |  UNION ALL SELECT '03_rows', 'rows_a', 300
         |  UNION ALL SELECT '03_rows', 'rows_b', 300
-        |) t ORDER BY stage, metric""".stripMargin,
+        |) t ORDER BY stage, metric""".stripMargin),
     // stream_sink_occ_race: exactly-once totals hold across the race
     // regardless of where the rewrite lands — seed (shifted keys) +
     // streamed copy, each exactly once
-    "stream_sink_occ_race" ->
+    Op("stream_sink_occ_race", Streams.streamSinkOccRace,
       """WITH e AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
         |  CAST(SUM(event_id) AS BIGINT) AS ks FROM events
         |  WHERE event_id IS NOT NULL AND event_type IS NOT NULL)
@@ -6588,10 +6023,10 @@ object SparkEntry {
         |  UNION ALL SELECT '02_sink', 'exactly_once', 1
         |  UNION ALL SELECT '02_sink', 'key_sum',
         |    (SELECT 2 * ks + n * 1000000000 FROM e)
-        |) t ORDER BY stage, metric""".stripMargin,
+        |) t ORDER BY stage, metric""".stripMargin),
     // stream_source_ratelimit: protocol constants (3 versions drained
     // one per micro-batch) + exactly-once totals from events
-    "stream_source_ratelimit" ->
+    Op("stream_source_ratelimit", Streams.streamSourceRateLimit,
       """WITH e AS (SELECT event_id AS key, event_type AS val FROM events
         |  WHERE event_id IS NOT NULL AND event_type IS NOT NULL)
         |SELECT stage, metric, CAST(value AS BIGINT) AS value FROM (
@@ -6600,20 +6035,20 @@ object SparkEntry {
         |  UNION ALL SELECT '03_sink', 'key_sum', (SELECT SUM(key) FROM e)
         |  UNION ALL SELECT '03_sink', 'n_types', (SELECT COUNT(DISTINCT val) FROM e)
         |  UNION ALL SELECT '03_sink', 'rows', (SELECT COUNT(*) FROM e)
-        |) t ORDER BY stage, metric""".stripMargin,
+        |) t ORDER BY stage, metric""".stripMargin),
     // stream_source_snapshot: exactly-once across the initial-snapshot
     // + delta boundary of a vacuumed chain = the plain per-type rollup
-    "stream_source_snapshot" ->
+    Op("stream_source_snapshot", Streams.streamSourceSnapshot,
       """SELECT event_type AS val, CAST(COUNT(*) AS BIGINT) AS n,
         |  CAST(SUM(event_id) AS BIGINT) AS key_sum
         |FROM events WHERE event_id IS NOT NULL AND event_type IS NOT NULL
-        |GROUP BY 1 ORDER BY val""".stripMargin,
+        |GROUP BY 1 ORDER BY val""".stripMargin),
     // text_bpe_train_iter: the K rounds unrolled (see BpeIterSql)
-    "text_bpe_train_iter" -> BpeIterSql,
+    Op("text_bpe_train_iter", TextOps.bpeTrainIter(_, _), BpeIterSql),
     // embed_kmeanspp_seed: k-1 unrolled farthest-point rounds
-    "embed_kmeanspp_seed" -> KppSeedSql,
+    Op("embed_kmeanspp_seed", Ann.kmeansppSeed(_, _), KppSeedSql),
     // load_deletion_vectors: the mask recomputed from the delete rule
-    "load_deletion_vectors" ->
+    Op("load_deletion_vectors", SourceQueries.deletionVectors,
       """WITH b AS (SELECT o_orderkey, CAST(o_orderkey // 2048 AS BIGINT) AS file_id,
         |  CASE WHEN o_orderkey % 13 = 0 THEN 1 ELSE 0 END AS del FROM orders)
         |SELECT file_id, CAST(COUNT(*) AS BIGINT) AS n_rows,
@@ -6621,10 +6056,10 @@ object SparkEntry {
         |  CAST(SUM(del) AS BIGINT) AS n_deleted,
         |  CAST(SUM(del) * 10000 // COUNT(*) AS BIGINT) AS dead_bp,
         |  CAST(CASE WHEN SUM(del) * 10000 // COUNT(*) >= 2000 THEN 1 ELSE 0 END AS BIGINT) AS rewrite
-        |FROM b GROUP BY file_id ORDER BY file_id""".stripMargin,
+        |FROM b GROUP BY file_id ORDER BY file_id""".stripMargin),
     // q_cusum_alarm: the reflection identity (running sum minus its
     // running min) replayed with the same year-partitioned windows
-    "q_cusum_alarm" ->
+    Op("q_cusum_alarm", Analytics.qCusumAlarm,
       """WITH daily AS (SELECT o_orderdate AS d,
         |  CAST(date_part('year', o_orderdate) AS BIGINT) AS yr,
         |  CAST(COUNT(*) AS BIGINT) AS cnt FROM orders GROUP BY 1, 2),
@@ -6647,13 +6082,13 @@ object SparkEntry {
         |  CAST(SUM(CASE WHEN neg > h THEN 1 ELSE 0 END) AS BIGINT) AS alarms_neg,
         |  CAST(MAX(pos) AS BIGINT) AS max_pos,
         |  CAST(MAX(neg) AS BIGINT) AS max_neg
-        |FROM p GROUP BY yr ORDER BY yr""".stripMargin,
+        |FROM p GROUP BY yr ORDER BY yr""".stripMargin),
     // text_bpe_apply: the SAME two-sweep replace fold over the ranked
     // merge list, via list_reduce with the spaced word prepended as
     // the fold seed; token count = spaces - 1
     // text_bpe_apply: the ITERATED ledger's per-word bill (tokw from
     // the shared K-round chain) joined against per-source word counts
-    "text_bpe_apply" ->
+    Op("text_bpe_apply", TextOps.bpeApply(_, _),
       (BpeChainCte + """,
         |ws AS (SELECT source, unnest(string_split(text, ' ')) AS word FROM documents),
         |asw AS (SELECT source, word FROM ws WHERE regexp_matches(word, '^[a-z]+$')),
@@ -6667,11 +6102,11 @@ object SparkEntry {
         |  CAST(chars_alpha - bpe_tokens AS BIGINT) AS merged_away,
         |  (bpe_tokens * 10000) // chars_alpha AS compression_bp
         |FROM agg JOIN aw ON aw.source = agg.source
-        |ORDER BY 1""".stripMargin),
+        |ORDER BY 1""".stripMargin)),
     // layout_column_stats_approx: the HLL estimate is engine-specific;
     // the portable contract is the within-6%-or-±2 bit over the exact
     // ndv (the q_approx_distinct convention; 3 sigma at rsd 0.02)
-    "layout_column_stats_approx" ->
+    Op("layout_column_stats_approx", Analytics.layoutColumnStatsApprox,
       """WITH o AS (SELECT
         |  CAST(date_part('year', o_orderdate) * 100 + date_part('month', o_orderdate) AS BIGINT) AS part_month,
         |  o_orderstatus, o_orderpriority, o_custkey,
@@ -6687,11 +6122,11 @@ object SparkEntry {
         |  UNION ALL SELECT part_month, 'o_orderpriority', ndv_prio FROM a
         |  UNION ALL SELECT part_month, 'o_custkey', ndv_cust FROM a
         |  UNION ALL SELECT part_month, 'o_totalprice_c', ndv_price FROM a)
-        |ORDER BY part_month, col_name""".stripMargin,
+        |ORDER BY part_month, col_name""".stripMargin),
     // mm_scene_cut: identical frame-signature recurrence (32-byte
     // windows, two-hex-digit decode, 8-bit Hamming >= 5), per-doc
     // ledger then source rollup
-    "mm_scene_cut" ->
+    Op("mm_scene_cut", Multimodal.sceneCut,
       """WITH f AS (SELECT doc_id, source, text,
         |    unnest(range(0, least(7, greatest(len(text) - 1, 0) // 32) + 1)) AS frame_idx
         |  FROM documents WHERE text IS NOT NULL),
@@ -6711,6 +6146,17 @@ object SparkEntry {
         |  CAST(SUM(n_cuts) + COUNT(*) AS BIGINT) AS n_scenes,
         |  CAST((SUM(n_frames) * 100) // (SUM(n_cuts) + COUNT(*)) AS BIGINT) AS scene_len_c,
         |  CAST((SUM(n_cuts) * 10000) // GREATEST(SUM(n_frames) - COUNT(*), 1) AS BIGINT) AS cut_rate_bp
-        |FROM d GROUP BY 1 ORDER BY source""".stripMargin,
-  )
+        |FROM d GROUP BY 1 ORDER BY source""".stripMargin),
+  ))
+
+  private def distinctNames(ops: Seq[Op]): Seq[Op] = {
+    val dups = ops.groupBy(_.name).collect { case (n, xs) if xs.size > 1 => n }
+    require(dups.isEmpty, s"duplicate operator names: ${dups.toSeq.sorted.mkString(", ")}")
+    ops
+  }
+
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    operators.map(o => o.name -> o.run).toMap
+
+  lazy val oracleSql: Map[String, String] = operators.map(o => o.name -> o.oracle).toMap
 }

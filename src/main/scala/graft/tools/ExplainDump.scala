@@ -2,18 +2,16 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Dumps `.explain("formatted")` for a named set of SparkEntry queries
   * to `plans/<tag>/<query>_<suffix>.txt` — the before/after plan
   * evidence an optimization round commits next to its bench numbers.
   *
   * Usage: graft.tools.ExplainDump <sfDir> <outDir> <suffix> <q1,q2,...>
   *
-  * The session mirrors Bench's layout (local[cpus], shuffle
-  * partitions = cpus, AQE on) so the dumped plan is the shape the
-  * bench actually runs — Plans.scala's local[8] fingerprints serve the
-  * regression gate, these serve the human diff.
+  * The session is Bench's (`SparkEntry.localSession` at the same core
+  * count) so the dumped plan is the shape the bench actually runs —
+  * Plans.scala's local[8] fingerprints serve the regression gate,
+  * these serve the human diff.
   */
 object ExplainDump {
   def main(args: Array[String]): Unit = {
@@ -23,14 +21,7 @@ object ExplainDump {
       sys.exit(2)
     }
     val Array(sfDir, outDir, suffix, names) = args.take(4)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.SparkEntry.localSession(graft.SparkEntry.cpus)
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))
     names.split(",").foreach { n =>

