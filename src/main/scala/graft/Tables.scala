@@ -13,13 +13,18 @@ import org.apache.spark.sql.functions._
   * fronts `spark.read.jdbc` (see [[graft.etl.Ingest]]).
   */
 object Tables {
-  private val schemaCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), org.apache.spark.sql.types.StructType]
+  /** Parquet footer schemas by table path, stamped with the file's
+    * modification time and length: the first load of a file infers its
+    * schema (a footer-read Spark job), every later load reads with
+    * `spark.read.schema(cached)` and launches none. A rewritten file
+    * carries a new stamp and is inferred again. */
+  private val footerSchemas = scala.collection.concurrent.TrieMap
+    .empty[String, ((Long, Long), org.apache.spark.sql.types.StructType)]
 
-  /** Cached schema lookup — catalog queries touch all 10 tables and
-    * parquet footer reads are the dominant cost there. */
+  /** A table's loaded schema — analysis only, no Spark job once its
+    * footer schema is cached. */
   def schema(spark: SparkSession, sfDir: String, name: String): org.apache.spark.sql.types.StructType =
-    schemaCache.getOrElseUpdate((sfDir, name), load(spark, sfDir, name).schema)
+    load(spark, sfDir, name).schema
 
   /** All tables the test corpus ships; mirrors the reference's
     * INFORMATION_SCHEMA.TABLES result set. */
@@ -27,7 +32,32 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  /** `spark.read.parquet(path)` with the footer schema inferred once
+    * per (path, modification time, length). A path whose status cannot
+    * be read (missing, unreachable) is read uncached, so Spark reports
+    * its own error. */
+  private def readParquet(spark: SparkSession, path: String): DataFrame = {
+    val stamp =
+      try {
+        val p = new org.apache.hadoop.fs.Path(path)
+        val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p)
+        Some((st.getModificationTime, st.getLen))
+      } catch { case scala.util.control.NonFatal(_) => None }
+    stamp match {
+      case None => spark.read.parquet(path)
+      case Some(s) =>
+        footerSchemas.get(path) match {
+          case Some((`s`, schema)) => spark.read.schema(schema).parquet(path)
+          case _ =>
+            val df = spark.read.parquet(path)
+            footerSchemas.put(path, (s, df.schema))
+            df
+        }
+    }
+  }
+
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
     if (name == "events") {
       // events.ts encoding varies by generator version: either parquet
       // TIMESTAMP(NANOS) — which Spark's vectorized reader rejects, so
@@ -36,9 +66,11 @@ object Tables {
       // TIMESTAMP(MICROS), which arrives as TIMESTAMP_NTZ and is cast
       // to the session-UTC instant type the operators were written
       // against. Dispatch on the resolved type so both corpora load to
-      // an identical `ts: timestamp` column.
+      // an identical `ts: timestamp` column. The conf is set on every
+      // load, cached schema or not: the reader needs it to read the
+      // NANOS column as long.
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = spark.read.parquet(s"$sfDir/$name.parquet")
+      val raw = readParquet(spark, path)
       raw.schema("ts").dataType match {
         case org.apache.spark.sql.types.LongType =>
           raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
@@ -46,7 +78,7 @@ object Tables {
           raw.withColumn("ts", col("ts").cast("timestamp"))
       }
     } else {
-      spark.read.parquet(s"$sfDir/$name.parquet")
+      readParquet(spark, path)
     }
   }
 

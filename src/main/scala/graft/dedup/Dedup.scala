@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.{Caches, Tables}
 import graft.functions.VectorExprs.cosineSim
+import graft.text.TextOps
 
 /** Deduplication operators over the documents corpus: exact-hash,
   * MinHash+LSH, SimHash, blocked n-gram Jaccard, and embedding-cosine
@@ -210,8 +211,7 @@ object Dedup {
     val pairs = minhashPairs(spark, dir)
     val directed = pairs.select(col("doc_a").as("doc_id"), col("doc_b").as("nbr"))
       .unionAll(pairs.select(col("doc_b").as("doc_id"), col("doc_a").as("nbr")))
-    val split = Tables.documents(spark, dir)
-      .selectExpr("doc_id", s"${graft.text.TextOps.SplitCaseSql} AS split")
+    val split = TextOps.docFeatures(spark, dir).select("doc_id", "split")
     directed
       .join(split, "doc_id").filter(col("split") =!= "train")
       .join(split.select(col("doc_id").as("nbr"), col("split").as("nbr_split")), "nbr")
@@ -277,7 +277,7 @@ object Dedup {
     * actually ships. */
   def pipelineSurvivors(spark: SparkSession, dir: String): DataFrame = {
     val removed = minhashPairs(spark, dir).select(col("doc_b").as("doc_id")).distinct()
-    Tables.documents(spark, dir)
+    TextOps.docFeatures(spark, dir)
       .join(removed, Seq("doc_id"), "left_anti")
       .select(col("doc_id"), col("source"))
       .orderBy("doc_id")
@@ -443,7 +443,7 @@ object Dedup {
     * rescan. */
   def keepBest(spark: SparkSession, dir: String): DataFrame = {
     val comp = components(spark, dir)
-    val q = graft.text.TextOps.qualityScore(spark, dir)
+    val q = TextOps.qualityScore(spark, dir)
       .select("doc_id", "quality_bp")
     val w = Window.partitionBy(col("comp"))
       .orderBy(col("quality_bp").desc, col("doc_id"))
@@ -890,16 +890,12 @@ object Dedup {
     * sketch-sized table a training launch actually consumes ("how
     * many tokens of train data per source survive the pipeline?"). */
   def trainingMix(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    val ok = graft.text.TextOps.qualityGateCols(docs)
-      .filter(col("pass") === 1).select("doc_id")
     val removed = minhashPairs(spark, dir)
       .select(col("doc_b").as("doc_id")).distinct()
     val contaminated = decontaminate(spark, dir).select("doc_id")
-    docs.selectExpr("doc_id", "source",
-        s"${graft.text.TextOps.SplitCaseSql} AS split",
-        "CAST(size(split(text, ' ')) AS BIGINT) AS n_tokens")
-      .join(ok, "doc_id")
+    TextOps.docFeatures(spark, dir)
+      .filter(col("pass") === 1)
+      .select(col("doc_id"), col("source"), col("split"), col("n_words").as("n_tokens"))
       // removed/contaminated derive from the checkpoint-backed pair
       // list — a LogicalRDD carries no size stats, so without the
       // hint the planner demotes these to SMJ. Both are verified-pair
@@ -1031,7 +1027,7 @@ object Dedup {
         md5(concat_ws(" ", slice(col("ws"), col("i") + 1, lit(13)))).as("g"))
       .distinct()
     val split_ = Tables.documents(spark, dir)
-      .selectExpr("doc_id", s"${graft.text.TextOps.SplitCaseSql} AS split")
+      .selectExpr("doc_id", s"${TextOps.SplitCaseSql} AS split")
     val train = grams.join(split_, "doc_id")
       .filter(col("split") === "train")
       .groupBy(col("g")).agg(min(col("doc_id")).as("train_doc"))

@@ -174,36 +174,68 @@ object TextOps {
     * actually runs (C4/Gopher style): every document gets a pass/fail
     * and the FIRST failing rule, so corpus curation can report why
     * volume was dropped, not just how much. Rules are all-integer
-    * (length, marker-hit count, duplicate-word basis points) and run
-    * in one codegen'd scan — no shuffle, no UDF; at 100 TB this is a
-    * map-only pass whose output feeds the survivor write directly. */
+    * (length, marker-hit count, duplicate-word basis points) and are
+    * evaluated once per document, in the [[docFeatures]] build; the
+    * gate itself is a projection of that checkpoint. */
   def qualityGate(spark: SparkSession, dir: String): DataFrame =
-    qualityGateCols(Tables.documents(spark, dir)).orderBy("doc_id")
+    docFeatures(spark, dir)
+      .select("doc_id", "n_words", "marker_hits", "dup_word_bp", "gate", "pass")
+      .orderBy("doc_id")
 
   /** The gate as a pure column transform over any (doc_id, text)
     * relation — batch or stream: stateless and map-only, it applies
     * unchanged to a readStream source (StreamingSpec runs it on a
     * MemoryStream), which is how a streaming ingest filters documents
-    * before they ever land. */
-  def qualityGateCols(docs: DataFrame): DataFrame = {
+    * before they ever land. `keep` columns pass through after
+    * `doc_id`. */
+  def qualityGateCols(docs: DataFrame, keep: String*): DataFrame = {
     val allHits = LangMarkers.map { case (l, _) => hits(l) }.mkString(" + ")
+    val ids = "doc_id" +: keep
     docs
-      .selectExpr("doc_id", "split(text, ' ') AS w")
-      .selectExpr("doc_id",
+      .selectExpr(ids :+ "split(text, ' ') AS w": _*)
+      .selectExpr(ids ++ Seq(
         "CAST(size(w) AS BIGINT) AS n_words",
         s"$allHits AS marker_hits",
         // multiply in BIGINT: size() is INT, and dup_count * 10000
         // wraps negative past ~215k duplicate tokens (crawl outliers)
-        "(CAST(size(w) AS BIGINT) - CAST(size(array_distinct(w)) AS BIGINT)) * 10000 DIV size(w) AS dup_word_bp")
-      .selectExpr("doc_id", "n_words", "marker_hits", "dup_word_bp",
+        "(CAST(size(w) AS BIGINT) - CAST(size(array_distinct(w)) AS BIGINT)) * 10000 DIV size(w) AS dup_word_bp"): _*)
+      .selectExpr(ids ++ Seq("n_words", "marker_hits", "dup_word_bp",
         """CASE
           |  WHEN n_words < 5 THEN 'too_short'
           |  WHEN marker_hits = 0 THEN 'unknown_language'
           |  WHEN dup_word_bp > 3000 THEN 'repetitive'
-          |  ELSE 'ok' END AS gate""".stripMargin.replace("\n", " "))
-      .selectExpr("doc_id", "n_words", "marker_hits", "dup_word_bp", "gate",
-        "CAST(CASE WHEN gate = 'ok' THEN 1 ELSE 0 END AS BIGINT) AS pass")
+          |  ELSE 'ok' END AS gate""".stripMargin.replace("\n", " ")): _*)
+      .selectExpr(ids ++ Seq("n_words", "marker_hits", "dup_word_bp", "gate",
+        "CAST(CASE WHEN gate = 'ok' THEN 1 ELSE 0 END AS BIGINT) AS pass"): _*)
   }
+
+  /** Per-document features of the training chain, computed once per
+    * cache scope: (doc_id, source, split, n_words, marker_hits,
+    * dup_word_bp, gate, pass) — the gate columns, the [[SplitCaseSql]]
+    * split and the word count every chain stage (gate, survivors,
+    * decontamination, mix, mix weights) reads, from ONE spread scan of
+    * the corpus instead of one rescan per consumer (the shared-
+    * intermediate caching of Spark SQL, SIGMOD 2015). */
+  private[graft] def docFeatures(spark: SparkSession, dir: String): DataFrame =
+    Caches.sharedCheckpoint(spark, s"text.docFeatures:$dir") {
+      qualityGateCols(
+        Tables.spread(spark, dir, "documents", "doc_id")
+          .selectExpr("doc_id", "source", s"$SplitCaseSql AS split", "text"),
+        "source", "split")
+    }
+
+  /** Per-document tokenizer bill (source, doc_id, tok): alpha words
+    * through the iterated-ledger tokenization ([[bpeTokPerWord]],
+    * broadcast — vocab-sized), every other word one token. Kept apart
+    * from [[docFeatures]] so the gate never triggers BPE training. */
+  private[graft] def docTokens(spark: SparkSession, dir: String): DataFrame =
+    Caches.sharedCheckpoint(spark, s"text.docTokens:$dir") {
+      Tables.spread(spark, dir, "documents", "doc_id")
+        .selectExpr("source", "doc_id", "explode(split(text, ' ')) AS word")
+        .join(broadcast(bpeTokPerWord(spark, dir).select("word", "n_tok")), Seq("word"), "left")
+        .groupBy(col("source"), col("doc_id"))
+        .agg(sum(coalesce(col("n_tok"), lit(1L))).as("tok"))
+    }
 
   /** One md5 hex digit of the doc_id key hash as its integer value —
     * the shared building block of both portable key hashes below. */
@@ -607,7 +639,7 @@ object TextOps {
         case (acc, (_, pair, merged, _, _)) =>
           s"replace(replace($acc, ' $pair ', ' $merged '), ' $pair ', ' $merged ')"
       }
-      Tables.documents(spark, dir)
+      Tables.spread(spark, dir, "documents", "doc_id")
         .selectExpr("explode(split(text, ' ')) AS word")
         .filter(col("word").rlike("^[a-z]+$"))
         .select(col("word")).distinct()
@@ -794,14 +826,10 @@ object TextOps {
     * words against the distinct-word table (vocab-sized, never
     * corpus-sized state); then windows over the per-source rows. */
   def mixWeights(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    val ok = qualityGateCols(docs).filter(col("pass") === 1).select("doc_id")
-    val avail = docs
-      .selectExpr("doc_id", "source", "explode(split(text, ' ')) AS word")
-      .join(ok, "doc_id")
-      .join(bpeTokPerWord(spark, dir).select("word", "n_tok"), Seq("word"), "left")
+    val avail = docFeatures(spark, dir).filter(col("pass") === 1).select("doc_id")
+      .join(docTokens(spark, dir), "doc_id")
       .groupBy(col("source"))
-      .agg(sum(coalesce(col("n_tok"), lit(1L))).as("avail_tokens"))
+      .agg(sum(col("tok")).as("avail_tokens"))
     val w = Window.partitionBy()
     avail
       .selectExpr("source", "avail_tokens",
@@ -877,11 +905,7 @@ object TextOps {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("source").orderBy("doc_id")
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-    Tables.documents(spark, dir)
-      .selectExpr("source", "doc_id", "explode(split(text, ' ')) AS word")
-      .join(bpeTokPerWord(spark, dir).select("word", "n_tok"), Seq("word"), "left")
-      .groupBy(col("source"), col("doc_id"))
-      .agg(sum(coalesce(col("n_tok"), lit(1L))).as("tok"))
+    docTokens(spark, dir)
       .withColumn("prefix", coalesce(sum(col("tok")).over(w), lit(0L)))
       .withColumn("pack_id", expr(s"prefix DIV $budget"))
       .groupBy(col("source"), col("pack_id"))
@@ -1061,9 +1085,7 @@ object TextOps {
     * `unknown_language` is a mislabeled crawl slice. Same single-scan
     * map-side rule columns as the gate, one source-sized rollup. */
   def qualityMatrix(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    val cols = qualityGateCols(docs)
-      .join(docs.select(col("doc_id"), col("source")), "doc_id")
+    val cols = qualityGateCols(Tables.documents(spark, dir), "source")
       .selectExpr("source",
         "CAST(CASE WHEN n_words < 5 THEN 1 ELSE 0 END AS BIGINT) AS f_short",
         "CAST(CASE WHEN marker_hits = 0 THEN 1 ELSE 0 END AS BIGINT) AS f_lang",
